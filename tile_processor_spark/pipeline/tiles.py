@@ -38,18 +38,23 @@ class TileSet:
 
     def with_list(self, tiles: list[str]) -> DataFrame:
         """P3 + J9 (tileconfig.py:196-249): keep requested tiles that
-        exist; *warn* about unknown IDs; *raise* if none match."""
-        req = self.index.sparkSession.createDataFrame(
-            [(t,) for t in tiles], "tile_id string"
-        )
-        known = self.all_in_index()
-        missing = [r.tile_id for r in req.join(known, "tile_id", "left_anti").collect()]
+        exist; *warn* about unknown IDs; *raise* if none match.
+
+        One action: a left join of the request against the distinct index
+        IDs, flagged and collected once. The found request rows (duplicates
+        kept) come back as a local DataFrame, so callers joining on it
+        re-run no index scan."""
+        spark = self.index.sparkSession
+        req = spark.createDataFrame([(t,) for t in tiles], "tile_id string")
+        known = self.all_in_index().withColumn("known", F.lit(True))
+        rows = req.join(known, "tile_id", "left").collect()
+        found = [(r.tile_id,) for r in rows if r.known]
+        missing = [r.tile_id for r in rows if not r.known]
         if missing:
             log.warning("tiles not in index (skipped): %s", sorted(missing))
-        found = req.join(known, "tile_id", "left_semi")
-        if found.limit(1).count() == 0:
+        if not found:
             raise ValueError(f"none of the requested tiles exist in the index: {tiles}")
-        return found
+        return spark.createDataFrame(found, "tile_id string")
 
     def with_extent(self, features: DataFrame, extent_wkb: bytes) -> DataFrame:
         """within_extent (tileconfig.py:128-194): DISTINCT tiles whose

@@ -29,6 +29,15 @@ ENGINE_CONF: dict[str, str] = {
     # let Python Data Sources (tps_postgres) receive pushFilters —
     # off by default in Spark 4.1, required for server-side predicates
     "spark.sql.python.filterPushdown.enabled": "true",
+    # Whole-stage-codegen class cache (JVM-wide, keyed by generated
+    # source). Spark's default of 100 is below the engine's working set:
+    # the 15 non-llm headline queries generate about 233 distinct classes
+    # at sf0.01 and all 23 about 500 at sf0.001, so with 100 entries every
+    # repeat of a plan recompiled its classes with Janino (173-196
+    # compiles per warm headline pass) and re-JITed them. Static conf:
+    # Spark reads it once per JVM, at the first codegen, so it holds only
+    # when an engine session runs that first codegen.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.ui.enabled": "false",
 }
 

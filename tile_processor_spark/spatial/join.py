@@ -135,22 +135,26 @@ def region_relate_join(
     sized (one row per version) → broadcast nested-loop, then one
     Arrow-batched pandas-UDF pass for the exact matrix.
     """
+    relate = _relate_udf(tiles.sparkSession.sparkContext.applicationId, pattern, covers)
     return tiles.crossJoin(F.broadcast(regions)).filter(
-        _relate_udf(pattern, covers)("rects", "xmin", "ymin", "xmax", "ymax")
+        relate("rects", "xmin", "ymin", "xmax", "ymax")
     )
 
 
-#: per-(pattern, covers) DE-9IM relate UDFs — building a pandas_udf is a
-#: driver-side py4j + cloudpickle round trip, so construct each variant
-#: once per process instead of once per query invocation (guide §5 "the
-#: driver should do almost no data work"; measured in the round-17
-#: construction profile)
+#: per-(applicationId, pattern, covers) DE-9IM relate UDFs — building a
+#: pandas_udf is a driver-side py4j + cloudpickle round trip, so each
+#: variant is built once per session, not once per query invocation. A
+#: UDF binds the SparkContext it first ran under (its Python accumulator
+#: included), so entries of other applications are dropped on the next
+#: lookup.
 _RELATE_UDFS: dict = {}
 
 
-def _relate_udf(pattern: str, covers: bool):
-    key = (pattern, covers)
+def _relate_udf(app_id: str, pattern: str, covers: bool):
+    key = (app_id, pattern, covers)
     if key not in _RELATE_UDFS:
+        for stale in [k for k in _RELATE_UDFS if k[0] != app_id]:
+            del _RELATE_UDFS[stale]
         from tile_processor_spark.spatial import kernel
 
         @F.pandas_udf("boolean")
