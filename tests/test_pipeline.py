@@ -224,6 +224,15 @@ def test_tileset_with_list_raises_when_none_match(spark):
         ts.with_list(["zzz"])
 
 
+def test_tileset_with_list_result_is_local(spark):
+    # a DataFrame from a Python list scans a Python RDD (ExistingRDD):
+    # one Python task per partition on every action
+    ts = TileSet(spark.range(5).selectExpr("concat('t', id) AS tile_id"))
+    got = ts.with_list(["t1", "t4", "t1", "nope"])
+    assert "ExistingRDD" not in got._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r.tile_id for r in got.collect()) == ["t1", "t1", "t4"]
+
+
 def test_tileset_all_and_reorder(spark):
     idx = spark.createDataFrame([("t1",), ("t1",), ("t2",)], "tile_id string")
     ts = TileSet(idx)

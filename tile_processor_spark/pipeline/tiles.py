@@ -12,10 +12,16 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
+
+
+def _local_ids(spark: SparkSession, ids: list[str]) -> DataFrame:
+    """A one-column ``tile_id string`` DataFrame on a local relation."""
+    return spark.createDataFrame(pa.table({"tile_id": pa.array(ids, pa.string())}))
 
 
 class TileSet:
@@ -43,18 +49,21 @@ class TileSet:
         One action: a left join of the request against the distinct index
         IDs, flagged and collected once. The found request rows (duplicates
         kept) come back as a local DataFrame, so callers joining on it
-        re-run no index scan."""
+        re-run no index scan. Both the request and the result are built
+        from Arrow tables, which Spark plans as local relations: a Python
+        list would become a parallelized Python RDD, one Python task per
+        partition on every action."""
         spark = self.index.sparkSession
-        req = spark.createDataFrame([(t,) for t in tiles], "tile_id string")
+        req = _local_ids(spark, tiles)
         known = self.all_in_index().withColumn("known", F.lit(True))
         rows = req.join(known, "tile_id", "left").collect()
-        found = [(r.tile_id,) for r in rows if r.known]
+        found = [r.tile_id for r in rows if r.known]
         missing = [r.tile_id for r in rows if not r.known]
         if missing:
             log.warning("tiles not in index (skipped): %s", sorted(missing))
         if not found:
             raise ValueError(f"none of the requested tiles exist in the index: {tiles}")
-        return spark.createDataFrame(found, "tile_id string")
+        return _local_ids(spark, found)
 
     def with_extent(self, features: DataFrame, extent_wkb: bytes) -> DataFrame:
         """within_extent (tileconfig.py:128-194): DISTINCT tiles whose

@@ -38,6 +38,11 @@ ENGINE_CONF: dict[str, str] = {
     # Spark reads it once per JVM, at the first codegen, so it holds only
     # when an engine session runs that first codegen.
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # PySpark's daemon behind a guard that keeps every Python task from
+    # re-reading pyspark.zip's directory (~0.18 s CPU per task before
+    # Python 3.13); see pydaemon.py. Executors must be able to import the
+    # engine, as its UDFs already require.
+    "spark.python.daemon.module": "tile_processor_spark.pydaemon",
     "spark.ui.enabled": "false",
 }
 
