@@ -4,6 +4,8 @@ against the query side), and recall sanity."""
 
 from __future__ import annotations
 
+import pytest
+
 from tile_processor_spark.plans.ann_pq import (
     ADC_TOPK,
     M_SUB,
@@ -42,6 +44,16 @@ def test_pq_codebook_state_is_exact_integer(spark):
         # integer sums and counts — never a divided mean
         assert isinstance(r["n"], int) and r["n"] >= 1
         assert all(isinstance(v, int) for v in r["sv"])
+
+
+def test_pq_fit_rejects_a_codebook_with_an_empty_cluster(spark):
+    # vec_ids 0 and 1 seed clusters 0 and 1 with identical vectors; ties
+    # go to the smallest c_id, so cluster 1 empties in every subspace and
+    # every later entry of the dense ADC table would shift
+    rows = [(0, [0] * 64), (1, [0] * 64)] + [(i, [10 * i] * 64) for i in range(2, 12)]
+    e = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
+    with pytest.raises(ValueError, match=f"full {M_SUB}x{PQ_K}"):
+        pq_fit(e)
 
 
 def test_adc_plan_broadcasts_small_sides(spark):

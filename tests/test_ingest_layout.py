@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from tile_processor_spark.sources.tables import _INGEST_CACHE, load_table
+from tile_processor_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.01"
 
@@ -64,4 +64,14 @@ def test_cache_key_tracks_source_identity(spark, tmp_path):
         f"{os.path.abspath(src)}:{st2.st_size}:{st2.st_mtime_ns}".encode()
     ).hexdigest()[:16]
     assert key1 != key2  # regenerated data gets a fresh ingest entry
-    assert isinstance(_INGEST_CACHE, dict)
+
+    # a source rewritten in place with new rows (new size and mtime) in
+    # the same session comes back with the new rows, not the stale plan
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for n in (3000, 4000):  # above the ingest threshold, one row group
+        pq.write_table(pa.table({"k": list(range(n))}), sf / "nation.parquet")
+        assert load_table(spark, "nation", str(sf)).count() == n

@@ -32,14 +32,13 @@ shape checks (window/funnel/broadcast-hint/cartesian/BatchEvalPython)
 on the PRE-checkpoint plan before taking the checkpoint, so a
 scale-killer inside a checkpointed subplan fails CI like any other
 (test_checkpoint_interception_catches_bad_subplan is the
-counter-example). Remaining limits (the checks are proxies, not
-proofs): the name check is a column-name heuristic; the growth probe
-measures one 10× step, so a grain that scales with data only beyond
-sf0.01 (e.g. a dimension that saturates at small SF) passes, and it
-does not descend into checkpointed segments; and per-session caches
-(PQ fit, IVF routing) skip their checkpoints on warm builds, so those
-segments are only intercepted on the first cold build in a session —
-their per-query plan pins remain the primary gate.
+counter-example). The sweep empties the session cache first, so every
+cached build (PQ fit, IVF routing, ...) runs, and is intercepted, even
+when an earlier test warmed it. Remaining limits (the checks are
+proxies, not proofs): the name check is a column-name heuristic; and
+the growth probe measures one 10× step, so a grain that scales with
+data only beyond sf0.01 (e.g. a dimension that saturates at small SF)
+passes, and it does not descend into checkpointed segments.
 
 This generalizes the per-query pins (test_distributed_rank_plans,
 test_semantic_ts_plans, test_ann_pq) into one registry-wide gate: a new
@@ -58,6 +57,7 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.window import Window
 
 from tile_processor_spark.plans.registry import all_specs
+from tile_processor_spark.session import session_cache_clear
 from tile_processor_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -441,6 +441,7 @@ def _checked_checkpoints(sink: list[str]):
 
 
 def test_all_registry_plans_hold_scale_invariants(spark):
+    session_cache_clear()  # intercept every cached build's checkpoints
     specs = all_specs()
     assert len(specs) >= 187
     failures: dict[str, list[str]] = {}

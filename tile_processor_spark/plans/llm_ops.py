@@ -34,6 +34,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window as W
 
 from tile_processor_spark.plans.registry import register
+from tile_processor_spark.session import session_cached
 from tile_processor_spark.sources.tables import load_table
 
 MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
@@ -363,34 +364,23 @@ def minhash_bands(sig: DataFrame) -> DataFrame:
     return sig.select("doc_id", F.explode(band_keys).alias("bk"))
 
 
-# Session-scoped MinHash signature cache: the 128-perm signature table
-# is an offline index artifact (the bucketed path materializes exactly
-# this via write_bucketed; the incremental path appends to it), so
-# batch queries reuse one Arrow signature pass per (session, corpus).
-# Deterministic pure function of the corpus — hits change nothing
-# observable. localCheckpoint, not cache(): the held reference keeps
-# the blocks alive; dropping the cache frees them via ContextCleaner.
-_MINHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_cached
 def _minhash_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signatures for the FULL ``documents`` corpus of ``sf_dir``. The
-    corpus frame is built here (not passed in) so the cache key
-    (applicationId, sf_dir) can never alias a filtered or re-shaped
-    caller corpus to the wrong cached table."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MINHASH_SIG_CACHE.get(key)
-    if hit is None:
-        # Single-row-group gate/bench parquet → 1-task scan, which would
-        # serialize the Arrow signature pass onto one core; spread it.
-        # At 100 TB the input has thousands of splits and this shuffle of
-        # (doc_id, text) is noise next to the work it parallelizes.
-        docs = _docs(spark, sf_dir).repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-        hit = minhash_signatures(docs).localCheckpoint()
-        _MINHASH_SIG_CACHE[key] = hit
-    return hit
+    """Signatures for the FULL ``documents`` corpus of ``sf_dir``, per
+    session. The 128-perm signature table is an offline index artifact
+    (the bucketed path materializes exactly this via write_bucketed;
+    the incremental path appends to it), so batch queries reuse one
+    Arrow signature pass per corpus. The corpus frame is built here
+    (not passed in) so the key (sf_dir) can never alias a filtered or
+    re-shaped caller corpus to the wrong cached table. localCheckpoint,
+    not cache(): the held reference keeps the blocks alive; dropping
+    the entry frees them via ContextCleaner."""
+    # Single-row-group gate/bench parquet → 1-task scan, which would
+    # serialize the Arrow signature pass onto one core; spread it.
+    # At 100 TB the input has thousands of splits and this shuffle of
+    # (doc_id, text) is noise next to the work it parallelizes.
+    docs = _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    return minhash_signatures(docs).localCheckpoint()
 
 
 def minhash_candidates(bands: DataFrame) -> DataFrame:
@@ -636,20 +626,13 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: constructed-plan cache for the brute cosine scoring kernel (lazy
-#: plan, keyed like the trained-index caches): quantized_col/dot_col
-#: compile higher-order lambdas through py4j on every build — pure
-#: driver overhead per invocation (guide §5; round-17 construction
-#: profile: 0.17 s/call). NOT result caching: every action re-scans
-#: parquet and re-scores.
-_BRUTE_SCORED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The brute cosine scoring kernel, a constructed plan cached per
+# session: quantized_col/dot_col compile higher-order lambdas through
+# py4j on every build — pure driver overhead per invocation (guide §5;
+# round-17 construction profile: 0.17 s/call). NOT result caching: every
+# action re-scans parquet and re-scores.
+@session_cached
 def _brute_cosine_scored_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BRUTE_SCORED_CACHE.get(key)
-    if hit is not None:
-        return hit
     e = _emb(spark, sf_dir).select("vec_id", quantized_col(F.col("embedding")).alias("q"))
     e = e.withColumn("norm", dot_col(F.col("q"), F.col("q")))
     queries = (
@@ -668,12 +651,10 @@ def _brute_cosine_scored_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pairs = e.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-    scored = pairs.withColumn("dot", dot_col(F.col("q"), F.col("qv"))).withColumn(
+    return pairs.withColumn("dot", dot_col(F.col("q"), F.col("qv"))).withColumn(
         "cosine",
         F.col("dot").cast("double") / (F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("norm").cast("double"))),
     )
-    _BRUTE_SCORED_CACHE[key] = scored
-    return scored
 
 
 @register(
@@ -1229,21 +1210,14 @@ def ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_NPROBE = 2
 IVF_TOPK = 5
 
-# Session-scoped IVF routing cache: (vec_id, c_label, crn) — every
-# vector's centroid ranking. Index routing is built OFFLINE in
-# production (docs/SCALE.md §2.2 materializes exactly this table), so
-# queries that consume it reuse one build per (session, corpus), same
-# contract as ann_pq.pq_fit_cached. Deterministic pure function of the
-# corpus: cache hits change nothing observable. localCheckpointed; the
-# held reference keeps the blocks alive.
-_IVF_ROUTING_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# (vec_id, c_label, crn): every vector's centroid ranking, per session.
+# Index routing is built OFFLINE in production (docs/SCALE.md §2.2
+# materializes exactly this table), so queries that consume it reuse one
+# build per corpus, same contract as ann_pq.pq_fit_cached. Deterministic
+# pure function of the corpus: hits change nothing observable.
+# localCheckpointed; the held reference keeps the blocks alive.
+@session_cached
 def _ivf_routing_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_ROUTING_CACHE.get(key)
-    if hit is not None:
-        return hit
     e = _emb(spark, sf_dir).select(
         "vec_id", "label", quantized_col(F.col("embedding")).alias("q")
     )
@@ -1276,11 +1250,9 @@ def _ivf_routing_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # routing result; without persisting it each branch re-executes the
     # whole centroid pipeline (verified: 0 ReusedExchange in the executed
     # plan). Checkpoint once — the materialized IVF routing table.
-    ranked = scored.select(
+    return scored.select(
         "vec_id", "c_label", F.row_number().over(cw).alias("crn")
     ).localCheckpoint()
-    _IVF_ROUTING_CACHE[key] = ranked
-    return ranked
 
 
 @register(
@@ -1360,21 +1332,14 @@ def ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: constructed-plan cache for the IVF search kernel (lazy plan, keyed
-#: like _IVF_ROUTING_CACHE, same offline-index rationale: the search
-#: program is prepared once per (session, corpus) and served many
-#: times). Construction compiled three dot_col lambdas per call —
-#: 0.28 s of driver time in the round-17 profile. NOT result caching:
-#: candidates are re-scored from the checkpointed routing + parquet on
-#: every action.
-_IVF_SCORED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The IVF search kernel, a constructed plan cached per session (same
+# offline-index rationale as the routing: the search program is prepared
+# once per corpus and served many times). Construction compiled three
+# dot_col lambdas per call — 0.28 s of driver time in the round-17
+# profile. NOT result caching: candidates are re-scored from the
+# checkpointed routing + parquet on every action.
+@session_cached
 def _ivf_scored_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_SCORED_CACHE.get(key)
-    if hit is not None:
-        return hit
     e = _emb(spark, sf_dir).select(
         "vec_id", "label", quantized_col(F.col("embedding")).alias("q")
     )
@@ -1418,7 +1383,7 @@ def _ivf_scored_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q").alias("vvec"),
         dot_col(F.col("q"), F.col("q")).alias("nv"),
     )
-    pairs = (
+    return (
         cand.join(F.broadcast(qv), "q_id")
         .join(vv, "vec_id")
         .withColumn("dot", dot_col(F.col("qvec"), F.col("vvec")))
@@ -1428,8 +1393,6 @@ def _ivf_scored_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.sqrt(F.col("nq").cast("double")) * F.sqrt(F.col("nv").cast("double"))),
         )
     )
-    _IVF_SCORED_CACHE[key] = pairs
-    return pairs
 
 
 CHUNK_W = 64  # tokens per chunk

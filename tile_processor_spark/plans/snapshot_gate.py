@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tile_processor_spark.plans.registry import register
+from tile_processor_spark.session import session_cached
 from tile_processor_spark.sources.snapshots import (
     read_snapshot,
     snapshot_diff,
@@ -63,21 +64,14 @@ def _period_state(spark: SparkSession, sf_dir: str, lo: str | None, hi: str) -> 
     )
 
 
-# Both gate plans (and repeat invocations in one session) share ONE
-# build per (applicationId, sf_dir) — mirrors pq_fit_cached: the build
-# is deterministic, so a hit changes nothing observable, and the single
-# atexit registration bounds /tmp growth in long sessions.
-_BUILD_CACHE: dict[tuple[str, str], str] = {}
-
-
+@session_cached
 def _build_two_versions(spark: SparkSession, sf_dir: str) -> str:
     """Commit v1 (pre-1996 state) then MERGE-upsert the 1996 state as
-    v2 into a fresh temp table; returns the table path (memoized per
-    session + sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BUILD_CACHE.get(key)
-    if hit is not None:
-        return hit
+    v2 into a fresh temp table; returns the table path. Both gate plans
+    (and repeat invocations in one session) share ONE build per session
+    and sf_dir, like every table fixture here: the build is
+    deterministic, so a hit changes nothing observable, and the single
+    atexit registration bounds /tmp growth in long sessions."""
     table = tempfile.mkdtemp(prefix="tps_snap_gate_")
     # mkdtemp creates the dir; the store wants to own a clean path.
     # Cleanup must wait until process exit: the returned DataFrame reads
@@ -90,7 +84,6 @@ def _build_two_versions(spark: SparkSession, sf_dir: str) -> str:
         _period_state(spark, sf_dir, _V1_BEFORE, _V2_BEFORE), table, ["custkey"]
     )
     _expect(v2 == 2, f"expected v2, got {v2}")
-    _BUILD_CACHE[key] = table
     return table
 
 
@@ -174,9 +167,6 @@ def snapshot_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- additive schema evolution (round 9) -----------------------------------
 
-_EVOLVE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _delta_with_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 1996 per-customer state PLUS a column v1 never had:
     last_order_day (days since 1970-01-01 of the latest 1996 order —
@@ -199,15 +189,12 @@ def _delta_with_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_cached
 def _build_evolved_versions(spark: SparkSession, sf_dir: str) -> str:
     """v1 = pre-1996 state (3 columns); v2 = MERGE of the 1996 state
     carrying a NEW column (allow_new_columns=True) — carried-over rows
     get NULL for it. Own table: the two-version build above must keep
     exactly two schema-stable versions for its rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EVOLVE_CACHE.get(key)
-    if hit is not None:
-        return hit
     table = tempfile.mkdtemp(prefix="tps_snap_evolve_")
     shutil.rmtree(table)
     atexit.register(shutil.rmtree, table, ignore_errors=True)
@@ -220,7 +207,6 @@ def _build_evolved_versions(spark: SparkSession, sf_dir: str) -> str:
         allow_new_columns=True,
     )
     _expect(v2 == 2, f"expected v2, got {v2}")
-    _EVOLVE_CACHE[key] = table
     return table
 
 
@@ -304,17 +290,11 @@ def snapshot_schema_evolution_diff(spark: SparkSession, sf_dir: str) -> DataFram
 
 # --- manifest-level partition pruning (round 9) -----------------------------
 
-_PARTITIONED_CACHE: dict[tuple[str, str], str] = {}
-
-
+@session_cached
 def _build_partitioned(spark: SparkSession, sf_dir: str) -> str:
     """One committed version of per-(status, customer) order state,
     Hive-partitioned by o_orderstatus — three partitions whose file
     sets the manifest can prune independently."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PARTITIONED_CACHE.get(key)
-    if hit is not None:
-        return hit
     table = tempfile.mkdtemp(prefix="tps_snap_part_")
     shutil.rmtree(table)
     atexit.register(shutil.rmtree, table, ignore_errors=True)
@@ -330,7 +310,6 @@ def _build_partitioned(spark: SparkSession, sf_dir: str) -> str:
     )
     v = write_snapshot(state, table, partition_by=["status"])
     _expect(v == 1, f"expected v1, got {v}")
-    _PARTITIONED_CACHE[key] = table
     return table
 
 
@@ -403,7 +382,32 @@ def snapshot_datasource_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INCDEDUP_CACHE: dict[tuple[str, str], str] = {}
+@session_cached
+def _incremental_dedup_store(spark: SparkSession, sf_dir: str) -> str:
+    """Land documents as three append versions (version = doc_id%3 + 1)
+    and run the incremental dedup over them; returns the fingerprint
+    store path."""
+    from tile_processor_spark.sources.incremental_dedup import (
+        dedup_new_versions,
+    )
+    from tile_processor_spark.sources.snapshots import append_snapshot
+
+    corpus = tempfile.mkdtemp(prefix="tps_incdedup_corpus_")
+    fp_path = tempfile.mkdtemp(prefix="tps_incdedup_fps_")
+    shutil.rmtree(corpus)
+    shutil.rmtree(fp_path)
+    atexit.register(shutil.rmtree, corpus, ignore_errors=True)
+    atexit.register(shutil.rmtree, fp_path, ignore_errors=True)
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    for v in (1, 2, 3):
+        append_snapshot(docs.filter(F.col("doc_id") % 3 == v - 1), corpus)
+    dedup_new_versions(
+        spark,
+        corpus,
+        fp_path,
+        fingerprint=F.md5(F.encode(F.substring(F.col("text"), 1, 16), "UTF-8")),
+    )
+    return fp_path
 
 
 @register(
@@ -438,41 +442,37 @@ _INCDEDUP_CACHE: dict[tuple[str, str], str] = {}
     tags=("snapshot", "dedup", "incremental"),
 )
 def snapshot_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tile_processor_spark.sources.incremental_dedup import (
-        dedup_new_versions,
-    )
-    from tile_processor_spark.sources.snapshots import append_snapshot
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fp_path = _INCDEDUP_CACHE.get(key)
-    if fp_path is None:
-        corpus = tempfile.mkdtemp(prefix="tps_incdedup_corpus_")
-        fp_path = tempfile.mkdtemp(prefix="tps_incdedup_fps_")
-        shutil.rmtree(corpus)
-        shutil.rmtree(fp_path)
-        atexit.register(shutil.rmtree, corpus, ignore_errors=True)
-        atexit.register(shutil.rmtree, fp_path, ignore_errors=True)
-        docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-        for v in (1, 2, 3):
-            append_snapshot(
-                docs.filter(F.col("doc_id") % 3 == v - 1), corpus
-            )
-        dedup_new_versions(
-            spark,
-            corpus,
-            fp_path,
-            fingerprint=F.md5(
-                F.encode(F.substring(F.col("text"), 1, 16), "UTF-8")
-            ),
-        )
-        _INCDEDUP_CACHE[key] = fp_path
+    fp_path = _incremental_dedup_store(spark, sf_dir)
     return read_snapshot(spark, fp_path).select(
         F.col("doc_key").alias("doc_id"),
         F.col("src_version").cast("int").alias("src_version"),
     )
 
 
-_WHERE_CACHE: dict[tuple[str, str], tuple[str, int, int]] = {}
+@session_cached
+def _range_clustered_orders(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
+    """orders landed as three snapshot appends clustered by o_orderkey
+    range; returns (table, lo_cut, hi_cut), the cuts at max-relative
+    thirds so the row is meaningful at every sf."""
+    from tile_processor_spark.sources.snapshots import append_snapshot
+
+    table = tempfile.mkdtemp(prefix="tps_snap_where_")
+    shutil.rmtree(table)
+    atexit.register(shutil.rmtree, table, ignore_errors=True)
+    o = load_table(spark, "orders", sf_dir).select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    mx = o.agg(F.max("o_orderkey")).collect()[0][0]
+    # the ingest-sorted shape where footer stats separate files cleanly
+    lo_cut, hi_cut = mx // 3, 2 * mx // 3
+    for lo, hi in ((None, lo_cut), (lo_cut, hi_cut), (hi_cut, None)):
+        part = o
+        if lo is not None:
+            part = part.filter(F.col("o_orderkey") >= lo)
+        if hi is not None:
+            part = part.filter(F.col("o_orderkey") < hi)
+        append_snapshot(part.coalesce(1), table)
+    return table, lo_cut, hi_cut
 
 
 @register(
@@ -506,30 +506,7 @@ _WHERE_CACHE: dict[tuple[str, str], tuple[str, int, int]] = {}
     tags=("snapshot", "skipping"),
 )
 def snapshot_where_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tile_processor_spark.sources.snapshots import append_snapshot
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WHERE_CACHE:
-        table = tempfile.mkdtemp(prefix="tps_snap_where_")
-        shutil.rmtree(table)
-        atexit.register(shutil.rmtree, table, ignore_errors=True)
-        o = load_table(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        mx = o.agg(F.max("o_orderkey")).collect()[0][0]
-        # three range-clustered appends — the ingest-sorted shape where
-        # footer stats separate files cleanly; cuts are max-relative
-        # thirds so the row is meaningful at every sf
-        lo_cut, hi_cut = mx // 3, 2 * mx // 3
-        for lo, hi in ((None, lo_cut), (lo_cut, hi_cut), (hi_cut, None)):
-            part = o
-            if lo is not None:
-                part = part.filter(F.col("o_orderkey") >= lo)
-            if hi is not None:
-                part = part.filter(F.col("o_orderkey") < hi)
-            append_snapshot(part.coalesce(1), table)
-        _WHERE_CACHE[key] = (table, lo_cut, hi_cut)
-    table, lo_cut, hi_cut = _WHERE_CACHE[key]
+    table, lo_cut, hi_cut = _range_clustered_orders(spark, sf_dir)
     got = read_snapshot(
         spark,
         table,
@@ -545,9 +522,43 @@ def snapshot_where_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- S3-native write -> read roundtrip (round 14) ---------------------------
 
-_S3_NATIVE_CACHE: dict[tuple[str, str], dict] = {}
 #: fixed fake-endpoint credentials (test-only, repo-native)
 _S3_GATE_CREDS = ("TPSGATEKEY", "tps-gate-secret")
+
+
+def _fake_s3_opts(path: str) -> tuple[object, dict]:
+    """A fresh signature-verifying fake S3 endpoint (daemon thread; dies
+    with the process) and the connector options for ``path`` on it."""
+    from tile_processor_spark.testing.fake_s3 import start_fake_s3
+
+    ak, sk = _S3_GATE_CREDS
+    srv = start_fake_s3(ak, sk)
+    host, port = srv.server_address
+    return srv, {
+        "path": path,
+        "s3_endpoint": f"http://{host}:{port}",
+        "s3_access_key": ak,
+        "s3_secret_key": sk,
+    }
+
+
+@session_cached
+def _s3_documents_table(spark: SparkSession, sf_dir: str) -> dict:
+    """Commit the even half of documents as v1 and append the odd half
+    as v2 on a fake S3 endpoint; returns the reader options."""
+    srv, opts = _fake_s3_opts("s3://tps-gate-bucket/warehouse/docs_state")
+    docs = load_table(spark, "documents", sf_dir).select(
+        "doc_id",
+        (F.col("doc_id") % 2).cast("int").alias("src_part"),
+        F.md5(F.encode(F.substring(F.col("text"), 1, 16), "UTF-8")).alias("fp"),
+    )
+    for part, mode in ((0, "overwrite"), (1, "append")):
+        w = docs.filter(F.col("src_part") == part).write.format("tps_snapshot")
+        for k, v in opts.items():
+            w = w.option(k, v)
+        w.mode(mode).save()
+    _expect(not srv.rejections, f"unsigned requests: {srv.rejections}")
+    return opts
 
 
 @register(
@@ -582,36 +593,7 @@ def snapshot_s3_write_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     reg_ds(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    opts = _S3_NATIVE_CACHE.get(key)
-    if opts is None:
-        from tile_processor_spark.testing.fake_s3 import start_fake_s3
-
-        ak, sk = _S3_GATE_CREDS
-        srv = start_fake_s3(ak, sk)  # daemon thread; dies with the process
-        host, port = srv.server_address
-        opts = {
-            "path": "s3://tps-gate-bucket/warehouse/docs_state",
-            "s3_endpoint": f"http://{host}:{port}",
-            "s3_access_key": ak,
-            "s3_secret_key": sk,
-        }
-        docs = load_table(spark, "documents", sf_dir).select(
-            "doc_id",
-            (F.col("doc_id") % 2).cast("int").alias("src_part"),
-            F.md5(
-                F.encode(F.substring(F.col("text"), 1, 16), "UTF-8")
-            ).alias("fp"),
-        )
-        for part, mode in ((0, "overwrite"), (1, "append")):
-            w = docs.filter(F.col("src_part") == part).write.format(
-                "tps_snapshot"
-            )
-            for k, v in opts.items():
-                w = w.option(k, v)
-            w.mode(mode).save()
-        _expect(not srv.rejections, f"unsigned requests: {srv.rejections}")
-        _S3_NATIVE_CACHE[key] = opts
+    opts = _s3_documents_table(spark, sf_dir)
     r = spark.read.format("tps_snapshot")
     for k, v in opts.items():
         r = r.option(k, v)
@@ -620,7 +602,41 @@ def snapshot_s3_write_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- S3-native PARTITIONED append -> pruned read (round 15) ------------------
 
-_S3_PART_CACHE: dict[tuple[str, str], dict] = {}
+
+@session_cached
+def _s3_orders_by_status_table(spark: SparkSession, sf_dir: str) -> dict:
+    """Commit the even-keyed half of orders as v1 Hive-partitioned by
+    status and append the odd half as v2 on a fake S3 endpoint; checks
+    the append manifest and returns the reader options."""
+    from tile_processor_spark.sources.snapshot_datasource import S3SnapshotStore
+
+    srv, opts = _fake_s3_opts("s3://tps-gate-bucket/warehouse/orders_by_status")
+    orders = load_table(spark, "orders", sf_dir).select(
+        F.col("o_orderkey").alias("okey"),
+        F.col("o_custkey").alias("custkey"),
+        F.col("o_totalprice").cast("double").alias("price"),
+        F.col("o_orderstatus").alias("status"),
+    )
+    for parity, mode in ((0, "overwrite"), (1, "append")):
+        w = orders.filter(F.col("okey") % 2 == parity).write.format("tps_snapshot")
+        for k, v in opts.items():
+            w = w.option(k, v)
+        if mode == "overwrite":
+            w = w.option("partition_by", "status")
+        w.mode(mode).save()
+    _expect(not srv.rejections, f"unsigned requests: {srv.rejections}")
+    # the append manifest must carry the scheme forward and its
+    # delta keys their own Hive chains (the contract under test)
+    m2 = S3SnapshotStore(opts["path"], opts).manifest(2)
+    _expect(
+        m2.get("partition_by") == ["status"],
+        f"append manifest lost the scheme: {m2.get('partition_by')}",
+    )
+    _expect(
+        all("status=" in f for f in m2["appended_files"]),
+        "delta objects missing their Hive key chains",
+    )
+    return opts
 
 
 @register(
@@ -660,52 +676,7 @@ def snapshot_s3_partitioned_append(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     reg_ds(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    opts = _S3_PART_CACHE.get(key)
-    if opts is None:
-        from tile_processor_spark.testing.fake_s3 import start_fake_s3
-
-        ak, sk = _S3_GATE_CREDS
-        srv = start_fake_s3(ak, sk)  # daemon thread; dies with the process
-        host, port = srv.server_address
-        opts = {
-            "path": "s3://tps-gate-bucket/warehouse/orders_by_status",
-            "s3_endpoint": f"http://{host}:{port}",
-            "s3_access_key": ak,
-            "s3_secret_key": sk,
-        }
-        orders = load_table(spark, "orders", sf_dir).select(
-            F.col("o_orderkey").alias("okey"),
-            F.col("o_custkey").alias("custkey"),
-            F.col("o_totalprice").cast("double").alias("price"),
-            F.col("o_orderstatus").alias("status"),
-        )
-        for parity, mode in ((0, "overwrite"), (1, "append")):
-            w = orders.filter(F.col("okey") % 2 == parity).write.format(
-                "tps_snapshot"
-            )
-            for k, v in opts.items():
-                w = w.option(k, v)
-            if mode == "overwrite":
-                w = w.option("partition_by", "status")
-            w.mode(mode).save()
-        _expect(not srv.rejections, f"unsigned requests: {srv.rejections}")
-        # the append manifest must carry the scheme forward and its
-        # delta keys their own Hive chains (the contract under test)
-        from tile_processor_spark.sources.snapshot_datasource import (
-            S3SnapshotStore,
-        )
-
-        m2 = S3SnapshotStore(opts["path"], opts).manifest(2)
-        _expect(
-            m2.get("partition_by") == ["status"],
-            f"append manifest lost the scheme: {m2.get('partition_by')}",
-        )
-        _expect(
-            all("status=" in f for f in m2["appended_files"]),
-            "delta objects missing their Hive key chains",
-        )
-        _S3_PART_CACHE[key] = opts
+    opts = _s3_orders_by_status_table(spark, sf_dir)
     r = spark.read.format("tps_snapshot").option(
         "partition_filter", '{"status": "F"}'
     )
@@ -723,8 +694,6 @@ def snapshot_s3_partitioned_append(spark: SparkSession, sf_dir: str) -> DataFram
 
 _DELETE_THRESH = 15  # n_orders > 15 deletes rows at every test SF
 
-_DELETE_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _full_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer (n_orders, spend) over ALL orders — the pre-delete
@@ -738,16 +707,13 @@ def _full_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_cached
 def _build_delete_versions(spark: SparkSession, sf_dir: str) -> str:
     """v1 = full per-customer state; v2 = row-level DELETE of the
     heavy customers (``n_orders > _DELETE_THRESH``) — the compliance
     shape: targeted rows leave the head, untouched files carry by
     reference, and v1 stays readable for time travel (memoized per
     session + sf_dir, like the other gate fixtures)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DELETE_CACHE.get(key)
-    if hit is not None:
-        return hit
     from tile_processor_spark.sources.snapshots import delete_snapshot
 
     table = tempfile.mkdtemp(prefix="tps_snap_delete_")
@@ -759,7 +725,6 @@ def _build_delete_versions(spark: SparkSession, sf_dir: str) -> str:
         spark, table, [("n_orders", ">", _DELETE_THRESH)]
     )
     _expect(v2 == 2, f"expected delete to commit v2, got {v2}")
-    _DELETE_CACHE[key] = table
     return table
 
 

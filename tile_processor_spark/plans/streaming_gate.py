@@ -42,6 +42,7 @@ from tile_processor_spark.plans.sketches import (
     HLL_REM_BITS,
     cms_positions,
 )
+from tile_processor_spark.session import session_cached
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.streaming.cms import (
     merge_batch_into_cms,
@@ -76,22 +77,14 @@ N_EPOCHS = 3
 TOPK_K = 10
 _RUN_ID = "stream-gate"
 
-# One store build per (applicationId, sf_dir) — the snapshot_gate /
-# pq_fit_cached artifact pattern: deterministic, memoized, single
-# atexit cleanup. Value: (root_dir, value_lo, value_hi) — the histogram
-# store's fixed range, the exact data min/max (same doubles the oracle
-# computes in SQL).
-_STORE_CACHE: dict[tuple[str, str], tuple[str, float, float]] = {}
-
-
+@session_cached
 def _build_stores(spark: SparkSession, sf_dir: str) -> tuple[str, float, float]:
     """Fold events into kmv/hll/cms/hist/topk stores as N_EPOCHS
     micro-batches (+ a replay of the last one); returns the directory
-    holding them and the histogram value range."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _STORE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    holding them and the histogram value range — the exact data
+    min/max, the same doubles the oracle computes in SQL. One build per
+    session and sf_dir (the snapshot_gate fixture pattern:
+    deterministic, single atexit cleanup)."""
     root = tempfile.mkdtemp(prefix="tps_stream_gate_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     kmv_p = os.path.join(root, "kmv")
@@ -137,9 +130,7 @@ def _build_stores(spark: SparkSession, sf_dir: str) -> tuple[str, float, float]:
     merge_batch_into_topk(
         epochs[last], topk_p, key_col="user_id", epoch=last, run_id=_RUN_ID
     )
-    result = (root, lo, hi)
-    _STORE_CACHE[key] = result
-    return result
+    return root, lo, hi
 
 
 # --- KMV: continuous distinct users ---------------------------------------
@@ -473,14 +464,11 @@ def stream_topk_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Sessionization with watermark late-data semantics ---------------------
 
-# One session-store build per (applicationId, sf_dir); value = store
-# root. Separate from _build_stores because the batch split is
-# different: time-range thirds with DELIBERATE stragglers, so the
-# watermark has real late data to drop (the event_id%3 split would put
-# near-max timestamps in batch 0 and drown everything after).
-_SESS_STORE_CACHE: dict[tuple[str, str], str] = {}
-
-
+# Separate from _build_stores because the batch split is different:
+# time-range thirds with DELIBERATE stragglers, so the watermark has
+# real late data to drop (the event_id%3 split would put near-max
+# timestamps in batch 0 and drown everything after).
+@session_cached
 def _build_session_store(spark: SparkSession, sf_dir: str) -> str:
     """Feed events as 3 time-ordered micro-batches with stragglers:
     base batch = which third of the time span the event falls in;
@@ -488,11 +476,8 @@ def _build_session_store(spark: SparkSession, sf_dir: str) -> str:
     delay = one eighth of a third, so a straggler is kept iff it is
     within the delay of the previous batch's max — a genuine drop/keep
     mix. The final batch is replayed (epoch-guard discipline, like the
-    sketch stores)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SESS_STORE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    sketch stores). One build per session and sf_dir; returns the store
+    root."""
     root = tempfile.mkdtemp(prefix="tps_sess_gate_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     store = os.path.join(root, "sessions")
@@ -529,7 +514,6 @@ def _build_session_store(spark: SparkSession, sf_dir: str) -> str:
         epochs[N_EPOCHS - 1], store, gap_us=SESSION_GAP_US,
         delay_us=delay_us, epoch=N_EPOCHS - 1, run_id=_RUN_ID,
     )
-    _SESS_STORE_CACHE[key] = store
     return store
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import Window as W
 
 from tile_processor_spark.plans.registry import register
 from tile_processor_spark.plans.relational_ext3 import SESSION_GAP_US
+from tile_processor_spark.session import session_cached
 from tile_processor_spark.sources.tables import load_table
 
 HOUR_US = 3_600_000_000
@@ -1019,38 +1020,28 @@ def events_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 DAY_US = 86_400_000_000
 
 
-#: materialized session frames per (applicationId, sf_dir) — the
-#: offline-artifact pattern (same as the cached PQ fit): the gap-rule
-#: sessionize pass is byte-identical across events_interval_overlap
-#: and both sweep queries, so one localCheckpoint serves them all in a
-#: session.
-_SESS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The offline-artifact pattern (same as the cached PQ fit): the
+# sessionize pass is byte-identical across events_interval_overlap and
+# both sweep queries, so one localCheckpoint per session serves them all.
+@session_cached
 def _sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, session_seq, start_us, end_us) under the 30-minute
-    gap rule, (ts_us, event_id)-tie-broken — localCheckpointed once
-    per (applicationId, sf_dir) and shared by every interval-family
-    query (identical frame to sessionize_gap_ids' grouping)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SESS_CACHE:
-        ev = load_table(spark, "events", sf_dir).select(
-            "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
-        )
-        wo = W.partitionBy("user_id").orderBy("ts_us", "event_id")
-        wrun = wo.rowsBetween(W.unboundedPreceding, W.currentRow)
-        marked = ev.withColumn(
-            "new_session",
-            F.when(
-                F.col("ts_us") - F.lag("ts_us").over(wo) > SESSION_GAP_US, 1
-            ).otherwise(0),
-        )
-        _SESS_CACHE[key] = (
-            marked.withColumn("session_seq", F.sum("new_session").over(wrun))
-            .groupBy("user_id", "session_seq")
-            .agg(F.min("ts_us").alias("start_us"), F.max("ts_us").alias("end_us"))
-        ).localCheckpoint()
-    return _SESS_CACHE[key]
+    gap rule, (ts_us, event_id)-tie-broken — identical frame to
+    sessionize_gap_ids' grouping."""
+    ev = load_table(spark, "events", sf_dir).select(
+        "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
+    )
+    wo = W.partitionBy("user_id").orderBy("ts_us", "event_id")
+    wrun = wo.rowsBetween(W.unboundedPreceding, W.currentRow)
+    marked = ev.withColumn(
+        "new_session",
+        F.when(F.col("ts_us") - F.lag("ts_us").over(wo) > SESSION_GAP_US, 1).otherwise(0),
+    )
+    return (
+        marked.withColumn("session_seq", F.sum("new_session").over(wrun))
+        .groupBy("user_id", "session_seq")
+        .agg(F.min("ts_us").alias("start_us"), F.max("ts_us").alias("end_us"))
+    ).localCheckpoint()
 
 
 def _session_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:

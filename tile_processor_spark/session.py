@@ -1,13 +1,19 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory tuned for the engine, and the session cache.
 
 Local-mode defaults follow the test/bench environment (single JVM,
 ``local[$SPARK_GRAFT_CPUS]``); on a real cluster every setting here is
 still sane — AQE on, Arrow on, shuffle partitions sized explicitly.
+``session_cached`` holds state built for one SparkContext (plans,
+checkpoints, UDFs) until that context's application is gone.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import time
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
@@ -91,3 +97,59 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+# --- session cache --------------------------------------------------------
+
+#: (builder, args) -> built value, for the application ``_cache_app`` only
+_entries: dict[tuple[Callable, tuple], object] = {}
+_cache_app: str | None = None
+#: builder name -> [hits, misses, build seconds], for the life of the process
+_stats: dict[str, list] = {}
+
+_T = TypeVar("_T")
+
+
+def session_cached(fn: Callable[..., _T]) -> Callable[..., _T]:
+    """Memoize ``fn(spark, *args)`` per ``(fn, args)`` for the live
+    SparkContext. ``args`` must be hashable; the first lookup under a
+    new ``applicationId`` drops every entry of the previous application,
+    so no plan, checkpoint or UDF outlives (or crosses) its session.
+
+    For built state only — resolved plans, localCheckpoints, gate
+    fixture directories, UDFs — never query results: a hit must change
+    nothing observable. Builds run without a lock, so two threads that
+    miss together both build and the last one's value is kept.
+    """
+    counts = _stats.setdefault(f"{fn.__module__}.{fn.__qualname__}", [0, 0, 0.0])
+
+    @functools.wraps(fn)
+    def cached(spark: SparkSession, *args):
+        global _cache_app
+        app = spark.sparkContext.applicationId
+        if app != _cache_app:
+            _entries.clear()
+            _cache_app = app
+        key = (fn, args)
+        if key in _entries:
+            counts[0] += 1
+            return _entries[key]
+        counts[1] += 1
+        t0 = time.perf_counter()
+        out = fn(spark, *args)
+        counts[2] += time.perf_counter() - t0
+        _entries[key] = out
+        return out
+
+    return cached
+
+
+def session_cache_stats() -> dict[str, dict[str, float]]:
+    """Per builder: ``hits``, ``misses`` and ``build_s`` (seconds spent
+    in misses), counted since the process started."""
+    return {n: {"hits": h, "misses": m, "build_s": s} for n, (h, m, s) in _stats.items()}
+
+
+def session_cache_clear() -> None:
+    """Drop every cached entry; the next call of each builder rebuilds."""
+    _entries.clear()

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tile_processor_spark.session import session_cached
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -51,20 +53,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # a copy) and fewer than this many row groups (already splittable).
 _INGEST_MIN_ROWS = 2_000
 _INGEST_MAX_ROW_GROUPS = 3
-# (app_id, source key) -> ingested directory, so repeat loads in one
-# session skip the source metadata probe entirely.
-_INGEST_CACHE: dict[tuple[str, str], str] = {}
 _INGEST_LOCK = threading.Lock()
-
-# (app_id, path, size, mtime_ns) -> the resolved DataFrame. A bench/gate
-# session calls load_table for the same table once per query; each call
-# re-paid driver-side work (file listing + footer schema read + py4j
-# round trips) to rebuild an identical immutable plan. Caching the PLAN
-# is not result caching: execution still scans the parquet files every
-# action. Keyed by (size, mtime) like _INGEST_CACHE so a driver-side
-# regeneration of the source is never served a stale plan, and by
-# applicationId so no frame outlives (or crosses) its session.
-_DF_CACHE: dict[tuple[str, str, int, int, bool], DataFrame] = {}
 
 
 def _ingest_root() -> str | None:
@@ -91,35 +80,33 @@ def _gc_stale_ingests(root: str, keep_app: str) -> None:
 
 
 def _parallel_layout(
-    spark: SparkSession, name: str, path: str, df: DataFrame | None = None
+    spark: SparkSession,
+    name: str,
+    path: str,
+    stamp: tuple[int, int] | None,
+    df: DataFrame | None = None,
 ) -> DataFrame | None:
     """Return ``name`` read from a multi-file scratch copy (ingesting it
     first if this session hasn't yet), or None when re-layout is
-    disabled, impossible, or not beneficial. ``df`` overrides the frame
-    to materialize (the normalized events frame)."""
+    disabled, impossible, or not beneficial. ``path`` is absolute and
+    ``stamp`` its (size, mtime_ns), None when it is not a local file;
+    ``df`` overrides the frame to materialize (the normalized events
+    frame)."""
     root = _ingest_root()
-    if root is None:
+    if root is None or stamp is None:
         return None
     try:
         import pyarrow.parquet as pq
 
-        st = os.stat(path)
-        key = hashlib.md5(
-            f"{os.path.abspath(path)}:{st.st_size}:{st.st_mtime_ns}".encode()
-        ).hexdigest()[:16]
+        key = hashlib.md5(f"{path}:{stamp[0]}:{stamp[1]}".encode()).hexdigest()[:16]
         app = spark.sparkContext.applicationId
         app_dir = os.path.join(root, app)
         # keep-alive: refresh our dir's mtime so another session's
         # stale-GC never reclaims a cache a >2h session is still using
         if os.path.isdir(app_dir):
             os.utime(app_dir)
-        cached = _INGEST_CACHE.get((app, key))
-        if cached is not None:
-            # "" = probed and skipped (tiny / already splittable)
-            return spark.read.parquet(cached) if cached else None
         meta = pq.ParquetFile(path).metadata
         if meta.num_rows < _INGEST_MIN_ROWS or meta.num_row_groups > _INGEST_MAX_ROW_GROUPS:
-            _INGEST_CACHE[(app, key)] = ""
             return None
         out = os.path.join(app_dir, f"{key}-{name}")
         with _INGEST_LOCK:  # serialize in-process probe-and-write races
@@ -143,9 +130,7 @@ def _parallel_layout(
                     # otherwise skip ingest and read the original path.
                     shutil.rmtree(tmp, ignore_errors=True)
                     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                        _INGEST_CACHE[(app, key)] = ""
                         return None
-        _INGEST_CACHE[(app, key)] = out
         return spark.read.parquet(out)
     except Exception:
         return None  # ingest is an optimization; never fail the read
@@ -171,26 +156,39 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     path = f"{sf_dir}/{name}.parquet"
     try:
         st = os.stat(path)
-        dkey = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            st.st_size,
-            st.st_mtime_ns,
-            # the ingest kill switch changes which PHYSICAL layout this
-            # function returns; a frame cached with ingest on must not be
-            # served after the switch flips mid-session (and vice versa)
-            bool(os.environ.get("SPARK_GRAFT_NO_INGEST")),
-        )
     except OSError:
-        dkey = None
-    if dkey is not None and dkey in _DF_CACHE:
-        return _DF_CACHE[dkey]
+        return _read_table(spark, name, path)
+    # the ingest kill switch changes which PHYSICAL layout is returned;
+    # a frame cached with ingest on must not be served after the switch
+    # flips mid-session (and vice versa)
+    return _read_table_cached(
+        spark, name, os.path.abspath(path), st.st_size, st.st_mtime_ns,
+        bool(os.environ.get("SPARK_GRAFT_NO_INGEST")),
+    )
+
+
+# The resolved plan of one source, per (path, size, mtime, ingest
+# switch) and session. A bench/gate session calls load_table for the
+# same table once per query; each call re-paid driver-side work (file
+# listing + footer schema read + py4j round trips) to rebuild an
+# identical immutable plan. Caching the PLAN is not result caching:
+# execution still scans the parquet files every action. A regenerated
+# source has a new size or mtime, so it is never served a stale plan.
+@session_cached
+def _read_table_cached(
+    spark: SparkSession, name: str, path: str, size: int, mtime_ns: int, no_ingest: bool
+) -> DataFrame:
+    return _read_table(spark, name, path, (size, mtime_ns))
+
+
+def _read_table(
+    spark: SparkSession, name: str, path: str, stamp: tuple[int, int] | None = None
+) -> DataFrame:
+    """``name`` read from ``path``; see ``_parallel_layout`` for
+    ``stamp``."""
     if name != "events":
-        laid = _parallel_layout(spark, name, path)
-        out = laid if laid is not None else spark.read.parquet(path)
-        if dkey is not None:
-            _DF_CACHE[dkey] = out
-        return out
+        laid = _parallel_layout(spark, name, path, stamp)
+        return laid if laid is not None else spark.read.parquet(path)
     # The driver has regenerated events.parquet with different physical
     # ts encodings across rounds; normalize to TIMESTAMP (LTZ) whatever
     # the on-disk flavor so downstream `unix_micros` / `window()` /
@@ -226,11 +224,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # the scratch copy stores the NORMALIZED frame (plain TIMESTAMP
     # micros), so cached reads need neither the nanos conf nor the cast
-    laid = _parallel_layout(spark, "events", path, df=df)
-    out = laid if laid is not None else df
-    if dkey is not None:
-        _DF_CACHE[dkey] = out
-    return out
+    laid = _parallel_layout(spark, "events", path, stamp, df=df)
+    return laid if laid is not None else df
 
 
 def table_row_count(name: str, sf_dir: str = DEFAULT_SF_DIR) -> int:

@@ -19,9 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tile_processor_spark.session import session_cached
 from tile_processor_spark.spatial.udfs import st_contains_point
 
 
@@ -135,52 +136,44 @@ def region_relate_join(
     sized (one row per version) → broadcast nested-loop, then one
     Arrow-batched pandas-UDF pass for the exact matrix.
     """
-    relate = _relate_udf(tiles.sparkSession.sparkContext.applicationId, pattern, covers)
+    relate = _relate_udf(tiles.sparkSession, pattern, covers)
     return tiles.crossJoin(F.broadcast(regions)).filter(
         relate("rects", "xmin", "ymin", "xmax", "ymax")
     )
 
 
-#: per-(applicationId, pattern, covers) DE-9IM relate UDFs — building a
-#: pandas_udf is a driver-side py4j + cloudpickle round trip, so each
-#: variant is built once per session, not once per query invocation. A
-#: UDF binds the SparkContext it first ran under (its Python accumulator
-#: included), so entries of other applications are dropped on the next
-#: lookup.
-_RELATE_UDFS: dict = {}
+@session_cached
+def _relate_udf(spark: SparkSession, pattern: str, covers: bool):
+    """The DE-9IM relate UDF for one (pattern, covers). Building a
+    pandas_udf is a driver-side py4j + cloudpickle round trip, so each
+    variant is built once per session, not once per query invocation; a
+    UDF binds the SparkContext it first ran under (its Python
+    accumulator included), so it must not outlive the session."""
+    from tile_processor_spark.spatial import kernel
 
+    @F.pandas_udf("boolean")
+    def _relate(
+        rects: pd.Series,
+        xmin: pd.Series,
+        ymin: pd.Series,
+        xmax: pd.Series,
+        ymax: pd.Series,
+    ) -> pd.Series:
+        out = []
+        for rl, x0, y0, x1, y1 in zip(rects, xmin, ymin, xmax, ymax):
+            arr = (
+                np.stack([np.asarray(r, dtype=np.float64) for r in rl])
+                if len(rl)
+                else np.empty((0, 4))
+            )
+            m = kernel.rect_union_de9im(arr, (x0, y0, x1, y1))
+            ok = kernel.relate_pattern(m, pattern)
+            if covers:
+                ok = ok or (m[6] == "F" and m[7] == "F")  # ST_Covers
+            out.append(ok)
+        return pd.Series(out)
 
-def _relate_udf(app_id: str, pattern: str, covers: bool):
-    key = (app_id, pattern, covers)
-    if key not in _RELATE_UDFS:
-        for stale in [k for k in _RELATE_UDFS if k[0] != app_id]:
-            del _RELATE_UDFS[stale]
-        from tile_processor_spark.spatial import kernel
-
-        @F.pandas_udf("boolean")
-        def _relate(
-            rects: pd.Series,
-            xmin: pd.Series,
-            ymin: pd.Series,
-            xmax: pd.Series,
-            ymax: pd.Series,
-        ) -> pd.Series:
-            out = []
-            for rl, x0, y0, x1, y1 in zip(rects, xmin, ymin, xmax, ymax):
-                arr = (
-                    np.stack([np.asarray(r, dtype=np.float64) for r in rl])
-                    if len(rl)
-                    else np.empty((0, 4))
-                )
-                m = kernel.rect_union_de9im(arr, (x0, y0, x1, y1))
-                ok = kernel.relate_pattern(m, pattern)
-                if covers:
-                    ok = ok or (m[6] == "F" and m[7] == "F")  # ST_Covers
-                out.append(ok)
-            return pd.Series(out)
-
-        _RELATE_UDFS[key] = _relate
-    return _RELATE_UDFS[key]
+    return _relate
 
 
 def bbox_join(
