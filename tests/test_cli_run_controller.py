@@ -245,6 +245,26 @@ def test_run_controller_unknown_worker_not_misreported(spark, ahn_fixture):
     assert isinstance(r.exception, KeyError) and "NoSuchWorker" in str(r.exception)
 
 
+def test_run_controller_binds_only_named_frames(spark, ahn_fixture, monkeypatch):
+    # A user controller naming only the frame it uses: the configuration's
+    # other path: sections (tile_index, elevation_index) are not passed.
+    from tile_processor_spark.pipeline import controller as ctl
+
+    def features_only(features, worker_key, tiles=None, config=None, restarts=0):
+        return ctl.example_controller(features, worker_key, tiles, config, restarts)
+
+    monkeypatch.setattr(ctl, "_REGISTRY", dict(ctl._REGISTRY))
+    ctl.register_controller("FeaturesOnly", features_only)
+    r = CliRunner().invoke(
+        main, ["run-controller", "FeaturesOnly", "Example", str(ahn_fixture), "all"]
+    )
+    assert r.exit_code == 0, r.output
+    json_line = next(
+        ln for ln in r.output.strip().splitlines() if ln.startswith("{")
+    )
+    assert json.loads(json_line) == {"failed_tiles": [], "nr_success": 2}
+
+
 def test_jdbc_num_partitions_without_pk_refuses(spark):
     cfg = {k: dict(v) if isinstance(v, dict) else v for k, v in BAG3D_CFG.items()}
     cfg["features"] = {"schema": "s", "table": "t"}  # no field.pk

@@ -4,6 +4,10 @@ counting; tests/test_tiles.py: selection semantics)."""
 
 from __future__ import annotations
 
+import ast
+import inspect
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -103,6 +107,9 @@ def test_ahn_tin_controller(spark, point_tiles):
         point_tiles, index, tiles=["ta"], config={"max_error": 1.0}
     )
     assert res == {"failed_tiles": [], "nr_success": 1}
+    # AHNboundaryTIN is the boundary controller with the TIN worker by default
+    params = inspect.signature(get_controller("AHNboundaryTIN")).parameters
+    assert params["worker_key"].default == "TIN"
 
 
 def test_subprocess_worker_runs_external_binary(spark, tiled_df, tmp_path):
@@ -201,6 +208,27 @@ def test_subprocess_worker_failure_collected(spark, tiled_df, tmp_path):
     assert res == {"failed_tiles": ["a", "b", "c"], "nr_success": 0}
 
 
+def test_subprocess_worker_timeout_kills_and_keeps_monitor_tsv(spark, tiled_df, tmp_path):
+    # A child past timeout_s is killed and its tile fails; no product is
+    # written, but the sampler's TSV for the tile is.
+    out_dir = tmp_path / "out"
+    mon_dir = tmp_path / "monitor"
+    out_dir.mkdir()
+    cfg = {
+        "cmd": ["python", "-c", "import time; time.sleep(30)"],
+        "out_dir": str(out_dir),
+        "timeout_s": 1,
+        "monitor_dir": str(mon_dir),
+        "monitor_interval": 0.05,
+    }
+    res = run_with_retry(tiled_df, "Subprocess", cfg)
+    assert res == {"failed_tiles": ["a", "b", "c"], "nr_success": 0}
+    assert not list(out_dir.glob("tile=*.out"))
+    summary = {r.tile: r for r in per_tile_summary(parse_log(spark, str(mon_dir))).collect()}
+    assert set(summary) == {"a", "b", "c"}
+    assert all(r.n_samples >= 1 for r in summary.values())
+
+
 def test_exporter_writes_per_tile(spark, tiled_df, tmp_path):
     res = run_with_retry(tiled_df, "TileExporter", {"out_dir": str(tmp_path)})
     assert res["nr_success"] == 3
@@ -212,10 +240,12 @@ def test_exporter_writes_per_tile(spark, tiled_df, tmp_path):
 def test_tileset_with_list_warns_and_filters(spark, caplog):
     idx = spark.createDataFrame([("t1",), ("t2",), ("t3",)], "tile_id string")
     ts = TileSet(idx)
-    with caplog.at_level("WARNING"):
-        got = {r.tile_id for r in ts.with_list(["t1", "nope", "t3"]).collect()}
-    assert got == {"t1", "t3"}
-    assert any("nope" in rec.message for rec in caplog.records)
+    for select in (ts.with_list, ts.configure):
+        caplog.clear()
+        with caplog.at_level("WARNING"):
+            got = {r.tile_id for r in select(["t1", "nope", "t3"]).collect()}
+        assert got == {"t1", "t3"}
+        assert any("nope" in rec.message for rec in caplog.records)
 
 
 def test_tileset_with_list_raises_when_none_match(spark):
@@ -237,6 +267,8 @@ def test_tileset_all_and_reorder(spark):
     idx = spark.createDataFrame([("t1",), ("t1",), ("t2",)], "tile_id string")
     ts = TileSet(idx)
     assert {r.tile_id for r in ts.all_in_index().collect()} == {"t1", "t2"}
+    for request in (None, [], ["all"]):
+        assert sorted(r.tile_id for r in ts.configure(request).collect()) == ["t1", "t2"]
     # deterministic seed → stable order
     o1 = [r.tile_id for r in TileSet.reorder(ts.all_in_index(), seed=7).collect()]
     o2 = [r.tile_id for r in TileSet.reorder(ts.all_in_index(), seed=7).collect()]
@@ -340,3 +372,32 @@ def test_ahn34_compare_worker(spark):
     })
     out = get_worker("BR-AHN34-Compare")("t1", pdf, {})
     assert out["delta"].iloc[0] == pytest.approx(2.5)
+
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "tile_processor_spark"
+
+
+def test_tile_run_rules_are_written_once():
+    """The tiles request is decided in ``tiles.py`` alone, one sampler
+    reads ``/proc``, the subprocess worker has one launch, and no
+    orchestration function takes a ``tile_col``."""
+    trees = {p.relative_to(PKG).as_posix(): ast.parse(p.read_text()) for p in PKG.rglob("*.py")}
+    sentinel = sorted(
+        f for f, tree in trees.items() for n in ast.walk(tree)
+        if isinstance(n, (ast.List, ast.Tuple)) and ast.unparse(n) in ("['all']", "('all',)")
+    )
+    assert sentinel == ["pipeline/tiles.py"], sentinel
+    samplers = [
+        f for f, tree in trees.items() for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and ast.unparse(n.func).endswith("_proc_cpu_rss")
+    ]
+    assert samplers == ["pipeline/monitor.py"], samplers
+    assert "subprocess.run(" not in (PKG / "pipeline" / "workers.py").read_text()
+    with_tile_col = sorted(
+        f"{f}:{n.name}" for f, tree in trees.items()
+        if f.startswith("pipeline/") or f in ("engine.py", "cli.py")
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and "tile_col" in {a.arg for a in n.args.args + n.args.kwonlyargs}
+    )
+    assert not with_tile_col, with_tile_col

@@ -2,8 +2,12 @@
 Spark engine. The library API (pipeline.*) is primary; this is the thin
 shim the reference's CLI users would reach for:
 
-- ``run``        ≙ cli.py:48-96   (controller+worker over selected tiles)
-- ``export-tile-inputs`` ≙ cli.py:99-143 (per-tile extraction, TileExporter)
+- ``run``        ≙ cli.py:48-96   (controller+worker over selected tiles;
+                   the worker-only form runs the Example controller)
+- ``run-controller`` — the controller form: each config frame is bound
+                   to the controller parameter of the same name
+- ``export-tile-inputs`` ≙ cli.py:99-143 (per-tile extraction: the
+                   Example controller with the TileExporter worker)
 - ``list-workers``       ≙ factory keys listing
 - ``register-schema`` / ``list-schemas`` / ``remove-schema``
                          ≙ cli.py:146-175 → controller.py:72-116
@@ -14,6 +18,7 @@ shim the reference's CLI users would reach for:
 
 from __future__ import annotations
 
+import inspect
 import json
 import logging
 import sys
@@ -34,7 +39,6 @@ def main(verbose: bool) -> None:
 @click.argument("worker_key")
 @click.argument("data_path")
 @click.argument("tiles", nargs=-1)
-@click.option("--tile-col", default="tile_id")
 @click.option("--restart", default=0, show_default=True, help="re-runs of failed tiles")
 @click.option("--config-json", default="{}", help="worker config as JSON")
 @click.option(
@@ -45,7 +49,7 @@ def main(verbose: bool) -> None:
     "cli.py:61-67); forwarded to run-controller.",
 )
 @click.pass_context
-def run_cmd(ctx, worker_key, data_path, tiles, tile_col, restart, config_json, threads) -> None:
+def run_cmd(ctx, worker_key, data_path, tiles, restart, config_json, threads) -> None:
     """Run WORKER_KEY over the tile groups of the parquet dataset at
     DATA_PATH (optionally restricted to TILES).
 
@@ -56,9 +60,10 @@ def run_cmd(ctx, worker_key, data_path, tiles, tile_col, restart, config_json, t
     unchanged, so reference users' existing command lines work
     verbatim.
     """
-    from tile_processor_spark.pipeline.controller import list_controllers
-    from tile_processor_spark.pipeline.processor import run_with_retry
-    from tile_processor_spark.pipeline.tiles import TileSet
+    from tile_processor_spark.pipeline.controller import (
+        example_controller,
+        list_controllers,
+    )
     from tile_processor_spark.pipeline.workers import list_workers
 
     # Reference-shape detection must be unambiguous: some keys (e.g.
@@ -99,12 +104,8 @@ def run_cmd(ctx, worker_key, data_path, tiles, tile_col, restart, config_json, t
 
     spark = get_spark(app_name=f"tps-run-{worker_key}")
     t0 = time.monotonic()
-    data = spark.read.parquet(data_path)
-    if tiles and list(tiles) != ["all"]:
-        selected = TileSet(data.select(tile_col), tile_col=tile_col).with_list(list(tiles))
-        data = data.join(selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi")
-    result = run_with_retry(
-        data, worker_key, json.loads(config_json), restarts=restart, tile_col=tile_col
+    result = example_controller(
+        spark.read.parquet(data_path), worker_key, list(tiles), json.loads(config_json), restart
     )
     click.echo(json.dumps(result))
     click.echo(f"Done in {(time.monotonic() - t0) / 60:.1f} min", err=True)
@@ -220,39 +221,27 @@ def run_controller_cmd(
         if not tile_list:
             raise click.ClickException("extent selects no tiles")
     ctrl = get_controller(resolved)
-    # Positional frame wiring per controller signature (the reference's
-    # factory passes the config file itself; here the frames are already
-    # resolved DataFrames).
     kwargs = dict(
         worker_key=worker_key, tiles=tile_list, config=wcfg, restarts=restart
     )
-
-    def need(name: str):
-        # frame lookup errors only — a KeyError raised INSIDE the
-        # controller run (unknown worker key, user code) must propagate
-        # with its own message, not be misreported as a config problem
-        if name not in frames:
+    # Frames bind by parameter name (the reference's factory passes the
+    # config file itself; here the frames are resolved DataFrames); a
+    # **kwargs controller takes every frame. Any other parameter without
+    # a default must be a frame the configuration has a path for.
+    params = inspect.signature(ctrl).parameters.values()
+    if any(p.kind is p.VAR_KEYWORD for p in params):
+        kwargs.update(frames)
+    for p in params:
+        if p.name in frames:
+            kwargs[p.name] = frames[p.name]
+        elif p.name not in kwargs and p.default is p.empty and p.kind in (
+            p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY
+        ):
             raise click.ClickException(
-                f"configuration lacks a path for the {name!r} frame "
+                f"configuration lacks a path for the {p.name!r} frame "
                 f"required by {resolved}"
             )
-        return frames[name]
-
-    if resolved == "Example":
-        result = ctrl(need("features"), **kwargs)
-    elif resolved == "AHN":
-        result = ctrl(
-            need("features"), need("tile_index"), need("elevation_index"), **kwargs
-        )
-    elif resolved in ("AHNboundary", "AHNboundaryTIN"):
-        result = ctrl(
-            need("features"), need("elevation_index"),
-            feature_index=frames.get("feature_index"), **kwargs,
-        )
-    elif resolved == "AHNTin":
-        result = ctrl(need("elevation_points"), need("elevation_index"), **kwargs)
-    else:  # user-registered controller: frames passed by keyword
-        result = ctrl(**frames, **kwargs)
+    result = ctrl(**kwargs)
     click.echo(json.dumps(result))
     click.echo(f"Done in {(time.monotonic() - t0) / 60:.1f} min", err=True)
     failed = (
@@ -267,18 +256,14 @@ def run_controller_cmd(
 @click.argument("data_path")
 @click.argument("out_dir")
 @click.argument("tiles", nargs=-1)
-@click.option("--tile-col", default="tile_id")
-def export_cmd(data_path, out_dir, tiles, tile_col) -> None:
+def export_cmd(data_path, out_dir, tiles) -> None:
     """Per-tile extraction of a dataset into OUT_DIR (TileExporter)."""
-    from tile_processor_spark.pipeline.processor import run_with_retry
-    from tile_processor_spark.pipeline.tiles import TileSet
+    from tile_processor_spark.pipeline.controller import example_controller
 
     spark = get_spark(app_name="tps-export")
-    data = spark.read.parquet(data_path)
-    if tiles and list(tiles) != ["all"]:
-        selected = TileSet(data.select(tile_col), tile_col=tile_col).with_list(list(tiles))
-        data = data.join(selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi")
-    result = run_with_retry(data, "TileExporter", {"out_dir": out_dir}, tile_col=tile_col)
+    result = example_controller(
+        spark.read.parquet(data_path), "TileExporter", list(tiles), {"out_dir": out_dir}
+    )
     click.echo(json.dumps(result))
     sys.exit(1 if result["failed_tiles"] else 0)
 

@@ -19,7 +19,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from tile_processor_spark.pipeline.config import parse_configuration
-from tile_processor_spark.pipeline.processor import run_with_retry
+from tile_processor_spark.pipeline.controller import example_controller
 from tile_processor_spark.pipeline.tiles import TileSet
 from tile_processor_spark.session import get_spark
 
@@ -133,8 +133,8 @@ class Engine:
         register_views(self.spark, sf_dir or DEFAULT_SF_DIR)
         return self.spark.sql(query)
 
-    def tile_set(self, index: DataFrame, tile_col: str = "tile_id") -> TileSet:
-        return TileSet(index, tile_col=tile_col)
+    def tile_set(self, index: DataFrame) -> TileSet:
+        return TileSet(index)
 
     def ahn_tile_set(
         self,
@@ -158,17 +158,13 @@ class Engine:
         tiles: list[str] | None = None,
         config: dict | None = None,
         restarts: int = 0,
-        tile_col: str = "tile_id",
     ) -> dict:
-        """configure + run in one call; result keeps the reference contract
-        {'failed_tiles': [...], 'nr_success': n} (processor.py:125)."""
-        if tiles and tiles != ["all"]:
-            selected = self.tile_set(data.select(tile_col), tile_col).with_list(tiles)
-            data = data.join(
-                selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi"
-            )
+        """configure + run in one call (the Example controller, with the
+        engine's ``worker`` config under ``config``); result keeps the
+        reference contract {'failed_tiles': [...], 'nr_success': n}
+        (processor.py:125)."""
         merged = {**self.config.get("worker", {}), **(config or {})}
-        return run_with_retry(data, worker, merged, restarts=restarts, tile_col=tile_col)
+        return example_controller(data, worker, tiles, merged, restarts)
 
     # --- library operators -------------------------------------------------
 

@@ -13,13 +13,13 @@ worker registry.
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Any
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tile_processor_spark.pipeline.processor import run_with_retry
-from tile_processor_spark.pipeline.tiles import TileSet
+from tile_processor_spark.pipeline.tiles import TileSet, requests_all
 
 Controller = Callable[..., dict]
 
@@ -41,21 +41,20 @@ def list_controllers() -> list[str]:
 
 
 def example_controller(
-    data: DataFrame,
+    features: DataFrame,
     worker_key: str = "Example",
     tiles: list[str] | None = None,
     config: dict | None = None,
     restarts: int = 0,
-    tile_col: str = "tile_id",
 ) -> dict:
-    """Example controller (controller.py:223-372 shape): select tiles by
-    list (or all), run the worker over each tile group, bounded retry."""
-    if tiles and tiles != ["all"]:
-        selected = TileSet(data.select(tile_col), tile_col=tile_col).with_list(tiles)
-        data = data.join(
-            selected.withColumnRenamed("tile_id", tile_col), tile_col, "left_semi"
-        )
-    return run_with_retry(data, worker_key, config, restarts=restarts, tile_col=tile_col)
+    """Example controller (controller.py:223-372 shape): restrict the
+    features to the listed tiles, run the worker over each tile group,
+    bounded retry. An all-request runs every tile group without joining
+    the features to an index."""
+    if not requests_all(tiles):
+        chosen = TileSet(features.select("tile_id")).with_list(tiles)
+        features = features.join(chosen, "tile_id", "left_semi")
+    return run_with_retry(features, worker_key, config, restarts=restarts)
 
 
 def ahn_controller(
@@ -83,8 +82,7 @@ def ahn_controller(
     from tile_processor_spark.spatial.join import bbox_join
 
     config = dict(config or {})
-    ts = TileSet(tile_index.select("tile_id"))
-    chosen = ts.with_list(tiles) if tiles and tiles != ["all"] else ts.all_in_index()
+    chosen = TileSet(tile_index.select("tile_id")).configure(tiles)
     idx = tile_index.join(chosen, "tile_id", "left_semi")
 
     matched = bbox_join(idx, elevation_index, cell_size=cell_size)
@@ -147,25 +145,15 @@ def ahn_tin_controller(
     themselves") — select elevation tiles by list, skip tiles with no
     point data (P9 existence filter falls out of the groupBy), run the
     TIN worker per tile."""
-    ts = TileSet(elevation_index.select("tile_id"))
-    chosen = ts.with_list(tiles) if tiles and tiles != ["all"] else ts.all_in_index()
+    chosen = TileSet(elevation_index.select("tile_id")).configure(tiles)
     data = elevation_points.join(chosen, "tile_id", "left_semi")
     return run_with_retry(data, worker_key, config, restarts=restarts)
-
-
-def ahn_boundary_tin_controller(
-    features: DataFrame,
-    elevation_index: DataFrame,
-    worker_key: str = "TIN",
-    **kwargs,
-) -> dict:
-    """AHNboundaryTIN (controller.py:627-667): the AHNboundary part split
-    (per-version + border) with the TIN worker as the per-tile payload."""
-    return ahn_boundary_controller(features, elevation_index, worker_key, **kwargs)
 
 
 register_controller("Example", example_controller)
 register_controller("AHN", ahn_controller)
 register_controller("AHNboundary", ahn_boundary_controller)
 register_controller("AHNTin", ahn_tin_controller)
-register_controller("AHNboundaryTIN", ahn_boundary_tin_controller)
+# AHNboundaryTIN (controller.py:627-667): the AHNboundary part split with
+# the TIN worker as the default per-tile payload.
+register_controller("AHNboundaryTIN", partial(ahn_boundary_controller, worker_key="TIN"))

@@ -1,17 +1,17 @@
-"""Driver-side resource monitor for the engine's own Spark jobs —
-SURVEY §7 step 6's 'metrics listener → TSV' piece.
+"""Process resource monitor — the reference's per-tile child sampling
+(worker.py:718-736) and SURVEY §7 step 6's 'metrics listener → TSV'
+piece, as one sampler.
 
-The reference monitors each per-tile child process (worker.py:718-736);
-`_subprocess_worker` reproduces that for external binaries. This module
-closes the loop for native Spark work: a context manager samples the
-driver JVM's CPU/RSS plus the active-stage count from ``StatusTracker``
-every ``interval`` seconds and appends rows in the exact TSV layout
-``recorder.parse_log`` consumes (timestamp, tile, pid, cpu_user,
-cpu_sys, rss), so the same per-tile summary/plot tooling covers both
-subprocess workers and in-engine jobs.
+``ProcSampler`` samples one process's CPU/RSS every ``interval`` seconds
+into the exact TSV layout ``recorder.parse_log`` consumes (timestamp,
+tile, pid, cpu_user, cpu_sys, rss). ``_subprocess_worker`` wraps each
+external binary in it; ``JobMonitor`` points it at the driver JVM and
+adds the active-stage count from ``StatusTracker``, so the same per-tile
+summary/plot tooling covers both subprocess workers and in-engine jobs.
 
-Scale note: this is a *driver* observer — O(1) memory, one tiny row per
-interval, no executor-side hooks — so it is safe at any cluster size;
+Scale note: ``JobMonitor`` is a *driver* observer — O(1) memory, one
+tiny row per interval, no executor-side hooks — so it is safe at any
+cluster size;
 per-task metrics remain the scheduler's job (Spark UI/event log), which
 an engine library should not duplicate.
 """
@@ -35,7 +35,80 @@ def _proc_cpu_rss(pid: int) -> tuple[float, float, int]:
     return int(fields[11]) / tck, int(fields[12]) / tck, int(fields[21]) * page
 
 
-class JobMonitor:
+class ProcSampler:
+    """Sample one process's CPU/RSS while the body runs.
+
+    >>> with ProcSampler(proc.pid, mon_dir, label="t1", interval=1.0):
+    ...     proc.communicate()
+
+    The first sample is taken on enter, so a process that exits within
+    one interval still leaves a row; a daemon thread takes the rest every
+    ``interval`` seconds until the process is gone or the body ends. On
+    exit, also when the body raises, the rows go to
+    ``<monitor_dir>/tile=<label>.pid=<pid>.tsv`` by write-temp + rename
+    (one file per process, so concurrent tasks never share an append).
+    """
+
+    def __init__(self, pid: int, monitor_dir: str, label: str, interval: float):
+        self.pid = pid
+        self.monitor_dir = monitor_dir
+        self.label = label
+        self.interval = interval
+        self._rows: list[str] = []
+        self._lock = threading.Lock()
+        self._stop = threading.Event()
+        self._thread: threading.Thread | None = None
+
+    def _sample(self) -> bool:
+        try:
+            cpu_u, cpu_s, rss = _proc_cpu_rss(self.pid)
+        except (OSError, IndexError, ValueError):
+            return False  # the process exited and was reaped
+        ts = datetime.datetime.now(datetime.timezone.utc).strftime(
+            "%Y-%m-%d %H:%M:%S.%f"
+        )
+        with self._lock:
+            self._rows.append(f"{ts}\t{self.label}\t{self.pid}\t{cpu_u}\t{cpu_s}\t{rss}")
+        return True
+
+    def _loop(self) -> None:
+        while not self._stop.wait(self.interval) and self._sample():
+            pass
+
+    def __enter__(self):
+        self._stop.clear()
+        if self._sample():
+            self._thread = threading.Thread(target=self._loop, daemon=True)
+            self._thread.start()
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self._stop.set()
+        if self._thread is not None:
+            self._thread.join(timeout=5.0)
+        # a thread still stuck in a /proc read may append: copy under the lock
+        with self._lock:
+            rows = list(self._rows)
+        if not rows:
+            return
+        os.makedirs(self.monitor_dir, exist_ok=True)
+        path = os.path.join(self.monitor_dir, f"tile={self.label}.pid={self.pid}.tsv")
+        tmp = f"{path}.tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
+            f.write("\n".join(rows) + "\n")
+        os.replace(tmp, path)
+
+
+def _jvm_pid(spark: SparkSession) -> int:
+    """The driver JVM's pid: the process doing the work in local mode,
+    and the right scope for a driver-side observer in cluster mode."""
+    proc = getattr(spark.sparkContext._gateway, "proc", None)
+    if proc is not None and proc.pid:
+        return int(proc.pid)
+    return os.getpid()  # connect/embedded fallback: monitor ourselves
+
+
+class JobMonitor(ProcSampler):
     """Sample driver resource usage while Spark jobs run.
 
     >>> with JobMonitor(spark, mon_dir, label="ingest", interval=1.0):
@@ -52,62 +125,14 @@ class JobMonitor:
         label: str = "job",
         interval: float = 1.0,
     ) -> None:
-        self.spark = spark
-        self.monitor_dir = monitor_dir
-        self.label = label
-        self.interval = interval
-        self._samples: list[str] = []
-        #: active-stage count per sample (same cadence as the TSV rows) —
-        #: driver-side job progress, exposed for callers; not part of the
-        #: reference TSV layout.
+        super().__init__(_jvm_pid(spark), monitor_dir, label, interval)
+        self._tracker = spark.sparkContext.statusTracker()
+        #: active-stage count per TSV row — driver-side job progress,
+        #: exposed for callers; not part of the reference TSV layout.
         self.stage_samples: list[int] = []
-        self._stop = threading.Event()
-        self._thread: threading.Thread | None = None
 
-    # The JVM is the process doing the work in local mode; in cluster
-    # mode this still reports the driver JVM, which is the right scope
-    # for a driver-side observer.
-    def _jvm_pid(self) -> int:
-        gw = self.spark.sparkContext._gateway
-        proc = getattr(gw, "proc", None)
-        if proc is not None and proc.pid:
-            return int(proc.pid)
-        return os.getpid()  # connect/embedded fallback: monitor ourselves
-
-    def _loop(self) -> None:
-        pid = self._jvm_pid()
-        tracker = self.spark.sparkContext.statusTracker()
-        while True:
-            try:
-                cpu_u, cpu_s, rss = _proc_cpu_rss(pid)
-            except (OSError, IndexError, ValueError):
-                break
-            self.stage_samples.append(len(tracker.getActiveStageIds()))
-            ts = datetime.datetime.now(datetime.timezone.utc).strftime(
-                "%Y-%m-%d %H:%M:%S.%f"
-            )
-            self._samples.append(
-                f"{ts}\t{self.label}\t{pid}\t{cpu_u}\t{cpu_s}\t{rss}"
-            )
-            if self._stop.wait(self.interval):
-                break
-
-    def __enter__(self) -> "JobMonitor":
-        self._stop.clear()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc: object) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5.0)
-        if not self._samples:
-            return
-        os.makedirs(self.monitor_dir, exist_ok=True)
-        pid = self._samples[-1].split("\t")[2]
-        path = os.path.join(self.monitor_dir, f"tile={self.label}.pid={pid}.tsv")
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write("\n".join(self._samples) + "\n")
-        os.replace(tmp, path)
+    def _sample(self) -> bool:
+        if not super()._sample():
+            return False
+        self.stage_samples.append(len(self._tracker.getActiveStageIds()))
+        return True

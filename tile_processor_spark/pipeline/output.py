@@ -38,7 +38,7 @@ class DirOutput:
     def join_path(self, sub: str) -> Path:
         return self.path / sub
 
-    def write_partitioned(self, df: DataFrame, tile_col: str = "tile_id") -> None:
+    def write_partitioned(self, df: DataFrame) -> None:
         """The Spark-native form of per-tile output: one directory per
         tile via partitionBy — tile filters then prune files.
 
@@ -51,7 +51,7 @@ class DirOutput:
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(tile_col)
+            .partitionBy("tile_id")
             .parquet(str(self.path))
         )
 

@@ -25,7 +25,6 @@ def run_with_retry(
     worker_key: str,
     config: dict | None = None,
     restarts: int = 0,
-    tile_col: str = "tile_id",
 ) -> dict:
     """Run ``worker_key`` over every tile group in ``data``; re-run failed
     tiles up to ``restarts`` times (processor.py:106-123).
@@ -34,7 +33,7 @@ def run_with_retry(
     failed: set[str] = set()
     current = data
     for attempt in range(restarts + 1):
-        status = run_worker_over_tiles(current, worker_key, config, tile_col).collect()
+        status = run_worker_over_tiles(current, worker_key, config).collect()
         round_failed = sorted(r.tile_id for r in status if not r.success)
         succeeded.update(r.tile_id for r in status if r.success)
         failed = set(round_failed)
@@ -42,5 +41,5 @@ def run_with_retry(
             break
         log.warning("attempt %d: %d failed tiles: %s", attempt, len(failed), round_failed)
         if attempt < restarts:
-            current = data.filter(F.col(tile_col).isin(round_failed))
+            current = data.filter(F.col("tile_id").isin(round_failed))
     return {"failed_tiles": sorted(failed), "nr_success": len(succeeded)}

@@ -24,19 +24,27 @@ def _local_ids(spark: SparkSession, ids: list[str]) -> DataFrame:
     return spark.createDataFrame(pa.table({"tile_id": pa.array(ids, pa.string())}))
 
 
-class TileSet:
-    """Immutable wrapper over a tile-index DataFrame.
+def requests_all(tiles: list[str] | None) -> bool:
+    """The reference's tiles request: ``None``, ``[]`` or ``['all']``
+    mean every tile in the index; any other list names tiles."""
+    return not tiles or list(tiles) == ["all"]
 
-    Reference parity: ``configure(tiles=[...])`` → :meth:`with_list`,
-    ``tiles=['all']`` → :meth:`all_in_index`, ``extent=poly`` →
-    :meth:`with_extent`; the ``reorder`` shuffle (tileconfig.py:128-140)
-    is :meth:`reorder`.
+
+class TileSet:
+    """Immutable wrapper over a tile-index DataFrame (``tile_id`` column).
+
+    Reference parity: ``configure(tiles=...)`` → :meth:`configure`,
+    ``extent=poly`` → :meth:`with_extent`; the ``reorder`` shuffle
+    (tileconfig.py:128-140) is :meth:`reorder`.
     """
 
-    def __init__(self, index: DataFrame, tile_col: str = "tile_id"):
-        if tile_col != "tile_id":
-            index = index.withColumnRenamed(tile_col, "tile_id")
+    def __init__(self, index: DataFrame):
         self.index = index
+
+    def configure(self, tiles: list[str] | None) -> DataFrame:
+        """DbTiles.configure(tiles=...) (tileconfig.py:196-249): every tile
+        for an all-request (:func:`requests_all`), else :meth:`with_list`."""
+        return self.all_in_index() if requests_all(tiles) else self.with_list(tiles)
 
     def all_in_index(self) -> DataFrame:
         """P2: SELECT DISTINCT tile FROM index (tileconfig.py:218-222)."""
@@ -172,10 +180,7 @@ class AhnTileSet:
                 f"Unknown configuration tiles:{tiles}, version:{version}, "
                 f"on_border:{on_border}."
             )
-        ts = TileSet(self.feature_index.select("tile_id"))
-        chosen = (
-            ts.with_list(tiles) if tiles and tiles != ["all"] else ts.all_in_index()
-        )
+        chosen = TileSet(self.feature_index.select("tile_id")).configure(tiles)
         if version is not None:
             known = [r.version for r in self.versions().collect()]
             if version not in known:

@@ -23,7 +23,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 WorkerFn = Callable[[str, pd.DataFrame, dict], Any]
 
@@ -52,7 +51,6 @@ def run_worker_over_tiles(
     data: DataFrame,
     worker_key: str,
     config: dict | None = None,
-    tile_col: str = "tile_id",
 ) -> DataFrame:
     """Fan the worker out over tile groups; one status row per tile.
 
@@ -66,7 +64,7 @@ def run_worker_over_tiles(
     fn = get_worker(worker_key)
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = str(pdf[tile_col].iloc[0])
+        tile = str(pdf["tile_id"].iloc[0])
         try:
             out = fn(tile, pdf, config)
             n = len(out) if hasattr(out, "__len__") else int(bool(out))
@@ -85,7 +83,7 @@ def run_worker_over_tiles(
 
     # groupBy already shuffles on the key — an explicit repartition here
     # would double the exchange for every worker run.
-    return data.groupBy(tile_col).applyInPandas(_run, STATUS_SCHEMA)
+    return data.groupBy("tile_id").applyInPandas(_run, STATUS_SCHEMA)
 
 
 # --- built-in workers (worker.py:754-763 registration parity) -------------
@@ -136,119 +134,48 @@ def _subprocess_worker(tile_id: str, pdf: pd.DataFrame, config: dict):
       SURVEY §7 side-effect rule for subprocess workers.
     - Nonzero exit raises; run_worker_over_tiles converts that into a
       success=False status row, exactly like the reference's
-      returncode!=0 → False.
+      returncode!=0 → False. So does a child still running after
+      ``config['timeout_s']`` (default 300) seconds, which is killed.
     - **Resource monitoring** (reference worker.py:718-736): when
-      ``config['monitor_dir']`` is set, a sampler polls the child's
-      user/sys CPU time and RSS every ``config['monitor_interval']``
-      seconds (from ``/proc/<pid>/stat`` — same numbers psutil reads)
-      and writes the TSV layout ``recorder.parse_log`` consumes:
-      ``timestamp  tile  pid  cpu_user  cpu_sys  rss``. One file per
-      (tile, pid) under monitor_dir, so concurrent Spark tasks never
-      contend on a shared append the way the reference's single-process
-      logger could assume.
+      ``config['monitor_dir']`` is set, ``monitor.ProcSampler`` polls
+      the child's user/sys CPU time and RSS every
+      ``config['monitor_interval']`` seconds (from ``/proc/<pid>/stat``
+      — same numbers psutil reads) into one TSV per (tile, pid) in the
+      layout ``recorder.parse_log`` consumes.
     """
+    import contextlib
     import os
     import subprocess
-    import threading
+
+    from tile_processor_spark.pipeline.monitor import ProcSampler
 
     cmd = [c.format(tile=tile_id) for c in config["cmd"]]
     stdin_bytes = pdf.to_csv(index=False).encode("utf-8")
-    timeout_s = config.get("timeout_s", 300)
     monitor_dir = config.get("monitor_dir")
 
-    if monitor_dir is None:
-        res = subprocess.run(
-            cmd, input=stdin_bytes, capture_output=True, timeout=timeout_s
-        )
-        rc, stdout, stderr = res.returncode, res.stdout, res.stderr
-    else:
-        interval = float(config.get("monitor_interval", 1.0))
-        proc = subprocess.Popen(
-            cmd,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-        )
-        samples: list[str] = []
-        samples_lock = threading.Lock()
-        stop = threading.Event()
-
-        def _sample_once() -> bool:
-            # /proc parsing is shared with the driver-side JobMonitor so
-            # both monitor surfaces emit identical TSV semantics.
-            import datetime
-
-            from tile_processor_spark.pipeline.monitor import _proc_cpu_rss
-
-            try:
-                cpu_u, cpu_s, rss = _proc_cpu_rss(proc.pid)
-            except (OSError, IndexError, ValueError):
-                return False  # child exited and was reaped; /proc gone
-            ts = datetime.datetime.now(datetime.timezone.utc).strftime(
-                "%Y-%m-%d %H:%M:%S.%f"
-            )
-            with samples_lock:
-                samples.append(
-                    f"{ts}\t{tile_id}\t{proc.pid}\t{cpu_u}\t{cpu_s}\t{rss}"
-                )
-            return True
-
-        def _sample_loop() -> None:
-            # The reference polls in its main thread (it feeds no stdin);
-            # here communicate() owns the pipes, so the sampler is a
-            # daemon thread with the same cadence.
-            while not stop.wait(interval):
-                if not _sample_once():
-                    break
-
-        # First sample SYNCHRONOUSLY, before communicate() can reap the
-        # child: a sub-interval command (reference worker.py:718-736
-        # samples the same way) must still leave a monitoring row, and
-        # the daemon thread's first poll races a fast exit.
-        _sample_once()
-
-        def _write_tsv() -> None:
-            # Snapshot under the lock: if join() timed out (wedged /proc
-            # read), the daemon thread may still be appending — without
-            # the lock the final row could tear or drop.
-            with samples_lock:
-                rows = list(samples)
-            if rows:
-                os.makedirs(monitor_dir, exist_ok=True)
-                mon_path = os.path.join(
-                    monitor_dir, f"tile={tile_id}.pid={proc.pid}.tsv"
-                )
-                tmp = f"{mon_path}.tmp.{os.getpid()}"
-                with open(tmp, "w") as f:
-                    f.write("\n".join(rows) + "\n")
-                os.replace(tmp, mon_path)
-
-        sampler = threading.Thread(target=_sample_loop, daemon=True)
-        sampler.start()
+    proc = subprocess.Popen(
+        cmd, stdin=subprocess.PIPE, stdout=subprocess.PIPE, stderr=subprocess.PIPE
+    )
+    sampler = (
+        ProcSampler(proc.pid, monitor_dir, tile_id, float(config.get("monitor_interval", 1.0)))
+        if monitor_dir
+        else contextlib.nullcontext()
+    )
+    with sampler:
         try:
-            stdout, stderr = proc.communicate(input=stdin_bytes, timeout=timeout_s)
+            stdout, stderr = proc.communicate(
+                input=stdin_bytes, timeout=config.get("timeout_s", 300)
+            )
         except subprocess.TimeoutExpired:
-            # Mirror subprocess.run's kill-on-timeout: without this the
-            # child would keep running on the executor after the tile is
-            # marked failed, and retries would accumulate runaway
-            # processes. Still write the partial TSV first — a
-            # timed-out tile should leave monitoring evidence, it is the
-            # tile you most want to post-mortem.
+            # Kill and reap: a timed-out child must not keep running on
+            # the executor after its tile is marked failed. The sampler
+            # still writes its TSV, the tile you most want to inspect.
             proc.kill()
             proc.communicate()
-            stop.set()
-            sampler.join(timeout=5.0)
-            _write_tsv()
             raise
-        finally:
-            stop.set()
-            sampler.join(timeout=5.0)
-        rc = proc.returncode
-        _write_tsv()
-
-    if rc != 0:
+    if proc.returncode != 0:
         raise RuntimeError(
-            f"subprocess rc={rc} for tile {tile_id}: "
+            f"subprocess rc={proc.returncode} for tile {tile_id}: "
             f"{stderr.decode('utf-8', 'replace')[:300]}"
         )
     out_dir = config["out_dir"]
