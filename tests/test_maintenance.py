@@ -79,3 +79,29 @@ def test_staging_dirs_invisible_to_readers(spark, tmp_path):
     res = compact_partitioned(spark, root, "tile_id", target_bytes=64 * 1024 * 1024)
     assert res["partitions"] == 1
     assert not os.path.exists(old)
+
+
+def test_swap_store_read_recovers_previous_generation(spark, tmp_path):
+    # A crash between the two swap renames leaves the live dir missing,
+    # the previous generation in .__old__ and a half-written
+    # .__compacting__ dir: the read restores the previous generation
+    # and drops the stale staging dir.
+    import os
+
+    from tile_processor_spark.sources.maintenance import (
+        _staging_paths,
+        atomic_swap_write,
+        read_swap_store,
+    )
+
+    path = str(tmp_path / "store")
+    atomic_swap_write(spark.range(5).selectExpr("id AS h"), path)
+    tmp, old = _staging_paths(path)
+    os.rename(path, old)
+    spark.range(100, 103).selectExpr("id AS h").write.parquet(tmp)
+    got = sorted(r.h for r in read_swap_store(spark, path, "h long").collect())
+    assert got == [0, 1, 2, 3, 4]
+    assert os.path.isdir(path)
+    assert not os.path.exists(old) and not os.path.exists(tmp)
+    # one file per generation
+    assert len([f for f in os.listdir(path) if f.endswith(".parquet")]) == 1

@@ -5,15 +5,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tile_processor_spark.sources.maintenance import read_swap_store
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.streaming import read_events_stream
 from tile_processor_spark.streaming.cms import (
+    CMS_STORE_SCHEMA,
     cms_cells,
     cms_point_estimate,
     merge_batch_into_cms,
-    read_cms_store,
-    start_continuous_cms,
 )
+from tile_processor_spark.streaming.store import start_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,7 +36,7 @@ def test_incremental_merges_match_batch(spark, tmp_path):
     store = str(tmp_path / "cms")
     for k in range(3):
         merge_batch_into_cms(ev.filter(F.col("event_id") % 3 == k), store)
-    assert _canon(read_cms_store(spark, store)) == _canon(_batch_cells(spark))
+    assert _canon(read_swap_store(spark, store, CMS_STORE_SCHEMA)) == _canon(_batch_cells(spark))
 
 
 def test_epoch_replay_is_noop(spark, tmp_path):
@@ -45,23 +46,25 @@ def test_epoch_replay_is_noop(spark, tmp_path):
     store = str(tmp_path / "cms")
     run = "run-a"
     merge_batch_into_cms(ev.filter(F.col("event_id") % 2 == 0), store, epoch=0, run_id=run)
-    once = _canon(read_cms_store(spark, store))
+    once = _canon(read_swap_store(spark, store, CMS_STORE_SCHEMA))
     merge_batch_into_cms(ev.filter(F.col("event_id") % 2 == 0), store, epoch=0, run_id=run)
-    assert _canon(read_cms_store(spark, store)) == once
+    assert _canon(read_swap_store(spark, store, CMS_STORE_SCHEMA)) == once
     # a different run's epoch 0 is NOT a replay (recreated checkpoint)
     merge_batch_into_cms(ev.filter(F.col("event_id") % 2 == 1), store, epoch=0, run_id="run-b")
-    assert _canon(read_cms_store(spark, store)) == _canon(_batch_cells(spark))
+    assert _canon(read_swap_store(spark, store, CMS_STORE_SCHEMA)) == _canon(_batch_cells(spark))
 
 
 def test_streaming_drain_matches_batch_and_estimates(spark, tmp_path):
     src = str(tmp_path / "src")
     load_table(spark, "events", SF).write.parquet(src)
     store = str(tmp_path / "store")
-    q = start_continuous_cms(
-        read_events_stream(spark, src, max_files=1), store, str(tmp_path / "ckpt")
+    q = start_stream(
+        read_events_stream(spark, src, max_files=1),
+        str(tmp_path / "ckpt"),
+        lambda b, e, r: merge_batch_into_cms(b, store, epoch=e, run_id=r),
     )
     q.awaitTermination(120)
-    assert _canon(read_cms_store(spark, store)) == _canon(_batch_cells(spark))
+    assert _canon(read_swap_store(spark, store, CMS_STORE_SCHEMA)) == _canon(_batch_cells(spark))
     # CMS point estimates always upper-bound the truth
     ev = load_table(spark, "events", SF)
     truth = {

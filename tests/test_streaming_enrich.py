@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from tile_processor_spark.sources.snapshots import write_snapshot
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.streaming import read_events_stream
-from tile_processor_spark.streaming.enrich import start_enriched_stream
+from tile_processor_spark.streaming.enrich import enrich_batch
+from tile_processor_spark.streaming.store import start_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,8 +36,10 @@ def test_enrichment_tracks_dimension_republish(spark, tmp_path):
         )
 
     deliver(0)
-    q = start_enriched_stream(
-        read_events_stream(spark, str(src)), dim, out, str(tmp_path / "ckpt")
+    q = start_stream(
+        read_events_stream(spark, str(src)),
+        str(tmp_path / "ckpt"),
+        lambda b, e, r: enrich_batch(b, dim, out, "user_id", epoch=e, run_id=r),
     )
     q.awaitTermination(120)
 
@@ -44,8 +47,10 @@ def test_enrichment_tracks_dimension_republish(spark, tmp_path):
     # same checkpoint; only the new file is processed, against v2
     write_snapshot(_dim(spark, "gold"), dim)
     deliver(1)
-    q2 = start_enriched_stream(
-        read_events_stream(spark, str(src)), dim, out, str(tmp_path / "ckpt")
+    q2 = start_stream(
+        read_events_stream(spark, str(src)),
+        str(tmp_path / "ckpt"),
+        lambda b, e, r: enrich_batch(b, dim, out, "user_id", epoch=e, run_id=r),
     )
     q2.awaitTermination(120)
 
@@ -70,8 +75,10 @@ def test_unmatched_keys_survive_with_null_tier(spark, tmp_path):
     users = ev.select("user_id").distinct().filter(F.col("user_id") % 2 == 0)
     write_snapshot(users.select("user_id", F.lit("bronze").alias("tier")), dim)
     ev.coalesce(1).write.mode("append").parquet(str(src))
-    q = start_enriched_stream(
-        read_events_stream(spark, str(src)), dim, out, str(tmp_path / "ckpt")
+    q = start_stream(
+        read_events_stream(spark, str(src)),
+        str(tmp_path / "ckpt"),
+        lambda b, e, r: enrich_batch(b, dim, out, "user_id", epoch=e, run_id=r),
     )
     q.awaitTermination(120)
     got = spark.read.parquet(out)
@@ -84,7 +91,7 @@ def test_unmatched_keys_survive_with_null_tier(spark, tmp_path):
 def test_epoch_replay_overwrites_not_appends(spark, tmp_path):
     # at-least-once redelivery of the same epoch must rewrite its
     # partition, not append a duplicate of it.
-    from tile_processor_spark.streaming.enrich import enrich_batch, read_enriched
+    from tile_processor_spark.streaming.enrich import read_enriched
 
     out = str(tmp_path / "out")
     dim = str(tmp_path / "dim")

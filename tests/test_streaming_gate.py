@@ -68,15 +68,19 @@ def test_kmv_store_replay_equals_full_stream_bottom_k(spark):
     # stream (set-min merge is micro-batch invariant)
     import os
 
+    from tile_processor_spark.sources.maintenance import read_swap_store
     from tile_processor_spark.sources.tables import load_table
     from tile_processor_spark.streaming.kmv import (
+        KMV_STORE_SCHEMA,
         kmv_batch_hashes,
-        read_kmv_store,
     )
 
     root, _, _ = _build_stores(spark, SF)
     store = sorted(
-        r["h"] for r in read_kmv_store(spark, os.path.join(root, "kmv")).collect()
+        r["h"]
+        for r in read_swap_store(
+            spark, os.path.join(root, "kmv"), KMV_STORE_SCHEMA
+        ).collect()
     )
     full = sorted(
         r["h"]

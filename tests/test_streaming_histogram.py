@@ -6,16 +6,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tile_processor_spark.sources.maintenance import read_swap_store
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.streaming import read_events_stream
 from tile_processor_spark.streaming.histogram import (
+    HIST_STORE_SCHEMA,
     HIST_STREAM_BINS,
     hist_cells,
     hist_quantile_estimate,
     merge_batch_into_hist,
-    read_hist_store,
-    start_continuous_histogram,
 )
+from tile_processor_spark.streaming.store import start_stream
 
 SF = "/root/testdata/sf0.001"
 LO, HI = 0.0, 1000.0
@@ -33,16 +34,16 @@ def test_incremental_merges_match_batch(spark, tmp_path):
     store = str(tmp_path / "hist")
     for k in range(3):
         merge_batch_into_hist(ev.filter(F.col("event_id") % 3 == k), store, LO, HI)
-    assert _canon(read_hist_store(spark, store)) == _canon(hist_cells(ev, LO, HI))
+    assert _canon(read_swap_store(spark, store, HIST_STORE_SCHEMA)) == _canon(hist_cells(ev, LO, HI))
 
 
 def test_epoch_replay_is_noop(spark, tmp_path):
     ev = load_table(spark, "events", SF)
     store = str(tmp_path / "hist")
     merge_batch_into_hist(ev, store, LO, HI, epoch=0, run_id="run-a")
-    once = _canon(read_hist_store(spark, store))
+    once = _canon(read_swap_store(spark, store, HIST_STORE_SCHEMA))
     merge_batch_into_hist(ev, store, LO, HI, epoch=0, run_id="run-a")
-    assert _canon(read_hist_store(spark, store)) == once
+    assert _canon(read_swap_store(spark, store, HIST_STORE_SCHEMA)) == once
 
 
 def test_streaming_replay_matches_batch_and_estimates(spark, tmp_path):
@@ -51,13 +52,15 @@ def test_streaming_replay_matches_batch_and_estimates(spark, tmp_path):
     store = str(tmp_path / "hist")
     ckpt = str(tmp_path / "ckpt")
 
-    q = start_continuous_histogram(
-        read_events_stream(spark, src), store, ckpt, LO, HI
+    q = start_stream(
+        read_events_stream(spark, src),
+        ckpt,
+        lambda b, e, r: merge_batch_into_hist(b, store, LO, HI, epoch=e, run_id=r),
     )
     q.awaitTermination(120)
 
     ev = load_table(spark, "events", SF)
-    assert _canon(read_hist_store(spark, store)) == _canon(hist_cells(ev, LO, HI))
+    assert _canon(read_swap_store(spark, store, HIST_STORE_SCHEMA)) == _canon(hist_cells(ev, LO, HI))
 
     est = hist_quantile_estimate(spark, store, LO, HI).collect()
     assert est, "no estimates"

@@ -6,14 +6,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tile_processor_spark.plans.sketches import hll_registers
+from tile_processor_spark.sources.maintenance import read_swap_store
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.streaming import read_events_stream
 from tile_processor_spark.streaming.hll import (
+    HLL_STORE_SCHEMA,
     hll_store_estimate,
     merge_batch_into_hll,
-    read_hll_store,
-    start_continuous_hll,
 )
+from tile_processor_spark.streaming.store import start_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,7 +36,7 @@ def test_incremental_merges_match_batch(spark, tmp_path):
     store = str(tmp_path / "hll")
     for k in range(3):
         merge_batch_into_hll(ev.filter(F.col("event_id") % 3 == k), store)
-    assert _canon(read_hll_store(spark, store)) == _canon(_batch_regs(spark))
+    assert _canon(read_swap_store(spark, store, HLL_STORE_SCHEMA)) == _canon(_batch_regs(spark))
 
 
 def test_replay_is_noop(spark, tmp_path):
@@ -43,20 +44,22 @@ def test_replay_is_noop(spark, tmp_path):
     ev = load_table(spark, "events", SF)
     store = str(tmp_path / "hll")
     merge_batch_into_hll(ev.filter(F.col("event_id") % 2 == 0), store)
-    once = _canon(read_hll_store(spark, store))
+    once = _canon(read_swap_store(spark, store, HLL_STORE_SCHEMA))
     merge_batch_into_hll(ev.filter(F.col("event_id") % 2 == 0), store)
-    assert _canon(read_hll_store(spark, store)) == once
+    assert _canon(read_swap_store(spark, store, HLL_STORE_SCHEMA)) == once
 
 
 def test_streaming_drain_matches_batch(spark, tmp_path):
     src = str(tmp_path / "src")
     load_table(spark, "events", SF).write.parquet(src)
     store = str(tmp_path / "store")
-    q = start_continuous_hll(
-        read_events_stream(spark, src, max_files=1), store, str(tmp_path / "ckpt")
+    q = start_stream(
+        read_events_stream(spark, src, max_files=1),
+        str(tmp_path / "ckpt"),
+        lambda b, _e, _r: merge_batch_into_hll(b, store),
     )
     q.awaitTermination(120)
-    assert _canon(read_hll_store(spark, store)) == _canon(_batch_regs(spark))
+    assert _canon(read_swap_store(spark, store, HLL_STORE_SCHEMA)) == _canon(_batch_regs(spark))
     est = hll_store_estimate(spark, store).collect()[0]
     true_distinct = (
         load_table(spark, "events", SF).select("user_id").distinct().count()
@@ -73,6 +76,6 @@ def test_empty_batch_is_noop(spark, tmp_path):
     ev = load_table(spark, "events", SF)
     store = str(tmp_path / "hll")
     merge_batch_into_hll(ev, store)
-    once = _canon(read_hll_store(spark, store))
+    once = _canon(read_swap_store(spark, store, HLL_STORE_SCHEMA))
     merge_batch_into_hll(ev.filter(F.lit(False)), store)
-    assert _canon(read_hll_store(spark, store)) == once
+    assert _canon(read_swap_store(spark, store, HLL_STORE_SCHEMA)) == once

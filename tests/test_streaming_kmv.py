@@ -6,16 +6,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tile_processor_spark.sources.maintenance import read_swap_store
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.streaming import read_events_stream
 from tile_processor_spark.streaming.kmv import (
+    KMV_STORE_SCHEMA,
     KMV_STREAM_K,
     kmv_batch_hashes,
     kmv_store_estimate,
     merge_batch_into_kmv,
-    read_kmv_store,
-    start_continuous_kmv,
 )
+from tile_processor_spark.streaming.store import start_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,27 +34,29 @@ def test_incremental_merges_match_batch(spark, tmp_path):
     store = str(tmp_path / "kmv")
     for k in range(3):
         merge_batch_into_kmv(ev.filter(F.col("event_id") % 3 == k), store)
-    assert _canon(read_kmv_store(spark, store)) == _canon(_batch_bottom_k(spark))
+    assert _canon(read_swap_store(spark, store, KMV_STORE_SCHEMA)) == _canon(_batch_bottom_k(spark))
 
 
 def test_replay_is_noop(spark, tmp_path):
     ev = load_table(spark, "events", SF)
     store = str(tmp_path / "kmv")
     merge_batch_into_kmv(ev.filter(F.col("event_id") % 2 == 0), store)
-    once = _canon(read_kmv_store(spark, store))
+    once = _canon(read_swap_store(spark, store, KMV_STORE_SCHEMA))
     merge_batch_into_kmv(ev.filter(F.col("event_id") % 2 == 0), store)
-    assert _canon(read_kmv_store(spark, store)) == once
+    assert _canon(read_swap_store(spark, store, KMV_STORE_SCHEMA)) == once
 
 
 def test_streaming_drain_matches_batch_and_underfull_estimate(spark, tmp_path):
     src = str(tmp_path / "src")
     load_table(spark, "events", SF).write.parquet(src)
     store = str(tmp_path / "store")
-    q = start_continuous_kmv(
-        read_events_stream(spark, src, max_files=1), store, str(tmp_path / "ckpt")
+    q = start_stream(
+        read_events_stream(spark, src, max_files=1),
+        str(tmp_path / "ckpt"),
+        lambda b, _e, _r: merge_batch_into_kmv(b, store),
     )
     q.awaitTermination(120)
-    assert _canon(read_kmv_store(spark, store)) == _canon(_batch_bottom_k(spark))
+    assert _canon(read_swap_store(spark, store, KMV_STORE_SCHEMA)) == _canon(_batch_bottom_k(spark))
     est = kmv_store_estimate(spark, store).collect()[0]
     true_distinct = (
         load_table(spark, "events", SF)
@@ -74,9 +77,9 @@ def test_empty_batch_is_noop(spark, tmp_path):
     ev = load_table(spark, "events", SF)
     store = str(tmp_path / "kmv")
     merge_batch_into_kmv(ev, store)
-    once = _canon(read_kmv_store(spark, store))
+    once = _canon(read_swap_store(spark, store, KMV_STORE_SCHEMA))
     merge_batch_into_kmv(ev.filter(F.lit(False)), store)
-    assert _canon(read_kmv_store(spark, store)) == once
+    assert _canon(read_swap_store(spark, store, KMV_STORE_SCHEMA)) == once
 
 
 def test_cross_store_set_estimates_underfull_exact(spark, tmp_path):

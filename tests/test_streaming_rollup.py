@@ -11,8 +11,14 @@ from tile_processor_spark.streaming.rollup import (
     _hour_rollup,
     merge_batch_into_rollup,
     read_rollup,
-    start_continuous_rollup,
 )
+from tile_processor_spark.streaming.store import start_stream
+
+
+def _start_rollup(events, store, ckpt):
+    return start_stream(
+        events, ckpt, lambda b, e, r: merge_batch_into_rollup(b, store, epoch=e, run_id=r)
+    )
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,7 +46,7 @@ def test_streaming_rollup_foreach_batch(spark, tmp_path):
     src = str(tmp_path / "events_src")
     load_table(spark, "events", SF).write.parquet(src)
     store = str(tmp_path / "store")
-    q = start_continuous_rollup(
+    q = _start_rollup(
         read_events_stream(spark, src, max_files=1),
         store,
         str(tmp_path / "ckpt"),
@@ -68,10 +74,10 @@ def test_streaming_rollup_checkpoint_restart_exactly_once(spark, tmp_path):
 
     deliver(0)
     deliver(1)
-    q = start_continuous_rollup(read_events_stream(spark, str(src)), store, ckpt)
+    q = _start_rollup(read_events_stream(spark, str(src)), store, ckpt)
     q.awaitTermination(120)
     deliver(2)
-    q2 = start_continuous_rollup(read_events_stream(spark, str(src)), store, ckpt)
+    q2 = _start_rollup(read_events_stream(spark, str(src)), store, ckpt)
     q2.awaitTermination(120)
     got = _canon(read_rollup(spark, store))
     want = _canon(_hour_rollup(ev))
@@ -169,12 +175,17 @@ def test_fresh_checkpoint_never_false_skips(spark, tmp_path):
 
 
 def test_checkpoint_run_id_marker(tmp_path):
-    from tile_processor_spark.streaming.rollup import _checkpoint_run_id
+    from tile_processor_spark.streaming.store import checkpoint_run_id
 
     ckpt = str(tmp_path / "ckpt")
-    a = _checkpoint_run_id(ckpt)
-    assert a == _checkpoint_run_id(ckpt), "stable across restarts"
+    a = checkpoint_run_id(ckpt)
+    assert a == checkpoint_run_id(ckpt), "stable across restarts"
+    # the marker keeps its name, so a checkpoint made before the run id
+    # moved out of rollup.py keeps its identity
+    assert (tmp_path / "ckpt" / "_rollup_run_id").read_text().strip() == a
+    (tmp_path / "ckpt" / "_rollup_run_id").write_text("made-by-an-older-version\n")
+    assert checkpoint_run_id(ckpt) == "made-by-an-older-version"
     import shutil
 
     shutil.rmtree(ckpt)
-    assert _checkpoint_run_id(ckpt) != a, "recreated checkpoint → new id"
+    assert checkpoint_run_id(ckpt) != a, "recreated checkpoint → new id"

@@ -9,11 +9,8 @@ from pyspark.sql.window import Window
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.streaming import read_events_stream
 from tile_processor_spark.streaming.cms import cms_cells, cms_positions
-from tile_processor_spark.streaming.topk import (
-    merge_batch_into_topk,
-    start_continuous_topk,
-    topk_estimate,
-)
+from tile_processor_spark.streaming.store import start_stream
+from tile_processor_spark.streaming.topk import merge_batch_into_topk, topk_estimate
 
 SF = "/root/testdata/sf0.001"
 
@@ -43,8 +40,10 @@ def test_streaming_topk_matches_batch(spark, tmp_path):
     src = str(tmp_path / "src")
     load_table(spark, "events", SF).write.parquet(src)
     store = str(tmp_path / "store")
-    q = start_continuous_topk(
-        read_events_stream(spark, src, max_files=1), store, str(tmp_path / "ckpt")
+    q = start_stream(
+        read_events_stream(spark, src, max_files=1),
+        str(tmp_path / "ckpt"),
+        lambda b, e, r: merge_batch_into_topk(b, store, epoch=e, run_id=r),
     )
     q.awaitTermination(120)
     got = [

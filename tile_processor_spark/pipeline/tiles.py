@@ -12,16 +12,17 @@ from __future__ import annotations
 
 import logging
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tile_processor_spark.session import local_frame
 
 log = logging.getLogger(__name__)
 
 
 def _local_ids(spark: SparkSession, ids: list[str]) -> DataFrame:
     """A one-column ``tile_id string`` DataFrame on a local relation."""
-    return spark.createDataFrame(pa.table({"tile_id": pa.array(ids, pa.string())}))
+    return local_frame(spark, [(i,) for i in ids], "tile_id string")
 
 
 def requests_all(tiles: list[str] | None) -> bool:

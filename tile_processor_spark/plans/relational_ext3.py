@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from tile_processor_spark.plans.registry import register
+from tile_processor_spark.session import local_frame
 from tile_processor_spark.sources.tables import load_table
 
 
@@ -264,9 +265,7 @@ PRICE_BANDS = [
 )
 def price_band_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
-        PRICE_BANDS, "band string, lo double, hi double"
-    )
+    bands = local_frame(spark, PRICE_BANDS, "band string, lo double, hi double")
     joined = o.join(
         F.broadcast(bands),
         (F.col("o_totalprice") >= F.col("lo"))

@@ -43,11 +43,9 @@ from tile_processor_spark.plans.sketches import (
     cms_positions,
 )
 from tile_processor_spark.session import session_cached
+from tile_processor_spark.sources.maintenance import read_swap_store
 from tile_processor_spark.sources.tables import load_table
-from tile_processor_spark.streaming.cms import (
-    merge_batch_into_cms,
-    read_cms_store,
-)
+from tile_processor_spark.streaming.cms import CMS_STORE_SCHEMA, merge_batch_into_cms
 from tile_processor_spark.streaming.hll import (
     hll_store_estimate,
     merge_batch_into_hll,
@@ -296,7 +294,7 @@ def stream_cms_event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CMS overestimate guarantee (est ≥ true) is itself
     oracle-pinned. The probe set is the bounded event-type domain."""
     root, _, _ = _build_stores(spark, sf_dir)
-    store = read_cms_store(spark, os.path.join(root, "cms"))
+    store = read_swap_store(spark, os.path.join(root, "cms"), CMS_STORE_SCHEMA)
     ev = load_table(spark, "events", sf_dir).filter(
         F.col("event_type").isNotNull()
     )

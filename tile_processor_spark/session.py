@@ -4,7 +4,8 @@ Local-mode defaults follow the test/bench environment (single JVM,
 ``local[$SPARK_GRAFT_CPUS]``); on a real cluster every setting here is
 still sane — AQE on, Arrow on, shuffle partitions sized explicitly.
 ``session_cached`` holds state built for one SparkContext (plans,
-checkpoints, UDFs) until that context's application is gone.
+checkpoints, UDFs) until that context's application is gone, and
+``local_frame`` is the one way to build a small frame from Python rows.
 """
 
 from __future__ import annotations
@@ -12,10 +13,11 @@ from __future__ import annotations
 import functools
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 #: Defaults applied to every session the engine creates. At cluster scale
 #: the same knobs hold: AQE re-plans shuffles at runtime (skew-join
@@ -97,6 +99,25 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: str | StructType
+) -> DataFrame:
+    """A small DataFrame of ``rows`` (tuples in ``schema`` order; DDL
+    string or ``StructType``) on a local relation.
+
+    Built from an Arrow table, so it plans a ``LocalTableScan``: a
+    DataFrame from a Python list scans a Python RDD instead and runs a
+    Python task per partition on every action that reads it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.table(columns, schema=arrow), struct)
 
 
 # --- session cache --------------------------------------------------------

@@ -48,6 +48,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tile_processor_spark.session import local_frame
 from tile_processor_spark.sources.dedup_bloom import (
     build_bloom,
     fold_in,
@@ -92,9 +93,7 @@ _STAGE_RANGE_PARTITIONS = 8
 
 
 def _fingerprint_schema_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [], "fp string, doc_key long, src_version int"
-    )
+    return local_frame(spark, [], "fp string, doc_key long, src_version int")
 
 
 def processed_through(fp_path: str) -> int:

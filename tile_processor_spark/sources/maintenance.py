@@ -1,4 +1,4 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance: small-file compaction and the swap store.
 
 Streaming appends (``streaming/ingest.py``), per-batch merges
 (``streaming/rollup.py``) and per-tile retry writes all accrete small
@@ -12,7 +12,9 @@ The rewrite is atomic at the directory level: new files land in a
 sibling ``<path>.__compacting__`` directory which is swapped in with
 two renames — readers see either the old layout or the new one, never
 a mix. (On object stores swap-by-rename becomes a manifest flip; the
-table-format layer, not this library, owns that.)
+table-format layer, not this library, owns that.) The same swap
+commits the small swap-whole stores of ``streaming/``:
+``atomic_swap_write`` writes a generation, ``read_swap_store`` reads one.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from tile_processor_spark.session import local_frame
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -117,14 +121,25 @@ def compact_partitioned(
     }
 
 
-def atomic_swap_write(df: DataFrame, path: str, coalesce_to: int = 1) -> None:
-    """Replace ``path``'s parquet contents with ``df`` via the
-    crash-safe double-rename swap (hidden staging dirs + `_recover`
-    self-heal). The shared commit primitive for small swap-whole
-    stores (streaming HLL/CMS registers): a crash at any point leaves
-    either the old or the new generation intact, never a torn mix."""
+def read_swap_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """The swap store at ``path`` as a frame of ``schema``: empty before
+    the first write, else the parquet read. Runs `_recover` first, so a
+    crash mid-swap reads as the previous generation."""
+    _recover(path)
+    if not os.path.isdir(path):
+        return local_frame(spark, [], schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def atomic_swap_write(df: DataFrame, path: str) -> None:
+    """Replace ``path``'s parquet contents with ``df``, as one file, via
+    the crash-safe double-rename swap (hidden staging dirs + `_recover`
+    self-heal). The commit primitive for small swap-whole stores
+    (streaming sketch registers and open sessions), whose one reader is
+    `read_swap_store`: a crash at any point leaves either the old or the
+    new generation intact, never a torn mix."""
     tmp, old = _staging_paths(path)
-    df.coalesce(coalesce_to).write.mode("overwrite").parquet(tmp)
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)

@@ -45,6 +45,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tile_processor_spark.session import local_frame
+
 _MANIFEST_PREFIX = "manifest-v"
 _DATA_DIR = "data"
 
@@ -1206,7 +1208,7 @@ def read_snapshot(
         # an empty committed file list is legal (e.g. the connector
         # committing an all-empty-task write): same contract as an
         # empty partition_filter match — the version's schema, no rows
-        return spark.createDataFrame([], committed)
+        return local_frame(spark, [], committed)
     if part_cols:
         return _apply_where(
             read_partitioned_files(spark, manifest, files), where

@@ -3,18 +3,10 @@ complementing ``streaming/hll.py``'s idempotent one.
 
 CMS merge is cell-wise ADDITION, so at-least-once ``foreachBatch``
 replays would double-count (exactly the rollup's problem, not HLL's).
-The fix here is stronger and simpler than the rollup's per-partition
-markers, because the whole store is ≤ depth×width rows and is replaced
-by ONE crash-safe double-rename swap per merge: the store carries the
-(run, epoch) that produced it, the swap is atomic, so the store is
-always EXACTLY the state after some prefix of batches — a replayed
-epoch is recognized by the batch-level marker and skipped whole. No
-partial-merge window exists at all.
-
-The run id comes from the checkpoint's uuid marker
-(``rollup._checkpoint_run_id``): it survives restarts of the same
-checkpoint (true replays are recognized) and dies with it (a recreated
-checkpoint's epoch 0 can never false-match the old incarnation).
+The whole store is ≤ depth×width rows, replaced by ONE crash-safe
+double-rename swap per merge, so a replayed epoch is recognized by the
+store's batch-level ``(run, epoch)`` mark and skipped whole
+(``store.merge_counts``, shared with ``streaming/histogram.py``).
 
 Registers are the SAME deterministic md5 cells as the batch
 ``sketch_count_min`` (depth 4 × width 1024), so the streaming store is
@@ -24,15 +16,13 @@ rows (tests/test_streaming_cms.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from tile_processor_spark.plans.sketches import cms_positions
-from tile_processor_spark.sources.maintenance import _recover, atomic_swap_write
-from tile_processor_spark.streaming.rollup import _checkpoint_run_id
+from tile_processor_spark.session import local_frame
+from tile_processor_spark.sources.maintenance import read_swap_store
+from tile_processor_spark.streaming.store import merge_counts
 
 CMS_STORE_SCHEMA = (
     "depth long, bucket long, cnt long, applied_epoch long, applied_run string"
@@ -51,13 +41,6 @@ def cms_cells(keys: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def read_cms_store(spark: SparkSession, store_path: str) -> DataFrame:
-    _recover(store_path)
-    if not os.path.isdir(store_path):
-        return spark.createDataFrame([], CMS_STORE_SCHEMA)
-    return spark.read.schema(CMS_STORE_SCHEMA).parquet(store_path)
-
-
 def merge_batch_into_cms(
     batch: DataFrame,
     store_path: str,
@@ -65,73 +48,24 @@ def merge_batch_into_cms(
     epoch: int | None = None,
     run_id: str | None = None,
 ) -> None:
-    """Add one (micro-)batch's cells into the store.
-
-    With ``epoch`` set, a store already carrying this (run, epoch) is a
-    replay: skip entirely. The check is batch-level because the swap
-    commit is atomic — the store can never hold half a merge. Direct
-    calls (``epoch=None``) are additive by contract, mirroring
-    ``rollup.merge_batch_into_rollup``."""
-    spark = batch.sparkSession
+    """Add one (micro-)batch's cells into the store, skipping a replayed
+    ``(run, epoch)`` (``store.merge_counts``)."""
     keys = batch.select(F.col(key_col).cast("string").alias("k")).filter(
         F.col("k").isNotNull()
     )
-    delta = cms_cells(keys, "k").localCheckpoint()
-    if delta.isEmpty():
-        return
-    current = read_cms_store(spark, store_path)
-    if epoch is not None:
-        head = current.limit(1).collect()
-        if head and head[0]["applied_epoch"] == int(epoch) and (
-            head[0]["applied_run"] == run_id
-        ):
-            return  # replayed batch: already fully applied
-    merged = (
-        current.select("depth", "bucket", "cnt")
-        .unionByName(delta)
-        .groupBy("depth", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .withColumn(
-            "applied_epoch",
-            F.lit(int(epoch) if epoch is not None else -1).cast("long"),
-        )
-        .withColumn("applied_run", F.lit(run_id).cast("string"))
-    )
-    # ≤ 4096 cells: single-file store
-    atomic_swap_write(merged, store_path, coalesce_to=1)
+    cells = cms_cells(keys, "k")
+    merge_counts(cells, store_path, CMS_STORE_SCHEMA, ("depth", "bucket"), epoch, run_id)
 
 
 def cms_point_estimate(
     spark: SparkSession, store_path: str, keys: list[str]
 ) -> DataFrame:
     """(key, est_cnt): min-over-depths point estimates for given keys."""
-    store = read_cms_store(spark, store_path)
-    probe = spark.createDataFrame([(k,) for k in keys], "k string")
+    store = read_swap_store(spark, store_path, CMS_STORE_SCHEMA)
+    probe = local_frame(spark, [(k,) for k in keys], "k string")
     cells = cms_positions(probe, "k", keep=("k",))
     return (
         cells.join(store, ["depth", "bucket"], "left")
         .groupBy("k")
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("est_cnt"))
     )
-
-
-def start_continuous_cms(
-    events: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    key_col: str = "user_id",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the key-frequency CMS from an event stream."""
-    run_id = _checkpoint_run_id(checkpoint_path)
-    writer = (
-        events.writeStream.foreachBatch(
-            lambda batch, epoch: merge_batch_into_cms(
-                batch, store_path, key_col, epoch=epoch, run_id=run_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -34,10 +34,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from tile_processor_spark.sources.snapshots import list_versions, read_snapshot
-from tile_processor_spark.streaming.rollup import _checkpoint_run_id
 
 
 def enrich_batch(
@@ -66,33 +64,11 @@ def enrich_batch(
         return
     # Epoch-keyed overwrite: replaying this epoch rewrites the same
     # directory — no duplicate rows survive a crash-before-checkpoint.
-    part = os.path.join(out_path, f"ingest_epoch={run_id or 'run'}-{int(epoch)}")
+    # an 8-character run-id prefix keeps partition names short
+    part = os.path.join(out_path, f"ingest_epoch={(run_id or 'run')[:8]}-{int(epoch)}")
     enriched.write.mode("overwrite").parquet(part)
 
 
 def read_enriched(spark, out_path: str) -> DataFrame:
     """Read the enriched output across all epoch partitions."""
     return spark.read.option("basePath", out_path).parquet(out_path)
-
-
-def start_enriched_stream(
-    events: DataFrame,
-    dim_table_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    join_key: str = "user_id",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Continuously enrich an event stream against the snapshot dim."""
-    run_id = _checkpoint_run_id(checkpoint_path)[:8]
-    writer = (
-        events.writeStream.foreachBatch(
-            lambda batch, epoch: enrich_batch(
-                batch, dim_table_path, out_path, join_key, epoch=epoch, run_id=run_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

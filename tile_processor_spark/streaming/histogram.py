@@ -10,10 +10,8 @@ out-of-range values clamp into the edge bins, and the clamp count is
 an explicit cell (bin 0 / bin NB-1 absorb them) so range misjudgment
 is observable, not silent.
 
-Merge is cell-wise addition over ≤ |types|×NB rows — at-least-once
-``foreachBatch`` replays are recognized whole by the (run, epoch)
-marker, and the double-rename swap means the store is always exactly
-the state after some prefix of batches (no partial-merge window).
+Merge is cell-wise addition over ≤ |types|×NB rows through the same
+epoch-guarded swap merge as the CMS (``store.merge_counts``).
 
 Parity: ``hist_cells`` is the single source of truth for the bin
 expression; the test pins the replayed store bit-for-bit against the
@@ -24,15 +22,12 @@ quantile estimator reuses the batch sketch's exact integer ceil rule
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window as W
 
-from tile_processor_spark.sources.maintenance import _recover, atomic_swap_write
-from tile_processor_spark.streaming.rollup import _checkpoint_run_id
+from tile_processor_spark.sources.maintenance import read_swap_store
+from tile_processor_spark.streaming.store import merge_counts
 
 HIST_STREAM_BINS = 512
 
@@ -64,13 +59,6 @@ def hist_cells(batch: DataFrame, lo: float, hi: float) -> DataFrame:
     )
 
 
-def read_hist_store(spark: SparkSession, store_path: str) -> DataFrame:
-    _recover(store_path)
-    if not os.path.isdir(store_path):
-        return spark.createDataFrame([], HIST_STORE_SCHEMA)
-    return spark.read.schema(HIST_STORE_SCHEMA).parquet(store_path)
-
-
 def merge_batch_into_hist(
     batch: DataFrame,
     store_path: str,
@@ -79,32 +67,12 @@ def merge_batch_into_hist(
     epoch: int | None = None,
     run_id: str | None = None,
 ) -> None:
-    """Add one micro-batch's cells; a store already carrying this
-    (run, epoch) is a replay and is skipped whole (the swap commit is
-    atomic, so there is no partial state to reconcile)."""
-    spark = batch.sparkSession
-    delta = hist_cells(batch, lo, hi).localCheckpoint()
-    if delta.isEmpty():
-        return
-    current = read_hist_store(spark, store_path)
-    if epoch is not None:
-        head = current.limit(1).collect()
-        if head and head[0]["applied_epoch"] == int(epoch) and (
-            head[0]["applied_run"] == run_id
-        ):
-            return
-    merged = (
-        current.select("event_type", "bin", "cnt")
-        .unionByName(delta)
-        .groupBy("event_type", "bin")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .withColumn(
-            "applied_epoch",
-            F.lit(int(epoch) if epoch is not None else -1).cast("long"),
-        )
-        .withColumn("applied_run", F.lit(run_id).cast("string"))
+    """Add one micro-batch's cells, skipping a replayed ``(run, epoch)``
+    (``store.merge_counts``)."""
+    merge_counts(
+        hist_cells(batch, lo, hi), store_path, HIST_STORE_SCHEMA, ("event_type", "bin"),
+        epoch, run_id,
     )
-    atomic_swap_write(merged, store_path, coalesce_to=1)
 
 
 def hist_quantile_estimate(
@@ -124,7 +92,7 @@ def hist_quantile_estimate(
     # future store version carries per-commit rows) — the bounded-
     # grain shape the plan-invariant funnel check verifies.
     store = (
-        read_hist_store(spark, store_path)
+        read_swap_store(spark, store_path, HIST_STORE_SCHEMA)
         .groupBy("event_type", "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -151,26 +119,3 @@ def hist_quantile_estimate(
         for p in pcts
     ]
     return agg.select("event_type", "n", *edges)
-
-
-def start_continuous_histogram(
-    events: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    lo: float,
-    hi: float,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the per-type value histogram from an event stream."""
-    run_id = _checkpoint_run_id(checkpoint_path)
-    writer = (
-        events.writeStream.foreachBatch(
-            lambda batch, epoch: merge_batch_into_hist(
-                batch, store_path, lo, hi, epoch=epoch, run_id=run_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -24,11 +24,8 @@ bit-for-bit — and therefore so does the estimate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from tile_processor_spark.plans.sketches import (
     HLL_ALPHA_M2,
@@ -36,17 +33,9 @@ from tile_processor_spark.plans.sketches import (
     hll_dense_registers,
     hll_registers,
 )
-from tile_processor_spark.sources.maintenance import _recover, atomic_swap_write
+from tile_processor_spark.sources.maintenance import atomic_swap_write, read_swap_store
 
 HLL_STORE_SCHEMA = "idx long, m long"
-
-
-def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Current sparse registers (empty frame if nothing merged yet)."""
-    _recover(store_path)
-    if not os.path.isdir(store_path):
-        return spark.createDataFrame([], HLL_STORE_SCHEMA)
-    return spark.read.schema(HLL_STORE_SCHEMA).parquet(store_path)
 
 
 def merge_batch_into_hll(
@@ -58,7 +47,6 @@ def merge_batch_into_hll(
     new store generation. Idempotent: replaying any batch (foreachBatch
     at-least-once) cannot change the result of the max. The state is
     <= 64 rows regardless of stream volume, so the rewrite is O(1)."""
-    spark = batch.sparkSession
     keys = batch.select(F.col(key_col).cast("string").alias("k")).filter(
         F.col("k").isNotNull()
     )
@@ -66,19 +54,18 @@ def merge_batch_into_hll(
     if delta.isEmpty():
         return
     merged = (
-        read_hll_store(spark, store_path)
+        read_swap_store(batch.sparkSession, store_path, HLL_STORE_SCHEMA)
         .unionByName(delta)
         .groupBy("idx")
         .agg(F.max("m").cast("long").alias("m"))
     )
-    # 64 rows: one file keeps the store a single-read object
-    atomic_swap_write(merged, store_path, coalesce_to=1)
+    atomic_swap_write(merged, store_path)
 
 
 def hll_store_estimate(spark: SparkSession, store_path: str) -> DataFrame:
     """One-row estimate frame from the current store — same formula
     (and bit-identical sum_inv) as ``sketch_hll_distinct``."""
-    regs = hll_dense_registers(spark, read_hll_store(spark, store_path))
+    regs = hll_dense_registers(spark, read_swap_store(spark, store_path, HLL_STORE_SCHEMA))
     agg = regs.agg(
         F.sum(F.pow(F.lit(2.0), -F.col("m"))).alias("sum_inv"),
         F.sum(F.when(F.col("m") == 0, 1).otherwise(0)).cast("long").alias("n_zero"),
@@ -100,22 +87,3 @@ def hll_store_estimate(spark: SparkSession, store_path: str) -> DataFrame:
         est_raw.alias("est_raw"),
         corrected.alias("est_corrected"),
     )
-
-
-def start_continuous_hll(
-    events: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    key_col: str = "user_id",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the distinct-key HLL from an event stream."""
-    writer = (
-        events.writeStream.foreachBatch(
-            lambda batch, _epoch: merge_batch_into_hll(batch, store_path, key_col)
-        )
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -35,24 +35,19 @@ def stream_bands(docs: DataFrame) -> DataFrame:
 
 
 def start_band_index_append(
-    docs: DataFrame,
-    delta_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
+    docs: DataFrame, delta_path: str, checkpoint_path: str
 ) -> StreamingQuery:
-    """Append the stream's band keys to the index delta area.
-    ``availableNow`` drains the backlog and stops (the tested mode);
-    pass ``available_now=False`` for a continuous micro-batch ingest."""
-    writer = (
+    """Append the stream's band keys to the index delta area
+    (``availableNow``: drain the backlog, then stop)."""
+    return (
         stream_bands(docs)
         .writeStream.format("parquet")
         .option("path", delta_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_band_index(

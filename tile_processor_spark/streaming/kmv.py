@@ -28,15 +28,12 @@ stores, ``sketch_kmv_set_ops``) that HLL registers cannot express.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from tile_processor_spark.plans.llm_ops import hash32
 from tile_processor_spark.plans.sketches import kmv_est_union
-from tile_processor_spark.sources.maintenance import _recover, atomic_swap_write
+from tile_processor_spark.sources.maintenance import atomic_swap_write, read_swap_store
 
 KMV_STREAM_K = 256
 KMV_STORE_SCHEMA = "h long"
@@ -56,14 +53,6 @@ def kmv_batch_hashes(batch: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def read_kmv_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Current bottom-k hashes (empty frame if nothing merged yet)."""
-    _recover(store_path)
-    if not os.path.isdir(store_path):
-        return spark.createDataFrame([], KMV_STORE_SCHEMA)
-    return spark.read.schema(KMV_STORE_SCHEMA).parquet(store_path)
-
-
 def merge_batch_into_kmv(
     batch: DataFrame, store_path: str, key_col: str = "user_id"
 ) -> None:
@@ -73,18 +62,17 @@ def merge_batch_into_kmv(
     -> swap in a new store generation. Idempotent set-min: replays
     cannot change the result. State is <= k rows, so the rewrite is
     O(1) no matter the stream volume."""
-    spark = batch.sparkSession
     delta = kmv_batch_hashes(batch, key_col)
     if delta.isEmpty():
         return
     merged = (
-        read_kmv_store(spark, store_path)
+        read_swap_store(batch.sparkSession, store_path, KMV_STORE_SCHEMA)
         .unionByName(delta)
         .distinct()
         .orderBy("h")
         .limit(KMV_STREAM_K)
     )
-    atomic_swap_write(merged, store_path, coalesce_to=1)
+    atomic_swap_write(merged, store_path)
 
 
 def kmv_store_estimate(spark: SparkSession, store_path: str) -> DataFrame:
@@ -92,7 +80,7 @@ def kmv_store_estimate(spark: SparkSession, store_path: str) -> DataFrame:
     the exact estimator rule shared with the batch sketches, including
     the under-full case (m < k ⇒ the store saw every distinct key and
     the estimate IS the exact count)."""
-    state = read_kmv_store(spark, store_path).agg(
+    state = read_swap_store(spark, store_path, KMV_STORE_SCHEMA).agg(
         F.count(F.lit(1)).cast("long").alias("m"),
         F.max("h").alias("kth_hash"),
     )
@@ -120,8 +108,8 @@ def kmv_stores_set_estimates(
         kmv_jaccard,
     )
 
-    a = read_kmv_store(spark, store_a).localCheckpoint()
-    b = read_kmv_store(spark, store_b).localCheckpoint()
+    a = read_swap_store(spark, store_a, KMV_STORE_SCHEMA).localCheckpoint()
+    b = read_swap_store(spark, store_b, KMV_STORE_SCHEMA).localCheckpoint()
     merged = (
         a.unionByName(b).distinct().orderBy("h").limit(KMV_STREAM_K).localCheckpoint()
     )
@@ -142,22 +130,3 @@ def kmv_stores_set_estimates(
         kmv_est_intersection(KMV_STREAM_K).alias("est_intersection"),
         kmv_jaccard().alias("jaccard_est"),
     )
-
-
-def start_continuous_kmv(
-    events: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    key_col: str = "user_id",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the distinct-key bottom-k sketch from an event stream."""
-    writer = (
-        events.writeStream.foreachBatch(
-            lambda batch, _epoch: merge_batch_into_kmv(batch, store_path, key_col)
-        )
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -11,16 +11,11 @@ so the merge is O(touched hours), never a full rewrite. Late data
 within the watermark simply lands in an old hour's partition and is
 merged the same way.
 
-Replay safety: ``foreachBatch`` is at-least-once — a crash between the
-store write and the checkpoint offset commit replays the whole batch
-with the SAME epoch id. Each rewritten hour partition therefore records
-the (run, epoch) that produced it (``applied_run``/``applied_epoch``;
-the run id is a uuid marker living inside the checkpoint directory, so
-it survives restarts but dies with the checkpoint); a replayed epoch
-skips every hour partition already carrying its pair, so measures are
-never double-counted — while a RECREATED checkpoint, whose epoch
-counter restarts at 0, gets a fresh run id and can never false-match
-the previous incarnation's markers. The marker travels INSIDE the partition data (not a
+Replay safety (``streaming/store.py`` has the shared rules): each
+rewritten hour partition records the (run, epoch) that produced it
+(``applied_run``/``applied_epoch``), and a replayed epoch skips every
+hour partition already carrying its pair, so measures are never
+double-counted. The marker travels INSIDE the partition data (not a
 sidecar file), so even a partial dynamic-overwrite failure leaves each
 partition either fully old (will re-merge) or fully new (will skip) —
 per-partition exactly-once. Direct batch calls (``epoch=None``) are
@@ -48,7 +43,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from tile_processor_spark.session import local_frame
+from tile_processor_spark.streaming.store import stamp_epoch
 
 US = 1_000_000
 
@@ -78,31 +75,11 @@ def read_rollup(spark: SparkSession, store_path: str) -> DataFrame:
     if not os.path.isdir(store_path) or not any(
         n.startswith("h_start_us=") for n in os.listdir(store_path)
     ):
-        return spark.createDataFrame([], ROLLUP_SCHEMA)
+        return local_frame(spark, [], ROLLUP_SCHEMA)
     return spark.read.schema(ROLLUP_SCHEMA).parquet(store_path).select(
         "h_start_us", "event_type", "n_events", "value_sum",
         "applied_epoch", "applied_run",
     )
-
-
-def _checkpoint_run_id(checkpoint_path: str) -> str:
-    """Stable identity for one LOGICAL stream: a uuid marker created
-    inside the checkpoint directory on first use. It survives restarts
-    of the same checkpoint (so genuine epoch replays are recognized)
-    and dies with the checkpoint (so a recreated checkpoint — whose
-    epoch counter restarts at 0 — can never be mistaken for a replay
-    of hour partitions written under the previous incarnation)."""
-    import uuid
-
-    os.makedirs(checkpoint_path, exist_ok=True)
-    marker = os.path.join(checkpoint_path, "_rollup_run_id")
-    if not os.path.exists(marker):
-        tmp = f"{marker}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(uuid.uuid4().hex)
-        os.replace(tmp, marker)
-    with open(marker) as f:
-        return f.read().strip()
 
 
 def merge_batch_into_rollup(
@@ -163,8 +140,6 @@ def merge_batch_into_rollup(
         )
         delta = delta.join(F.broadcast(applied), "h_start_us", "left_anti")
         current = current.join(F.broadcast(applied), "h_start_us", "left_anti")
-    mark = F.lit(int(epoch) if epoch is not None else -1).cast("long")
-    run_mark = F.lit(run_id).cast("string")
     merged = (
         delta.select(*_MEASURES)
         .unionByName(current.select(*_MEASURES))
@@ -173,33 +148,10 @@ def merge_batch_into_rollup(
             F.sum("n_events").cast("long").alias("n_events"),
             F.sum("value_sum").cast("decimal(18,4)").alias("value_sum"),
         )
-        .withColumn("applied_epoch", mark)
-        .withColumn("applied_run", run_mark)
     )
     (
-        merged.write.mode("overwrite")
+        stamp_epoch(merged, epoch, run_id).write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("h_start_us")
         .parquet(store_path)
     )
-
-
-def start_continuous_rollup(
-    events: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Maintain the hour rollup from an event stream via foreachBatch."""
-    run_id = _checkpoint_run_id(checkpoint_path)
-    writer = (
-        events.writeStream.foreachBatch(
-            lambda batch, epoch: merge_batch_into_rollup(
-                batch, store_path, epoch=epoch, run_id=run_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

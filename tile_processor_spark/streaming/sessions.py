@@ -40,11 +40,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tile_processor_spark.sources.maintenance import _recover, atomic_swap_write
+from tile_processor_spark.session import local_frame
+from tile_processor_spark.sources.maintenance import atomic_swap_write, read_swap_store
+from tile_processor_spark.streaming.store import is_replay, stamp_epoch
 
 #: same gap rule as plans.relational_ext3.sessionize_gap_ids
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
+#: the swap store: open-session rows (user_id NOT NULL) plus exactly one
+#: meta sentinel row (user_id NULL) once any batch merged
 SESS_OPEN_SCHEMA = (
     "user_id long, start_us long, end_us long, n_events long, "
     "wm_us long, n_dropped long, applied_epoch long, applied_run string"
@@ -62,16 +66,6 @@ def _final_path(store_path: str) -> str:
     return os.path.join(store_path, "final")
 
 
-def read_session_open_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Swap-store contents: open-session rows (user_id NOT NULL) plus
-    exactly one meta sentinel row (user_id NULL) once any batch merged."""
-    p = _open_path(store_path)
-    _recover(p)
-    if not os.path.isdir(p):
-        return spark.createDataFrame([], SESS_OPEN_SCHEMA)
-    return spark.read.schema(SESS_OPEN_SCHEMA).parquet(p)
-
-
 def merge_batch_into_sessions(
     batch: DataFrame,
     store_path: str,
@@ -84,16 +78,11 @@ def merge_batch_into_sessions(
     session store under the watermark discipline described in the
     module docstring. ``delay_us`` is the allowed lateness."""
     spark = batch.sparkSession
-    cur = read_session_open_store(spark, store_path)
+    cur = read_swap_store(spark, _open_path(store_path), SESS_OPEN_SCHEMA)
     meta = cur.filter(F.col("user_id").isNull()).limit(1).collect()
     wm = meta[0]["wm_us"] if meta else None
     dropped = int(meta[0]["n_dropped"]) if meta else 0
-    if (
-        epoch is not None
-        and meta
-        and meta[0]["applied_epoch"] == int(epoch)
-        and meta[0]["applied_run"] == run_id
-    ):
+    if is_replay(meta[0] if meta else None, epoch, run_id):
         return  # replayed batch: the swap commit already recorded it
     rows = (
         batch.select("user_id", F.unix_micros("ts").alias("ts_us"))
@@ -146,29 +135,13 @@ def merge_batch_into_sessions(
     # and the read-side dedup absorbs the duplicate append)
     if not to_close.isEmpty():
         to_close.coalesce(1).write.mode("append").parquet(_final_path(store_path))
-    meta_row = spark.createDataFrame(
-        [
-            (
-                None,
-                None,
-                None,
-                None,
-                new_wm,
-                dropped + late,
-                int(epoch) if epoch is not None else -1,
-                run_id,
-            )
-        ],
-        SESS_OPEN_SCHEMA,
+    meta_row = stamp_epoch(
+        local_frame(spark, [(new_wm, dropped + late)], "wm_us long, n_dropped long"),
+        epoch,
+        run_id,
     )
-    out = still_open.select(
-        *_SESSION_COLS,
-        F.lit(None).cast("long").alias("wm_us"),
-        F.lit(None).cast("long").alias("n_dropped"),
-        F.lit(None).cast("long").alias("applied_epoch"),
-        F.lit(None).cast("string").alias("applied_run"),
-    ).unionByName(meta_row)
-    atomic_swap_write(out, _open_path(store_path), coalesce_to=1)
+    out = still_open.unionByName(meta_row, allowMissingColumns=True)
+    atomic_swap_write(out, _open_path(store_path))
 
 
 def sessions_store_read(spark: SparkSession, store_path: str) -> DataFrame:
@@ -176,12 +149,12 @@ def sessions_store_read(spark: SparkSession, store_path: str) -> DataFrame:
     deduped from the append log, open sessions from the swap store,
     each row also carrying the store's total late-dropped count — the
     externally checkable face of the watermark discipline."""
-    cur = read_session_open_store(spark, store_path)
+    cur = read_swap_store(spark, _open_path(store_path), SESS_OPEN_SCHEMA)
     fp = _final_path(store_path)
     if os.path.isdir(fp):
         closed = spark.read.schema(SESS_FINAL_SCHEMA).parquet(fp).distinct()
     else:
-        closed = spark.createDataFrame([], SESS_FINAL_SCHEMA)
+        closed = local_frame(spark, [], SESS_FINAL_SCHEMA)
     open_s = cur.filter(F.col("user_id").isNotNull()).select(*_SESSION_COLS)
     both = closed.withColumn("is_closed", F.lit(True)).unionByName(
         open_s.withColumn("is_closed", F.lit(False))

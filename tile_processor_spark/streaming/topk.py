@@ -25,15 +25,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from tile_processor_spark.session import local_frame
+from tile_processor_spark.sources.maintenance import read_swap_store
 from tile_processor_spark.streaming.cms import (
+    CMS_STORE_SCHEMA,
     cms_positions,
     merge_batch_into_cms,
-    read_cms_store,
 )
-from tile_processor_spark.streaming.rollup import _checkpoint_run_id
 
 TOPK_CANDIDATES_PER_BATCH = 64
 
@@ -73,9 +73,9 @@ def topk_estimate(
     cms_path = os.path.join(store_path, "cms")
     cand_path = os.path.join(store_path, "candidates")
     if not os.path.isdir(cand_path):
-        return spark.createDataFrame([], "k string, est_cnt long, rank long")
+        return local_frame(spark, [], "k string, est_cnt long, rank long")
     cands = spark.read.parquet(cand_path).distinct()
-    store = read_cms_store(spark, cms_path)
+    store = read_swap_store(spark, cms_path, CMS_STORE_SCHEMA)
     cells = cms_positions(cands, "k", keep=("k",))
     # The global ranking window runs over the CANDIDATE STORE, whose
     # cardinality is bounded by TOPK_CANDIDATES_PER_BATCH x batches
@@ -99,24 +99,3 @@ def topk_estimate(
             "rank",
         )
     )
-
-
-def start_continuous_topk(
-    events: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    key_col: str = "user_id",
-    available_now: bool = True,
-) -> StreamingQuery:
-    run_id = _checkpoint_run_id(checkpoint_path)
-    writer = (
-        events.writeStream.foreachBatch(
-            lambda batch, epoch: merge_batch_into_topk(
-                batch, store_path, key_col, epoch=epoch, run_id=run_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
