@@ -39,8 +39,33 @@ def _ranged_table(spark, path):
     return path
 
 
+def _connector_ranged_table(spark, path):
+    """The same three key ranges committed by ONE connector overwrite
+    (``df.write.format("tps_snapshot")``, one file per task): a range
+    repartition over all 30 keys puts each range in its own task."""
+    from tile_processor_spark.sources.snapshot_datasource import register
+
+    register(spark)
+    df = spark.createDataFrame(
+        [(lo + i, f"s{lo + i}") for lo in (0, 100, 200) for i in range(10)],
+        "k long, s string",
+    )
+    df.repartitionByRange(3, "k").write.format("tps_snapshot").option(
+        "path", path
+    ).mode("overwrite").save()
+    return path
+
+
 def test_where_prunes_files_and_matches_filter(spark, tmp_path):
-    tbl = _ranged_table(spark, str(tmp_path / "tbl"))
+    # the same ranges committed by appends and by a connector overwrite
+    for tbl in (
+        _ranged_table(spark, str(tmp_path / "tbl")),
+        _connector_ranged_table(spark, str(tmp_path / "conn")),
+    ):
+        _check_where_prunes(spark, tbl)
+
+
+def _check_where_prunes(spark, tbl):
     man = _read_manifest(tbl, list_versions(tbl)[-1])
     all_files = _manifest_files(man)
     assert len(all_files) == 3
@@ -66,6 +91,8 @@ def test_where_prunes_files_and_matches_filter(spark, tmp_path):
     # unknown column: no stats -> no pruning, filter still exact (empty)
     with pytest.raises(Exception):
         read_snapshot(spark, tbl, where=[("nope", "=", 1)]).collect()
+
+
 
 
 def test_where_survives_compaction_and_grouped_appends(spark, tmp_path):

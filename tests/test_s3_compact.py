@@ -1,5 +1,5 @@
-"""Store-native manifest compaction (round 15): ``compact_store``
-rewrites a committed version's flat manifest into the two-level grouped
+"""Store-native manifest compaction (round 15): ``compact_manifest``
+on an ``s3://`` table rewrites a committed version's flat manifest into the two-level grouped
 layout directly against the ``s3://`` prefix — driver-side metadata
 only, no data bytes moved, no local mirror round-trip — and
 ``vacuum_store`` reclaims superseded group side objects like the local
@@ -39,12 +39,10 @@ def _register(spark):
 
 
 def test_compact_store_partitioned_grouped_pruned_read(spark, fake_s3):
-    """Native partitioned table + append → compact_store groups by
+    """Native partitioned table + append → compact_manifest groups by
     partition value; the grouped manifest reads identically, pruning
     opens only the matching group's side object, and stats survive."""
-    from tile_processor_spark.sources.snapshot_datasource import (
-        compact_store,
-    )
+    from tile_processor_spark.sources.snapshots import compact_manifest
 
     prefix = "warehouse/native_compact"
     df1 = spark.createDataFrame(
@@ -69,7 +67,7 @@ def test_compact_store_partitioned_grouped_pruned_read(spark, fake_s3):
     before = _rows(_read(spark, fake_s3, prefix))
 
     opts = {k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"}
-    v3 = compact_store(f"s3://{BUCKET}/{prefix}", opts)
+    v3 = compact_manifest(f"s3://{BUCKET}/{prefix}", s3_options=opts)
     assert v3 == 3
     m3 = json.loads(
         _client(fake_s3).get_object(f"{prefix}/manifest-v00000003.json")
@@ -97,8 +95,8 @@ def test_compact_store_partitioned_grouped_pruned_read(spark, fake_s3):
 def test_compact_store_rollback_guard_and_stats(spark, fake_s3):
     from tile_processor_spark.sources.snapshot_datasource import (
         SnapshotPushdownReader,
-        compact_store,
     )
+    from tile_processor_spark.sources.snapshots import compact_manifest
 
     prefix = "warehouse/native_compact2"
     # two range-disjoint appends -> per-file stats in the manifest
@@ -116,8 +114,8 @@ def test_compact_store_rollback_guard_and_stats(spark, fake_s3):
     )
     opts = {k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"}
     with pytest.raises(ValueError, match="rolling back|allow_rollback"):
-        compact_store(f"s3://{BUCKET}/{prefix}", opts, version=1)
-    v3 = compact_store(f"s3://{BUCKET}/{prefix}", opts, group_files=1)
+        compact_manifest(f"s3://{BUCKET}/{prefix}", version=1, s3_options=opts)
+    v3 = compact_manifest(f"s3://{BUCKET}/{prefix}", group_files=1, s3_options=opts)
     # stats carried into group side files -> where-skipping still plans
     # fewer input partitions on the grouped head
     schema = _read(spark, fake_s3, prefix).schema
@@ -130,16 +128,14 @@ def test_compact_store_rollback_guard_and_stats(spark, fake_s3):
     assert 0 < n_skip < n_all
     assert _read(spark, fake_s3, prefix).filter("k >= 100").count() == 10
     # re-compaction of a grouped head is idempotent in effect
-    v4 = compact_store(f"s3://{BUCKET}/{prefix}", opts, group_files=1)
+    v4 = compact_manifest(f"s3://{BUCKET}/{prefix}", group_files=1, s3_options=opts)
     assert v4 == v3 + 1
     assert _read(spark, fake_s3, prefix).count() == 20
 
 
 def test_vacuum_store_reclaims_superseded_group_objects(spark, fake_s3):
-    from tile_processor_spark.sources.snapshot_datasource import (
-        compact_store,
-        vacuum_store,
-    )
+    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import compact_manifest
 
     prefix = "warehouse/native_compact3"
     (
@@ -148,8 +144,8 @@ def test_vacuum_store_reclaims_superseded_group_objects(spark, fake_s3):
         .mode("overwrite").save()
     )
     opts = {k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"}
-    compact_store(f"s3://{BUCKET}/{prefix}", opts)          # v2 grouped
-    compact_store(f"s3://{BUCKET}/{prefix}", opts)          # v3 grouped
+    compact_manifest(f"s3://{BUCKET}/{prefix}", s3_options=opts)  # v2 grouped
+    compact_manifest(f"s3://{BUCKET}/{prefix}", s3_options=opts)  # v3 grouped
     c = _client(fake_s3)
     group_keys = [k for k in c.list_objects(prefix + "/groups/")]
     assert len(group_keys) == 2  # one side object per compaction
@@ -174,9 +170,6 @@ def test_snapshot_history_local_and_s3(spark, fake_s3, tmp_path):
     """DESCRIBE HISTORY twin (round 15): one metadata row per version
     with the operation classified — create / append / rewrite /
     compact — identical through the local and s3 paths."""
-    from tile_processor_spark.sources.snapshot_datasource import (
-        compact_store,
-    )
     from tile_processor_spark.sources.snapshots import (
         append_snapshot,
         compact_manifest,
@@ -215,9 +208,57 @@ def test_snapshot_history_local_and_s3(spark, fake_s3, tmp_path):
         spark.createDataFrame([("O", 2)], "g string, k long"),
         url, s3_options=opts,
     )
-    compact_store(url, opts)
+    compact_manifest(url, s3_options=opts)
     hs = snapshot_history(url, s3_options=opts)
     assert [e["operation"] for e in hs] == ["create", "append", "compact"]
     assert all(e["partition_by"] == ["g"] for e in hs)
     assert hs[1]["n_appended"] == 1
+    assert not fake_s3.rejections
+
+
+def test_s3_append_onto_compacted_head_stays_grouped(spark, fake_s3):
+    """An s3:// append onto a compacted head adds its delta as new
+    group(s), as the local append does: the old group side objects are
+    shared verbatim, one new group per partition value in the delta,
+    and reads and pruning see old and new rows alike."""
+    from tile_processor_spark.sources.snapshots import (
+        append_snapshot,
+        compact_manifest,
+        write_snapshot,
+    )
+
+    prefix = "warehouse/native_grouped_append"
+    url = f"s3://{BUCKET}/{prefix}"
+    opts = {k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"}
+    schema = "status string, k long, v double"
+    write_snapshot(
+        spark.createDataFrame([("F", 1, 10.0), ("O", 2, 20.0)], schema),
+        url, partition_by=["status"], s3_options=opts,
+    )
+    append_snapshot(
+        spark.createDataFrame([("F", 3, 30.0)], schema), url, s3_options=opts
+    )
+    assert compact_manifest(url, s3_options=opts) == 3
+    v4 = append_snapshot(
+        spark.createDataFrame([("O", 4, 40.0), ("P", 5, 50.0)], schema),
+        url, s3_options=opts,
+    )
+    assert v4 == 4
+    c = _client(fake_s3)
+    m3 = json.loads(c.get_object(f"{prefix}/manifest-v00000003.json"))
+    m4 = json.loads(c.get_object(f"{prefix}/manifest-v00000004.json"))
+    assert "groups" in m4 and "files" not in m4
+    assert m4["groups"][: len(m3["groups"])] == m3["groups"]
+    new_groups = m4["groups"][len(m3["groups"]):]
+    assert sorted(g["values"]["status"] for g in new_groups) == ["O", "P"]
+    assert all(g["stats"]["k"] for g in new_groups)
+    assert len(m4["appended_files"]) == 2 and m4["appended_to"] == 3
+    assert _rows(_read(spark, fake_s3, prefix)) == [
+        ("F", 1, 10.0), ("F", 3, 30.0), ("O", 2, 20.0), ("O", 4, 40.0),
+        ("P", 5, 50.0),
+    ]
+    assert _rows(
+        _read(spark, fake_s3, prefix, partition_filter='{"status": "O"}')
+        .select("k")
+    ) == [(2,), (4,)]
     assert not fake_s3.rejections

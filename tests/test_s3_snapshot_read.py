@@ -410,10 +410,10 @@ def test_s3_stream_pre_root_manifest_refuses_with_guidance(spark, fake_s3, tmp_p
 
 def test_s3_append_onto_grouped_partitioned_mirror(spark, fake_s3, mirrored):
     """Appending s3-natively onto a COMPACTED (grouped-manifest)
-    partitioned mirror: the committer flattens the group side files
-    into a plain file list (group-level stats drop, documented), the
-    scheme carries forward, and pruning resolves partition values for
-    flattened old files and the new delta alike."""
+    partitioned mirror: the old group side files are shared (re-rooted
+    under the store's virtual root) and the delta lands as a new group,
+    the scheme carries forward, and pruning resolves partition values
+    for old groups and the new delta alike."""
     v3 = compact_manifest(mirrored)
     _mirror(mirrored, fake_s3, "warehouse/s3tbl")  # re-mirror v3 + sides
     before = _rows(_read_s3(spark, fake_s3, "warehouse/s3tbl", version=str(v3)))
@@ -432,7 +432,7 @@ def test_s3_append_onto_grouped_partitioned_mirror(spark, fake_s3, mirrored):
             partition_filter='{"yr": "2027"}',
         )
     ) == [("2027", 11, 2.0)]
-    # pre-existing partition still prunes correctly post-flatten
+    # pre-existing partition still prunes correctly after the append
     assert _rows(
         _read_s3(
             spark, fake_s3, "warehouse/s3tbl",

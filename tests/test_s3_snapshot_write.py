@@ -182,15 +182,12 @@ def test_s3_committer_append_on_top_of_concurrent_commit(fake_s3, spark, tmp_pat
     """Unit-level: a committer that staged its objects, then lost the
     race to a concurrent append, retries and commits a manifest whose
     file list includes BOTH deltas (commit_append's commute contract)."""
-    from tile_processor_spark.sources.s3_snapshot_write import (
-        S3SnapshotCommitter,
-    )
-    from tile_processor_spark.sources.snapshot_datasource import S3SnapshotStore
+    from tile_processor_spark.sources.snapshot_store import open_store
+    from tile_processor_spark.sources.snapshots import commit_append
 
     prefix = "warehouse/native_unit"
     _write(spark.createDataFrame([(1,)], "k long"), fake_s3, prefix, "overwrite")
-    store = S3SnapshotStore(f"s3://{BUCKET}/{prefix}", _s3_opts(fake_s3, prefix))
-    committer = S3SnapshotCommitter(store)
+    store = open_store(f"s3://{BUCKET}/{prefix}", _s3_opts(fake_s3, prefix))
     schema_json = store.manifest(1)["schema"]
     c = _client(fake_s3)
     # our staged delta object
@@ -204,8 +201,8 @@ def test_s3_committer_append_on_top_of_concurrent_commit(fake_s3, spark, tmp_pat
     c.put_object(key, buf.getvalue())
     # a CONCURRENT append lands v2 before our commit
     _write(spark.createDataFrame([(5,)], "k long"), fake_s3, prefix, "append")
-    v = committer.commit_append(
-        [key], schema_json, {}, "data/unitsnap", expected_schema=schema_json
+    v = commit_append(
+        store, [store.vpath(key)], expected_schema=schema_json, file_stats={}
     )
     assert v == 3
     assert _rows(_read(spark, fake_s3, prefix)) == [(1,), (5,), (7,)]
@@ -327,28 +324,71 @@ def test_s3_commit_ambiguous_failure_propagates(spark, fake_s3):
     stay invisible orphans for vacuum_store's retention sweep."""
     import pytest as _pytest
 
-    from tile_processor_spark.sources.s3_snapshot_write import (
-        S3SnapshotCommitter,
-    )
-    from tile_processor_spark.sources.snapshot_datasource import S3SnapshotStore
+    from tile_processor_spark.sources.snapshot_store import open_store
+    from tile_processor_spark.sources.snapshots import _commit_overwrite
 
     prefix = "warehouse/native_torn"
-    store = S3SnapshotStore(f"s3://{BUCKET}/{prefix}", _s3_opts(fake_s3, prefix))
+    store = open_store(f"s3://{BUCKET}/{prefix}", _s3_opts(fake_s3, prefix))
     c = _client(fake_s3)
     key = f"{prefix}/data/tornsnap/part-a.parquet"
     c.put_object(key, b"staged bytes")
     fake_s3.faults.append(
         {"verb": "PUT", "kind": "close", "path_substr": "manifest-v"}
     )
-    committer = S3SnapshotCommitter(store)
     with _pytest.raises(Exception):
-        committer.commit_overwrite([key], '{"type":"struct","fields":[]}',
-                                   {}, "data/tornsnap")
+        _commit_overwrite(store, [store.vpath(key)],
+                          '{"type":"struct","fields":[]}',
+                          f"{store.root}/data/tornsnap", [], {})
     assert len(fake_s3.fault_hits) == 1
     # no manifest landed (the fake dropped the connection before
     # applying the PUT), the table stays nonexistent, data stays staged
     assert not [k for k in c.list_objects(prefix + "/") if "manifest-v" in k]
     assert key in c.list_objects(prefix + "/")
+
+
+def test_s3_commit_ambiguity_resolved_by_readback(spark, fake_s3):
+    """A connection that dies AFTER the manifest's conditional PUT
+    landed leaves the outcome ambiguous; the store's publish reads the
+    key back, finds its own bytes, and reports the commit — raising
+    here would make a retrying caller append the same delta twice."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tile_processor_spark.sources.snapshot_store import open_store
+    from tile_processor_spark.sources.snapshots import commit_append
+
+    prefix = "warehouse/native_landed"
+    _write(spark.createDataFrame([(1,)], "k long"), fake_s3, prefix, "overwrite")
+    store = open_store(f"s3://{BUCKET}/{prefix}", _s3_opts(fake_s3, prefix))
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"k": pa.array([7], pa.int64())}), buf)
+    key = f"{prefix}/data/landedsnap/part-a.parquet"
+    c = _client(fake_s3)
+    c.put_object(key, buf.getvalue())
+
+    client = store.client()
+    orig_put = client.put_object
+
+    def dying_put(key, body, if_none_match=False):
+        orig_put(key, body, if_none_match=if_none_match)  # PUT lands...
+        raise ConnectionError("socket died after the server committed")
+
+    client.put_object = dying_put
+    try:
+        v = commit_append(
+            store, [store.vpath(key)],
+            expected_schema=store.manifest(1)["schema"], file_stats={},
+        )
+    finally:
+        client.put_object = orig_put
+    assert v == 2
+    assert [k for k in c.list_objects(prefix + "/") if "manifest-v" in k] == [
+        f"{prefix}/manifest-v00000001.json",
+        f"{prefix}/manifest-v00000002.json",
+    ]
+    assert _rows(_read(spark, fake_s3, prefix)) == [(1,), (7,)]
 
 
 def test_s3_partitioned_overwrite_write_and_pruned_read(spark, fake_s3):
@@ -524,10 +564,8 @@ def test_s3_partitioned_append_scheme_mismatch_refuses(spark, fake_s3):
     (b) a raced creation whose scheme differs from the delta's key
     chains fails inside commit_append's retry — never a manifest whose
     declared scheme contradicts its files."""
-    from tile_processor_spark.sources.s3_snapshot_write import (
-        S3SnapshotCommitter,
-    )
-    from tile_processor_spark.sources.snapshot_datasource import S3SnapshotStore
+    from tile_processor_spark.sources.snapshot_store import open_store
+    from tile_processor_spark.sources.snapshots import commit_append
 
     prefix = "warehouse/native_part_drift"
     df = spark.createDataFrame([("a", 1)], "g string, k long")
@@ -548,14 +586,14 @@ def test_s3_partitioned_append_scheme_mismatch_refuses(spark, fake_s3):
         )
     # committer-level: flat delta keys vs a partitioned table (the
     # raced-creation shape the writer init cannot see)
-    store = S3SnapshotStore(f"s3://{BUCKET}/{prefix}", _s3_opts(fake_s3, prefix))
+    store = open_store(f"s3://{BUCKET}/{prefix}", _s3_opts(fake_s3, prefix))
     c = _client(fake_s3)
     key = f"{prefix}/data/driftsnap/part-flat.parquet"
     c.put_object(key, b"flat bytes")
-    committer = S3SnapshotCommitter(store)
     with pytest.raises(ValueError, match="partitioned by"):
-        committer.commit_append(
-            [key], store.manifest(1)["schema"], {}, "data/driftsnap"
+        commit_append(
+            store, [store.vpath(key)],
+            expected_schema=store.manifest(1)["schema"], file_stats={},
         )
 
 

@@ -849,3 +849,46 @@ def test_vacuum_refuses_keep_last_zero_without_force(spark, tmp_path):
     res = vacuum(tbl, keep_last=0, claim_ttl_s=0, force=True)
     assert res["kept_versions"] == []
     assert list_versions(tbl) == []
+
+
+def test_snapshot_commit_shapes_are_written_once():
+    """The s3 store is opened only by ``open_store``, the s3 writer
+    module defines no commit shape of its own, and the store-only
+    compactor is gone: overwrite, append, replace and compact each have
+    one definition, in ``snapshots.py``, over either backend."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "tile_processor_spark"
+    trees = {
+        p.relative_to(pkg).as_posix(): ast.parse(p.read_text())
+        for p in pkg.rglob("*.py")
+    }
+    constructed = sorted(
+        f"{f}:{fn.name}"
+        for f, tree in trees.items()
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call) and ast.unparse(n.func).endswith("S3SnapshotStore")
+    )
+    assert constructed == ["sources/snapshot_store.py:open_store"], constructed
+    defined = {
+        f: {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+        for f, tree in trees.items()
+    }
+    shapes = {"commit_append", "commit_overwrite", "commit_replace"}
+    assert not defined["sources/s3_snapshot_write.py"] & shapes
+    assert not [f for f, names in defined.items() if "compact_store" in names]
+    commit_shapes = sorted(
+        f"{f}:{name}"
+        for f, names in defined.items()
+        for name in names
+        if name.lstrip("_") in shapes | {"compact_manifest"}
+    )
+    assert commit_shapes == [
+        "sources/snapshots.py:_commit_overwrite",
+        "sources/snapshots.py:_commit_replace",
+        "sources/snapshots.py:commit_append",
+        "sources/snapshots.py:compact_manifest",
+    ], commit_shapes

@@ -608,7 +608,7 @@ def _s3_orders_by_status_table(spark: SparkSession, sf_dir: str) -> dict:
     """Commit the even-keyed half of orders as v1 Hive-partitioned by
     status and append the odd half as v2 on a fake S3 endpoint; checks
     the append manifest and returns the reader options."""
-    from tile_processor_spark.sources.snapshot_datasource import S3SnapshotStore
+    from tile_processor_spark.sources.snapshot_store import open_store
 
     srv, opts = _fake_s3_opts("s3://tps-gate-bucket/warehouse/orders_by_status")
     orders = load_table(spark, "orders", sf_dir).select(
@@ -627,7 +627,7 @@ def _s3_orders_by_status_table(spark: SparkSession, sf_dir: str) -> dict:
     _expect(not srv.rejections, f"unsigned requests: {srv.rejections}")
     # the append manifest must carry the scheme forward and its
     # delta keys their own Hive chains (the contract under test)
-    m2 = S3SnapshotStore(opts["path"], opts).manifest(2)
+    m2 = open_store(opts["path"], opts).manifest(2)
     _expect(
         m2.get("partition_by") == ["status"],
         f"append manifest lost the scheme: {m2.get('partition_by')}",

@@ -41,7 +41,6 @@ safety argument doesn't silently depend on POSIX extras.
 
 from __future__ import annotations
 
-import http.client as _http_client
 import os
 import shutil
 
@@ -181,36 +180,10 @@ class S3CommitFS:
         return f"{self.prefix}/{rel}" if self.prefix else rel
 
     def publish_exclusive(self, tmp_path: str, final_path: str) -> None:
+        from tile_processor_spark.sources.s3_client import put_if_absent
+
         with open(tmp_path, "rb") as f:
-            body = f.read()
-        key = self._key(final_path)
-        try:
-            # FileExistsError propagates from the 412 — same contract
-            # as the local hard link
-            self.client.put_object(key, body, if_none_match=True)
-        except FileExistsError:
-            raise  # unambiguous 412 (FileExistsError is an OSError)
-        except (TimeoutError, ConnectionError, OSError,
-                _http_client.HTTPException) as net_err:
-            # HTTPException covers IncompleteRead/BadStatusLine — the
-            # response-lost-after-the-PUT-landed cases
-            # AMBIGUOUS outcome: the PUT may have landed before the
-            # connection died (the classic conditional-write hazard —
-            # blindly retrying would see our OWN object and report a
-            # lost race; blindly failing could orphan a version number
-            # that actually committed). Resolve by content read-back:
-            # manifests are single-writer-per-version and tmp content
-            # is unique to this committer, so byte equality decides.
-            try:
-                current = self.client.get_object(key)
-            except FileNotFoundError:
-                # nothing landed — surface the original network error
-                raise net_err from None
-            if current == body:
-                return  # our write committed before the failure
-            raise FileExistsError(
-                f"s3://{self.client.bucket}/{key} exists"
-            ) from None
+            put_if_absent(self.client, self._key(final_path), f.read())
 
     def rehome(self, src: str, dst: str) -> None:
         if os.path.exists(src):  # staged locally → upload + local delete

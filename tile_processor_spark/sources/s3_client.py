@@ -96,6 +96,57 @@ def resolve_s3_config(options: dict | None, what: str) -> dict:
     return cfg
 
 
+class S3Handle:
+    """One ``s3://bucket/prefix`` location with its client config: the
+    base of every store and sidecar that lives under a prefix. Pickles
+    to executors WITHOUT its client (rebuilt lazily per process)."""
+
+    def __init__(self, url: str, options: dict | None, what: str):
+        self.bucket, self.prefix = parse_s3_url(url, what)
+        cfg = resolve_s3_config(options, f"s3:// {what}")
+        self.endpoint = cfg["endpoint"]
+        self.access_key = cfg["access_key"]
+        self.secret_key = cfg["secret_key"]
+        self.region = cfg["region"]
+        self._client = None
+
+    def __getstate__(self):
+        d = dict(self.__dict__)
+        d["_client"] = None
+        return d
+
+    def client(self) -> "S3Client":
+        if self._client is None:
+            self._client = S3Client(
+                self.endpoint, self.bucket, self.access_key,
+                self.secret_key, region=self.region,
+            )
+        return self._client
+
+
+def put_if_absent(client: "S3Client", key: str, body: bytes) -> None:
+    """Conditional create (``If-None-Match: *``) whose AMBIGUOUS outcome
+    is resolved by content read-back. A lost race raises
+    ``FileExistsError``. A connection that dies during the PUT may have
+    died after the server committed it: blindly retrying would see our
+    OWN object and report a lost race, blindly failing could orphan a
+    version that actually committed. Manifests are single-writer per
+    key and the body is unique to this committer, so byte equality
+    decides: our bytes → success, other bytes → lost race, no object →
+    the original network error."""
+    try:
+        client.put_object(key, body, if_none_match=True)
+    except FileExistsError:
+        raise  # an unambiguous 412 (FileExistsError is an OSError)
+    except _CONN_ERRORS as net_err:
+        try:
+            current = client.get_object(key)
+        except FileNotFoundError:
+            raise net_err from None
+        if current != body:
+            raise FileExistsError(f"s3://{client.bucket}/{key} exists") from None
+
+
 def _parse_s3_timestamp(s: str | None) -> float | None:
     """ISO-8601 listing timestamp (``2009-10-12T17:50:30.000Z``) →
     epoch seconds; ``None`` for absent/unparseable values so retention

@@ -38,130 +38,31 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from tile_processor_spark.sources.snapshot_store import (
+    _GROUPS_DIR,
+    S3SnapshotStore,
+    _read_manifest,
+    _require_root,
+    list_versions,
+    open_store,
+)
 from tile_processor_spark.sources.snapshots import (
-    _bucket_sort_key,
+    _collect_stats,
+    _commit_overwrite,
     _manifest_files,
     _partition_values,
-    _read_manifest,
-    list_versions,
+    _rehome_into_tree,
+    commit_append,
 )
 
 FORMAT_NAME = "tps_snapshot"
 
 
-class S3SnapshotStore:
-    """Object-store-RESIDENT snapshot table reads: ``.option("path",
-    "s3://bucket/prefix")`` resolves manifests, group side files, and
-    parquet data through the dependency-free SigV4 client instead of
-    the local filesystem — the read half of the S3 story (the commit
-    half is ``commit_fs.S3CommitFS``; together a table mirrored under
-    a prefix is fully usable without a local copy).
-
-    Path translation: every manifest records the table ``root`` it was
-    committed under (``snapshots._commit_manifest``), so the absolute
-    local paths inside it map to ``prefix + relpath(path, root)`` —
-    exactly the key layout ``S3CommitFS`` produces when its mount is
-    the table root. Planning stays driver-side and cheap: versions and
-    data-file SIZES come from ONE ListObjectsV2 pass (no per-file
-    HEADs), pruning runs on the manifest before any data fetch, and
-    executors fetch only their partitions' objects.
-
-    Client config comes from read options ``s3_endpoint``,
-    ``s3_access_key``, ``s3_secret_key``, ``s3_region`` (or env
-    ``SPARK_GRAFT_S3_ENDPOINT`` / ``_ACCESS_KEY`` / ``_SECRET_KEY`` /
-    ``_REGION``). The store pickles to executors WITHOUT its client
-    (rebuilt lazily per process)."""
-
-    def __init__(self, path: str, options: dict):
-        from tile_processor_spark.sources.s3_client import (
-            parse_s3_url,
-            resolve_s3_config,
-        )
-
-        self.bucket, self.prefix = parse_s3_url(path, "s3 table path")
-        cfg = resolve_s3_config(options, "s3:// snapshot tables")
-        self.endpoint = cfg["endpoint"]
-        self.access_key = cfg["access_key"]
-        self.secret_key = cfg["secret_key"]
-        self.region = cfg["region"]
-        self._client = None
-
-    def __getstate__(self):
-        d = dict(self.__dict__)
-        d["_client"] = None
-        return d
-
-    def client(self):
-        if self._client is None:
-            from tile_processor_spark.sources.s3_client import S3Client
-
-            self._client = S3Client(
-                self.endpoint, self.bucket, self.access_key,
-                self.secret_key, region=self.region,
-            )
-        return self._client
-
-    # -- manifest plane (driver-side) --------------------------------
-
-    def versions(self) -> list[int]:
-        pre = f"{self.prefix}/manifest-v"
-        out = []
-        for k in self.client().list_objects(pre):
-            name = k.rsplit("/", 1)[-1]
-            if name.startswith("manifest-v") and name.endswith(".json"):
-                out.append(int(name[len("manifest-v"):-len(".json")]))
-        return sorted(out)
-
-    def manifest(self, version: int) -> dict:
-        key = f"{self.prefix}/manifest-v{version:08d}.json"
-        return json.loads(self.client().get_object(key))
-
-    def key_for(self, local_path: str, root: str) -> str:
-        import os
-
-        rel = os.path.relpath(local_path, root)
-        if rel.startswith(".."):
-            raise ValueError(
-                f"manifest references {local_path!r} outside table root "
-                f"{root!r} — not mirrorable to a key prefix"
-            )
-        return f"{self.prefix}/{rel.replace(os.sep, '/')}"
-
-    def data_sizes(self) -> dict[str, int]:
-        """One listing pass over the table prefix → key→size map for
-        the planner's bin-packing."""
-        return dict(self.client().list_objects_sizes(self.prefix + "/"))
-
-    def json_loader(self, root: str):
-        def _load(local_path: str) -> dict:
-            return json.loads(self.client().get_object(self.key_for(local_path, root)))
-
-        return _load
-
-    # -- data plane (executor-side) -----------------------------------
-
-    def fetch(self, key: str) -> bytes:
-        return self.client().get_object(key)
-
-
 def _make_store(options: dict) -> S3SnapshotStore | None:
+    """The s3 store whose objects the readers fetch, or None for a
+    local table (read straight from the filesystem)."""
     path = options.get("path", "")
-    return S3SnapshotStore(path, options) if path.startswith("s3://") else None
-
-
-def _require_root(manifest: dict, path: str) -> str:
-    """The table ``root`` every store-resident code path needs for
-    key translation — with the same friendly contract as the read
-    paths (``_resolve_manifest``) instead of a bare ``KeyError`` when
-    a pre-round-13 manifest lacks it."""
-    root = manifest.get("root")
-    if root is None:
-        raise ValueError(
-            f"manifest v{manifest.get('version', '?')} at {path} lacks "
-            "the table 'root' field (committed before round 13) — "
-            "recommit or maintain the table from a local path"
-        )
-    return root
+    return open_store(path, options) if path.startswith("s3://") else None
 
 
 def vacuum_store(
@@ -216,7 +117,9 @@ def vacuum_store(
             "the live head (the table becomes unreadable) — pass "
             "force=True to destroy the mirror on purpose"
         )
-    store = S3SnapshotStore(path, options or {})
+    if not path.startswith("s3://"):
+        raise ValueError(f"vacuum_store is for s3:// tables (got {path!r}); use snapshots.vacuum")
+    store = open_store(path, options)
     versions = store.versions()
     kept = versions[-keep_last:] if keep_last > 0 else []
     retired = [v for v in versions if v not in kept]
@@ -247,10 +150,7 @@ def vacuum_store(
         removed_manifests += 1
     removed_files = 0
     cutoff = _time.time() - claim_ttl_s
-    from tile_processor_spark.sources.snapshots import _GROUPS_DIR
-
-    # group side objects (compact_store / mirrored compact_manifest
-    # layouts) retire with their manifests, exactly like the local
+    # group side objects (compactions and grouped appends) retire with their manifests, exactly like the local
     # vacuum's groups sweep; the retention window guards an in-flight
     # commit's freshly-written side objects
     groups_prefix = f"{store.prefix}/{_GROUPS_DIR}/"
@@ -293,138 +193,12 @@ def vacuum_store(
     }
 
 
-def compact_store(
-    path: str,
-    options: dict | None = None,
-    version: int | None = None,
-    group_files: int = 100,
-    allow_rollback: bool = False,
-) -> int:
-    """``compact_manifest`` for an S3-RESIDENT table (round 15): rewrite
-    a committed version's flat manifest into the two-level grouped
-    layout and publish it as the NEXT version via conditional PUT —
-    entirely driver-side metadata work (one GET per source manifest,
-    one PUT per group side object, one conditional PUT), zero data
-    bytes moved. Previously a mirror had to be compacted locally and
-    re-mirrored; now the maintenance plane (compact + vacuum) is fully
-    store-native.
-
-    Grouping matches the local compactor exactly (shared bucketing
-    rules): one group per partition value on partitioned tables — so
-    ``partition_filter`` reads open only matching groups' side
-    objects — else ``group_files``-sized chunks, bounding the top
-    manifest at O(partitions) / O(files ÷ chunk). Group side objects
-    land under ``<prefix>/groups/`` and are recorded against the
-    source manifest's root, so ``key_for`` resolves them like every
-    other side file. Same rollback guard as the local path: compacting
-    a non-latest version without ``allow_rollback=True`` refuses (it
-    would commit an older file set as the new head). The streaming
-    replay watermark carries from the CURRENT head, never backwards."""
-    import time as _time
-    import uuid as _uuid
-
-    from tile_processor_spark.sources.snapshots import (
-        _GROUPS_DIR,
-        _merge_stats,
-    )
-
-    store = S3SnapshotStore(path, options or {})
-    versions = store.versions()
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise FileNotFoundError(f"version {v} not in {versions} at {path}")
-    if v != versions[-1] and not allow_rollback:
-        raise ValueError(
-            f"compact_store(version={v}) would commit a non-latest "
-            f"version's file set as the new head (latest is "
-            f"{versions[-1]}), silently rolling back later appends; "
-            "pass allow_rollback=True for an explicit RESTORE"
-        )
-    manifest = store.manifest(v)
-    root = _require_root(manifest, path)
-    loader = store.json_loader(root)
-    files = _manifest_files(manifest, open_json=loader)
-    part_cols = manifest.get("partition_by") or []
-    base = manifest["base"]
-    buckets: dict[tuple, list[str]] = {}
-    if part_cols:
-        for f in files:
-            pv = _partition_values(f, base)
-            buckets.setdefault(
-                tuple((c, pv.get(c)) for c in part_cols), []
-            ).append(f)
-    else:
-        ordered = sorted(files)
-        for i in range(0, len(ordered), group_files):
-            buckets[(("_chunk", str(i // group_files)),)] = (
-                ordered[i: i + group_files]
-            )
-    # all stats the source version knows, through either layout
-    if "groups" in manifest:
-        all_stats: dict = {}
-        for g in manifest["groups"]:
-            side = loader(g["path"])
-            all_stats.update(side.get("file_stats") or {})
-    else:
-        all_stats = dict(manifest.get("file_stats") or {})
-    groups = []
-    for key, flist in sorted(buckets.items(), key=_bucket_sort_key):
-        name = f"{_GROUPS_DIR}/{_uuid.uuid4().hex}.json"
-        ordered = sorted(flist)
-        fstats = {f: all_stats[f] for f in ordered if f in all_stats}
-        side = {"files": ordered}
-        if fstats:
-            side["file_stats"] = fstats
-        store.client().put_object(
-            f"{store.prefix}/{name}", json.dumps(side).encode()
-        )
-        entry = {
-            "values": dict(key),
-            "path": f"{root}/{name}",
-            "n_files": len(ordered),
-        }
-        gstats = _merge_stats(ordered, all_stats)
-        if gstats:
-            entry["stats"] = gstats
-        groups.append(entry)
-    new_version = versions[-1] + 1
-    new_manifest = {
-        "version": new_version,
-        "committed_at": _time.time(),
-        "groups": groups,
-        "schema": manifest["schema"],
-        "base": base,
-        "root": root,
-        "partition_by": list(part_cols),
-        "compacted_from": v,
-    }
-    if manifest.get("layout"):
-        new_manifest["layout"] = manifest["layout"]
-    hw = store.manifest(versions[-1]).get("stream_high_water")
-    if hw:
-        new_manifest["stream_high_water"] = hw
-    from tile_processor_spark.sources.s3_snapshot_write import (
-        S3SnapshotCommitter,
-    )
-
-    try:
-        return S3SnapshotCommitter(store).publish(new_manifest, new_version)
-    except FileExistsError:
-        raise RuntimeError(
-            f"version {new_version} already committed at "
-            f"s3://{store.bucket}/{store.prefix} (a concurrent commit "
-            "raced the compaction) — re-run compact_store"
-        ) from None
-
-
 def _resolve_manifest(options: dict) -> dict:
     path = options.get("path")
     if not path:
         raise ValueError("tps_snapshot requires .option('path', <table dir>)")
-    store = _make_store(options)
-    versions = store.versions() if store else list_versions(path)
+    store = open_store(path, options)
+    versions = store.versions()
     if not versions:
         raise FileNotFoundError(f"no committed snapshot at {path}")
     as_of = options.get("as_of")
@@ -442,17 +216,14 @@ def _resolve_manifest(options: dict) -> dict:
             ts = float(as_of)
         except (TypeError, ValueError):
             ts = str(as_of)
-        v = resolve_as_of(path, ts, dict(options) if store else None)
+        v = resolve_as_of(path, ts, options)
     else:
         v = int(options.get("version", versions[-1]))
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions} at {path}")
-    manifest = store.manifest(v) if store else _read_manifest(path, v)
-    if store and "root" not in manifest:
-        raise ValueError(
-            "manifest lacks the table 'root' field (committed before "
-            "round 13) — recommit or read the table from a local path"
-        )
+    manifest = store.manifest(v)
+    if isinstance(store, S3SnapshotStore):
+        _require_root(manifest, path)  # readers translate paths to keys
     return manifest
 
 
@@ -721,34 +492,27 @@ class SnapshotStreamReader(DataSourceStreamReader):
         # s3:// mirrors stream too: offsets and appended files resolve
         # through the store; data fetches happen executor-side
         self._store = _make_store(options)
+        self._table = self._store or open_store(self._path)
         starting = options.get("starting_version")
         self._initial = (
             int(starting)
             if starting is not None
-            else (self._versions() or [0])[-1] if options.get(
+            else (self._table.versions() or [0])[-1] if options.get(
                 "latest_only", "false"
             ).lower() == "true" else 0
-        )
-
-    def _versions(self) -> list[int]:
-        return self._store.versions() if self._store else list_versions(self._path)
-
-    def _manifest(self, v: int) -> dict:
-        return (
-            self._store.manifest(v) if self._store else _read_manifest(self._path, v)
         )
 
     def initialOffset(self) -> dict:
         return {"version": self._initial}
 
     def latestOffset(self) -> dict:
-        versions = self._versions()
+        versions = self._table.versions()
         return {"version": versions[-1] if versions else self._initial}
 
     def partitions(self, start: dict, end: dict):
         parts: list[_FilePartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            manifest = self._manifest(v)
+            manifest = self._table.manifest(v)
             appended = manifest.get("appended_files")
             if appended is None:
                 # version 1 of a table born by append_snapshot is a
@@ -763,15 +527,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
                     )
             base = manifest["base"]
             if self._store:
-                root = manifest.get("root")
-                if root is None:
-                    # same contract as the batch path (_resolve_manifest):
-                    # a pre-round-13 manifest has no key-translation root
-                    raise ValueError(
-                        f"version {v} manifest lacks the table 'root' "
-                        "field (committed before round 13) — recommit or "
-                        "stream the table from a local path"
-                    )
+                root = _require_root(manifest, self._path)
                 base = self._store.key_for(base, root)
                 appended = [self._store.key_for(f, root) for f in appended]
             parts.extend(
@@ -880,22 +636,95 @@ def _split_by_partitions(tbl, part_cols: list[str]):
         yield values, tbl.filter(mask).drop(part_cols)
 
 
+def _check_writer_schema(schema: StructType, committed_json: str, what: str) -> None:
+    """A connector writer's (name, type) pairs must equal the committed
+    schema's: data written against a drifted schema would contradict
+    the manifest's declared one."""
+    want = [(f["name"], f["type"]) for f in json.loads(committed_json)["fields"]]
+    got = [(f.name, f.dataType.jsonValue()) for f in schema.fields]
+    if got != want:
+        raise ValueError(f"{what} schema {got} does not match committed {want}")
+
+
+def _local_append_target(path: str, schema: StructType, what: str):
+    """(partition columns, shared tree) a local append writer stages
+    into: the committed table's scheme, checked against the writer's
+    schema at construction (the commit re-checks the fresh head)."""
+    versions = list_versions(path)
+    if not versions:
+        return [], None
+    manifest = _read_manifest(path, versions[-1])
+    part_cols = list(manifest.get("partition_by") or [])
+    if part_cols and manifest.get("layout") != "shared-tree":
+        raise NotImplementedError(
+            f"{what} on a partitioned snapshot table needs the shared Hive "
+            "tree layout (appended files under a second snap dir would "
+            "break basePath partition discovery) — run "
+            "convert_to_shared_layout(table_path) once"
+        )
+    _check_writer_schema(schema, manifest["schema"], what)
+    return part_cols, (manifest["base"] if part_cols else None)
+
+
+def _write_task_files(schema: StructType, part_cols: list[str], snap_dir: str, iterator):
+    """Executor body of both local writers: Arrow batches → one parquet
+    file in the task-private ``snap_dir`` (one file PER occupied
+    partition-value combination when ``part_cols`` is set — partition
+    columns live in the directory chain, not the data files)."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    batches = list(iterator)
+    rows = sum(b.num_rows for b in batches)
+    if rows == 0:
+        return _PartWriteMessage([], 0) if part_cols else _WriteMessage(None, 0)
+    tbl = pa.Table.from_batches(batches).cast(to_arrow_schema(schema))
+    if not part_cols:
+        os.makedirs(snap_dir, exist_ok=True)
+        fpath = os.path.join(snap_dir, f"part-{uuid.uuid4().hex}.parquet")
+        pq.write_table(tbl, fpath)
+        return _WriteMessage(fpath, rows)
+    staged: list[tuple[str, str]] = []
+    for values, sub in _split_by_partitions(tbl, part_cols):
+        chain = _hive_chain(part_cols, values)
+        subdir = os.path.join(snap_dir, *chain.split("/"))
+        os.makedirs(subdir, exist_ok=True)
+        fpath = os.path.join(subdir, f"part-{uuid.uuid4().hex}.parquet")
+        pq.write_table(sub, fpath)
+        staged.append((chain, fpath))
+    return _PartWriteMessage(staged, rows)
+
+
+def _committed_files(tree: str | None, messages) -> list[str]:
+    """The acknowledged files a local writer commits: re-homed into the
+    shared Hive tree for a partitioned table, else as written."""
+    pairs = _staged_pairs(messages)
+    if tree is None:
+        return sorted(f for _chain, f in pairs)
+    return _rehome_into_tree(tree, [(chain.split("/"), f) for chain, f in pairs])
+
+
 class SnapshotWriter(DataSourceArrowWriter):
     """The write side of the connector — the real two-phase commit:
     executors each write ONE parquet file into a task-private snap dir
     and return its path as the commit message; the DRIVER then commits
     a manifest referencing exactly the acknowledged files, in one
-    atomic rename. A task that fails or is speculated leaves an
-    unreferenced file (invisible; vacuum reclaims it) — the same
+    atomic exclusive publish. A task that fails or is speculated leaves
+    an unreferenced file (invisible; vacuum reclaims it) — the same
     crash-safety argument as write_snapshot, now distributed.
 
     ``mode('append')`` produces an append commit (previous files reused
     untouched, ``appended_files`` recorded — so the version stream can
-    consume it); ``mode('overwrite')`` replaces the table state.
-    Appending onto a PARTITIONED table works through the shared Hive
-    tree (run ``convert_to_shared_layout`` once, same contract as
+    consume it; a first append creates the table); ``mode('overwrite')``
+    replaces the table state through the same commit as
+    ``write_snapshot``, per-file stats included. Appending onto a
+    PARTITIONED table works through the shared Hive tree (run
+    ``convert_to_shared_layout`` once, same contract as
     ``append_snapshot``): each task writes per-partition-value files
-    (partition columns in the directory chain, not the data files)
     into a private staging dir, and the driver re-homes them into the
     tree before the manifest commit — so pruned reads and basePath
     partition discovery keep working as appends accumulate."""
@@ -910,122 +739,32 @@ class SnapshotWriter(DataSourceArrowWriter):
             raise ValueError("tps_snapshot write requires .option('path', ...)")
         self._path = os.path.abspath(self._path)
         self._overwrite = overwrite
-        self._snap_dir = os.path.join(
-            self._path, "data", uuid.uuid4().hex
+        self._snap_dir = os.path.join(self._path, "data", uuid.uuid4().hex)
+        self._part_cols, self._tree = (
+            ([], None) if overwrite
+            else _local_append_target(self._path, schema, "append")
         )
-        self._expected_schema: str | None = None
-        self._part_cols: list[str] = []
-        self._tree: str | None = None
-        if not overwrite:
-            versions = list_versions(self._path)
-            if versions:
-                manifest = _read_manifest(self._path, versions[-1])
-                part_cols = manifest.get("partition_by") or []
-                if part_cols and manifest.get("layout") != "shared-tree":
-                    raise NotImplementedError(
-                        "append write on a partitioned snapshot table "
-                        "needs the shared Hive tree layout (appended "
-                        "files under a second snap dir would break "
-                        "basePath partition discovery) — run "
-                        "convert_to_shared_layout(table_path) once"
-                    )
-                committed = json.loads(manifest["schema"])
-                want = [(f["name"], f["type"]) for f in committed["fields"]]
-                got = [
-                    (f.name, f.dataType.jsonValue()) for f in schema.fields
-                ]
-                if got != want:
-                    raise ValueError(
-                        f"append schema {got} does not match committed {want}"
-                    )
-                # re-validated at commit time against the FRESH latest
-                # manifest: a rewrite racing this append must raise,
-                # not commit files written against the old schema
-                self._expected_schema = manifest["schema"]
-                self._part_cols = list(part_cols)
-                self._tree = manifest["base"] if part_cols else None
 
     def write(self, iterator):
-        import os
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        batches = list(iterator)
-        rows = sum(b.num_rows for b in batches)
-        target = to_arrow_schema(self._schema)
-        if self._part_cols:
-            if rows == 0:
-                return _PartWriteMessage([], 0)
-            tbl = pa.Table.from_batches(batches).cast(target)
-            staged: list[tuple[str, str]] = []
-            for values, sub in _split_by_partitions(tbl, self._part_cols):
-                chain = _hive_chain(self._part_cols, values)
-                subdir = os.path.join(self._snap_dir, *chain.split("/"))
-                os.makedirs(subdir, exist_ok=True)
-                fpath = os.path.join(
-                    subdir, f"part-{uuid.uuid4().hex}.parquet"
-                )
-                pq.write_table(sub, fpath)
-                staged.append((chain, fpath))
-            return _PartWriteMessage(staged, rows)
-        if rows == 0:
-            return _WriteMessage(None, 0)
-        os.makedirs(self._snap_dir, exist_ok=True)
-        fpath = os.path.join(self._snap_dir, f"part-{uuid.uuid4().hex}.parquet")
-        tbl = pa.Table.from_batches(batches).cast(target)
-        pq.write_table(tbl, fpath)
-        return _WriteMessage(fpath, rows)
+        return _write_task_files(self._schema, self._part_cols, self._snap_dir, iterator)
 
     def commit(self, messages) -> None:
-        import time
-
-        from tile_processor_spark.sources.snapshots import (
-            _commit_manifest,
-            commit_append,
-        )
-
-        if self._part_cols:
-            new_files = _rehome_staged(self._tree, messages)
+        new_files = _committed_files(self._tree, messages)
+        if self._overwrite:
+            _commit_overwrite(
+                self._path, new_files, self._schema.json(), self._snap_dir,
+                [], _collect_stats(new_files),
+            )
+        else:
+            # optimistic-concurrency append: commutes with concurrent
+            # appends, retried on a lost version race; schema and scheme
+            # re-validated against the fresh manifest inside the retry
             commit_append(
                 self._path,
                 new_files,
-                allow_partitioned=True,
-                expected_schema=self._expected_schema,
-            )
-            return
-        new_files = sorted(
-            m.file_path for m in messages if m is not None and m.file_path
-        )
-        versions = list_versions(self._path)
-        if self._overwrite or not versions:
-            version = (versions[-1] + 1) if versions else 1
-            manifest = {
-                "version": version,
-                "committed_at": time.time(),
-                "files": new_files,
-                "schema": self._schema.json(),
-                "base": self._snap_dir,
-                "partition_by": [],
-            }
-            if versions:
-                # the streaming replay watermark survives overwrites —
-                # a replayed micro-batch landing after a rewrite must
-                # still be dropped (same carry as write_snapshot)
-                hw = _read_manifest(self._path, versions[-1]).get(
-                    "stream_high_water"
-                )
-                if hw:
-                    manifest["stream_high_water"] = hw
-            _commit_manifest(self._path, manifest, version)
-        else:
-            # optimistic-concurrency append: commutes with concurrent
-            # appends, retried on a lost version race; schema
-            # re-validated against the fresh manifest inside the retry
-            commit_append(
-                self._path, new_files, expected_schema=self._expected_schema
+                partition_by=self._part_cols,
+                expected_schema=self._schema.json(),
+                base=self._snap_dir,
             )
 
     def abort(self, messages) -> None:
@@ -1042,27 +781,6 @@ def _staged_pairs(messages) -> list[tuple[str, str]]:
         elif m.file_path:
             out.append(("", m.file_path))
     return out
-
-
-def _rehome_staged(tree: str, messages) -> list[str]:
-    """Move each task's staged files into the shared Hive tree under
-    their ``col=val`` chain (driver-side, before the manifest commit —
-    the staged files are referenced by nothing yet, so no atomicity is
-    needed; see ``commit_fs.rehome``)."""
-    import os
-    import uuid
-
-    from tile_processor_spark.sources.commit_fs import get_commit_fs
-
-    fs = get_commit_fs()
-    new_files: list[str] = []
-    for chain, f in _staged_pairs(messages):
-        subdir = os.path.join(tree, *chain.split("/")) if chain else tree
-        os.makedirs(subdir, exist_ok=True)
-        dst = os.path.join(subdir, f"{uuid.uuid4().hex}-{os.path.basename(f)}")
-        fs.rehome(f, dst)
-        new_files.append(dst)
-    return sorted(new_files)
 
 
 def _drop_staged(messages) -> None:
@@ -1087,7 +805,13 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
     contract. The mark lives in EVERY manifest, carried forward by all
     commit paths, so interleaved appends from other writers between a
     batch's commit and its replay cannot erase the evidence (the
-    failure mode of checking only the latest manifest's own marker)."""
+    failure mode of checking only the latest manifest's own marker).
+
+    A PARTITIONED sink table routes batches through the shared Hive
+    tree, exactly like the batch writer (the table must exist and be
+    converted — a stream cannot bootstrap partition metadata out of
+    nothing); a stream whose query schema drifted from the table
+    refuses at construction."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         import os
@@ -1098,130 +822,30 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
             raise ValueError("tps_snapshot stream write requires .option('path', ...)")
         self._path = os.path.abspath(self._path)
         self._app_id = options.get("stream_app_id", "default")
-        # a PARTITIONED sink table routes batches through the shared
-        # Hive tree, exactly like the batch writer (the table must
-        # exist and be converted — a stream cannot bootstrap partition
-        # metadata out of nothing)
-        self._part_cols: list[str] = []
-        self._tree: str | None = None
-        # capture the committed schema NOW: commit_append re-validates
-        # it against the fresh latest manifest on every retry, so a
-        # rewrite with a different schema racing a micro-batch raises
-        # instead of committing a manifest whose declared schema
-        # doesn't match the appended files (mirrors the batch writer)
-        self._committed_schema: str | None = None
-        versions = list_versions(self._path)
-        if versions:
-            manifest = _read_manifest(self._path, versions[-1])
-            part_cols = manifest.get("partition_by") or []
-            if part_cols and manifest.get("layout") != "shared-tree":
-                raise NotImplementedError(
-                    "streaming into a partitioned snapshot table needs "
-                    "the shared Hive tree layout — run "
-                    "convert_to_shared_layout(table_path) once"
-                )
-            self._part_cols = list(part_cols)
-            self._tree = manifest["base"] if part_cols else None
-            self._committed_schema = manifest.get("schema")
-            if self._committed_schema is not None:
-                # validate writer-vs-committed NOW, like the batch
-                # writer and the s3 sink (round 15): a stream whose
-                # query schema drifted from the table must refuse at
-                # construction, not append files the manifest's
-                # declared schema contradicts — commit_append's
-                # expected_schema only guards committed-vs-fresh-latest
-                want = [
-                    (f["name"], f["type"])
-                    for f in json.loads(self._committed_schema)["fields"]
-                ]
-                got = [
-                    (f.name, f.dataType.jsonValue()) for f in schema.fields
-                ]
-                if got != want:
-                    raise ValueError(
-                        f"stream write schema {got} does not match "
-                        f"committed {want}"
-                    )
+        self._part_cols, self._tree = _local_append_target(
+            self._path, schema, "stream write"
+        )
 
     def write(self, iterator):
         import os
         import uuid
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        batches = list(iterator)
-        rows = sum(b.num_rows for b in batches)
-        target = to_arrow_schema(self._schema)
         snap_dir = os.path.join(self._path, "data", f"stream-{uuid.uuid4().hex}")
-        if self._part_cols:
-            if rows == 0:
-                return _PartWriteMessage([], 0)
-            tbl = pa.Table.from_batches(batches).cast(target)
-            staged: list[tuple[str, str]] = []
-            for values, sub in _split_by_partitions(tbl, self._part_cols):
-                chain = _hive_chain(self._part_cols, values)
-                subdir = os.path.join(snap_dir, *chain.split("/"))
-                os.makedirs(subdir, exist_ok=True)
-                fpath = os.path.join(subdir, f"part-{uuid.uuid4().hex}.parquet")
-                pq.write_table(sub, fpath)
-                staged.append((chain, fpath))
-            return _PartWriteMessage(staged, rows)
-        if rows == 0:
-            return _WriteMessage(None, 0)
-        os.makedirs(snap_dir, exist_ok=True)
-        fpath = os.path.join(snap_dir, f"part-{uuid.uuid4().hex}.parquet")
-        pq.write_table(pa.Table.from_batches(batches).cast(target), fpath)
-        return _WriteMessage(fpath, rows)
+        return _write_task_files(self._schema, self._part_cols, snap_dir, iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        import time
-
-        from tile_processor_spark.sources.snapshots import (
-            _commit_manifest,
-            commit_append,
-        )
-
-        if self._part_cols:
-            new_files = _rehome_staged(self._tree, messages)
-            commit_append(
-                self._path,
-                new_files,
-                extra={"stream_batch_id": batchId},
-                stream_mark=(self._app_id, batchId),
-                allow_partitioned=True,
-                expected_schema=self._committed_schema,
-            )
-            return
-        new_files = sorted(
-            m.file_path for m in messages if m is not None and m.file_path
-        )
-        versions = list_versions(self._path)
-        if not versions:
-            manifest = {
-                "version": 1,
-                "committed_at": time.time(),
-                "files": new_files,
-                "schema": self._schema.json(),
-                "base": self._path,
-                "appended_files": new_files,
-                "stream_batch_id": batchId,
-                "stream_high_water": {self._app_id: batchId},
-                "partition_by": [],
-            }
-            _commit_manifest(self._path, manifest, 1)
-            return
         # optimistic append; the high-water replay check re-runs on the
         # fresh latest manifest inside every retry, and the mark is
         # carried forward by every other commit path, so intervening
         # appends cannot turn a replay into a duplicate
         commit_append(
             self._path,
-            new_files,
+            _committed_files(self._tree, messages),
             extra={"stream_batch_id": batchId},
             stream_mark=(self._app_id, batchId),
-            expected_schema=self._committed_schema,
+            partition_by=self._part_cols,
+            expected_schema=self._schema.json(),
+            base=self._path,
         )
 
     def abort(self, messages, batchId: int) -> None:

@@ -46,8 +46,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tile_processor_spark.session import local_frame
+from tile_processor_spark.sources.snapshot_store import (
+    _GROUPS_DIR,
+    _load_json,
+    _manifest_path,
+    _read_manifest,
+    list_versions,
+    open_store,
+)
 
-_MANIFEST_PREFIX = "manifest-v"
 _DATA_DIR = "data"
 
 #: marker embedded in every conflict error message so callers that see
@@ -73,26 +80,6 @@ def _is_conflict(exc: BaseException) -> bool:
     """True when ``exc`` is (or wraps, across the Spark exception
     boundary) a lost optimistic-concurrency commit."""
     return isinstance(exc, ConcurrentCommitError) or _CONFLICT_MARKER in str(exc)
-
-
-def _manifest_path(table_path: str, version: int) -> str:
-    return os.path.join(table_path, f"{_MANIFEST_PREFIX}{version:08d}.json")
-
-
-def list_versions(table_path: str) -> list[int]:
-    """Committed versions, ascending. Empty list = no table yet."""
-    if not os.path.isdir(table_path):
-        return []
-    out = []
-    for name in os.listdir(table_path):
-        if name.startswith(_MANIFEST_PREFIX) and name.endswith(".json"):
-            out.append(int(name[len(_MANIFEST_PREFIX) : -len(".json")]))
-    return sorted(out)
-
-
-def _read_manifest(table_path: str, version: int) -> dict:
-    with open(_manifest_path(table_path, version)) as f:
-        return json.load(f)
 
 
 def _collect_stats(files: list[str]) -> dict[str, dict[str, list]]:
@@ -289,9 +276,9 @@ def _find_commit_version(store, commit_uuid: str) -> int:
         if store.manifest(v).get("commit_uuid") == commit_uuid:
             return v
     raise RuntimeError(
-        f"commit {commit_uuid} not found in any manifest at "
-        f"s3://{store.bucket}/{store.prefix} — the write job reported "
-        "success but no published manifest carries its commit id"
+        f"commit {commit_uuid} not found in any manifest at {store} — "
+        "the write job reported success but no published manifest "
+        "carries its commit id"
     )
 
 
@@ -305,39 +292,25 @@ def _write_snapshot_s3(
     replace_files: list[str] | None = None,
     extra: dict | None = None,
 ) -> int:
-    """``write_snapshot``/``append_snapshot`` routed through the
-    connector's native S3 writer (round 15, the write half of the
-    function API's object-store transparency): executors PUT parquet
-    objects, the driver publishes by conditional PUT — same commit
-    semantics as the connector ``df.write.format('tps_snapshot')``
-    path. Returns the EXACT version this commit published (resolved by
-    a commit uuid stamped into the manifest — never a post-hoc listing
-    that a concurrent commit could shift).
-
-    ``expected_version`` arms optimistic conflict detection on rewrite
-    commits: the publish targets exactly ``expected_version + 1``, so
-    ANY commit landing after the caller's read makes the conditional
-    PUT fail and the job raise a conflict (``ConcurrentCommitError``
-    semantics through the writer boundary) instead of silently
-    dropping the concurrent commit's rows from the new head.
-
-    ``replace_files`` (manifest-space virtual paths) switches the
-    commit to copy-on-write REPLACE: the listed files drop out of the
-    carried state and the written data takes their place — the s3
-    plane of ``delete_snapshot``."""
-    from tile_processor_spark.sources.snapshot_datasource import (
-        S3SnapshotStore,
-    )
+    """The s3 DATA write of ``write_snapshot`` / ``append_snapshot`` /
+    ``delete_snapshot``: executors PUT parquet objects through the
+    connector's native writer, whose driver-side commit runs the same
+    commit shape as the local path (``_commit_overwrite``,
+    ``commit_append`` or ``_commit_replace``, by ``mode`` and
+    ``replace_files``). Returns the EXACT version this commit published
+    (resolved by a commit uuid stamped into the manifest — never a
+    post-hoc listing that a concurrent commit could shift).
+    ``expected_version`` and ``replace_files`` (manifest-space paths of
+    the read version) travel to the commit as writer options."""
     from tile_processor_spark.sources.snapshot_datasource import (
         register as _register_ds,
     )
 
-    store = S3SnapshotStore(table_path, dict(s3_options or {}))
+    store = open_store(table_path, s3_options)
     if mode == "append":
         versions = store.versions()
         if versions:
-            committed = json.loads(store.manifest(versions[-1])["schema"])
-            names = [f["name"] for f in committed["fields"]]
+            names = [n for n, _t in _schema_fields(store.manifest(versions[-1])["schema"])]
             if list(df.columns) != names and sorted(df.columns) == sorted(
                 names
             ):
@@ -401,9 +374,9 @@ def write_snapshot(
     the Iceberg-style partition skip, the difference between reading
     one partition and listing 100 TB.
 
-    ``table_path`` may be an ``s3://`` table (round 15): the commit
-    routes through the connector's native writer with identical
-    semantics (``_write_snapshot_s3``).
+    ``table_path`` may be an ``s3://`` table (round 15): the data
+    routes through the connector's native writer and the same commit
+    (``_write_snapshot_s3``).
     """
     if table_path.startswith("s3://"):
         return _write_snapshot_s3(
@@ -425,71 +398,90 @@ def write_snapshot(
         for n in names
         if n.endswith(".parquet")
     )
-    versions = list_versions(table_path)
-    if expected_version is not None:
-        latest = versions[-1] if versions else 0
-        if latest != expected_version:
-            raise ConcurrentCommitError(
-                f"rewrite derived from version {expected_version} but "
-                f"the table is at version {latest} — a concurrent "
-                "commit landed after the read; re-derive from the "
-                f"fresh state and retry {_CONFLICT_MARKER}"
-            )
-        # target exactly read + 1: a commit sneaking in between the
-        # check above and the publish collides on the version number
-        # and the exclusive create arbitrates
-        version = expected_version + 1
-    else:
-        version = (versions[-1] + 1) if versions else 1
+    return _commit_overwrite(
+        table_path, files, df.schema.json(), snap_dir, partition_by,
+        _collect_stats(files), expected_version,
+    )
+
+
+def _commit_manifest(table, manifest: dict, version: int) -> int:
+    """Atomically publish ``manifest`` as ``version`` of ``table`` (a
+    table path or an open store): of two racing committers of the same
+    version number exactly one wins; the loser raises
+    ``ConcurrentCommitError`` instead of clobbering — the one primitive
+    the whole protocol's isolation rests on (``store.publish``: the
+    commit-FS exclusive create locally, a conditional PUT on s3)."""
+    store = open_store(table)
+    # the table ROOT travels in every manifest so a store-resident
+    # reader (object-store mirror of a local table) can translate the
+    # recorded paths into keys relative to the root
+    manifest.setdefault("root", store.root)
+    try:
+        store.publish(manifest, version)
+    except FileExistsError:
+        raise ConcurrentCommitError(
+            f"version {version} already committed at {store} {_CONFLICT_MARKER}"
+        ) from None
+    return version
+
+
+def _next_version(store, expected_version: int | None) -> int:
+    """The version a rewrite publishes: latest + 1, or exactly
+    ``expected_version + 1`` — refusing up front when a commit already
+    landed after the caller's read (the exclusive publish arbitrates
+    any commit that sneaks in after this check)."""
+    versions = store.versions()
+    latest = versions[-1] if versions else 0
+    if expected_version is not None and latest != expected_version:
+        raise ConcurrentCommitError(
+            f"rewrite derived from version {expected_version} but "
+            f"{store} is at version {latest} — a concurrent commit "
+            "landed after the read; re-derive from the fresh state and "
+            f"retry {_CONFLICT_MARKER}"
+        )
+    return latest + 1
+
+
+def _carried_high_water(store, version: int, manifest: dict) -> None:
+    """Carry the streaming sink's replay watermark from the head the
+    new ``version`` replaces: a replayed micro-batch landing after a
+    rewrite must still be recognized as already committed (its rows
+    are part of the rewritten state), not appended a second time."""
+    if version > 1:
+        hw = store.manifest(version - 1).get("stream_high_water")
+        if hw:
+            manifest["stream_high_water"] = hw
+
+
+def _commit_overwrite(
+    table,
+    files: list[str],
+    schema_json: str,
+    base: str,
+    partition_by: list[str] | None,
+    file_stats: dict,
+    expected_version: int | None = None,
+    extra: dict | None = None,
+) -> int:
+    """The OVERWRITE commit shape: already-written ``files`` under
+    ``base`` replace the table state as the next version (see
+    ``write_snapshot`` for ``expected_version``). Shared by
+    ``write_snapshot`` and both connector writers."""
+    store = open_store(table)
+    version = _next_version(store, expected_version)
     manifest = {
         "version": version,
         "committed_at": time.time(),
         "files": files,
-        "schema": df.schema.json(),
-        "base": snap_dir,
+        "schema": schema_json,
+        "base": base,
         "partition_by": list(partition_by or []),
     }
-    stats = _collect_stats(files)
-    if stats:
-        manifest["file_stats"] = stats
-    if versions:
-        # the streaming sink's replay watermark survives rewrites: a
-        # replayed micro-batch landing after a full-state rewrite must
-        # still be recognized as already-committed (its rows are part
-        # of the rewritten state), not appended a second time
-        hw = _read_manifest(table_path, versions[-1]).get("stream_high_water")
-        if hw:
-            manifest["stream_high_water"] = hw
-    return _commit_manifest(table_path, manifest, version)
-
-
-def _commit_manifest(table_path: str, manifest: dict, version: int) -> int:
-    """Atomically publish ``manifest`` as ``version``: tmp write + an
-    exclusive publish (of two racing committers of the same version
-    number exactly one wins; the loser raises instead of clobbering).
-    Routed through the commit-FS interface (``sources/commit_fs.py``):
-    hard link locally, conditional PUT on an object store — the one
-    primitive the whole protocol's isolation rests on."""
-    from tile_processor_spark.sources.commit_fs import get_commit_fs
-
-    # the table ROOT travels in every manifest so a store-resident
-    # reader (object-store mirror of this directory) can translate the
-    # recorded absolute local paths into keys relative to the root
-    manifest.setdefault("root", os.path.abspath(table_path))
-    tmp = os.path.join(table_path, f".manifest.tmp.{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    final = _manifest_path(table_path, version)
-    try:
-        get_commit_fs().publish_exclusive(tmp, final)
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"version {version} already committed at {table_path} "
-            f"{_CONFLICT_MARKER}"
-        ) from None
-    finally:
-        os.unlink(tmp)
-    return version
+    if file_stats:
+        manifest["file_stats"] = file_stats
+    _carried_high_water(store, version, manifest)
+    manifest.update(extra or {})
+    return _commit_manifest(store, manifest, version)
 
 
 def append_snapshot(
@@ -537,8 +529,7 @@ def append_snapshot(
             "would break basePath partition discovery) — run "
             "convert_to_shared_layout(table_path) once, then append"
         )
-    committed = json.loads(manifest["schema"])
-    names = [f["name"] for f in committed["fields"]]
+    names = [n for n, _t in _schema_fields(manifest["schema"])]
     if list(df.columns) != names and sorted(df.columns) != sorted(names):
         raise ValueError(
             f"append schema {df.columns} does not match committed {names}"
@@ -547,7 +538,7 @@ def append_snapshot(
     return commit_append(
         table_path,
         new_files,
-        allow_partitioned=bool(part_cols),
+        partition_by=part_cols,
         expected_schema=manifest["schema"],
     )
 
@@ -590,22 +581,33 @@ def _stage_files(df: DataFrame, table_path: str, manifest: dict) -> list[str]:
         return staged
     # re-home into the shared tree, preserving the col=val chain
     # verbatim; then clean the now-empty staging dirs
+    new_files = _rehome_into_tree(
+        manifest["base"],
+        [(os.path.relpath(f, snap_dir).split(os.sep)[:-1], f) for f in staged],
+    )
+    for root, _dirs, _fnames in os.walk(snap_dir, topdown=False):
+        if not any(os.scandir(root)):
+            os.rmdir(root)
+    return new_files
+
+
+def _rehome_into_tree(tree: str, staged: list[tuple[list[str], str]]) -> list[str]:
+    """Move staged files into the shared Hive ``tree`` under their
+    ``col=val`` path segments; returns the new paths, sorted. The
+    staged files are referenced by nothing yet, so no atomicity is
+    needed (rename locally, copy+delete on an object store — see
+    ``commit_fs.rehome``)."""
     from tile_processor_spark.sources.commit_fs import get_commit_fs
 
     fs = get_commit_fs()
-    tree = manifest["base"]
-    new_files = []
-    for f in staged:
-        segs = os.path.relpath(f, snap_dir).split(os.sep)[:-1]
+    out = []
+    for segs, f in staged:
         subdir = os.path.join(tree, *segs)
         os.makedirs(subdir, exist_ok=True)
         dst = os.path.join(subdir, f"{uuid.uuid4().hex}-{os.path.basename(f)}")
         fs.rehome(f, dst)
-        new_files.append(dst)
-    for root, _dirs, _fnames in os.walk(snap_dir, topdown=False):
-        if not any(os.scandir(root)):
-            os.rmdir(root)
-    return sorted(new_files)
+        out.append(dst)
+    return sorted(out)
 
 
 def convert_to_shared_layout(table_path: str) -> int:
@@ -672,26 +674,45 @@ def convert_to_shared_layout(table_path: str) -> int:
 
 
 def commit_append(
-    table_path: str,
+    table_path,
     new_files: list[str],
     extra: dict | None = None,
     already_committed=None,
-    allow_partitioned: bool = False,
+    partition_by: list[str] | None = None,
     expected_schema: str | None = None,
     stream_mark: tuple[str, int] | None = None,
+    file_stats: dict | None = None,
+    base: str | None = None,
 ) -> int:
-    """Commit already-written data files as an append version, with
-    optimistic-concurrency retry: appends commute, so losing the
+    """The APPEND commit shape: commit already-written data files as an
+    append version of ``table_path`` (a table path or an open store),
+    with optimistic-concurrency retry — appends commute, so losing the
     version race just means re-reading the new latest manifest and
-    committing on top of it (bounded attempts; a partitioned or
-    schema-changed table appearing mid-retry raises). Shared by
-    ``append_snapshot`` and the connector's batch/stream writers.
+    committing on top of it (bounded attempts). Shared by
+    ``append_snapshot`` and the connector's batch/stream writers of
+    both backends.
 
-    ``expected_schema`` is the committed schema (JSON string) the delta
-    files were WRITTEN against; every retry re-validates the FRESH
-    latest manifest against it by (name, type) pairs, so a rewrite with
-    a different schema racing this append raises instead of committing
+    ``partition_by`` is the Hive scheme the delta files were written
+    under (empty for flat files); it must equal the committed table's,
+    re-checked on every retry, so a rewrite or raced creation that
+    changed the layout mid-append raises instead of publishing files
+    whose key chains contradict the manifest. A local partitioned table
+    must also be in the shared Hive tree (``convert_to_shared_layout``):
+    the caller places the files there.
+
+    ``expected_schema`` is the schema (JSON string) the delta files
+    were WRITTEN against; every retry re-validates the FRESH latest
+    manifest against it by (name, type) pairs, so a rewrite with a
+    different schema racing this append raises instead of committing
     a manifest whose declared schema doesn't match its appended files.
+
+    ``base`` lets the append CREATE the table: with no committed
+    version, the delta becomes version 1 under ``base`` with
+    ``expected_schema`` (two writers racing to create both land, one as
+    v1 and one on top of it). Without ``base`` an empty table raises.
+
+    ``file_stats`` are the delta's per-file column stats when the
+    writer already has them; ``None`` reads them from parquet footers.
 
     ``extra`` merges into the manifest (e.g. ``stream_batch_id``).
 
@@ -708,12 +729,14 @@ def commit_append(
 
     ``already_committed(latest_manifest) -> bool`` is a custom
     short-circuit hook for callers with their own idempotence key."""
+    store = open_store(table_path)
+    delta_parts = list(partition_by or [])
     last_err: Exception | None = None
-    new_stats: dict | None = None  # collected lazily — a replayed
-    # streaming batch is dropped before paying any footer reads
     for _ in range(_APPEND_RETRIES):
-        versions = list_versions(table_path)
-        manifest = _read_manifest(table_path, versions[-1])
+        versions = store.versions()
+        if not versions and base is None:
+            raise FileNotFoundError(f"no committed snapshot at {store}")
+        manifest = store.manifest(versions[-1]) if versions else {}
         high_water = dict(manifest.get("stream_high_water") or {})
         if stream_mark is not None:
             app_id, batch_id = stream_mark
@@ -725,70 +748,114 @@ def commit_append(
             if not high_water and manifest.get("stream_batch_id") == batch_id:
                 return manifest["version"]
             high_water[app_id] = batch_id
-        if already_committed is not None and already_committed(manifest):
+        if versions and already_committed is not None and already_committed(manifest):
             return manifest["version"]
-        if expected_schema is not None and _schema_fields(
-            manifest["schema"]
-        ) != _schema_fields(expected_schema):
-            raise ValueError(
-                "append aborted: table schema changed under the append "
-                f"(a rewrite committed mid-append at {table_path}); the "
-                "delta files were written against the old schema"
-            )
-        part_cols = manifest.get("partition_by") or []
-        if part_cols and not (
-            allow_partitioned and manifest.get("layout") == "shared-tree"
-        ):
-            # callers that place files into the shared tree themselves
-            # (append_snapshot, the connector writers) pass
-            # allow_partitioned; anything else would commit
-            # partition-column-less files into a partitioned table
-            raise NotImplementedError(
-                "append onto a partitioned snapshot table (files must "
-                "be placed in the shared Hive tree first — use "
-                "append_snapshot after convert_to_shared_layout)"
-            )
-        if new_stats is None:
-            new_stats = _collect_stats(new_files)
+        if versions:
+            _check_append_target(store, manifest, expected_schema, delta_parts)
+        if file_stats is None:
+            # collected lazily — a replayed streaming batch is dropped
+            # before paying any footer reads
+            file_stats = _collect_stats(new_files)
+        version = versions[-1] + 1 if versions else 1
         new_manifest = {
-            "version": versions[-1] + 1,
+            "version": version,
             "committed_at": time.time(),
-            "schema": manifest["schema"],
-            "base": manifest["base"],
             "appended_files": new_files,
-            "appended_to": versions[-1],
-            "partition_by": list(part_cols),
+            "partition_by": delta_parts,
         }
-        if "groups" in manifest:
-            # PRESERVE the two-level manifest-list layout across
-            # appends: the old group side files are shared verbatim and
-            # the delta lands as new group(s) — commit cost is
-            # O(groups + delta), never O(table files). Flattening here
-            # would silently undo compact_manifest and make every later
-            # append pay an O(files) manifest write (the Iceberg
-            # manifest-list point, measured in docs/SCALE.md).
-            new_manifest["groups"] = manifest["groups"] + _delta_groups(
-                table_path, manifest, new_files, versions[-1] + 1, new_stats
-            )
+        if not versions:
+            # version 1 of an append-born table: its full file list IS
+            # the appended delta (the version-stream reader's contract)
+            new_manifest.update(schema=expected_schema, base=base, files=new_files)
+            if file_stats:
+                new_manifest["file_stats"] = file_stats
         else:
-            new_manifest["files"] = _manifest_files(manifest) + new_files
-            merged_stats = dict(manifest.get("file_stats") or {})
-            merged_stats.update(new_stats)
-            if merged_stats:
-                new_manifest["file_stats"] = merged_stats
-        if part_cols:
-            new_manifest["layout"] = "shared-tree"
+            new_manifest.update(
+                _appended_state(store, manifest, version, new_files, file_stats)
+            )
+            new_manifest["appended_to"] = versions[-1]
         if high_water:
             new_manifest["stream_high_water"] = high_water
         new_manifest.update(extra or {})
         try:
-            return _commit_manifest(table_path, new_manifest, versions[-1] + 1)
-        except RuntimeError as e:  # lost the version race — retry on top
+            return _commit_manifest(store, new_manifest, version)
+        except ConcurrentCommitError as e:  # lost the version race — retry on top
             last_err = e
     raise RuntimeError(
         f"append lost the commit race {_APPEND_RETRIES} times at "
-        f"{table_path}; giving up"
+        f"{store}; giving up"
     ) from last_err
+
+
+def _check_append_target(
+    store, manifest: dict, expected_schema: str | None, delta_parts: list[str]
+) -> None:
+    """Refuse an append whose delta files contradict the latest
+    manifest: a schema or partition scheme that changed under it, or a
+    local partitioned table outside the shared Hive tree."""
+    if expected_schema is not None and _schema_fields(
+        manifest["schema"]
+    ) != _schema_fields(expected_schema):
+        raise ValueError(
+            "append aborted: table schema changed under the append "
+            f"(a rewrite committed mid-append at {store}); the delta "
+            "files were written against the old schema"
+        )
+    committed_parts = list(manifest.get("partition_by") or [])
+    if committed_parts != delta_parts:
+        raise ValueError(
+            f"append aborted: the table is partitioned by {committed_parts} "
+            f"but the delta files were written under partition scheme "
+            f"{delta_parts} (a rewrite or raced table creation changed the "
+            f"layout mid-append at {store}); their key chains would "
+            "contradict the manifest"
+        )
+    if (
+        committed_parts
+        and store.shared_tree_appends
+        and manifest.get("layout") != "shared-tree"
+    ):
+        raise NotImplementedError(
+            "append onto a partitioned snapshot table (files must be "
+            "placed in the shared Hive tree first — use append_snapshot "
+            "after convert_to_shared_layout)"
+        )
+
+
+def _appended_state(
+    store, manifest: dict, version: int, new_files: list[str], new_stats: dict
+) -> dict:
+    """The manifest fields of ``manifest``'s state plus ``new_files``,
+    carried into ``store``'s path namespace. A GROUPED manifest stays
+    grouped: the old group side files are shared verbatim and the delta
+    lands as new group(s) — commit cost is O(groups + delta), never
+    O(table files). Flattening here would silently undo
+    ``compact_manifest`` and make every later append pay an O(files)
+    manifest write (the Iceberg manifest-list point, measured in
+    docs/SCALE.md)."""
+    def carry(p: str) -> str:
+        return store.carry(p, manifest)
+
+    out = {
+        "schema": manifest["schema"],
+        "base": carry(manifest["base"]),
+    }
+    if manifest.get("layout"):
+        # a shared-tree table stays appendable: only the file set grew
+        out["layout"] = manifest["layout"]
+    if "groups" in manifest:
+        out["groups"] = [
+            store.carry_group(g, manifest) for g in manifest["groups"]
+        ] + _delta_groups(
+            store, out["base"], manifest, new_files, version, new_stats
+        )
+        return out
+    out["files"] = [carry(f) for f in manifest["files"]] + new_files
+    stats = {carry(f): s for f, s in (manifest.get("file_stats") or {}).items()}
+    stats.update(new_stats)
+    if stats:
+        out["file_stats"] = stats
+    return out
 
 
 def _partition_values(file_path: str, base: str) -> dict[str, str]:
@@ -803,9 +870,6 @@ def _partition_values(file_path: str, base: str) -> dict[str, str]:
             k, _, v = seg.partition("=")
             out[unquote(k)] = unquote(v)
     return out
-
-
-_GROUPS_DIR = "groups"
 
 
 def _manifest_files(
@@ -837,10 +901,7 @@ def _manifest_files(
     Hive path strings. ``open_json`` overrides how group SIDE FILES are
     fetched (a store-resident reader passes an object-store loader;
     default is the local filesystem)."""
-    if open_json is None:
-        def open_json(p):
-            with open(p) as f:
-                return json.load(f)
+    open_json = open_json or _load_json
     wanted = None
     if partition_filter:
         wanted = {
@@ -892,10 +953,7 @@ def _gather_file_stats(
     overrides side-file fetches for store-resident manifests."""
     if "groups" not in manifest:
         return dict(manifest.get("file_stats") or {})
-    if open_json is None:
-        def open_json(p):
-            with open(p) as f:
-                return json.load(f)
+    open_json = open_json or _load_json
     out: dict[str, dict[str, list]] = {}
     for g in manifest["groups"]:
         side = open_json(g["path"])
@@ -924,36 +982,45 @@ def _merge_stats(
 
 
 def _write_group(
-    groups_dir: str,
+    store,
     key: tuple,
     flist: list[str],
     stats: dict[str, dict[str, list]],
 ) -> dict:
     """One manifest-list group: the side file (file list + per-file
-    stats) and the top-manifest entry (partition values + merged
-    min/max range) — the ONE place the group shape is defined, shared
-    by compaction and grouped appends."""
-    gpath = os.path.join(groups_dir, f"{uuid.uuid4().hex}.json")
+    stats, written by ``store.write_group``) and the top-manifest entry
+    (partition values + merged min/max range) — the ONE place the group
+    shape is defined, shared by compaction and grouped appends."""
     ordered = sorted(flist)
     fstats = {f: stats[f] for f in ordered if f in stats}
     side = {"files": ordered}
     if fstats:
         side["file_stats"] = fstats
-    with open(gpath, "w") as f:
-        json.dump(side, f)
-    entry = {"values": dict(key), "path": gpath, "n_files": len(ordered)}
+    entry = {"values": dict(key), "path": store.write_group(side), "n_files": len(ordered)}
     gstats = _merge_stats(ordered, stats)
     if gstats:
         entry["stats"] = gstats
     return entry
 
 
+def _partition_buckets(
+    files: list[str], base: str, part_cols: list[str]
+) -> dict[tuple, list[str]]:
+    """Files keyed by their Hive partition values under ``base``."""
+    buckets: dict[tuple, list[str]] = {}
+    for f in files:
+        pv = _partition_values(f, base)
+        buckets.setdefault(tuple((c, pv.get(c)) for c in part_cols), []).append(f)
+    return buckets
+
+
 def _delta_groups(
-    table_path: str,
+    store,
+    base: str,
     manifest: dict,
     new_files: list[str],
     version: int,
-    new_stats: dict[str, dict[str, list]] | None = None,
+    new_stats: dict[str, dict[str, list]],
 ) -> list[dict]:
     """Write the appended delta as new manifest-list group side files:
     one group per partition value present in the delta (so
@@ -964,21 +1031,12 @@ def _delta_groups(
     files carry per-file column stats and each group a merged range,
     so ``where`` data skipping works group-first."""
     part_cols = manifest.get("partition_by") or []
-    new_stats = new_stats if new_stats is not None else _collect_stats(new_files)
-    buckets: dict[tuple, list[str]] = {}
     if part_cols:
-        base = manifest["base"]
-        for f in new_files:
-            pv = _partition_values(f, base)
-            buckets.setdefault(
-                tuple((c, pv.get(c)) for c in part_cols), []
-            ).append(f)
+        buckets = _partition_buckets(new_files, base, part_cols)
     else:
-        buckets[(("_chunk", f"append-v{version}"),)] = list(new_files)
-    groups_dir = os.path.join(table_path, _GROUPS_DIR)
-    os.makedirs(groups_dir, exist_ok=True)
+        buckets = {(("_chunk", f"append-v{version}"),): list(new_files)}
     return [
-        _write_group(groups_dir, key, flist, new_stats)
+        _write_group(store, key, flist, new_stats)
         for key, flist in sorted(buckets.items(), key=_bucket_sort_key)
     ]
 
@@ -996,6 +1054,7 @@ def compact_manifest(
     version: int | None = None,
     group_files: int = 100,
     allow_rollback: bool = False,
+    s3_options: dict | None = None,
 ) -> int:
     """Rewrite a committed version's manifest into the two-level
     grouped layout and commit it as the NEXT version — data files are
@@ -1018,14 +1077,19 @@ def compact_manifest(
     metadata-operation costume (appends after ``version`` would vanish
     from the head). That requires the explicit ``allow_rollback=True``
     (the Delta RESTORE shape); without it, only the latest version
-    compacts."""
-    table_path = os.path.abspath(table_path)
-    versions = list_versions(table_path)
+    compacts.
+
+    ``table_path`` may be an ``s3://`` table: the same compaction runs
+    entirely driver-side against the store (one GET per source
+    manifest, one PUT per group side object, one conditional PUT),
+    zero data bytes moved."""
+    store = open_store(table_path, s3_options)
+    versions = store.versions()
     if not versions:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    v = versions[-1] if version is None else version
+        raise FileNotFoundError(f"no committed snapshot at {store}")
+    v = versions[-1] if version is None else int(version)
     if v not in versions:
-        raise FileNotFoundError(f"version {v} not in {versions} at {table_path}")
+        raise FileNotFoundError(f"version {v} not in {versions} at {store}")
     if v != versions[-1] and not allow_rollback:
         raise ValueError(
             f"compact_manifest(version={v}) would commit a non-latest "
@@ -1033,24 +1097,29 @@ def compact_manifest(
             f"{versions[-1]}), silently rolling back later appends; "
             "pass allow_rollback=True for an explicit RESTORE"
         )
-    manifest = _read_manifest(table_path, v)
-    files = _manifest_files(manifest)
+    manifest = store.manifest(v)
+    loader = store.loader(manifest)
+
+    def carry(p: str) -> str:
+        return store.carry(p, manifest)
+
+    files = [carry(f) for f in _manifest_files(manifest, open_json=loader)]
     part_cols = manifest.get("partition_by") or []
-    base = manifest["base"]
-    buckets: dict[tuple, list[str]] = {}
+    base = carry(manifest["base"])
     if part_cols:
-        for f in files:
-            pv = _partition_values(f, base)
-            buckets.setdefault(tuple((c, pv.get(c)) for c in part_cols), []).append(f)
+        buckets = _partition_buckets(files, base, part_cols)
     else:
         ordered = sorted(files)
-        for i in range(0, len(ordered), group_files):
-            buckets[(("_chunk", str(i // group_files)),)] = ordered[i : i + group_files]
-    groups_dir = os.path.join(table_path, _GROUPS_DIR)
-    os.makedirs(groups_dir, exist_ok=True)
-    all_stats = _gather_file_stats(manifest)
+        buckets = {
+            (("_chunk", str(i // group_files)),): ordered[i : i + group_files]
+            for i in range(0, len(ordered), group_files)
+        }
+    all_stats = {
+        carry(f): st
+        for f, st in _gather_file_stats(manifest, open_json=loader).items()
+    }
     groups = [
-        _write_group(groups_dir, key, flist, all_stats)
+        _write_group(store, key, flist, all_stats)
         for key, flist in sorted(buckets.items(), key=_bucket_sort_key)
     ]
     new_version = versions[-1] + 1
@@ -1070,65 +1139,20 @@ def compact_manifest(
     # carry the streaming-sink replay watermark from the CURRENT head
     # (not the compacted source — under allow_rollback they differ and
     # the watermark must never move backwards)
-    hw = _read_manifest(table_path, versions[-1]).get("stream_high_water")
-    if hw:
-        new_manifest["stream_high_water"] = hw
-    return _commit_manifest(table_path, new_manifest, new_version)
+    _carried_high_water(store, new_version, new_manifest)
+    return _commit_manifest(store, new_manifest, new_version)
 
 
-def _read_snapshot_s3(
-    spark: SparkSession,
-    table_path: str,
-    version: int | None,
-    partition_filter: dict[str, object] | None,
-    where: list[tuple] | None,
-    s3_options: dict | None,
-) -> DataFrame:
-    """``read_snapshot`` routed through the connector for ``s3://``
-    table paths (round 15: the function API is object-store-
-    transparent — same semantics, the s3 read plane underneath).
-    ``where`` applies as an exact row filter; its simple comparisons
-    reach the pushdown reader's ``pushFilters`` hook, so manifest
-    min/max data skipping engages exactly like the local path's
-    pre-planning exclusion. Credentials come from ``s3_options``
-    (``s3_endpoint``/``s3_access_key``/...) or the ``SPARK_GRAFT_S3_*``
-    env, the store's usual resolution order."""
-    import json as _json
+def _s3_reader(spark: SparkSession, table_path: str, s3_options: dict | None, **options):
+    """A connector reader of an ``s3://`` table — the s3 DATA read
+    plane of ``read_snapshot`` and ``delete_snapshot``."""
+    from tile_processor_spark.sources.snapshot_datasource import register
 
-    from tile_processor_spark.sources.snapshot_datasource import (
-        _resolve_manifest,
-    )
-    from tile_processor_spark.sources.snapshot_datasource import (
-        register as _register_ds,
-    )
-
-    # EAGER existence/version/filter validation, matching the local
-    # path's contract (the connector's own checks fire lazily at plan
-    # time, wrapped in Spark's analysis errors): one manifest GET.
-    probe_opts = {**(s3_options or {}), "path": table_path}
-    if version is not None:
-        probe_opts["version"] = int(version)
-    manifest = _resolve_manifest(probe_opts)
-    if partition_filter:
-        part_cols = manifest.get("partition_by") or []
-        bad = [c for c in partition_filter if c not in part_cols]
-        if bad:
-            raise ValueError(
-                f"partition_filter on non-partition column(s) {bad}; "
-                f"version {manifest['version']} is partitioned by "
-                f"{part_cols or 'nothing'}"
-            )
-    _register_ds(spark)
+    register(spark)
     r = spark.read.format("tps_snapshot").option("path", table_path)
-    for k, v in (s3_options or {}).items():
+    for k, v in {**(s3_options or {}), **options}.items():
         r = r.option(k, v)
-    # pin the version resolved NOW — the local contract ("the file
-    # list is resolved HERE, once"): later commits or vacuums never
-    # shift what the returned frame reads
-    r = r.option("version", int(manifest["version"]))
-    if partition_filter:
-        r = r.option("partition_filter", _json.dumps(partition_filter))
-    return _apply_where(r.load(), _validate_where(where) if where else None)
+    return r
 
 
 def read_snapshot(
@@ -1171,26 +1195,26 @@ def read_snapshot(
     is exact regardless of which files had stats.
 
     ``table_path`` may be an ``s3://bucket/prefix`` (round 15): the
-    read routes through the connector's s3 plane with identical
-    semantics — see ``_read_snapshot_s3``; ``s3_options`` carries the
-    client config when the ``SPARK_GRAFT_S3_*`` env is not set."""
+    manifest resolves through the store and the data reads through the
+    connector's s3 plane, pinned to the version resolved here;
+    ``where``'s simple comparisons reach the pushdown reader's
+    ``pushFilters`` hook, so min/max data skipping engages there too.
+    ``s3_options`` carries the client config when the
+    ``SPARK_GRAFT_S3_*`` env is not set."""
     if as_of is not None:
         if version is not None:
             raise ValueError(
                 "read_snapshot: version and as_of are mutually exclusive"
             )
         version = resolve_as_of(table_path, as_of, s3_options)
-    if table_path.startswith("s3://"):
-        return _read_snapshot_s3(
-            spark, table_path, version, partition_filter, where, s3_options
-        )
-    versions = list_versions(table_path)
+    store = open_store(table_path, s3_options)
+    versions = store.versions()
     if not versions:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    v = versions[-1] if version is None else version
+    v = versions[-1] if version is None else int(version)
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions} at {table_path}")
-    manifest = _read_manifest(table_path, v)
+    manifest = store.manifest(v)
     part_cols = manifest.get("partition_by") or []
     if partition_filter:
         bad = [c for c in partition_filter if c not in part_cols]
@@ -1200,6 +1224,11 @@ def read_snapshot(
                 f"version {v} is partitioned by {part_cols or 'nothing'}"
             )
     where = _validate_where(where) if where else None
+    if table_path.startswith("s3://"):
+        opts = {"version": v}
+        if partition_filter:
+            opts["partition_filter"] = json.dumps(partition_filter)
+        return _apply_where(_s3_reader(spark, table_path, s3_options, **opts).load(), where)
     files = _manifest_files(manifest, partition_filter, where)
     from pyspark.sql import types as T
 
@@ -1437,27 +1466,14 @@ def resolve_as_of(
     no monotonicity assumption on ``committed_at`` (clock skew between
     committers cannot mis-resolve — all versions are scanned)."""
     epoch = _as_of_epoch(ts)
-    if table_path.startswith("s3://"):
-        from tile_processor_spark.sources.snapshot_datasource import (
-            S3SnapshotStore,
-        )
-
-        store = S3SnapshotStore(table_path, dict(s3_options or {}))
-        versions = store.versions()
-        read = store.manifest
-    else:
-        local = os.path.abspath(table_path)
-        versions = list_versions(local)
-
-        def read(v: int) -> dict:
-            return _read_manifest(local, v)
-
+    store = open_store(table_path, s3_options)
+    versions = store.versions()
     if not versions:
         raise FileNotFoundError(f"no committed snapshot at {table_path}")
     best = None
     first = None
     for v in versions:
-        ca = read(v).get("committed_at")
+        ca = store.manifest(v).get("committed_at")
         if ca is None:
             continue
         if first is None or ca < first:
@@ -1506,47 +1522,33 @@ def snapshot_history(
     top-manifest-only path; ``n_bytes`` is None when any referenced
     file's size is unknowable (sound: never a partial total read as a
     full one)."""
+    store = open_store(table_path, s3_options)
+    versions = store.versions()
     is_s3 = table_path.startswith("s3://")
-    if is_s3:
-        from tile_processor_spark.sources.snapshot_datasource import (
-            S3SnapshotStore,
-        )
+    s3_sizes = store.data_sizes() if is_s3 and include_bytes else {}
 
-        store = S3SnapshotStore(table_path, dict(s3_options or {}))
-        versions = store.versions()
-        read = store.manifest
-        s3_sizes = store.data_sizes() if include_bytes else {}
-    else:
-        local = os.path.abspath(table_path)
-        versions = list_versions(local)
-
-        def read(v: int) -> dict:
-            return _read_manifest(local, v)
+    def _size(f: str, m: dict) -> int | None:
+        if is_s3:
+            return s3_sizes.get(store.key_for(f, m["root"]))
+        try:
+            return os.path.getsize(f)
+        except OSError:
+            return None
 
     def _version_bytes(m: dict) -> int | None:
-        if is_s3:
-            root = m.get("root")
-            if root is None:
-                return None
-            loader = store.json_loader(root)
-            total = 0
-            for f in _manifest_files(m, open_json=loader):
-                sz = s3_sizes.get(store.key_for(f, root))
-                if sz is None:
-                    return None
-                total += sz
-            return total
+        if is_s3 and m.get("root") is None:
+            return None
         total = 0
-        for f in _manifest_files(m):
-            try:
-                total += os.path.getsize(f)
-            except OSError:
+        for f in _manifest_files(m, open_json=store.loader(m)):
+            sz = _size(f, m)
+            if sz is None:
                 return None
+            total += sz
         return total
 
     out: list[dict] = []
     for v in versions:
-        m = read(v)
+        m = store.manifest(v)
         if "groups" in m:
             n_files = sum(int(g.get("n_files", 0)) for g in m["groups"])
         else:
@@ -1680,16 +1682,10 @@ def upsert_snapshot(
     with the same conflict detection."""
     spark = df.sparkSession
     df = _guard_duplicate_keys(df, key_cols)
-    is_s3 = table_path.startswith("s3://")
-    if is_s3:
-        from tile_processor_spark.sources.snapshot_datasource import (
-            S3SnapshotStore,
-        )
-
-        store = S3SnapshotStore(table_path, dict(s3_options or {}))
+    store = open_store(table_path, s3_options)
     last_err: Exception | None = None
     for _ in range(_REWRITE_RETRIES):
-        versions = store.versions() if is_s3 else list_versions(table_path)
+        versions = store.versions()
         read_version = versions[-1] if versions else 0
         if versions:
             # pin the EXACT version being merged onto — resolving
@@ -1723,12 +1719,7 @@ def upsert_snapshot(
             # a partitioned table stays partitioned across MERGEs —
             # losing the layout would silently break later
             # partition_filter reads
-            if is_s3:
-                part_by = store.manifest(read_version).get("partition_by")
-            else:
-                part_by = _read_manifest(table_path, read_version).get(
-                    "partition_by"
-                )
+            part_by = store.manifest(read_version).get("partition_by")
         else:
             merged = df
             part_by = None
@@ -1791,7 +1782,7 @@ def delete_snapshot(
     can match, no new version is committed at all (the current version
     is returned unchanged). Partitioned tables delete through the
     shared Hive tree when converted (``convert_to_shared_layout``);
-    an unconverted partitioned table falls back to a full-state
+    an unconverted local partitioned table falls back to a full-state
     rewrite (correct, just not copy-on-write — new files under a
     second snap dir would break basePath partition discovery).
     A grouped (compacted) manifest commits the post-delete state flat;
@@ -1804,87 +1795,77 @@ def delete_snapshot(
     a concurrent append's rows from the new head.
 
     ``table_path`` may be an ``s3://`` table: the touched subset reads
-    through the connector, the kept rows PUT natively, and the commit
-    publishes carried + rewritten files by conditional PUT (the
-    ``replace_files`` commit shape)."""
+    through the connector (its ``only_files`` plan option), the kept
+    rows PUT natively, and the writer's commit runs the same replace
+    commit (``_commit_replace``) by conditional PUT."""
     where = _validate_where(where)
     if not where:
         raise ValueError(
             "delete_snapshot requires a non-empty where — deleting "
             "every row is an explicit write_snapshot(empty_df) rewrite"
         )
-    if table_path.startswith("s3://"):
-        return _delete_snapshot_s3(spark, table_path, where, s3_options)
-    table_path = os.path.abspath(table_path)
+    is_s3 = table_path.startswith("s3://")
+    store = open_store(table_path, s3_options)
     last_err: Exception | None = None
     for _ in range(_REWRITE_RETRIES):
-        versions = list_versions(table_path)
+        versions = store.versions()
         if not versions:
-            raise FileNotFoundError(f"no committed snapshot at {table_path}")
+            raise FileNotFoundError(f"no committed snapshot at {store}")
         read_version = versions[-1]
-        manifest = _read_manifest(table_path, read_version)
+        manifest = store.manifest(read_version)
+        loader = store.loader(manifest)
         part_cols = manifest.get("partition_by") or []
-        all_files = _manifest_files(manifest)
-        stats = _gather_file_stats(manifest)
+        stats = _gather_file_stats(manifest, open_json=loader)
         base = manifest["base"]
-        touched, untouched = [], []
-        for f in all_files:
-            if _stats_exclude(stats.get(f), where) or (
+        touched = [
+            f
+            for f in _manifest_files(manifest, open_json=loader)
+            if not _stats_exclude(stats.get(f), where)
+            and not (
                 part_cols
                 and _partition_excludes(
                     _partition_values(f, base), where, part_cols
                 )
-            ):
-                untouched.append(f)
-            else:
-                touched.append(f)
+            )
+        ]
         if not touched:
             return read_version  # proven no-op: no file admits a match
-        from pyspark.sql import types as T
-
-        committed = T.StructType.fromJson(json.loads(manifest["schema"]))
-        if part_cols and manifest.get("layout") != "shared-tree":
-            # unconverted partitioned layout: full-state rewrite
-            keep = _keep_filter(
-                read_snapshot(spark, table_path, version=read_version), where
-            )
-            try:
+        extra = {"deleted_where": _where_json(where), "rewrote_files": len(touched)}
+        try:
+            if is_s3:
+                touched_df = _s3_reader(
+                    spark, table_path, s3_options,
+                    version=read_version, only_files=json.dumps(touched),
+                ).load()
+                return _write_snapshot_s3(
+                    _keep_filter(touched_df, where), table_path,
+                    part_cols or None, s3_options, "overwrite",
+                    expected_version=read_version, replace_files=touched,
+                    extra=extra,
+                )
+            if part_cols and manifest.get("layout") != "shared-tree":
+                # unconverted partitioned layout: full-state rewrite
+                keep = _keep_filter(
+                    read_snapshot(spark, table_path, version=read_version), where
+                )
                 return write_snapshot(
                     keep, table_path, partition_by=part_cols,
                     expected_version=read_version,
                 )
-            except ConcurrentCommitError as e:
-                last_err = e
-                continue
-        if part_cols:
-            df = read_partitioned_files(spark, manifest, touched)
-        else:
-            df = spark.read.parquet(*touched).select(
-                *[f.name for f in committed.fields]
+            if part_cols:
+                df = read_partitioned_files(spark, manifest, touched)
+            else:
+                df = spark.read.parquet(*touched).select(
+                    *[n for n, _t in _schema_fields(manifest["schema"])]
+                )
+            new_files = _stage_files(_keep_filter(df, where), store.root, manifest)
+            return _commit_replace(
+                store, read_version, touched, new_files,
+                _collect_stats(new_files), extra,
             )
-        new_files = _stage_files(_keep_filter(df, where), table_path, manifest)
-        merged_stats = {f: stats[f] for f in untouched if f in stats}
-        merged_stats.update(_collect_stats(new_files))
-        new_manifest = {
-            "version": read_version + 1,
-            "committed_at": time.time(),
-            "files": sorted(untouched) + new_files,
-            "schema": manifest["schema"],
-            "base": base,
-            "partition_by": list(part_cols),
-            "deleted_where": _where_json(where),
-            "rewrote_files": len(touched),
-        }
-        if merged_stats:
-            new_manifest["file_stats"] = merged_stats
-        if manifest.get("layout"):
-            new_manifest["layout"] = manifest["layout"]
-        hw = manifest.get("stream_high_water")
-        if hw:
-            new_manifest["stream_high_water"] = hw
-        try:
-            return _commit_manifest(table_path, new_manifest, read_version + 1)
-        except ConcurrentCommitError as e:
+        except Exception as e:
+            if not _is_conflict(e):
+                raise
             last_err = e  # a commit landed mid-delete: re-derive
     raise ConcurrentCommitError(
         f"delete lost the commit race {_REWRITE_RETRIES} times at "
@@ -1892,88 +1873,51 @@ def delete_snapshot(
     ) from last_err
 
 
-def _delete_snapshot_s3(
-    spark: SparkSession,
-    table_path: str,
-    where: list[tuple],
-    s3_options: dict | None,
+def _commit_replace(
+    table,
+    read_version: int,
+    replaced: list[str],
+    new_files: list[str],
+    new_stats: dict,
+    extra: dict | None = None,
 ) -> int:
-    """The s3 plane of ``delete_snapshot``: same pruning in manifest
-    (virtual-path) space, the touched subset read through the
-    connector's ``only_files`` plan option, the kept rows PUT natively,
-    and the carried + rewritten state published via the writer's
-    ``replace_files`` commit (conditional PUT at read-version + 1)."""
-    from tile_processor_spark.sources.snapshot_datasource import (
-        S3SnapshotStore,
-    )
-    from tile_processor_spark.sources.snapshot_datasource import (
-        register as _register_ds,
-    )
+    """The copy-on-write REPLACE commit shape (``delete_snapshot``):
+    the files named in ``replaced`` (paths in the READ manifest's own
+    namespace) drop out of ``read_version``'s state and the already-
+    written ``new_files`` stand in for them; every other file carries
+    by reference. Schema, base, partition scheme, layout and the
+    streaming watermark carry unchanged. Publishes at exactly
+    ``read_version + 1`` — any concurrent commit makes this raise
+    ``ConcurrentCommitError`` rather than lose rows. The result is a
+    flat manifest even when the read version was grouped."""
+    store = open_store(table)
+    version = _next_version(store, read_version)
+    manifest = store.manifest(read_version)
+    loader = store.loader(manifest)
 
-    store = S3SnapshotStore(table_path, dict(s3_options or {}))
-    last_err: Exception | None = None
-    for _ in range(_REWRITE_RETRIES):
-        versions = store.versions()
-        if not versions:
-            raise FileNotFoundError(f"no committed snapshot at {table_path}")
-        read_version = versions[-1]
-        manifest = store.manifest(read_version)
-        root = manifest.get("root")
-        if root is None:
-            raise ValueError(
-                "manifest lacks the table 'root' field (committed before "
-                "round 13) — recommit or delete from a local path"
-            )
-        loader = store.json_loader(root)
-        part_cols = manifest.get("partition_by") or []
-        all_files = _manifest_files(manifest, open_json=loader)
-        stats = _gather_file_stats(manifest, open_json=loader)
-        base = manifest["base"]
-        touched, untouched = [], []
-        for f in all_files:
-            if _stats_exclude(stats.get(f), where) or (
-                part_cols
-                and _partition_excludes(
-                    _partition_values(f, base), where, part_cols
-                )
-            ):
-                untouched.append(f)
-            else:
-                touched.append(f)
-        if not touched:
-            return read_version
-        _register_ds(spark)
-        r = (
-            spark.read.format("tps_snapshot")
-            .option("path", table_path)
-            .option("version", read_version)
-            .option("only_files", json.dumps(touched))
-        )
-        for k, v in (s3_options or {}).items():
-            r = r.option(k, v)
-        keep = _keep_filter(r.load(), where)
-        try:
-            return _write_snapshot_s3(
-                keep,
-                table_path,
-                part_cols or None,
-                s3_options,
-                "overwrite",
-                expected_version=read_version,
-                replace_files=touched,
-                extra={
-                    "deleted_where": _where_json(where),
-                    "rewrote_files": len(touched),
-                },
-            )
-        except Exception as e:
-            if not _is_conflict(e):
-                raise
-            last_err = e
-    raise ConcurrentCommitError(
-        f"delete lost the commit race {_REWRITE_RETRIES} times at "
-        f"{table_path}; giving up {_CONFLICT_MARKER}"
-    ) from last_err
+    def carry(p: str) -> str:
+        return store.carry(p, manifest)
+
+    gone = set(replaced)
+    kept = sorted(f for f in _manifest_files(manifest, open_json=loader) if f not in gone)
+    stats = _gather_file_stats(manifest, open_json=loader)
+    file_stats = {carry(f): stats[f] for f in kept if f in stats}
+    file_stats.update(new_stats)
+    new_manifest = {
+        "version": version,
+        "committed_at": time.time(),
+        "files": [carry(f) for f in kept] + new_files,
+        "schema": manifest["schema"],
+        "base": carry(manifest["base"]),
+        "partition_by": list(manifest.get("partition_by") or []),
+    }
+    if file_stats:
+        new_manifest["file_stats"] = file_stats
+    if manifest.get("layout"):
+        new_manifest["layout"] = manifest["layout"]
+    _carried_high_water(store, version, new_manifest)
+    new_manifest.update(extra or {})
+    return _commit_manifest(store, new_manifest, version)
 
 
 def snapshot_diff(

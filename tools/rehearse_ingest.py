@@ -81,7 +81,7 @@ def _bench_commit(tbl: str, base: str, runs: int = 5) -> float:
             for _ in range(100)
         ]
         t0 = time.perf_counter()
-        commit_append(tbl, delta, allow_partitioned=True)
+        commit_append(tbl, delta, partition_by=["grp"])
         times.append(time.perf_counter() - t0)
     return statistics.median(times)
 
