@@ -213,8 +213,8 @@ def test_s3_stream_sink_exactly_once_and_roundtrip(spark, fake_s3, tmp_path):
     streaming sink; each micro-batch lands as one append commit; a
     REPLAYED batch id is dropped (high-water carried in every
     manifest), so retries cannot duplicate rows."""
-    from tile_processor_spark.sources.s3_snapshot_write import (
-        S3SnapshotStreamWriter,
+    from tile_processor_spark.sources.snapshot_datasource import (
+        SnapshotStreamWriter,
     )
     from tile_processor_spark.sources.snapshots import append_snapshot
 
@@ -248,19 +248,17 @@ def test_s3_stream_sink_exactly_once_and_roundtrip(spark, fake_s3, tmp_path):
         )
     )
     last_batch = head["stream_high_water"]["t1"]
-    sink = S3SnapshotStreamWriter(
+    sink = SnapshotStreamWriter(
         _read(spark, fake_s3, prefix).schema,
         {**_s3_opts(fake_s3, prefix), "stream_app_id": "t1"},
         False,
     )
 
-    class _Msg:
-        key = f"{prefix}/data/replayed/part-x.parquet"
-        rows = 1
-        stats = None
+    from tile_processor_spark.sources.snapshot_datasource import _WriteMessage
 
-    _client(fake_s3).put_object(_Msg.key, b"replayed bytes")
-    sink.commit([_Msg()], last_batch)  # replay -> dropped
+    key = f"{prefix}/data/replayed/part-x.parquet"
+    _client(fake_s3).put_object(key, b"replayed bytes")
+    sink.commit([_WriteMessage([(sink._store.vpath(key), None)])], last_batch)  # replay -> dropped
     manifests_after = [
         k for k in _client(fake_s3).list_objects(prefix + "/")
         if "manifest-v" in k
@@ -294,6 +292,67 @@ def test_s3_aborted_objects_age_into_vacuum(spark, fake_s3):
     assert out["files_removed"] == 1
     assert orphan not in c.list_objects(prefix + "/")
     assert _rows(_read(spark, fake_s3, prefix)) == [(1,)]
+
+
+def test_s3_stream_born_table_base_and_vacuum_scope(spark, fake_s3, tmp_path):
+    """A table born by the stream sink records the sink's own
+    ``data/stream-<uuid>`` snap prefix as its ``base``, and every file
+    the stream commits sits under it. vacuum_store's scope is the
+    table's data/ prefix either way: it reclaims exactly the aged
+    unreferenced parquet objects under data/ (in the stream prefix or
+    a sibling one) and keeps the committed files and foreign objects."""
+    import time
+
+    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import append_snapshot
+
+    src = str(tmp_path / "src")
+    append_snapshot(spark.createDataFrame([(1, "a")], "k long, s string"), src)
+    append_snapshot(spark.createDataFrame([(2, "b")], "k long, s string"), src)
+    prefix = "warehouse/stream_born"
+    writer = (
+        spark.readStream.format("tps_snapshot").option("path", src).load()
+        .repartition(2).writeStream.format("tps_snapshot")
+    )
+    for k, v in _s3_opts(fake_s3, prefix).items():
+        writer = writer.option(k, v)
+    q = writer.option("checkpointLocation", str(tmp_path / "ckpt")).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    c = _client(fake_s3)
+    m1 = json.loads(c.get_object(f"{prefix}/manifest-v00000001.json"))
+    assert m1["base"].startswith(f"{m1['root']}/data/stream-")
+    assert m1["base"].count("/") == m1["root"].count("/") + 2
+    head_v = max(
+        int(k[-13:-5]) for k in c.list_objects(prefix + "/") if "manifest-v" in k
+    )
+    head = json.loads(c.get_object(f"{prefix}/manifest-v{head_v:08d}.json"))
+    assert head["files"]
+    assert all(f.startswith(m1["base"] + "/") for f in head["files"])
+
+    stream_key = prefix + m1["base"][len(m1["root"]):]
+    orphans = {
+        f"{stream_key}/part-orphan.parquet",
+        f"{prefix}/data/othersnap/part-orphan.parquet",
+    }
+    foreign = f"{stream_key}/notes.txt"
+    for key in orphans | {foreign}:
+        c.put_object(key, b"bytes")
+    for key in c.list_objects(prefix + "/"):
+        fake_s3.mtimes[key] = time.time() - 7200
+    out = vacuum_store(
+        f"s3://{BUCKET}/{prefix}",
+        {k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"},
+        keep_last=head_v,
+        claim_ttl_s=3600,
+    )
+    assert out["files_removed"] == len(orphans)
+    left = set(c.list_objects(prefix + "/"))
+    assert not orphans & left and foreign in left
+    assert _rows(_read(spark, fake_s3, prefix)) == [(1, "a"), (2, "b")]
+    assert not fake_s3.rejections
 
 
 def test_s3_write_survives_injected_throttle(spark, fake_s3):
@@ -603,8 +662,8 @@ def test_s3_partitioned_stream_sink(spark, fake_s3, tmp_path):
     resolve on read, and a writer whose query schema drifted from the
     committed table refuses at sink construction (round-15 init
     check)."""
-    from tile_processor_spark.sources.s3_snapshot_write import (
-        S3SnapshotStreamWriter,
+    from tile_processor_spark.sources.snapshot_datasource import (
+        SnapshotStreamWriter,
     )
     from tile_processor_spark.sources.snapshots import append_snapshot
 
@@ -641,7 +700,7 @@ def test_s3_partitioned_stream_sink(spark, fake_s3, tmp_path):
     ) == [("O", 2)]
     # schema drift refuses at sink construction, not at first commit
     with pytest.raises(ValueError, match="does not match\\s+committed"):
-        S3SnapshotStreamWriter(
+        SnapshotStreamWriter(
             spark.createDataFrame([(1,)], "k long").schema,
             {**_s3_opts(fake_s3, prefix), "stream_app_id": "p1"},
             False,

@@ -200,6 +200,46 @@ def test_writer_append_and_overwrite(spark, tmp_path):
     ]
 
 
+def test_local_overwrite_honours_partition_by(spark, tmp_path):
+    """A local connector overwrite with ``partition_by`` commits a
+    Hive-partitioned table, exactly like the same write on an s3://
+    path: the manifest records the scheme, the files sit under
+    ``g=<v>/`` without the column, pruned reads return exactly the
+    partition's rows, and a bad scheme raises the same errors as
+    ``test_s3_partition_by_validation`` pins for s3://."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tile_processor_spark.sources.snapshots import _read_manifest, list_versions
+
+    path = str(tmp_path / "p_tbl")
+    register(spark)
+    df = spark.createDataFrame(
+        [("a", 1), ("b", 2), ("a", 3)], "g string, k long"
+    ).repartition(2)
+    df.write.format("tps_snapshot").option("path", path).option(
+        "partition_by", "g"
+    ).mode("overwrite").save()
+    man = _read_manifest(path, list_versions(path)[-1])
+    assert man["partition_by"] == ["g"]
+    assert man["files"]
+    for f in man["files"]:
+        rel = os.path.relpath(f, man["base"]).split(os.sep)
+        assert len(rel) == 2 and rel[0] in ("g=a", "g=b"), rel
+        assert "g" not in pq.read_schema(f).names
+    assert _rows(
+        read_snapshot(spark, path, partition_filter={"g": "a"})
+    ) == [("a", 1), ("a", 3)]
+    assert _rows(_read(spark, path)) == [("a", 1), ("a", 3), ("b", 2)]
+
+    w = df.write.format("tps_snapshot").option("path", str(tmp_path / "bad"))
+    with pytest.raises(Exception, match="not in the written"):
+        w.option("partition_by", "nope").mode("overwrite").save()
+    with pytest.raises(Exception, match="every column"):
+        w.option("partition_by", "g,k").mode("overwrite").save()
+
+
 def test_writer_feeds_version_stream(spark, tmp_path):
     path = str(tmp_path / "ws_tbl")
     register(spark)
@@ -431,7 +471,7 @@ def test_stream_replay_dropped_after_interleaved_append(spark, tmp_path):
         d = tmp_path / tag
         df.write.parquet(str(d))
         return [
-            _WriteMessage(str(p), 1) for p in sorted(d.glob("*.parquet"))
+            _WriteMessage([(str(p), None)]) for p in sorted(d.glob("*.parquet"))
         ]
 
     w.commit(staged("b0"), 0)  # v2: batch 0
@@ -673,7 +713,7 @@ def test_stream_commit_refuses_racing_schema_rewrite(spark, tmp_path):
 
     d = tmp_path / "b0"
     df.write.parquet(str(d))
-    msgs = [_WriteMessage(str(p), 1) for p in sorted(d.glob("*.parquet"))]
+    msgs = [_WriteMessage([(str(p), None)]) for p in sorted(d.glob("*.parquet"))]
 
     # racing rewrite changes the schema before the micro-batch commits
     write_snapshot(

@@ -852,10 +852,13 @@ def test_vacuum_refuses_keep_last_zero_without_force(spark, tmp_path):
 
 
 def test_snapshot_commit_shapes_are_written_once():
-    """The s3 store is opened only by ``open_store``, the s3 writer
-    module defines no commit shape of its own, and the store-only
-    compactor is gone: overwrite, append, replace and compact each have
-    one definition, in ``snapshots.py``, over either backend."""
+    """The s3 store is opened only by ``open_store``, the store-only
+    compactor is gone, and overwrite, append, replace and compact each
+    have one definition, in ``snapshots.py``, over either backend. The
+    connector is written once over the store's data plane: one batch
+    writer, one stream writer, one commit message, one executor write
+    body and one Arrow read body, with parquet data read only inside
+    ``snapshot_store.py`` and no backend test in any connector class."""
     import ast
     import pathlib
 
@@ -878,7 +881,73 @@ def test_snapshot_commit_shapes_are_written_once():
         for f, tree in trees.items()
     }
     shapes = {"commit_append", "commit_overwrite", "commit_replace"}
-    assert not defined["sources/s3_snapshot_write.py"] & shapes
+    bases = {
+        f"{f}:{n.name}": {ast.unparse(b) for b in n.bases}
+        for f, tree in trees.items()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ClassDef)
+    }
+
+    def subclasses(base: str) -> list[str]:
+        return sorted(c for c, bs in bases.items() if base in bs)
+
+    connector = "sources/snapshot_datasource.py"
+    assert subclasses("DataSourceArrowWriter") == [f"{connector}:SnapshotWriter"]
+    assert subclasses("DataSourceStreamArrowWriter") == [
+        f"{connector}:SnapshotStreamWriter"
+    ]
+    assert [c for c in subclasses("WriterCommitMessage") if "snapshot" in c] == [
+        f"{connector}:_WriteMessage"
+    ]
+
+    def callers(tree, attr: str) -> list[str]:
+        return sorted(
+            fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+        )
+
+    # one executor write body and one Arrow read body, over the store
+    assert callers(trees[connector], "put_table") == ["_write_task"]
+    assert callers(trees[connector], "read_table") == ["_read_arrow"]
+    data_reads = sorted(
+        f
+        for f, tree in trees.items()
+        if any(
+            isinstance(n, ast.Call)
+            and (
+                ast.unparse(n.func) == "pq.read_table"
+                or isinstance(n.func, ast.Attribute) and n.func.attr == "fetch"
+            )
+            for n in ast.walk(tree)
+        )
+    )
+    assert data_reads == ["sources/snapshot_store.py"], data_reads
+    # the connector classes never branch on the backend
+    for cls in ast.walk(trees[connector]):
+        if not isinstance(cls, ast.ClassDef):
+            continue
+        docs = {
+            id(d.body[0].value)
+            for d in ast.walk(cls)
+            if isinstance(d, (ast.ClassDef, ast.FunctionDef))
+            and d.body
+            and isinstance(d.body[0], ast.Expr)
+        }
+        for n in ast.walk(cls):
+            assert not (
+                isinstance(n, ast.Constant)
+                and id(n) not in docs
+                and "s3://" in str(n.value)
+            ), cls.name
+            assert not (isinstance(n, ast.Name) and n.id == "S3SnapshotStore"), cls.name
+            assert not (
+                isinstance(n, ast.If) and ast.unparse(n.test) == "self._store"
+            ), cls.name
     assert not [f for f, names in defined.items() if "compact_store" in names]
     commit_shapes = sorted(
         f"{f}:{name}"

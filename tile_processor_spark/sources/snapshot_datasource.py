@@ -7,6 +7,18 @@
          .option("partition_filter", '{"yr": ["2024"]}')  # optional: pruning
          .load()
 
+    df.write.format("tps_snapshot").option("path", table_path)
+      .option("partition_by", "yr")                 # optional, overwrite
+      .mode("overwrite" | "append").save()
+
+    stream.writeStream.format("tps_snapshot").option("path", table_path)
+      .option("stream_app_id", "app")
+
+``table_path`` is a local table directory or an ``s3://bucket/prefix``
+table; every reader and writer here is written once over the table's
+store (``snapshot_store.open_store``), whose data plane puts and reads
+the parquet files of either backend.
+
 Why a connector when ``read_snapshot`` exists: the function API resolves
 the manifest and hands Spark a parquet file list — the FAST path (JVM
 scan, vectorized, pushdown). The connector expresses the same table
@@ -21,6 +33,22 @@ DSv2-style planning hook. Reads yield Arrow record batches (the
 vectorized lane of the Python source API), with Hive-style partition
 column values re-attached as constant Arrow columns cast to the
 COMMITTED dtype (no path-inference drift by construction).
+
+Writes are a two-phase commit. EXECUTORS each write their Arrow batches
+as one parquet file under a writer-private ``data/<uuid>/`` snap prefix
+(one file per occupied partition-value combination, under its Hive
+``col=val`` chain, for a partitioned table) and return the written
+paths with per-file column min/max stats taken from the in-memory Arrow
+table. The DRIVER then publishes a manifest referencing exactly the
+acknowledged files through the one commit shape per kind in
+``sources/snapshots.py`` (``_commit_overwrite``, ``commit_append``,
+``_commit_replace``). A failed or speculated task leaves unreferenced
+files, invisible to readers, which vacuum reclaims after its retention
+window.
+
+Reference parity: the reference overwrites output directories in place
+(tile_processor/output.py DirOutput ~L40); this is the versioned
+replacement.
 """
 
 from __future__ import annotations
@@ -38,31 +66,21 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from tile_processor_spark.sources.snapshot_store import (
+from tile_processor_spark.sources.snapshot_store import (  # noqa: F401 — S3SnapshotStore re-exported
     _GROUPS_DIR,
     S3SnapshotStore,
-    _read_manifest,
     _require_root,
-    list_versions,
     open_store,
 )
 from tile_processor_spark.sources.snapshots import (
-    _collect_stats,
     _commit_overwrite,
+    _commit_replace,
     _manifest_files,
     _partition_values,
-    _rehome_into_tree,
     commit_append,
 )
 
 FORMAT_NAME = "tps_snapshot"
-
-
-def _make_store(options: dict) -> S3SnapshotStore | None:
-    """The s3 store whose objects the readers fetch, or None for a
-    local table (read straight from the filesystem)."""
-    path = options.get("path", "")
-    return open_store(path, options) if path.startswith("s3://") else None
 
 
 def vacuum_store(
@@ -193,14 +211,18 @@ def vacuum_store(
     }
 
 
-def _resolve_manifest(options: dict) -> dict:
+def _table_store(options: dict, what: str):
+    """The store of the table named by the ``path`` option."""
     path = options.get("path")
     if not path:
-        raise ValueError("tps_snapshot requires .option('path', <table dir>)")
-    store = open_store(path, options)
+        raise ValueError(f"tps_snapshot {what} requires .option('path', <table dir>)")
+    return open_store(path, options)
+
+
+def _resolve_manifest(store, options: dict) -> dict:
     versions = store.versions()
     if not versions:
-        raise FileNotFoundError(f"no committed snapshot at {path}")
+        raise FileNotFoundError(f"no committed snapshot at {store}")
     as_of = options.get("as_of")
     if as_of is not None:
         # AS OF TIMESTAMP through the connector (option value is a
@@ -216,40 +238,52 @@ def _resolve_manifest(options: dict) -> dict:
             ts = float(as_of)
         except (TypeError, ValueError):
             ts = str(as_of)
-        v = resolve_as_of(path, ts, options)
+        v = resolve_as_of(options["path"], ts, options)
     else:
         v = int(options.get("version", versions[-1]))
     if v not in versions:
-        raise FileNotFoundError(f"version {v} not in {versions} at {path}")
-    manifest = store.manifest(v)
-    if isinstance(store, S3SnapshotStore):
-        _require_root(manifest, path)  # readers translate paths to keys
-    return manifest
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, file_path: str, part_values: dict):
-        self.file_path = file_path
-        self.part_values = part_values
+        raise FileNotFoundError(f"version {v} not in {versions} at {store}")
+    return store.manifest(v)
 
 
 class _FileGroupPartition(InputPartition):
     """A bin-packed group of data files sharing one task — the
     million-small-files defense: task count scales with BYTES, not
     file count. Files in a group share identical partition values
-    (grouping never crosses a Hive partition boundary)."""
+    (grouping never crosses a Hive partition boundary). ``files`` are
+    store locations (``store.locate``)."""
 
     def __init__(self, files: list[str], part_values: dict):
         self.files = files
         self.part_values = part_values
 
 
+def _read_arrow(store, schema: StructType, partition: _FileGroupPartition):
+    """Executor body of both readers: each file's Arrow table in the
+    committed schema, with Hive path values re-attached as constant
+    columns cast to the COMMITTED dtype."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    values = partition.part_values
+    for f in partition.files:
+        tbl = store.read_table(f)
+        cols = [
+            pa.array([values[field.name]] * len(tbl), pa.string()).cast(field.type)
+            if field.name in values
+            else tbl.column(field.name).cast(field.type)
+            for field in target
+        ]
+        yield from pa.table(cols, schema=target).to_batches()
+
+
 class SnapshotReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
         self._options = options
-        self._store = _make_store(options)
-        self._manifest = _resolve_manifest(options)
+        self._store = _table_store(options, "read")
+        self._manifest = _resolve_manifest(self._store, options)
         raw = options.get("partition_filter")
         self._filter = json.loads(raw) if raw else None
         self._where: list[tuple] = []
@@ -271,15 +305,10 @@ class SnapshotReader(DataSourceReader):
         million. Groups never cross a Hive partition boundary. A store-
         resident table (s3:// path) plans from ONE listing pass — file
         sizes come with the keys, no per-file HEADs."""
-        import os
-
-        store = self._store
-        loader = (
-            store.json_loader(self._manifest["root"]) if store else None
-        )
+        store, manifest = self._store, self._manifest
         files = _manifest_files(
-            self._manifest, self._filter, self._where or None,
-            open_json=loader,
+            manifest, self._filter, self._where or None,
+            open_json=store.loader(manifest),
         )
         only = self._options.get("only_files")
         if only is not None:
@@ -289,66 +318,32 @@ class SnapshotReader(DataSourceReader):
             # files outside the pinned manifest
             wanted = set(json.loads(only))
             files = [f for f in files if f in wanted]
-        base = self._manifest["base"]
-        if store:
-            root = self._manifest["root"]
-            sizes = store.data_sizes()
-            base = store.key_for(base, root)
-            files = [store.key_for(f, root) for f in files]
-
-            def getsize(f: str) -> int:
-                return sizes.get(f, 0)
-        else:
-            getsize = os.path.getsize
         target = int(
             self._options.get("target_partition_bytes", 128 * 1024 * 1024)
         )
         by_values: dict[tuple, list[str]] = {}
         for f in files:
-            pv = _partition_values(f, base)
-            by_values.setdefault(tuple(sorted(pv.items())), []).append(f)
+            pv = _partition_values(f, manifest["base"])
+            by_values.setdefault(tuple(sorted(pv.items())), []).append(
+                store.locate(f, manifest)
+            )
+        sizes = store.sizes([f for flist in by_values.values() for f in flist])
         parts = []
         for key, flist in sorted(by_values.items()):
             group: list[str] = []
             size = 0
             for f in sorted(flist):
-                fsize = getsize(f)
-                if group and size + fsize > target:
+                if group and size + sizes[f] > target:
                     parts.append(_FileGroupPartition(group, dict(key)))
                     group, size = [], 0
                 group.append(f)
-                size += fsize
+                size += sizes[f]
             if group:
                 parts.append(_FileGroupPartition(group, dict(key)))
         return parts
 
     def read(self, partition):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self._schema)
-        files = (
-            partition.files
-            if isinstance(partition, _FileGroupPartition)
-            else [partition.file_path]
-        )
-        for fpath in files:
-            if self._store:  # executor-side object fetch
-                tbl = pq.read_table(pa.BufferReader(self._store.fetch(fpath)))
-            else:
-                tbl = pq.read_table(fpath)
-            cols = []
-            for field in target:
-                if field.name in partition.part_values:
-                    # constant Hive path value, cast to the COMMITTED dtype
-                    val = pa.array(
-                        [partition.part_values[field.name]] * len(tbl), pa.string()
-                    ).cast(field.type)
-                    cols.append(val)
-                else:
-                    cols.append(tbl.column(field.name).cast(field.type))
-            yield from pa.table(cols, schema=target).to_batches()
+        yield from _read_arrow(self._store, self._schema, partition)
 
 
 class SnapshotPushdownReader(SnapshotReader):
@@ -411,7 +406,7 @@ class SnapshotDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self) -> StructType:
-        manifest = _resolve_manifest(self.options)
+        manifest = _resolve_manifest(_table_store(self.options, "read"), self.options)
         return StructType.fromJson(json.loads(manifest["schema"]))
 
     def reader(self, schema: StructType) -> SnapshotReader:
@@ -425,26 +420,11 @@ class SnapshotDataSource(DataSource):
     def streamReader(self, schema: StructType) -> "SnapshotStreamReader":
         return SnapshotStreamReader(schema, self.options)
 
-    def writer(self, schema: StructType, overwrite: bool):
-        if self._is_s3():
-            from tile_processor_spark.sources.s3_snapshot_write import (
-                S3SnapshotWriter,
-            )
-
-            return S3SnapshotWriter(schema, dict(self.options), overwrite)
+    def writer(self, schema: StructType, overwrite: bool) -> "SnapshotWriter":
         return SnapshotWriter(schema, self.options, overwrite)
 
-    def streamWriter(self, schema: StructType, overwrite: bool):
-        if self._is_s3():
-            from tile_processor_spark.sources.s3_snapshot_write import (
-                S3SnapshotStreamWriter,
-            )
-
-            return S3SnapshotStreamWriter(schema, dict(self.options), overwrite)
+    def streamWriter(self, schema: StructType, overwrite: bool) -> "SnapshotStreamWriter":
         return SnapshotStreamWriter(schema, self.options, overwrite)
-
-    def _is_s3(self) -> bool:
-        return str(self.options.get("path", "")).startswith("s3://")
 
 
 def register(spark) -> None:
@@ -486,18 +466,12 @@ class SnapshotStreamReader(DataSourceStreamReader):
 
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("tps_snapshot stream requires .option('path', ...)")
-        # s3:// mirrors stream too: offsets and appended files resolve
-        # through the store; data fetches happen executor-side
-        self._store = _make_store(options)
-        self._table = self._store or open_store(self._path)
+        self._store = _table_store(options, "stream")
         starting = options.get("starting_version")
         self._initial = (
             int(starting)
             if starting is not None
-            else (self._table.versions() or [0])[-1] if options.get(
+            else (self._store.versions() or [0])[-1] if options.get(
                 "latest_only", "false"
             ).lower() == "true" else 0
         )
@@ -506,13 +480,13 @@ class SnapshotStreamReader(DataSourceStreamReader):
         return {"version": self._initial}
 
     def latestOffset(self) -> dict:
-        versions = self._table.versions()
+        versions = self._store.versions()
         return {"version": versions[-1] if versions else self._initial}
 
     def partitions(self, start: dict, end: dict):
-        parts: list[_FilePartition] = []
+        parts: list[_FileGroupPartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            manifest = self._table.manifest(v)
+            manifest = self._store.manifest(v)
             appended = manifest.get("appended_files")
             if appended is None:
                 # version 1 of a table born by append_snapshot is a
@@ -525,61 +499,20 @@ class SnapshotStreamReader(DataSourceStreamReader):
                         "version stream cannot represent a rewrite "
                         "without re-emitting history"
                     )
-            base = manifest["base"]
-            if self._store:
-                root = _require_root(manifest, self._path)
-                base = self._store.key_for(base, root)
-                appended = [self._store.key_for(f, root) for f in appended]
             parts.extend(
-                _FilePartition(f, _partition_values(f, base)) for f in appended
+                _FileGroupPartition(
+                    [self._store.locate(f, manifest)],
+                    _partition_values(f, manifest["base"]),
+                )
+                for f in appended
             )
         return parts
 
     def read(self, partition):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self._schema)
-        if self._store:
-            tbl = pq.read_table(
-                pa.BufferReader(self._store.fetch(partition.file_path))
-            )
-        else:
-            tbl = pq.read_table(partition.file_path)
-        cols = []
-        for field in target:
-            if field.name in partition.part_values:
-                # Hive path value (shared-tree partitioned appends),
-                # cast to the committed dtype like the batch reader
-                cols.append(
-                    pa.array(
-                        [partition.part_values[field.name]] * len(tbl),
-                        pa.string(),
-                    ).cast(field.type)
-                )
-            else:
-                cols.append(tbl.column(field.name).cast(field.type))
-        yield from pa.table(cols, schema=target).to_batches()
+        yield from _read_arrow(self._store, self._schema, partition)
 
     def commit(self, end: dict) -> None:
         pass  # versions are retained until vacuum; nothing to ack
-
-
-class _WriteMessage(WriterCommitMessage):
-    def __init__(self, file_path: str | None, rows: int):
-        self.file_path = file_path
-        self.rows = rows
-
-
-class _PartWriteMessage(WriterCommitMessage):
-    """Partitioned-append commit message: (Hive ``col=val`` dir chain,
-    staged file path) pairs — the driver re-homes each staged file into
-    the shared tree under its chain at commit time."""
-
-    def __init__(self, files: list[tuple[str, str]], rows: int):
-        self.files = files
-        self.rows = rows
 
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -636,6 +569,45 @@ def _split_by_partitions(tbl, part_cols: list[str]):
         yield values, tbl.filter(mask).drop(part_cols)
 
 
+def _arrow_stats(tbl) -> dict[str, list]:
+    """Per-column [min, max] from the in-memory Arrow table — the same
+    sortable-primitives-only contract as ``snapshots._collect_stats``
+    (ints, floats, strings, dates; dates as ISO strings; a float column
+    containing NaN is dropped because JSON cannot carry it and a
+    NaN-blind range could wrongly exclude the file). Stats are OPTIONAL
+    metadata: absence is always sound."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out: dict[str, list] = {}
+    for field in tbl.schema:
+        col = tbl.column(field.name)
+        if len(col) == 0 or col.null_count == len(col):
+            continue
+        t = field.type
+        is_date = pa.types.is_date(t)
+        if not (
+            pa.types.is_integer(t)
+            or pa.types.is_floating(t)
+            or pa.types.is_string(t)
+            or pa.types.is_large_string(t)
+            or is_date
+        ):
+            continue
+        if pa.types.is_floating(t) and pc.any(
+            pc.is_nan(col.drop_null())
+        ).as_py():
+            continue
+        mm = pc.min_max(col)
+        mn, mx = mm["min"].as_py(), mm["max"].as_py()
+        if mn is None or mx is None:
+            continue
+        if is_date:
+            mn, mx = mn.isoformat(), mx.isoformat()
+        out[field.name] = [mn, mx]
+    return out
+
+
 def _check_writer_schema(schema: StructType, committed_json: str, what: str) -> None:
     """A connector writer's (name, type) pairs must equal the committed
     schema's: data written against a drifted schema would contradict
@@ -646,149 +618,194 @@ def _check_writer_schema(schema: StructType, committed_json: str, what: str) -> 
         raise ValueError(f"{what} schema {got} does not match committed {want}")
 
 
-def _local_append_target(path: str, schema: StructType, what: str):
-    """(partition columns, shared tree) a local append writer stages
-    into: the committed table's scheme, checked against the writer's
-    schema at construction (the commit re-checks the fresh head)."""
-    versions = list_versions(path)
-    if not versions:
-        return [], None
-    manifest = _read_manifest(path, versions[-1])
-    part_cols = list(manifest.get("partition_by") or [])
-    if part_cols and manifest.get("layout") != "shared-tree":
+def _delta_scheme(store, head: dict, asked: list[str], what: str) -> list[str]:
+    """The partition scheme a delta onto the committed ``head`` is
+    written under: the table's own (an explicit ``partition_by`` must
+    equal it). A store whose partitioned appends live in a shared Hive
+    tree refuses a table not yet converted to it."""
+    committed = list(head.get("partition_by") or [])
+    if asked and asked != committed:
+        raise ValueError(
+            f"partition_by option {asked} does not match the committed "
+            f"table's scheme {committed} — a {what} inherits the table's "
+            "partitioning (omit the option)"
+        )
+    if committed and store.shared_tree_appends and head.get("layout") != "shared-tree":
         raise NotImplementedError(
             f"{what} on a partitioned snapshot table needs the shared Hive "
             "tree layout (appended files under a second snap dir would "
             "break basePath partition discovery) — run "
             "convert_to_shared_layout(table_path) once"
         )
-    _check_writer_schema(schema, manifest["schema"], what)
-    return part_cols, (manifest["base"] if part_cols else None)
+    return committed
 
 
-def _write_task_files(schema: StructType, part_cols: list[str], snap_dir: str, iterator):
-    """Executor body of both local writers: Arrow batches → one parquet
-    file in the task-private ``snap_dir`` (one file PER occupied
+class _WriteMessage(WriterCommitMessage):
+    """One task's written files: ``(path, stats)`` pairs, the path as
+    the manifest records it and its column min/max stats (or None — a
+    file without stats still commits), and the ``snap`` prefix the
+    writing instance put them under (None on a hand-built message)."""
+
+    def __init__(self, files: list[tuple[str, dict | None]], snap: str | None = None):
+        self.files = files
+        self.snap = snap
+
+
+def _write_task(store, schema: StructType, snap: str, part_cols: list[str], iterator):
+    """Executor body of both writers: Arrow batches → one parquet file
+    under the writer's ``snap`` prefix (one PER occupied
     partition-value combination when ``part_cols`` is set — partition
-    columns live in the directory chain, not the data files)."""
-    import os
+    columns live in the Hive path chain, not in the data files)."""
     import uuid
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    batches = list(iterator)
-    rows = sum(b.num_rows for b in batches)
-    if rows == 0:
-        return _PartWriteMessage([], 0) if part_cols else _WriteMessage(None, 0)
+    batches = [b for b in iterator if b.num_rows]
+    if not batches:
+        return _WriteMessage([], snap)
     tbl = pa.Table.from_batches(batches).cast(to_arrow_schema(schema))
-    if not part_cols:
-        os.makedirs(snap_dir, exist_ok=True)
-        fpath = os.path.join(snap_dir, f"part-{uuid.uuid4().hex}.parquet")
-        pq.write_table(tbl, fpath)
-        return _WriteMessage(fpath, rows)
-    staged: list[tuple[str, str]] = []
-    for values, sub in _split_by_partitions(tbl, part_cols):
+    pieces = _split_by_partitions(tbl, part_cols) if part_cols else [({}, tbl)]
+    files = []
+    for values, sub in pieces:
         chain = _hive_chain(part_cols, values)
-        subdir = os.path.join(snap_dir, *chain.split("/"))
-        os.makedirs(subdir, exist_ok=True)
-        fpath = os.path.join(subdir, f"part-{uuid.uuid4().hex}.parquet")
-        pq.write_table(sub, fpath)
-        staged.append((chain, fpath))
-    return _PartWriteMessage(staged, rows)
+        rel = "/".join(p for p in (snap, chain, f"part-{uuid.uuid4().hex}.parquet") if p)
+        files.append((store.put_table(sub, rel), _arrow_stats(sub)))
+    return _WriteMessage(files, snap)
 
 
-def _committed_files(tree: str | None, messages) -> list[str]:
-    """The acknowledged files a local writer commits: re-homed into the
-    shared Hive tree for a partitioned table, else as written."""
-    pairs = _staged_pairs(messages)
-    if tree is None:
-        return sorted(f for _chain, f in pairs)
-    return _rehome_into_tree(tree, [(chain.split("/"), f) for chain, f in pairs])
-
-
-class SnapshotWriter(DataSourceArrowWriter):
-    """The write side of the connector — the real two-phase commit:
-    executors each write ONE parquet file into a task-private snap dir
-    and return its path as the commit message; the DRIVER then commits
-    a manifest referencing exactly the acknowledged files, in one
-    atomic exclusive publish. A task that fails or is speculated leaves
-    an unreferenced file (invisible; vacuum reclaims it) — the same
-    crash-safety argument as write_snapshot, now distributed.
-
-    ``mode('append')`` produces an append commit (previous files reused
-    untouched, ``appended_files`` recorded — so the version stream can
-    consume it; a first append creates the table); ``mode('overwrite')``
-    replaces the table state through the same commit as
-    ``write_snapshot``, per-file stats included. Appending onto a
-    PARTITIONED table works through the shared Hive tree (run
-    ``convert_to_shared_layout`` once, same contract as
-    ``append_snapshot``): each task writes per-partition-value files
-    into a private staging dir, and the driver re-homes them into the
-    tree before the manifest commit — so pruned reads and basePath
-    partition discovery keep working as appends accumulate."""
-
-    def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        import os
-        import uuid
-
-        self._schema = schema
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("tps_snapshot write requires .option('path', ...)")
-        self._path = os.path.abspath(self._path)
-        self._overwrite = overwrite
-        self._snap_dir = os.path.join(self._path, "data", uuid.uuid4().hex)
-        self._part_cols, self._tree = (
-            ([], None) if overwrite
-            else _local_append_target(self._path, schema, "append")
-        )
-
-    def write(self, iterator):
-        return _write_task_files(self._schema, self._part_cols, self._snap_dir, iterator)
-
-    def commit(self, messages) -> None:
-        new_files = _committed_files(self._tree, messages)
-        if self._overwrite:
-            _commit_overwrite(
-                self._path, new_files, self._schema.json(), self._snap_dir,
-                [], _collect_stats(new_files),
-            )
-        else:
-            # optimistic-concurrency append: commutes with concurrent
-            # appends, retried on a lost version race; schema and scheme
-            # re-validated against the fresh manifest inside the retry
-            commit_append(
-                self._path,
-                new_files,
-                partition_by=self._part_cols,
-                expected_schema=self._schema.json(),
-                base=self._snap_dir,
-            )
-
-    def abort(self, messages) -> None:
-        _drop_staged(messages)
-
-
-def _staged_pairs(messages) -> list[tuple[str, str]]:
-    out: list[tuple[str, str]] = []
+def _committed(store, tree: str | None, snap: str, messages):
+    """The acknowledged files as the manifest records them (placed by
+    the store when a partitioned delta lands on the committed ``tree``):
+    sorted paths, their per-file stats, and the ``base`` a table born by
+    this commit records — the writing instance's snap prefix. Spark
+    commits a stream micro-batch on a FRESH writer instance, so the
+    prefix travels in the messages; ``snap`` is the committing
+    instance's own, for messages that carry none."""
+    files = []
     for m in messages:
         if m is None:
             continue
-        if isinstance(m, _PartWriteMessage):
-            out.extend(m.files)
-        elif m.file_path:
-            out.append(("", m.file_path))
-    return out
+        snap = m.snap or snap
+        files += m.files if tree is None else store.place_delta(tree, store.path(snap), m.files)
+    files.sort(key=lambda f: f[0])
+    return [p for p, _st in files], {p: st for p, st in files if st}, store.path(snap)
 
 
-def _drop_staged(messages) -> None:
-    import os
+def _drop_staged(store, messages) -> None:
+    """Abort path: best-effort delete of the acknowledged files."""
+    for m in messages:
+        for path, _stats in m.files if m is not None else []:
+            store.drop(path)
 
-    for _chain, f in _staged_pairs(messages):
-        if os.path.exists(f):
-            os.unlink(f)
+
+class SnapshotWriter(DataSourceArrowWriter):
+    """The write side of the connector. ``mode('append')`` produces an
+    append commit (previous files reused untouched, ``appended_files``
+    recorded — so the version stream can consume it; a first append
+    creates the table, and racing creators both land, one as v1 and
+    one on top of it); ``mode('overwrite')`` replaces the table state
+    through the same commit as ``write_snapshot``, Hive-partitioned by
+    ``.option("partition_by", "col1,col2")`` when given. Appends inherit
+    the committed table's scheme; locally a partitioned table must be
+    in the shared Hive tree (run ``convert_to_shared_layout`` once,
+    same contract as ``append_snapshot``), and the driver re-homes the
+    staged files into the tree before the manifest commit.
+
+    Options used by the function API (``snapshots._write_snapshot_s3``):
+    ``expected_version`` (read-version conflict detection),
+    ``commit_extra`` (JSON merged into the manifest) and, with
+    ``mode('overwrite')``, ``replace_files`` (a copy-on-write replace
+    of the named files, ``delete_snapshot``)."""
+
+    def __init__(self, schema: StructType, options: dict, overwrite: bool):
+        import uuid
+
+        self._schema = schema
+        self._store = _table_store(options, "write")
+        self._overwrite = overwrite
+        self._snap = f"data/{uuid.uuid4().hex}"
+        ev = options.get("expected_version")
+        self._expected_version = int(ev) if ev is not None else None
+        self._extra = json.loads(options.get("commit_extra", "{}")) or None
+        raw_replace = options.get("replace_files")
+        self._replace = (
+            json.loads(raw_replace) if raw_replace is not None else None
+        )
+        if self._replace is not None and not overwrite:
+            raise ValueError(
+                "replace_files requires mode('overwrite') — a replace "
+                "commit rewrites part of the table state"
+            )
+        if self._replace is not None and self._expected_version is None:
+            raise ValueError(
+                "replace_files requires expected_version — a replace "
+                "commit is only sound against the exact state it read"
+            )
+        raw_parts = options.get("partition_by", "")
+        self._part_cols = [c.strip() for c in raw_parts.split(",") if c.strip()]
+        bad = [c for c in self._part_cols if c not in schema.fieldNames()]
+        if bad:
+            raise ValueError(
+                f"partition_by column(s) {bad} not in the written "
+                f"schema {schema.fieldNames()}"
+            )
+        if self._part_cols and len(self._part_cols) == len(schema.fields):
+            raise ValueError(
+                "partition_by covers every column — the data files "
+                "would be empty; leave at least one data column"
+            )
+        # a replace or an append lands files on the committed head: it
+        # carries the COMMITTED schema and scheme forward, so data
+        # written against a drifted one would contradict them
+        self._tree = None
+        if self._replace is not None or not overwrite:
+            versions = self._store.versions()
+            if versions:
+                head = self._store.manifest(versions[-1])
+                what = "replace" if self._replace is not None else "append"
+                _check_writer_schema(schema, head["schema"], what)
+                self._part_cols = _delta_scheme(
+                    self._store, head, self._part_cols, what
+                )
+                self._tree = head["base"] if self._part_cols else None
+
+    def write(self, iterator):
+        return _write_task(self._store, self._schema, self._snap, self._part_cols, iterator)
+
+    def commit(self, messages) -> None:
+        files, stats, base = _committed(self._store, self._tree, self._snap, messages)
+        if self._replace is not None:
+            _commit_replace(
+                self._store, self._expected_version, self._replace,
+                files, stats, self._extra,
+            )
+        elif self._overwrite:
+            _commit_overwrite(
+                self._store, files, self._schema.json(), base, self._part_cols,
+                stats, self._expected_version, self._extra,
+            )
+        else:
+            # mode('append') always goes through commit_append —
+            # partitioned or not. On an empty table it creates v1 AND
+            # retries on a raced table creation (two jobs appending to
+            # a new table must BOTH land, one as v1 and one as v2);
+            # schema and scheme are re-validated against the fresh
+            # manifest inside every retry, so a raced creator with a
+            # DIFFERENT schema or scheme fails instead of publishing
+            # files the manifest contradicts
+            commit_append(
+                self._store,
+                files,
+                extra=self._extra,
+                partition_by=self._part_cols,
+                expected_schema=self._schema.json(),
+                file_stats=stats,
+                base=base,
+            )
+
+    def abort(self, messages) -> None:
+        _drop_staged(self._store, messages)
 
 
 class SnapshotStreamWriter(DataSourceStreamArrowWriter):
@@ -807,46 +824,48 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
     batch's commit and its replay cannot erase the evidence (the
     failure mode of checking only the latest manifest's own marker).
 
-    A PARTITIONED sink table routes batches through the shared Hive
-    tree, exactly like the batch writer (the table must exist and be
-    converted — a stream cannot bootstrap partition metadata out of
-    nothing); a stream whose query schema drifted from the table
-    refuses at construction."""
+    Tasks write under their writer instance's ``data/stream-<uuid>``
+    snap prefix, which is also the ``base`` a table born by the stream
+    records. A PARTITIONED sink table inherits the committed scheme,
+    exactly like the batch appender (a stream cannot bootstrap
+    partition metadata out of nothing); a stream whose query schema
+    drifted from the table refuses at construction."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        import os
-
-        self._schema = schema
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("tps_snapshot stream write requires .option('path', ...)")
-        self._path = os.path.abspath(self._path)
-        self._app_id = options.get("stream_app_id", "default")
-        self._part_cols, self._tree = _local_append_target(
-            self._path, schema, "stream write"
-        )
-
-    def write(self, iterator):
-        import os
         import uuid
 
-        snap_dir = os.path.join(self._path, "data", f"stream-{uuid.uuid4().hex}")
-        return _write_task_files(self._schema, self._part_cols, snap_dir, iterator)
+        self._schema = schema
+        self._store = _table_store(options, "stream write")
+        self._app_id = options.get("stream_app_id", "default")
+        self._snap = f"data/stream-{uuid.uuid4().hex}"
+        self._part_cols: list[str] = []
+        self._tree = None
+        versions = self._store.versions()
+        if versions:
+            head = self._store.manifest(versions[-1])
+            _check_writer_schema(schema, head["schema"], "stream write")
+            self._part_cols = _delta_scheme(self._store, head, [], "stream write")
+            self._tree = head["base"] if self._part_cols else None
+
+    def write(self, iterator):
+        return _write_task(self._store, self._schema, self._snap, self._part_cols, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         # optimistic append; the high-water replay check re-runs on the
         # fresh latest manifest inside every retry, and the mark is
         # carried forward by every other commit path, so intervening
         # appends cannot turn a replay into a duplicate
+        files, stats, base = _committed(self._store, self._tree, self._snap, messages)
         commit_append(
-            self._path,
-            _committed_files(self._tree, messages),
+            self._store,
+            files,
             extra={"stream_batch_id": batchId},
             stream_mark=(self._app_id, batchId),
             partition_by=self._part_cols,
             expected_schema=self._schema.json(),
-            base=self._path,
+            file_stats=stats,
+            base=base,
         )
 
     def abort(self, messages, batchId: int) -> None:
-        _drop_staged(messages)
+        _drop_staged(self._store, messages)

@@ -16,13 +16,27 @@ Every commit shape — overwrite, append, copy-on-write replace, compact
 ``commit_fs.get_commit_fs()`` so the fault-injection seam stays.
 ``S3SnapshotStore`` is a table under an ``s3://bucket/prefix``; it
 publishes by conditional PUT with read-back (``s3_client.put_if_absent``).
-``open_store`` picks one from the path. Data writes and data reads stay
-per backend (JVM parquet locally, Arrow objects on the store) and are
-not part of this interface.
+``open_store`` picks one from the path.
+
+The data plane is part of the interface too, so the connector's
+writers and readers are written once over either backend:
+
+- ``put_table`` writes one Arrow table as a parquet file (an object on
+  s3) at a path relative to the table and returns the path the
+  manifest records (``path`` maps a relative path the same way);
+- ``drop`` deletes a staged file of an aborted write (best effort);
+- ``place_delta`` is where a partitioned delta's files live once
+  committed onto the table's tree (locally they are re-homed into the
+  shared Hive tree; on s3 they stay where they were written);
+- ``locate`` maps a manifest path to what ``read_table`` reads, and
+  ``sizes`` gives those files' byte sizes for bin-packing.
+
+Vacuum and ``convert_to_shared_layout`` stay per backend.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import posixpath
@@ -128,6 +142,52 @@ class LocalSnapshotStore:
         with open(path, "w") as f:
             json.dump(side, f)
         return path
+
+    # -- data plane ---------------------------------------------------
+
+    def path(self, rel: str) -> str:
+        return os.path.join(self.root, rel)
+
+    def put_table(self, tbl, rel: str) -> str:
+        import pyarrow.parquet as pq
+
+        path = self.path(rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(tbl, path)
+        return path
+
+    def drop(self, path: str) -> None:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(path)
+
+    def place_delta(self, tree: str, snap: str, files: list) -> list:
+        """``(path, stats)`` pairs staged under the ``snap`` dir, moved
+        into a partitioned table's shared Hive ``tree`` under their
+        ``col=val`` chains, because local reads discover partition
+        columns from ONE basePath. The staged files are referenced by
+        nothing yet, so no atomicity is needed (``commit_fs.rehome``)."""
+        from tile_processor_spark.sources.commit_fs import get_commit_fs
+
+        fs = get_commit_fs()
+        out = []
+        for f, stats in files:
+            subdir = os.path.join(tree, os.path.relpath(os.path.dirname(f), snap))
+            os.makedirs(subdir, exist_ok=True)
+            dst = os.path.join(subdir, f"{uuid.uuid4().hex}-{os.path.basename(f)}")
+            fs.rehome(f, dst)
+            out.append((dst, stats))
+        return out
+
+    def locate(self, path: str, manifest: dict) -> str:
+        return path
+
+    def sizes(self, paths: list[str]) -> dict[str, int]:
+        return {p: os.path.getsize(p) for p in paths}
+
+    def read_table(self, path: str):
+        import pyarrow.parquet as pq
+
+        return pq.read_table(path)
 
 
 class S3SnapshotStore(S3Handle):
@@ -236,10 +296,51 @@ class S3SnapshotStore(S3Handle):
 
         return _load
 
-    # -- data plane (executor-side) -----------------------------------
+    # -- data plane ---------------------------------------------------
 
-    def fetch(self, key: str) -> bytes:
-        return self.client().get_object(key)
+    def path(self, rel: str) -> str:
+        return f"{self.root}/{rel}"
+
+    def put_table(self, tbl, rel: str) -> str:
+        """An unconditional PUT under a task-private uuid-named key: a
+        speculated or retried task writes a fresh key, and the loser's
+        object stays invisible until ``vacuum_store`` reclaims it."""
+        import io
+
+        import pyarrow.parquet as pq
+
+        buf = io.BytesIO()
+        pq.write_table(tbl, buf)
+        key = f"{self.prefix}/{rel}"
+        self.client().put_object(key, buf.getvalue())
+        return self.vpath(key)
+
+    def drop(self, path: str) -> None:
+        # anything missed stays invisible and ages into vacuum_store
+        with contextlib.suppress(Exception):
+            self.client().delete_object(self.key_for(path, self.root))
+
+    def place_delta(self, tree: str, snap: str, files: list) -> list:
+        """Partitioned deltas stay where they were written: the reader
+        prunes from the manifest's file list, and ``_partition_values``
+        parses a delta under another snap prefix through ``..``
+        segments, which carry no ``=`` and so cannot alias a partition
+        pair."""
+        return files
+
+    def locate(self, path: str, manifest: dict) -> str:
+        return self.key_for(path, _require_root(manifest, str(self)))
+
+    def sizes(self, keys: list[str]) -> dict[str, int]:
+        """Sizes from ONE listing pass (no per-object HEADs)."""
+        listed = self.data_sizes()
+        return {k: listed.get(k, 0) for k in keys}
+
+    def read_table(self, key: str):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        return pq.read_table(pa.BufferReader(self.client().get_object(key)))
 
 
 def open_store(table_path, s3_options: dict | None = None):

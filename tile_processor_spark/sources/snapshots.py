@@ -581,33 +581,13 @@ def _stage_files(df: DataFrame, table_path: str, manifest: dict) -> list[str]:
         return staged
     # re-home into the shared tree, preserving the col=val chain
     # verbatim; then clean the now-empty staging dirs
-    new_files = _rehome_into_tree(
-        manifest["base"],
-        [(os.path.relpath(f, snap_dir).split(os.sep)[:-1], f) for f in staged],
+    placed = open_store(table_path).place_delta(
+        manifest["base"], snap_dir, [(f, None) for f in staged]
     )
     for root, _dirs, _fnames in os.walk(snap_dir, topdown=False):
         if not any(os.scandir(root)):
             os.rmdir(root)
-    return new_files
-
-
-def _rehome_into_tree(tree: str, staged: list[tuple[list[str], str]]) -> list[str]:
-    """Move staged files into the shared Hive ``tree`` under their
-    ``col=val`` path segments; returns the new paths, sorted. The
-    staged files are referenced by nothing yet, so no atomicity is
-    needed (rename locally, copy+delete on an object store — see
-    ``commit_fs.rehome``)."""
-    from tile_processor_spark.sources.commit_fs import get_commit_fs
-
-    fs = get_commit_fs()
-    out = []
-    for segs, f in staged:
-        subdir = os.path.join(tree, *segs)
-        os.makedirs(subdir, exist_ok=True)
-        dst = os.path.join(subdir, f"{uuid.uuid4().hex}-{os.path.basename(f)}")
-        fs.rehome(f, dst)
-        out.append(dst)
-    return sorted(out)
+    return sorted(f for f, _stats in placed)
 
 
 def convert_to_shared_layout(table_path: str) -> int:
