@@ -9,6 +9,7 @@ vacuum's groups sweep.
 from __future__ import annotations
 
 import json
+import os
 import time
 
 import pytest
@@ -134,7 +135,7 @@ def test_compact_store_rollback_guard_and_stats(spark, fake_s3):
 
 
 def test_vacuum_store_reclaims_superseded_group_objects(spark, fake_s3):
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
     from tile_processor_spark.sources.snapshots import compact_manifest
 
     prefix = "warehouse/native_compact3"
@@ -153,8 +154,8 @@ def test_vacuum_store_reclaims_superseded_group_objects(spark, fake_s3):
     # group object survives (referenced), the superseded one goes
     for k in group_keys:
         fake_s3.mtimes[k] = time.time() - 7200
-    out = vacuum_store(
-        f"s3://{BUCKET}/{prefix}", opts, keep_last=1, claim_ttl_s=3600
+    out = vacuum(
+        f"s3://{BUCKET}/{prefix}", keep_last=1, claim_ttl_s=3600, s3_options=opts
     )
     assert out["kept_versions"] == [3]
     left = [k for k in c.list_objects(prefix + "/groups/")]
@@ -261,4 +262,142 @@ def test_s3_append_onto_compacted_head_stays_grouped(spark, fake_s3):
         _read(spark, fake_s3, prefix, partition_filter='{"status": "O"}')
         .select("k")
     ) == [(2,), (4,)]
+    assert not fake_s3.rejections
+
+
+class _Table:
+    """One snapshot table on either backend — a local directory or a
+    prefix on the fake S3 — with the out-of-band file operations the
+    tests below need, on paths relative to the table."""
+
+    def __init__(self, backend: str, tmp_path, srv, name: str):
+        self.srv = srv
+        self.local = backend == "local"
+        if self.local:
+            self.url, self.opts = str(tmp_path / name), None
+        else:
+            self.prefix = f"warehouse/{name}"
+            self.url = f"s3://{BUCKET}/{self.prefix}"
+            self.opts = {
+                k: v for k, v in _s3_opts(srv, self.prefix).items() if k != "path"
+            }
+
+    def files(self) -> dict[str, int]:
+        """Every file under the table: relative path → size."""
+        if self.local:
+            return {
+                os.path.relpath(os.path.join(d, n), self.url): os.path.getsize(
+                    os.path.join(d, n)
+                )
+                for d, _dirs, names in os.walk(self.url)
+                for n in names
+            }
+        listed = _client(self.srv).list_objects_sizes(self.prefix + "/")
+        return {k[len(self.prefix) + 1 :]: size for k, size in listed}
+
+    def age(self, rels, age_s: float) -> None:
+        t = time.time() - age_s
+        for rel in rels:
+            if self.local:
+                os.utime(os.path.join(self.url, rel), (t, t))
+            else:
+                self.srv.mtimes[f"{self.prefix}/{rel}"] = t
+
+    def put(self, rel: str, age_s: float = 0.0) -> None:
+        if self.local:
+            path = os.path.join(self.url, rel)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "wb") as f:
+                f.write(b"bytes")
+        else:
+            _client(self.srv).put_object(f"{self.prefix}/{rel}", b"bytes")
+        self.age([rel], age_s)
+
+    def remove(self, rel: str) -> None:
+        if self.local:
+            os.unlink(os.path.join(self.url, rel))
+        else:
+            _client(self.srv).delete_object(f"{self.prefix}/{rel}")
+
+
+@pytest.mark.parametrize("backend", ["local", "s3"])
+def test_vacuum_same_history_on_both_backends(spark, fake_s3, tmp_path, backend):
+    """One vacuum, one outcome on either backend: the same history
+    retires the same versions; an aged unreferenced data file and the
+    superseded group side file go, a young unreferenced data file stays
+    until ``claim_ttl_s=0``, foreign files stay, and the head reads the
+    same throughout."""
+    from tile_processor_spark.sources.snapshots import (
+        append_snapshot,
+        compact_manifest,
+        read_snapshot,
+        vacuum,
+        write_snapshot,
+    )
+
+    t = _Table(backend, tmp_path, fake_s3, "vacuum_both")
+    write_snapshot(spark.createDataFrame([(1,), (2,)], "k long"), t.url, s3_options=t.opts)
+    append_snapshot(spark.createDataFrame([(3,)], "k long"), t.url, s3_options=t.opts)
+    compact_manifest(t.url, s3_options=t.opts)  # v3, grouped
+    compact_manifest(t.url, s3_options=t.opts)  # v4 supersedes v3's side file
+    assert len([f for f in t.files() if f.startswith("groups/")]) == 2
+    t.age(t.files(), 7200)
+    young, aged = "data/young/part-young.parquet", "data/old/part-old.parquet"
+    foreign = {"data/old/notes.txt", "notes.txt"}
+    t.put(young)
+    t.put(aged, age_s=7200)
+    for rel in foreign:
+        t.put(rel, age_s=7200)
+
+    out = vacuum(t.url, keep_last=1, claim_ttl_s=3600, s3_options=t.opts)
+    assert out["retired_versions"] == [1, 2, 3]
+    assert out["kept_versions"] == [4]
+    left = t.files()
+    assert young in left and aged not in left
+    assert foreign <= set(left)
+    assert len([f for f in left if f.startswith("groups/")]) == 1
+    assert _rows(read_snapshot(spark, t.url, s3_options=t.opts)) == [(1,), (2,), (3,)]
+
+    out = vacuum(t.url, keep_last=1, claim_ttl_s=0, s3_options=t.opts)
+    assert out["retired_versions"] == [] and out["kept_versions"] == [4]
+    left = t.files()
+    assert young not in left and foreign <= set(left)
+    assert _rows(read_snapshot(spark, t.url, s3_options=t.opts)) == [(1,), (2,), (3,)]
+    assert not fake_s3.rejections
+
+
+@pytest.mark.parametrize("backend", ["local", "s3"])
+def test_history_bytes_sum_listed_sizes(spark, fake_s3, tmp_path, backend):
+    """``snapshot_history(include_bytes=True)`` totals the sizes of each
+    version's data files as the backend lists them, and reports None
+    once a referenced file is gone (or, on s3, when a manifest has no
+    table root to locate its files by)."""
+    from tile_processor_spark.sources.snapshots import (
+        append_snapshot,
+        snapshot_history,
+        write_snapshot,
+    )
+
+    def parquet():
+        return {f: n for f, n in t.files().items() if f.endswith(".parquet")}
+
+    t = _Table(backend, tmp_path, fake_s3, "history_bytes")
+    write_snapshot(spark.createDataFrame([(1,), (2,)], "k long"), t.url, s3_options=t.opts)
+    v1 = parquet()
+    append_snapshot(spark.createDataFrame([(3,)], "k long"), t.url, s3_options=t.opts)
+    v2 = parquet()
+    h = snapshot_history(t.url, s3_options=t.opts, include_bytes=True)
+    assert [e["n_bytes"] for e in h] == [sum(v1.values()), sum(v2.values())]
+
+    t.remove(sorted(set(v2) - set(v1))[0])  # a file only v2 references
+    h = snapshot_history(t.url, s3_options=t.opts, include_bytes=True)
+    assert [e["n_bytes"] for e in h] == [sum(v1.values()), None]
+    if not t.local:
+        c = _client(fake_s3)
+        key = f"{t.prefix}/manifest-v00000001.json"
+        m = json.loads(c.get_object(key))
+        del m["root"]
+        c.put_object(key, json.dumps(m).encode())
+        h = snapshot_history(t.url, s3_options=t.opts, include_bytes=True)
+        assert [e["n_bytes"] for e in h] == [None, None]
     assert not fake_s3.rejections

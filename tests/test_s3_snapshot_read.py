@@ -178,7 +178,7 @@ def test_s3_vacuum_pre_root_manifest_friendly_error(spark, fake_s3, mirrored):
     import json
 
     from tile_processor_spark.sources.s3_client import S3Client
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
 
     host, port = fake_s3.server_address
     c = S3Client(f"http://{host}:{port}", BUCKET, ACCESS, SECRET, region=REGION)
@@ -190,7 +190,7 @@ def test_s3_vacuum_pre_root_manifest_friendly_error(spark, fake_s3, mirrored):
     opts = {k: v for k, v in _s3_opts(fake_s3, "warehouse/s3tbl").items()
             if k != "path"}
     with pytest.raises(ValueError, match="root.*recommit|recommit"):
-        vacuum_store(f"s3://{BUCKET}/warehouse/s3tbl", opts, keep_last=1)
+        vacuum(f"s3://{BUCKET}/warehouse/s3tbl", keep_last=1, s3_options=opts)
     assert sorted(c.list_objects("warehouse/s3tbl/")) == keys_before
 
 
@@ -236,7 +236,7 @@ def test_s3_vacuum_store_reclaims_unreferenced(spark, fake_s3, mirrored):
     every retained-version object survive; the latest version reads
     identically after the sweep."""
     from tile_processor_spark.sources.s3_client import S3Client
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
 
     host, port = fake_s3.server_address
     c = S3Client(f"http://{host}:{port}", BUCKET, ACCESS, SECRET, region=REGION)
@@ -247,8 +247,8 @@ def test_s3_vacuum_store_reclaims_unreferenced(spark, fake_s3, mirrored):
     opts = {k: v for k, v in _s3_opts(fake_s3, "warehouse/s3tbl").items() if k != "path"}
     # claim_ttl_s=0 declares writer quiescence (everything here is
     # seconds old); the retention-window behavior has its own test
-    out = vacuum_store(
-        f"s3://{BUCKET}/warehouse/s3tbl", opts, keep_last=1, claim_ttl_s=0
+    out = vacuum(
+        f"s3://{BUCKET}/warehouse/s3tbl", keep_last=1, claim_ttl_s=0, s3_options=opts
     )
     assert out["retired_versions"] == [1]
     assert out["kept_versions"] == [2]
@@ -311,7 +311,7 @@ def test_s3_vacuum_store_retention_protects_inflight_append(spark, fake_s3, mirr
     import time
 
     from tile_processor_spark.sources.s3_client import S3Client
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
 
     host, port = fake_s3.server_address
     c = S3Client(f"http://{host}:{port}", BUCKET, ACCESS, SECRET, region=REGION)
@@ -322,14 +322,14 @@ def test_s3_vacuum_store_retention_protects_inflight_append(spark, fake_s3, mirr
     c.put_object(staged, b"staged delta bytes")
 
     opts = {k: v for k, v in _s3_opts(fake_s3, "warehouse/s3tbl").items() if k != "path"}
-    out = vacuum_store(f"s3://{BUCKET}/warehouse/s3tbl", opts, keep_last=2)
+    out = vacuum(f"s3://{BUCKET}/warehouse/s3tbl", keep_last=2, s3_options=opts)
     assert staged in c.list_objects("warehouse/s3tbl/"), "in-flight object reclaimed"
     assert out["files_removed"] == 0  # everything else referenced or young
 
     # age it past the window -> reclaimed on the next sweep
     fake_s3.mtimes[staged] = time.time() - 7200
-    out2 = vacuum_store(
-        f"s3://{BUCKET}/warehouse/s3tbl", opts, keep_last=2, claim_ttl_s=3600
+    out2 = vacuum(
+        f"s3://{BUCKET}/warehouse/s3tbl", keep_last=2, claim_ttl_s=3600, s3_options=opts
     )
     assert out2["files_removed"] == 1
     assert staged not in c.list_objects("warehouse/s3tbl/")
@@ -342,7 +342,7 @@ def test_s3_vacuum_store_sweeps_orphaned_multipart_uploads(fake_s3, mirrored):
     older than the retention window and leaves live ones alone."""
     import time
 
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
 
     fake_s3.uploads["orphan1"] = {
         "key": "warehouse/s3tbl/data/x/part-a.parquet",
@@ -360,8 +360,8 @@ def test_s3_vacuum_store_sweeps_orphaned_multipart_uploads(fake_s3, mirrored):
         "parts": {},
     }
     opts = {k: v for k, v in _s3_opts(fake_s3, "warehouse/s3tbl").items() if k != "path"}
-    out = vacuum_store(
-        f"s3://{BUCKET}/warehouse/s3tbl", opts, keep_last=2, claim_ttl_s=3600
+    out = vacuum(
+        f"s3://{BUCKET}/warehouse/s3tbl", keep_last=2, claim_ttl_s=3600, s3_options=opts
     )
     assert out["uploads_aborted"] == 1
     assert "orphan1" not in fake_s3.uploads
@@ -372,11 +372,11 @@ def test_s3_vacuum_store_sweeps_orphaned_multipart_uploads(fake_s3, mirrored):
 def test_s3_vacuum_store_refuses_keep_last_zero_without_force(fake_s3, mirrored):
     import pytest as _pytest
 
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
 
     opts = {k: v for k, v in _s3_opts(fake_s3, "warehouse/s3tbl").items() if k != "path"}
     with _pytest.raises(ValueError, match="force=True"):
-        vacuum_store(f"s3://{BUCKET}/warehouse/s3tbl", opts, keep_last=0)
+        vacuum(f"s3://{BUCKET}/warehouse/s3tbl", keep_last=0, s3_options=opts)
 
 
 def test_s3_stream_pre_root_manifest_refuses_with_guidance(spark, fake_s3, tmp_path):

@@ -275,7 +275,7 @@ def test_s3_aborted_objects_age_into_vacuum(spark, fake_s3):
     data/ prefix is always a reclaim candidate)."""
     import time
 
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
 
     prefix = "warehouse/native_orphans"
     _write(spark.createDataFrame([(1,)], "k long"), fake_s3, prefix, "overwrite")
@@ -283,11 +283,11 @@ def test_s3_aborted_objects_age_into_vacuum(spark, fake_s3):
     orphan = f"{prefix}/data/crashedsnap/part-orphan.parquet"
     c.put_object(orphan, b"orphaned bytes")
     fake_s3.mtimes[orphan] = time.time() - 7200
-    out = vacuum_store(
+    out = vacuum(
         f"s3://{BUCKET}/{prefix}",
-        {k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"},
         keep_last=2,
         claim_ttl_s=3600,
+        s3_options={k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"},
     )
     assert out["files_removed"] == 1
     assert orphan not in c.list_objects(prefix + "/")
@@ -303,7 +303,7 @@ def test_s3_stream_born_table_base_and_vacuum_scope(spark, fake_s3, tmp_path):
     a sibling one) and keeps the committed files and foreign objects."""
     import time
 
-    from tile_processor_spark.sources.snapshot_datasource import vacuum_store
+    from tile_processor_spark.sources.snapshots import vacuum
     from tile_processor_spark.sources.snapshots import append_snapshot
 
     src = str(tmp_path / "src")
@@ -342,11 +342,11 @@ def test_s3_stream_born_table_base_and_vacuum_scope(spark, fake_s3, tmp_path):
         c.put_object(key, b"bytes")
     for key in c.list_objects(prefix + "/"):
         fake_s3.mtimes[key] = time.time() - 7200
-    out = vacuum_store(
+    out = vacuum(
         f"s3://{BUCKET}/{prefix}",
-        {k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"},
         keep_last=head_v,
         claim_ttl_s=3600,
+        s3_options={k: v for k, v in _s3_opts(fake_s3, prefix).items() if k != "path"},
     )
     assert out["files_removed"] == len(orphans)
     left = set(c.list_objects(prefix + "/"))

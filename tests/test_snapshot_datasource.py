@@ -689,6 +689,27 @@ def test_connector_append_null_partition_value_raises(spark, tmp_path):
         ).save()
 
 
+@pytest.mark.parametrize("g_type", ["string", "int"])
+def test_connector_reads_null_partition_as_null(spark, tmp_path, g_type):
+    """A NULL partition value lands in Spark's
+    ``__HIVE_DEFAULT_PARTITION__`` directory; the connector reads it
+    back as a null of the committed type, exactly like read_snapshot
+    (not the directory string, and no cast failure for an int column)."""
+    register(spark)
+    tbl = str(tmp_path / "tbl")
+    g = "a" if g_type == "string" else 7
+    write_snapshot(
+        spark.createDataFrame([(1, g), (2, None)], f"k int, g {g_type}"),
+        tbl,
+        partition_by=["g"],
+    )
+    via_fn = read_snapshot(spark, tbl)
+    via_ds = _read(spark, tbl)
+    assert via_ds.schema == via_fn.schema
+    assert _rows(via_ds.select("k", "g")) == _rows(via_fn.select("k", "g"))
+    assert (2, None) in _rows(via_ds.select("k", "g"))
+
+
 def test_stream_commit_refuses_racing_schema_rewrite(spark, tmp_path):
     """ADVICE r11: the stream writer captures the committed schema at
     construction and passes it to commit_append, so a rewrite with a

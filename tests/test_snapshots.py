@@ -858,7 +858,10 @@ def test_snapshot_commit_shapes_are_written_once():
     connector is written once over the store's data plane: one batch
     writer, one stream writer, one commit message, one executor write
     body and one Arrow read body, with parquet data read only inside
-    ``snapshot_store.py`` and no backend test in any connector class."""
+    ``snapshot_store.py`` and no backend test in any connector class.
+    Vacuum is one function over the store, and neither it nor the
+    history tests the backend; the s3 object and upload listings are
+    reached only through the store."""
     import ast
     import pathlib
 
@@ -961,3 +964,35 @@ def test_snapshot_commit_shapes_are_written_once():
         "sources/snapshots.py:commit_append",
         "sources/snapshots.py:compact_manifest",
     ], commit_shapes
+    vacuums = sorted(
+        f"{f}:{fn.name}"
+        for f, tree in trees.items()
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name in {"vacuum", "vacuum_store"}
+    )
+    assert vacuums == ["sources/snapshots.py:vacuum"], vacuums
+    for fn in ast.walk(trees["sources/snapshots.py"]):
+        if not (isinstance(fn, ast.FunctionDef) and fn.name in {"vacuum", "snapshot_history"}):
+            continue
+        for n in ast.walk(fn):
+            assert not (isinstance(n, ast.Name) and n.id == "is_s3"), fn.name
+            assert not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "startswith"
+                and any(isinstance(a, ast.Constant) and a.value == "s3://" for a in n.args)
+            ), fn.name
+    # the client's own wrappers aside, only the store lists objects
+    # with their mtimes or lists multipart uploads
+    listers = sorted(
+        f
+        for f, tree in trees.items()
+        if f != "sources/s3_client.py"
+        and any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in {"list_objects_meta", "list_multipart_uploads"}
+            for n in ast.walk(tree)
+        )
+    )
+    assert listers == ["sources/snapshot_store.py"], listers

@@ -369,7 +369,7 @@ class S3BloomSidecar(S3Handle):
         """Best-effort reclaim of superseded sidecar versions, RETAINING
         the most recent one so a concurrent reader still on the
         previous version never pays a mid-job rebuild (same retention
-        idea as ``vacuum_store``; see ``_prunable_versions``)."""
+        idea as ``snapshots.vacuum``; see ``_prunable_versions``)."""
         names = [
             (k.rsplit("/", 1)[-1], k)
             for k in self.client().list_objects(self._key("state-v"))

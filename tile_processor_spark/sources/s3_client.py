@@ -590,7 +590,7 @@ class S3Client:
         """``(key, size, last_modified_epoch_s)`` triples under
         ``prefix`` — the same single ListObjectsV2 pass as
         ``list_objects_sizes`` now also carries each object's
-        LastModified, which ``vacuum_store``'s retention window needs
+        LastModified, which vacuum's retention window needs
         (an unreferenced-but-young object may be an in-flight append's
         staged data). ``None`` when the server omits the field —
         callers must treat that as TOO YOUNG to reclaim (never-delete
@@ -632,7 +632,7 @@ class S3Client:
         (ListMultipartUploads, key+upload-id marker pagination). A crash
         between CreateMultipartUpload and Complete/Abort leaves the
         uploaded parts invisible but BILLED until aborted —
-        ``vacuum_store`` sweeps aged ones through this listing."""
+        vacuum sweeps aged ones through this listing."""
         out: list[tuple[str, str, float | None]] = []
         key_marker: str | None = None
         id_marker: str | None = None

@@ -67,9 +67,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from tile_processor_spark.sources.snapshot_store import (  # noqa: F401 — S3SnapshotStore re-exported
-    _GROUPS_DIR,
     S3SnapshotStore,
-    _require_root,
     open_store,
 )
 from tile_processor_spark.sources.snapshots import (
@@ -81,134 +79,6 @@ from tile_processor_spark.sources.snapshots import (
 )
 
 FORMAT_NAME = "tps_snapshot"
-
-
-def vacuum_store(
-    path: str,
-    options: dict | None = None,
-    keep_last: int = 2,
-    claim_ttl_s: float = 86400.0,
-    force: bool = False,
-) -> dict:
-    """VACUUM for an S3-RESIDENT snapshot mirror: drop all but the last
-    ``keep_last`` manifests and delete data objects no retained
-    manifest references — the object-store twin of
-    ``snapshots.vacuum`` (whose local ``os.unlink`` calls never reach
-    the mirror). Same crash-safe ordering: retired MANIFESTS delete
-    first, then newly-unreferenced data keys — an interruption leaves
-    extra objects (harmless, re-vacuumable), never a manifest pointing
-    at deleted data.
-
-    ``claim_ttl_s`` is the retention window for unreferenced DATA keys
-    (Delta's VACUUM retention check): appends upload their data objects
-    BEFORE the manifest commit, so an unreferenced-but-young key may be
-    an in-flight append's staged data — reclaiming it would let the
-    append publish a manifest pointing at deleted objects. Only keys
-    whose LastModified (from the same single listing pass) is older
-    than the window are reclaimed; a missing LastModified counts as too
-    young (never-delete is sound, wrongly-delete is data loss). The
-    CONTRACT: ``claim_ttl_s`` must exceed the longest
-    staging-to-publish duration of any writer on the table — a commit
-    that outlasts the window re-opens the race. The 24 h default covers
-    multi-hour large-table writes; pass ``claim_ttl_s=0`` only under
-    declared writer quiescence.
-
-    Also sweeps ORPHANED MULTIPART UPLOADS under the table prefix older
-    than the same window (ListMultipartUploads + Abort): a writer crash
-    between CreateMultipartUpload and Complete/Abort leaves parts
-    invisible but billed forever.
-
-    Deletion scope is conservative: only retired manifest keys and
-    unreferenced keys under the table's data roots (every retained
-    manifest's ``base``/group side files stay). Keys the tool does not
-    recognize (sidecars, foreign objects under the prefix) are left
-    alone. Cost: one object listing + one upload listing + one manifest
-    read per version + one DELETE per reclaimed object.
-
-    ``keep_last=0`` retires EVERY version including the live head —
-    refused unless ``force=True``."""
-    import time as _time
-
-    if keep_last <= 0 and not force:
-        raise ValueError(
-            "vacuum_store(keep_last=0) retires every version including "
-            "the live head (the table becomes unreadable) — pass "
-            "force=True to destroy the mirror on purpose"
-        )
-    if not path.startswith("s3://"):
-        raise ValueError(f"vacuum_store is for s3:// tables (got {path!r}); use snapshots.vacuum")
-    store = open_store(path, options)
-    versions = store.versions()
-    kept = versions[-keep_last:] if keep_last > 0 else []
-    retired = [v for v in versions if v not in kept]
-    referenced: set[str] = set()
-    data_prefixes: set[str] = set()
-    for v in kept:
-        m = store.manifest(v)
-        root = _require_root(m, path)
-        files = _manifest_files(m, open_json=store.json_loader(root))
-        referenced |= {store.key_for(f, root) for f in files}
-        for g in m.get("groups") or []:
-            referenced.add(store.key_for(g["path"], root))
-        data_prefixes.add(store.key_for(m["base"], root).rstrip("/") + "/")
-    # retired manifests' data dirs are reclaim candidates too
-    for v in retired:
-        m = store.manifest(v)
-        root = _require_root(m, path)
-        data_prefixes.add(store.key_for(m["base"], root).rstrip("/") + "/")
-    # the table's own data/ prefix is always a candidate: s3-native
-    # appends stage under data/<uuid>/ prefixes no manifest's "base"
-    # covers, and a crashed/aborted write's objects must age into the
-    # sweep (the local vacuum's walk of data/ has the same scope)
-    data_prefixes.add(f"{store.prefix}/data/")
-    client = store.client()
-    removed_manifests = 0
-    for v in retired:  # manifests first (crash-safe ordering)
-        client.delete_object(f"{store.prefix}/manifest-v{v:08d}.json")
-        removed_manifests += 1
-    removed_files = 0
-    cutoff = _time.time() - claim_ttl_s
-    # group side objects (compactions and grouped appends) retire with their manifests, exactly like the local
-    # vacuum's groups sweep; the retention window guards an in-flight
-    # commit's freshly-written side objects
-    groups_prefix = f"{store.prefix}/{_GROUPS_DIR}/"
-    for key, _size, mtime in client.list_objects_meta(store.prefix + "/"):
-        if key in referenced:
-            continue
-        base = key.rsplit("/", 1)[-1]
-        if key.startswith(groups_prefix):
-            if not base.endswith(".json"):
-                continue
-        elif not any(key.startswith(p) for p in data_prefixes):
-            continue
-        elif not (
-            base.endswith(".parquet")
-            or base.startswith("_")
-            or base.startswith(".")
-        ):
-            # same filename scope as the local vacuum: foreign objects
-            # a user parked under the data prefix are not ours to
-            # delete (the docstring's conservative-scope promise)
-            continue
-        if mtime is None or mtime > cutoff:
-            continue  # in-flight-append grace: too young to reclaim
-        client.delete_object(key)
-        removed_files += 1
-    uploads_aborted = 0
-    for key, upload_id, initiated in client.list_multipart_uploads(
-        store.prefix + "/"
-    ):
-        if initiated is None or initiated > cutoff:
-            continue  # may be a live upload — leave it for a later sweep
-        client.abort_multipart_upload(key, upload_id)
-        uploads_aborted += 1
-    return {
-        "retired_versions": retired,
-        "kept_versions": kept,
-        "manifests_removed": removed_manifests,
-        "files_removed": removed_files,
-        "uploads_aborted": uploads_aborted,
-    }
 
 
 def _table_store(options: dict, what: str):
@@ -261,12 +131,13 @@ class _FileGroupPartition(InputPartition):
 def _read_arrow(store, schema: StructType, partition: _FileGroupPartition):
     """Executor body of both readers: each file's Arrow table in the
     committed schema, with Hive path values re-attached as constant
-    columns cast to the COMMITTED dtype."""
+    columns cast to the COMMITTED dtype (a ``__HIVE_DEFAULT_PARTITION__``
+    directory as a null, as Spark's own partition discovery reads it)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = to_arrow_schema(schema)
-    values = partition.part_values
+    values = {k: None if v == _HIVE_NULL else v for k, v in partition.part_values.items()}
     for f in partition.files:
         tbl = store.read_table(f)
         cols = [
@@ -333,11 +204,12 @@ class SnapshotReader(DataSourceReader):
             group: list[str] = []
             size = 0
             for f in sorted(flist):
-                if group and size + sizes[f] > target:
+                n = sizes.get(f, 0)
+                if group and size + n > target:
                     parts.append(_FileGroupPartition(group, dict(key)))
                     group, size = [], 0
                 group.append(f)
-                size += sizes[f]
+                size += n
             if group:
                 parts.append(_FileGroupPartition(group, dict(key)))
         return parts

@@ -29,9 +29,14 @@ writers and readers are written once over either backend:
   committed onto the table's tree (locally they are re-homed into the
   shared Hive tree; on s3 they stay where they were written);
 - ``locate`` maps a manifest path to what ``read_table`` reads, and
-  ``sizes`` gives those files' byte sizes for bin-packing.
+  ``sizes`` gives those files' byte sizes (bin-packing, history bytes).
 
-Vacuum and ``convert_to_shared_layout`` stay per backend.
+Vacuum's retention policy is written once (``snapshots.vacuum``); a
+store holds only what differs by backend: listing the ``data/`` and
+``groups/`` files with their mtimes (``sweep_candidates``), deleting a
+manifest (``retire``) or a file (``delete``), and its own staging
+leftovers (``reclaim_staging``). ``convert_to_shared_layout`` stays
+local.
 """
 
 from __future__ import annotations
@@ -45,6 +50,7 @@ import uuid
 from tile_processor_spark.sources.s3_client import S3Handle, put_if_absent
 
 _MANIFEST_PREFIX = "manifest-v"
+_DATA_DIR = "data"
 _GROUPS_DIR = "groups"
 
 
@@ -179,15 +185,62 @@ class LocalSnapshotStore:
         return out
 
     def locate(self, path: str, manifest: dict) -> str:
-        return path
+        # normalized, so a manifest path and the vacuum listing's spelling
+        # of the same file always compare equal
+        return os.path.abspath(path)
 
     def sizes(self, paths: list[str]) -> dict[str, int]:
-        return {p: os.path.getsize(p) for p in paths}
+        out = {}
+        for p in paths:
+            with contextlib.suppress(OSError):
+                out[p] = os.path.getsize(p)
+        return out
 
     def read_table(self, path: str):
         import pyarrow.parquet as pq
 
         return pq.read_table(path)
+
+    # -- vacuum -------------------------------------------------------
+
+    def sweep_candidates(self):
+        """``(top, path, mtime)`` for every file under ``data/`` and
+        ``groups/`` (``top`` names which); None when the table directory
+        was never created."""
+        if not os.path.isdir(self.root):
+            return None
+        out = []
+        for top in (_DATA_DIR, _GROUPS_DIR):
+            for d, _dirs, names in os.walk(os.path.join(self.root, top)):
+                for n in names:
+                    p = os.path.join(d, n)
+                    with contextlib.suppress(FileNotFoundError):  # gone since listed
+                        out.append((top, p, os.path.getmtime(p)))
+        return out
+
+    def retire(self, version: int) -> None:
+        os.unlink(_manifest_path(self.root, version))
+
+    delete = drop  # a manifest path is its own location here
+
+    def reclaim_staging(self, cutoff: float) -> tuple[int, int]:
+        """Stale ``.manifest.tmp.*`` files (a committer killed before its
+        publish; uuid-named, so never a live publish's) last modified at
+        or before ``cutoff``, and the directories under ``data/`` the
+        sweep left empty. Returns ``(files removed, uploads aborted)``."""
+        removed = 0
+        for n in os.listdir(self.root):
+            p = os.path.join(self.root, n)
+            with contextlib.suppress(FileNotFoundError):  # raced a committer
+                if n.startswith(".manifest.tmp.") and os.path.getmtime(p) <= cutoff:
+                    os.unlink(p)
+                    removed += 1
+        data = os.path.join(self.root, _DATA_DIR)
+        for d, _dirs, _names in os.walk(data, topdown=False):
+            if d != data:
+                with contextlib.suppress(OSError):  # not empty
+                    os.rmdir(d)
+        return removed, 0
 
 
 class S3SnapshotStore(S3Handle):
@@ -285,11 +338,6 @@ class S3SnapshotStore(S3Handle):
             )
         return f"{self.prefix}/{rel.replace(os.sep, '/')}"
 
-    def data_sizes(self) -> dict[str, int]:
-        """One listing pass over the table prefix → key→size map for
-        the planner's bin-packing."""
-        return dict(self.client().list_objects_sizes(self.prefix + "/"))
-
     def json_loader(self, root: str):
         def _load(local_path: str) -> dict:
             return json.loads(self.client().get_object(self.key_for(local_path, root)))
@@ -304,7 +352,8 @@ class S3SnapshotStore(S3Handle):
     def put_table(self, tbl, rel: str) -> str:
         """An unconditional PUT under a task-private uuid-named key: a
         speculated or retried task writes a fresh key, and the loser's
-        object stays invisible until ``vacuum_store`` reclaims it."""
+        object stays invisible until vacuum's retention sweep reclaims
+        it."""
         import io
 
         import pyarrow.parquet as pq
@@ -316,7 +365,7 @@ class S3SnapshotStore(S3Handle):
         return self.vpath(key)
 
     def drop(self, path: str) -> None:
-        # anything missed stays invisible and ages into vacuum_store
+        # anything missed stays invisible and ages into vacuum's sweep
         with contextlib.suppress(Exception):
             self.client().delete_object(self.key_for(path, self.root))
 
@@ -332,15 +381,50 @@ class S3SnapshotStore(S3Handle):
         return self.key_for(path, _require_root(manifest, str(self)))
 
     def sizes(self, keys: list[str]) -> dict[str, int]:
-        """Sizes from ONE listing pass (no per-object HEADs)."""
-        listed = self.data_sizes()
-        return {k: listed.get(k, 0) for k in keys}
+        """Sizes from ONE listing pass (no per-object HEADs); a key not
+        listed has no entry."""
+        listed = dict(self.client().list_objects_sizes(self.prefix + "/"))
+        return {k: listed[k] for k in keys if k in listed}
 
     def read_table(self, key: str):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         return pq.read_table(pa.BufferReader(self.client().get_object(key)))
+
+    # -- vacuum -------------------------------------------------------
+
+    def sweep_candidates(self):
+        """``(top, key, last_modified)`` for every object under
+        ``data/`` and ``groups/`` (``top`` names which), from ONE
+        listing pass; ``last_modified`` is None when the server omits
+        it."""
+        out = []
+        for key, _size, mtime in self.client().list_objects_meta(self.prefix + "/"):
+            top, sep, _rest = key[len(self.prefix) + 1 :].partition("/")
+            if sep and top in (_DATA_DIR, _GROUPS_DIR):
+                out.append((top, key, mtime))
+        return out
+
+    def retire(self, version: int) -> None:
+        self.client().delete_object(f"{self.prefix}/{_manifest_name(version)}")
+
+    def delete(self, key: str) -> None:
+        self.client().delete_object(key)
+
+    def reclaim_staging(self, cutoff: float) -> tuple[int, int]:
+        """Aborts the multipart uploads under the table prefix initiated
+        at or before ``cutoff``: a writer that crashed between
+        CreateMultipartUpload and Complete/Abort leaves parts invisible
+        but billed. An upload without an initiation time may be live and
+        stays. Returns ``(files removed, uploads aborted)``."""
+        client = self.client()
+        aborted = 0
+        for key, upload_id, initiated in client.list_multipart_uploads(self.prefix + "/"):
+            if initiated is not None and initiated <= cutoff:
+                client.abort_multipart_upload(key, upload_id)
+                aborted += 1
+        return 0, aborted
 
 
 def open_store(table_path, s3_options: dict | None = None):

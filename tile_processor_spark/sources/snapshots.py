@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from tile_processor_spark.session import local_frame
 from tile_processor_spark.sources.snapshot_store import (
+    _DATA_DIR,
     _GROUPS_DIR,
     _load_json,
     _manifest_path,
@@ -54,8 +55,6 @@ from tile_processor_spark.sources.snapshot_store import (
     list_versions,
     open_store,
 )
-
-_DATA_DIR = "data"
 
 #: marker embedded in every conflict error message so callers that see
 #: the error only through a serialization boundary (the Python
@@ -1286,37 +1285,41 @@ def vacuum(
     keep_last: int = 2,
     claim_ttl_s: float = 86400.0,
     force: bool = False,
+    s3_options: dict | None = None,
 ) -> dict:
-    """Drop all but the last ``keep_last`` manifests and delete data
-    files no retained manifest references (including crash orphans).
+    """Drop all but the last ``keep_last`` manifests and delete the data
+    files and group side files no retained manifest references
+    (including crash orphans), on a local or ``s3://`` table.
 
-    Safe order: retire manifests FIRST, then delete newly-unreferenced
-    files — a crash mid-vacuum leaves extra files (harmless), never a
-    manifest pointing at deleted data. Readers that already resolved a
-    retired version keep working until their files are reclaimed; the
-    retention window is the caller's grace-period knob (same contract
-    as Delta's VACUUM).
+    Safe order: the referenced set is built first (a store-resident
+    manifest without the table ``root`` raises the friendly
+    ``ValueError`` before anything is deleted), then manifests retire,
+    then newly-unreferenced files go — a crash mid-vacuum leaves extra
+    files (harmless, re-vacuumable), never a manifest pointing at
+    deleted data. Readers that already resolved a retired version keep
+    working until their files are reclaimed; the retention window is
+    the caller's grace-period knob (same contract as Delta's VACUUM).
 
     ``claim_ttl_s`` is the retention window for UNREFERENCED files of
-    every kind, data files included: ``commit_append`` writes its delta
-    files BEFORE publishing the manifest that references them, so an
-    unreferenced-but-young file may belong to an in-flight append — a
-    vacuum that reclaimed it would let the append commit a manifest
-    pointing at deleted data (permanent loss). Files are reclaimed only
-    after ``claim_ttl_s`` of mtime inactivity — Delta's VACUUM
-    retention check, here keyed to the commit window rather than the
-    reader window. The CONTRACT is therefore: ``claim_ttl_s`` must
-    exceed the longest staging-to-publish duration of any writer on
-    the table — a commit that outlasts the window re-opens the race.
-    The 24 h default covers multi-hour large-table writes; pass
-    ``claim_ttl_s=0`` only under declared writer quiescence (no commit
-    in flight anywhere).
+    every kind: appends write their files BEFORE publishing the
+    manifest that references them, so an unreferenced-but-young file
+    may belong to an in-flight append — reclaiming it would let the
+    append commit a manifest pointing at deleted data. A file is
+    reclaimed only when its mtime (s3: LastModified, from the same
+    single listing pass) is at or before ``now - claim_ttl_s``; a
+    missing mtime counts as too young. The CONTRACT: ``claim_ttl_s``
+    must exceed the longest staging-to-publish duration of any writer
+    on the table. The 24 h default covers multi-hour large-table
+    writes; pass ``claim_ttl_s=0`` only under declared writer
+    quiescence. The files are listed before the versions are read, so
+    a commit that lands in between has its files referenced.
 
-    Also reclaims stale ``.manifest.tmp.*`` staging files under the
-    same window: a committer that died hard (kill -9) before its
-    publish leaves its private tmp behind. Tmp files are
-    committer-private (uuid-named), so reclamation can never race a
-    live publish the way a shared marker could.
+    Scope is conservative: files under ``data/`` named ``*.parquet``,
+    ``_*`` or ``.*`` and ``*.json`` side files under ``groups/``;
+    anything else under the table (sidecars, foreign files) stays. The
+    same window also reclaims the store's staging leftovers: stale
+    ``.manifest.tmp.*`` files locally (counted in ``files_removed``),
+    aged multipart uploads on s3 (``uploads_aborted``).
 
     ``keep_last=0`` retires EVERY version including the live head —
     the table becomes unreadable. Refused unless ``force=True``."""
@@ -1326,88 +1329,42 @@ def vacuum(
             "live head (the table becomes unreadable) — pass force=True "
             "to destroy the table on purpose"
         )
-    table_path = os.path.abspath(table_path)
-    if not os.path.isdir(table_path):
+    store = open_store(table_path, s3_options)
+    cutoff = time.time() - claim_ttl_s
+    candidates = store.sweep_candidates()
+    if candidates is None:
         # a never-created table has nothing to vacuum (cron loops
         # sweep configured paths that may not exist yet)
         return {"retired_versions": [], "kept_versions": [], "files_removed": 0}
-    versions = list_versions(table_path)
-    claims_removed = 0
-    for n in sorted(os.listdir(table_path)):
-        if not n.startswith(".manifest.tmp."):
-            continue
-        p = os.path.join(table_path, n)
-        try:
-            if time.time() - os.path.getmtime(p) > claim_ttl_s:
-                os.unlink(p)
-                claims_removed += 1
-        except FileNotFoundError:
-            pass  # raced another vacuum / a finishing committer
-    retired = versions[:-keep_last] if keep_last > 0 else versions
-    kept = versions[len(retired) :]
+    versions = store.versions()
+    kept = versions[-keep_last:] if keep_last > 0 else []
+    retired = versions[: len(versions) - len(kept)]
     referenced: set[str] = set()
-    referenced_groups: set[str] = set()
     for v in kept:
-        # abspath both sides: manifests written by current code store
-        # absolute paths, but normalize anyway so a manifest with
-        # relative/symlinked spellings can never cause a live file to
-        # fail the membership test and be deleted.
-        man = _read_manifest(table_path, v)
-        referenced.update(os.path.abspath(p) for p in _manifest_files(man))
-        referenced_groups.update(
-            os.path.abspath(g["path"]) for g in man.get("groups", [])
-        )
+        m = store.manifest(v)
+        groups = [g["path"] for g in m.get("groups") or []]
+        for p in _manifest_files(m, open_json=store.loader(m)) + groups:
+            referenced.add(store.locate(p, m))
     for v in retired:
-        os.unlink(_manifest_path(table_path, v))
-
-    def _aged_out(p: str) -> bool:
-        # the in-flight-append guard: an unreferenced file younger than
-        # the retention window may be a staged delta whose manifest has
-        # not published yet — leave it (the next vacuum gets it if its
-        # commit never lands)
-        try:
-            return time.time() - os.path.getmtime(p) > claim_ttl_s
-        except FileNotFoundError:
-            return False  # raced a concurrent vacuum / finishing commit
-
+        store.retire(v)
     removed = 0
-    data_root = os.path.join(table_path, _DATA_DIR)
-    if os.path.isdir(data_root):
-        for snap in sorted(os.listdir(data_root)):
-            snap_dir = os.path.join(data_root, snap)
-            for root, _dirs, fnames in os.walk(snap_dir):
-                for n in fnames:
-                    p = os.path.abspath(os.path.join(root, n))
-                    if (
-                        p not in referenced
-                        and (
-                            n.endswith(".parquet")
-                            or n.startswith("_")
-                            or n.startswith(".")
-                        )
-                        and _aged_out(p)
-                    ):
-                        os.unlink(p)
-                        removed += 1
-            # bottom-up: partition subdirs empty out before their snap dir
-            for root, _dirs, _fnames in os.walk(snap_dir, topdown=False):
-                if not any(os.scandir(root)):
-                    os.rmdir(root)
-    # group side files (compact_manifest's manifest-list layout) are
-    # part of a version's manifest, so they retire with it; the same
-    # retention window guards an in-flight append's freshly-written
-    # delta groups (commit_append writes them before its manifest)
-    groups_root = os.path.join(table_path, _GROUPS_DIR)
-    if os.path.isdir(groups_root):
-        for n in sorted(os.listdir(groups_root)):
-            p = os.path.abspath(os.path.join(groups_root, n))
-            if n.endswith(".json") and p not in referenced_groups and _aged_out(p):
-                os.unlink(p)
-                removed += 1
+    for top, loc, mtime in candidates:
+        name = os.path.basename(loc)
+        in_scope = (
+            name.endswith(".json")
+            if top == _GROUPS_DIR
+            else name.endswith(".parquet") or name.startswith(("_", "."))
+        )
+        if in_scope and loc not in referenced and mtime is not None and mtime <= cutoff:
+            store.delete(loc)
+            removed += 1
+    tmps, uploads = store.reclaim_staging(cutoff)
     return {
         "retired_versions": retired,
         "kept_versions": kept,
-        "files_removed": removed + claims_removed,
+        "manifests_removed": len(retired),
+        "files_removed": removed + tmps,
+        "uploads_aborted": uploads,
     }
 
 
@@ -1495,38 +1452,25 @@ def snapshot_history(
     present.
 
     ``include_bytes=True`` adds ``n_bytes`` per version — total bytes
-    of the referenced data files, from filesystem metadata (local: one
-    stat per file; s3: ONE listing pass shared by every version, no
-    per-file HEADs). This opens grouped manifests' side objects (the
-    file lists live there), so the default stays the cheap
+    of the referenced data files, from ONE ``store.sizes`` call shared
+    by every version (local: one stat per distinct file; s3: one listing
+    pass, no per-file HEADs). This opens grouped manifests' side objects
+    (the file lists live there), so the default stays the cheap
     top-manifest-only path; ``n_bytes`` is None when any referenced
-    file's size is unknowable (sound: never a partial total read as a
-    full one)."""
+    file's size is unknowable — a missing file, or a store-resident
+    manifest without the table ``root`` (sound: never a partial total
+    read as a full one)."""
     store = open_store(table_path, s3_options)
     versions = store.versions()
-    is_s3 = table_path.startswith("s3://")
-    s3_sizes = store.data_sizes() if is_s3 and include_bytes else {}
 
-    def _size(f: str, m: dict) -> int | None:
-        if is_s3:
-            return s3_sizes.get(store.key_for(f, m["root"]))
+    def _locations(m: dict) -> list[str] | None:
         try:
-            return os.path.getsize(f)
-        except OSError:
+            return [store.locate(f, m) for f in _manifest_files(m, open_json=store.loader(m))]
+        except ValueError:  # not locatable: no table root recorded
             return None
-
-    def _version_bytes(m: dict) -> int | None:
-        if is_s3 and m.get("root") is None:
-            return None
-        total = 0
-        for f in _manifest_files(m, open_json=store.loader(m)):
-            sz = _size(f, m)
-            if sz is None:
-                return None
-            total += sz
-        return total
 
     out: list[dict] = []
+    located: list[list[str] | None] = []
     for v in versions:
         m = store.manifest(v)
         if "groups" in m:
@@ -1555,7 +1499,7 @@ def snapshot_history(
             "partition_by": list(m.get("partition_by") or []),
         }
         if include_bytes:
-            entry["n_bytes"] = _version_bytes(m)
+            located.append(_locations(m))
         for passthrough in (
             "compacted_from",
             "stream_batch_id",
@@ -1565,6 +1509,11 @@ def snapshot_history(
             if m.get(passthrough) is not None:
                 entry[passthrough] = m[passthrough]
         out.append(entry)
+    if include_bytes:
+        sizes = store.sizes(sorted({f for fs in located for f in fs or []}))
+        for e, fs in zip(out, located):
+            known = fs is not None and all(f in sizes for f in fs)
+            e["n_bytes"] = sum(sizes[f] for f in fs) if known else None
     return out
 
 
