@@ -233,6 +233,23 @@ def test_run_controller_extent_selection(spark, ahn_fixture, tmp_path):
     assert r2.exit_code != 0 and "selects no tiles" in r2.output
 
 
+def test_run_controller_tiles_with_extent_is_usage_error(spark, ahn_fixture, tmp_path):
+    # --extent selects the tiles "instead of listing TILES": both at once
+    # is refused, not resolved by silently dropping the listed tiles.
+    ext = tmp_path / "extent.geojson"
+    ext.write_text(json.dumps({
+        "type": "Polygon",
+        "coordinates": [[[1, 1], [9, 1], [9, 9], [1, 9], [1, 1]]],
+    }))
+    r = CliRunner().invoke(
+        main,
+        ["run-controller", "AHN", "Example", str(ahn_fixture), "t1",
+         "--extent", str(ext)],
+    )
+    assert r.exit_code == 2, r.output
+    assert "not both" in r.output
+
+
 def test_run_controller_unknown_worker_not_misreported(spark, ahn_fixture):
     # A KeyError raised INSIDE the run (unknown worker key) must surface
     # as its own error, not be misdiagnosed as a missing config frame.

@@ -379,8 +379,10 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "tile_processor_spark"
 
 def test_tile_run_rules_are_written_once():
     """The tiles request is decided in ``tiles.py`` alone, one sampler
-    reads ``/proc``, the subprocess worker has one launch, and no
-    orchestration function takes a ``tile_col``."""
+    reads ``/proc``, the subprocess worker has one launch, no
+    orchestration function takes a ``tile_col``, and the CLI and the
+    spatial gate rows select tiles and run the alpha-shape and TIN
+    kernels only through ``tiles.py`` and the registered workers."""
     trees = {p.relative_to(PKG).as_posix(): ast.parse(p.read_text()) for p in PKG.rglob("*.py")}
     sentinel = sorted(
         f for f, tree in trees.items() for n in ast.walk(tree)
@@ -401,3 +403,20 @@ def test_tile_run_rules_are_written_once():
         and "tile_col" in {a.arg for a in n.args.args + n.args.kwonlyargs}
     )
     assert not with_tile_col, with_tile_col
+
+    def called(f: str) -> set[str]:
+        return {ast.unparse(n.func) for n in ast.walk(trees[f]) if isinstance(n, ast.Call)}
+
+    assert not {c for c in called("cli.py") if c.split(".")[-1] in ("st_intersects", "st_rect")}
+    gate = "plans/spatial_gate.py"
+    gate_defs = {n.name for n in ast.walk(trees[gate]) if isinstance(n, ast.FunctionDef)}
+    assert not gate_defs & {"_version_border_tiles", "_pentagon_ray"}, gate_defs
+    copies = {"region_relate_join", "st_contains_point_ring", "tin.alpha_shape", "tin.tin_simplify"}
+    assert not called(gate) & copies, called(gate) & copies
+    tiles_refs = [
+        n for n in ast.walk(trees["pipeline/tiles.py"])
+        if (isinstance(n, ast.Name) and n.id == "st_contains_point")
+        or (isinstance(n, ast.Attribute) and n.attr == "st_contains_point")
+        or (isinstance(n, ast.alias) and n.name == "st_contains_point")
+    ]
+    assert not tiles_refs, [ast.dump(n) for n in tiles_refs]

@@ -33,16 +33,25 @@ def test_plan_carries_fixture_coalesce(spark, tmp_path):
 
 def test_narrowed_result_identical_to_wide(spark, tmp_path):
     from tile_processor_spark.plans.spatial_gate import (
-        _version_border_tiles,
         elevation_tiles,
         spatial_version_boundary_region,
         tile_grid,
     )
     from tile_processor_spark.spatial.join import region_relate_join
 
-    # the pre-narrowing formulation, inline (no coalesce anywhere)
+    # the pre-narrowing formulation, inline (no coalesce anywhere); the
+    # border is a cross-version bbox self-join written here, so this
+    # reference does not share the query's code
     elev = elevation_tiles(spark)
-    border = _version_border_tiles(spark)
+    a_, b_ = elev.alias("a"), elev.alias("b")
+    border = a_.join(
+        b_,
+        (F.col("a.version") != F.col("b.version"))
+        & (F.col("a.xmin") <= F.col("b.xmax"))
+        & (F.col("b.xmin") <= F.col("a.xmax"))
+        & (F.col("a.ymin") <= F.col("b.ymax"))
+        & (F.col("b.ymin") <= F.col("a.ymax")),
+    ).select(F.col("a.elev_id").alias("elev_id")).distinct()
     nb = elev.join(border, "elev_id", "left_anti")
     regions = nb.groupBy("version").agg(
         F.collect_list(F.array("xmin", "ymin", "xmax", "ymax")).alias("rects")

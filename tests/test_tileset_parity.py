@@ -15,11 +15,12 @@ Reference expectations (tests/test_tiles.py:144-166, 183-207):
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from tile_processor_spark.pipeline.tiles import AhnTileSet, TileSet
-from tile_processor_spark.spatial import wkb
+from tile_processor_spark.spatial import kernel, wkb
 from tile_processor_spark.spatial.join import points_in_polygons
 from tile_processor_spark.spatial.udfs import st_rect
 
@@ -64,6 +65,40 @@ def test_within_extent_different_grid(spark, features):
     assigned = _assign(features, grid)
     got = {r.tile_id for r in TileSet(grid).with_extent(assigned, EXTENT).collect()}
     assert got == {"u2", "u5"}
+
+
+# exterior ring over most of the 4×4 domain with a square hole over its
+# middle four cells (rings as GeoJSON gives them: closed, hole CW)
+HOLED = [
+    [[0.2, 0.2], [3.8, 0.2], [3.8, 3.8], [0.2, 3.8], [0.2, 0.2]],
+    [[1.2, 1.2], [1.2, 2.8], [2.8, 2.8], [2.8, 1.2], [1.2, 1.2]],
+]
+
+
+def test_within_extent_excludes_hole(spark, features):
+    grid = _grid(spark, 4, 4, 1.0, 1.0, lambda r, c: f"25gn1_{r * 4 + c + 1}")
+    assigned = _assign(features, grid)
+    extent = wkb.polygon_wkb([np.asarray(r) for r in HOLED])
+    got = {r.tile_id for r in TileSet(grid).with_extent(assigned, extent).collect()}
+    # the four middle tiles have their only feature inside the hole
+    assert got == {f"25gn1_{n}" for n in range(1, 17)} - {"25gn1_6", "25gn1_7", "25gn1_10", "25gn1_11"}
+    pts = assigned.select("x", "y", "tile_id").toPandas()
+    inside = kernel.points_in_polygon(
+        wkb.parse_polygon(extent), pts["x"].to_numpy(), pts["y"].to_numpy()
+    )
+    assert got == set(pts["tile_id"][inside])
+
+
+def test_within_extent_plans_no_python_udf(spark):
+    features = spark.createDataFrame(
+        [(f"25gn1_{r * 4 + c + 1}", c + 0.5, r + 0.5) for r in range(4) for c in range(4)],
+        "tile_id string, x double, y double",
+    )
+    extent = wkb.polygon_wkb([np.asarray(r) for r in HOLED])
+    df = TileSet(features).with_extent(features, extent)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert df.count() == 12
 
 
 def test_tiles_in_index_parity(spark):

@@ -167,6 +167,8 @@ def run_controller_cmd(
         list_controllers,
     )
 
+    if tiles and extent_path:
+        raise click.UsageError("give TILES or --extent, not both")
     resolved = {k.lower(): k for k in list_controllers()}.get(controller_key.lower())
     if resolved is None:
         raise click.ClickException(
@@ -188,10 +190,8 @@ def run_controller_cmd(
 
     tile_list = list(tiles) or None
     if extent_path:
-        from pyspark.sql import functions as F
-
         from tile_processor_spark.pipeline.extent import read_extent
-        from tile_processor_spark.spatial.udfs import st_intersects, st_rect
+        from tile_processor_spark.pipeline.tiles import TileSet
 
         if "tile_index" not in frames:
             raise click.ClickException(
@@ -199,22 +199,7 @@ def run_controller_cmd(
                 "xmin/ymin/xmax/ymax columns) in the configuration"
             )
         _, ewkb, _ = read_extent(extent_path)
-        from tile_processor_spark.spatial import wkb as _wkb
-
-        x0, y0, x1, y1 = _wkb.polygon_bbox(ewkb)
-        ti = frames["tile_index"]
-        chosen = (
-            ti.filter(
-                (F.col("xmin") <= x1) & (F.col("xmax") >= x0)
-                & (F.col("ymin") <= y1) & (F.col("ymax") >= y0)
-            )
-            .filter(
-                st_intersects(
-                    st_rect("xmin", "ymin", "xmax", "ymax"), F.lit(ewkb)
-                )
-            )
-            .select("tile_id")
-        )
+        chosen = TileSet(frames["tile_index"]).intersecting_extent(ewkb)
         # tile set is dimension-sized by construction (the reference also
         # materializes the selected id list on the driver)
         tile_list = sorted(r.tile_id for r in chosen.collect())

@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tile_processor_spark.session import local_frame
+from tile_processor_spark.session import local_frame, session_cached
+from tile_processor_spark.spatial import wkb as _wkb
 
 log = logging.getLogger(__name__)
 
@@ -31,11 +32,29 @@ def requests_all(tiles: list[str] | None) -> bool:
     return not tiles or list(tiles) == ["all"]
 
 
+@session_cached
+def _extent_contains(spark: SparkSession, extent_wkb: bytes) -> Column:
+    """The extent's point test on ``x``/``y``: inside the exterior ring
+    AND NOT inside any hole, each ring a compiled ray cast
+    (``st_contains_point_ring``, the same booleans as
+    ``kernel.points_in_polygon``). A constant expression tree costs a
+    py4j round trip per node, so it is built once per session and
+    extent."""
+    from tile_processor_spark.spatial.join import st_contains_point_ring
+
+    exterior, *holes = _wkb.parse_polygon(extent_wkb)
+    inside = st_contains_point_ring(exterior, F.col("x"), F.col("y"))
+    for hole in holes:
+        inside = inside & ~st_contains_point_ring(hole, F.col("x"), F.col("y"))
+    return inside
+
+
 class TileSet:
     """Immutable wrapper over a tile-index DataFrame (``tile_id`` column).
 
     Reference parity: ``configure(tiles=...)`` → :meth:`configure`,
-    ``extent=poly`` → :meth:`with_extent`; the ``reorder`` shuffle
+    ``extent=poly`` → :meth:`with_extent` (features within) or
+    :meth:`intersecting_extent` (tiles touching); the ``reorder`` shuffle
     (tileconfig.py:128-140) is :meth:`reorder`.
     """
 
@@ -77,19 +96,34 @@ class TileSet:
     def with_extent(self, features: DataFrame, extent_wkb: bytes) -> DataFrame:
         """within_extent (tileconfig.py:128-194): DISTINCT tiles whose
         features (point x/y + tile_id columns) fall within the extent
-        polygon. bbox prefilter keeps the exact UDF off pruned rows."""
-        from tile_processor_spark.spatial import wkb as _wkb
-        from tile_processor_spark.spatial.udfs import st_contains_point
-
+        polygon. A bbox prefilter, then the exact ray cast as Catalyst
+        expressions (:func:`_extent_contains`): no Python UDF."""
         x0, y0, x1, y1 = _wkb.polygon_bbox(extent_wkb)
         return (
             features.filter(
                 (F.col("x") >= x0) & (F.col("x") <= x1)
                 & (F.col("y") >= y0) & (F.col("y") <= y1)
             )
-            .filter(st_contains_point(F.lit(extent_wkb), F.col("x"), F.col("y")))
+            .filter(_extent_contains(features.sparkSession, extent_wkb))
             .select("tile_id")
             .distinct()
+        )
+
+    def intersecting_extent(self, extent_wkb: bytes) -> DataFrame:
+        """within_extent's intersects mode (tileconfig.py:187-193): tiles
+        of the index (xmin/ymin/xmax/ymax columns) whose bbox rectangle
+        ST_Intersects the extent polygon, boundary touch included. A bbox
+        prefilter keeps the exact polygon test off pruned tiles."""
+        from tile_processor_spark.spatial.udfs import st_intersects, st_rect
+
+        x0, y0, x1, y1 = _wkb.polygon_bbox(extent_wkb)
+        return (
+            self.index.filter(
+                (F.col("xmin") <= x1) & (F.col("xmax") >= x0)
+                & (F.col("ymin") <= y1) & (F.col("ymax") >= y0)
+            )
+            .filter(st_intersects(st_rect("xmin", "ymin", "xmax", "ymax"), F.lit(extent_wkb)))
+            .select("tile_id")
         )
 
     @staticmethod

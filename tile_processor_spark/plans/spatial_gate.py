@@ -20,28 +20,34 @@ UDF predicates, grid-bucketed spatial joins — while the DuckDB oracle
 verifies with plain arithmetic (floor division, half-plane tests,
 interval overlap, unit-cell counting). Reference parity per query in the
 docstrings.
+
+Rows that check a user-facing rule call the one implementation of it, so
+the oracle checks the code users run: the extent rows call
+``pipeline.tiles.TileSet`` (``with_extent``, ``intersecting_extent``),
+the version rows call ``AhnTileSet`` (``versions``, ``version_boundary``,
+``version_not_boundary``; the elevation fixture's ``elev_id`` is its
+``tile_id``), and the alpha-shape and TIN rows run the registered
+``AlphaShape`` and ``TIN`` workers per tile group.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from tile_processor_spark.pipeline.tiles import AhnTileSet, TileSet
+from tile_processor_spark.pipeline.workers import get_worker
 from tile_processor_spark.plans import _tin_oracle_values as _TIN_VALUES
 from tile_processor_spark.plans.registry import register
 from tile_processor_spark.plans.relational import dsum
 from tile_processor_spark.session import session_cached
 from tile_processor_spark.sources.tables import load_table
 from tile_processor_spark.spatial import kernel, wkb
-from tile_processor_spark.spatial.join import (
-    bbox_join,
-    points_in_polygons,
-    st_contains_point_ring,
-)
-from tile_processor_spark.spatial.udfs import st_contains_point, st_intersects, st_rect
+from tile_processor_spark.spatial.join import bbox_join, points_in_polygons
+from tile_processor_spark.spatial.udfs import st_rect
 
 # --- shared synthetic-geometry definitions (Spark + SQL must agree) -------
 
@@ -49,7 +55,6 @@ PENTAGON = np.array(
     [[150.0, 50.0], [850.0, 150.0], [900.0, 700.0], [500.0, 950.0], [100.0, 600.0]]
 )  # CCW convex
 PENTAGON_WKB = wkb.polygon_wkb([PENTAGON])
-PENTAGON_BBOX = (100.0, 50.0, 900.0, 950.0)
 
 PTS_SQL = """
   SELECT c_custkey AS pk,
@@ -105,8 +110,7 @@ def synthetic_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The fixture frames and the pentagon ray-cast Column are session-cached
-# constructed plans: they are pure literals, so re-running a builder per
+# The fixture frames are session-cached constructed plans: they are pure literals, so re-running a builder per
 # query invocation only re-pays py4j round trips and analyzer passes —
 # measured ~40-80 ms per spatial query in the round-17 construction
 # profile. NOT result caching: every action still computes the rows.
@@ -144,12 +148,18 @@ def elevation_tiles(spark: SparkSession) -> DataFrame:
     )
 
 
-# The compiled ray-cast predicate: a constant expression tree (~40 py4j
-# round trips to build). A Column is an unbound expression, reusable
-# across plans.
-@session_cached
-def _pentagon_ray(spark: SparkSession) -> Column:
-    return st_contains_point_ring(PENTAGON, F.col("x"), F.col("y"))
+def _elevation_tileset(elev: DataFrame, **kw) -> AhnTileSet:
+    """``AhnTileSet`` over an elevation fixture frame, its ``elev_id``
+    as the index's ``tile_id``."""
+    return AhnTileSet(elev.withColumnRenamed("elev_id", "tile_id"), **kw)
+
+
+def _per_tile_worker(pts: DataFrame, worker_key: str, config: dict, schema: str) -> DataFrame:
+    """The registered worker's output rows, one call per tile group."""
+    fn = get_worker(worker_key)
+    return pts.groupBy("tile_id").applyInPandas(
+        lambda pdf: fn(str(pdf["tile_id"].iloc[0]), pdf, config), schema
+    )
 
 
 # --------------------------------------------------------------------------
@@ -187,24 +197,16 @@ def spatial_point_in_tile_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "within_extent (tileconfig.py:128-194; test pins "
         "tests/test_tiles.py:144-166): DISTINCT tiles whose features lie "
-        "ST_Within an extent polygon. Engine: bbox prefilter → exact "
-        "ray-cast against the broadcast pentagon literal → tile join → "
-        "distinct."
+        "ST_Within an extent polygon. Engine: TileSet.with_extent over the "
+        "point-in-tile join — bbox prefilter → exact ray cast compiled "
+        "from the pentagon literal → distinct."
     ),
     tags=("spatial", "filter", "headline"),
 )
 def spatial_within_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = synthetic_points(spark, sf_dir)
-    x0, y0, x1, y1 = PENTAGON_BBOX
-    inside = pts.filter(
-        (F.col("x") >= x0) & (F.col("x") <= x1) & (F.col("y") >= y0) & (F.col("y") <= y1)
-    ).filter(_pentagon_ray(spark))
     grid = tile_grid(spark)
-    return (
-        points_in_polygons(inside, grid, cell_size=80.0, rects=True)
-        .select("tile_id")
-        .distinct()
-    )
+    features = points_in_polygons(synthetic_points(spark, sf_dir), grid, cell_size=80.0, rects=True)
+    return TileSet(grid).with_extent(features, PENTAGON_WKB)
 
 
 @register(
@@ -225,8 +227,10 @@ def spatial_within_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "P6/J4 boundary-mode selection (tileconfig.py:187-193): tiles whose "
-        "polygon ST_Intersects the extent. Engine: exact polygon×polygon "
-        "kernel (vertex containment + segment crossing). Oracle: convex "
+        "polygon ST_Intersects the extent. Engine: "
+        "TileSet.intersecting_extent — bbox prefilter → exact "
+        "polygon×polygon kernel (vertex containment + segment crossing). "
+        "Oracle: convex "
         "case decomposition — a pentagon vertex inside the tile OR a tile "
         "corner inside the pentagon (valid because the pentagon's edges "
         "are long relative to the 100-unit tiles)."
@@ -234,12 +238,7 @@ def spatial_within_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("spatial", "filter"),
 )
 def spatial_tiles_intersecting_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    grid = tile_grid(spark)
-    x0, y0, x1, y1 = PENTAGON_BBOX
-    pre = grid.filter(
-        (F.col("xmin") <= x1) & (F.col("xmax") >= x0) & (F.col("ymin") <= y1) & (F.col("ymax") >= y0)
-    )
-    return pre.filter(st_intersects(F.col("geom"), F.lit(PENTAGON_WKB))).select("tile_id")
+    return TileSet(tile_grid(spark)).intersecting_extent(PENTAGON_WKB)
 
 
 @register(
@@ -376,23 +375,6 @@ BORDER_SQL = """
 """
 
 
-def _version_border_tiles(spark: SparkSession) -> DataFrame:
-    """Self bbox-join of the elevation index across versions. The index is
-    dimension-sized → broadcast nested-loop with pure column predicates
-    (no UDF, stays in codegen)."""
-    e = elevation_tiles(spark)
-    a, b = e.alias("a"), e.alias("b")
-    pairs = a.join(
-        F.broadcast(b),
-        (F.col("a.version") != F.col("b.version"))
-        & (F.col("a.xmin") <= F.col("b.xmax"))
-        & (F.col("b.xmin") <= F.col("a.xmax"))
-        & (F.col("a.ymin") <= F.col("b.ymax"))
-        & (F.col("b.ymin") <= F.col("a.ymax")),
-    )
-    return pairs.select(F.col("a.elev_id").alias("elev_id")).distinct()
-
-
 @register(
     "spatial_versions",
     oracle=f"""
@@ -401,13 +383,12 @@ def _version_border_tiles(spark: SparkSession) -> DataFrame:
     """,
     doc=(
         "versions() (A2, tileconfig.py:500-523): DISTINCT AHN versions in "
-        "the elevation tile index — the user-facing TileSet.versions() API "
-        "surface."
+        "the elevation tile index, through AhnTileSet.versions()."
     ),
     tags=("spatial", "projection"),
 )
 def spatial_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return elevation_tiles(spark).select("version").distinct()
+    return _elevation_tileset(elevation_tiles(spark)).versions()
 
 
 @register(
@@ -420,13 +401,15 @@ def spatial_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "version_boundary() (tileconfig.py:524-541; pinned by reference "
         "tests/test_tiles.py:274-289): elevation tiles on the boundary of "
         "two AHN versions. The reference reads a precomputed borders "
-        "table; the engine derives it with a cross-version self "
-        "bbox-join — broadcast, predicate-only, codegen-friendly."
+        "table; AhnTileSet.version_boundary() derives it with a "
+        "cross-version self bbox-join — broadcast, predicate-only, "
+        "codegen-friendly."
     ),
     tags=("spatial", "join"),
 )
 def spatial_version_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _version_border_tiles(spark)
+    boundary = _elevation_tileset(elevation_tiles(spark)).version_boundary()
+    return boundary.withColumnRenamed("tile_id", "elev_id")
 
 
 @register(
@@ -601,9 +584,9 @@ def spatial_version_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tileconfig.py:565-598; pinned by tests/test_tiles.py:291-313): "
         "dissolve non-border elevation tiles per AHN version, then join "
         "feature tiles on ST_Relate(region, tile, '212101212') OR "
-        "ST_Covers(region, tile), array_agg per version. Engine: real "
-        "DE-9IM kernel (kernel.rect_union_de9im — the dissolve is "
-        "implicit in the covered-cell model, never materialized) applied "
+        "ST_Covers(region, tile), array_agg per version. Engine: "
+        "AhnTileSet.version_not_boundary — real DE-9IM kernel "
+        "(kernel.rect_union_de9im — the dissolve is implicit in the covered-cell model, never materialized) applied "
         "via Arrow-batched pandas UDF over a broadcast per-version rect "
         "list. Oracle: exact unit-cell/unit-edge DE-9IM reconstruction "
         "(integer coordinates make every matrix entry a finite check)."
@@ -611,8 +594,6 @@ def spatial_version_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("spatial", "join", "relate", "headline"),
 )
 def spatial_version_boundary_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tile_processor_spark.spatial.join import region_relate_join
-
     # Both inputs are FIXED dimension frames (100 rows each, forever):
     # left at the session default they fan every tiny stage — and the
     # Arrow relate batch — out to cluster width (32 tasks of ~3 rows
@@ -622,13 +603,8 @@ def spatial_version_boundary_region(spark: SparkSession, sf_dir: str) -> DataFra
     # 0.534 → 0.399 s min-of-5 (−25%), identical rows. Not a local
     # tuning knob — a 100-row frame never warrants wide fan-out.
     elev = elevation_tiles(spark).coalesce(2)
-    border = _version_border_tiles(spark)
-    nb = elev.join(border, "elev_id", "left_anti")
-    regions = nb.groupBy("version").agg(
-        F.collect_list(F.array("xmin", "ymin", "xmax", "ymax")).alias("rects")
-    )
     grid = tile_grid(spark).drop("geom").coalesce(2)
-    matched = region_relate_join(grid, regions, pattern="212101212", covers=True)
+    matched = _elevation_tileset(elev, feature_index=grid).version_not_boundary()
     return matched.groupBy("version").agg(
         F.array_join(F.array_sort(F.collect_list("tile_id")), ",").alias("tiles"),
         F.count(F.lit(1)).alias("n_tiles"),
@@ -866,15 +842,14 @@ def tile_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "synthetic points — circumradius-filtered Delaunay triangles, "
         "exact area/perimeter/boundary-edge stats. Engine: arithmetic "
         "tile assignment (stays in codegen) → applyInPandas over tile "
-        "groups → numpy Bowyer-Watson kernel (spatial/tin.py). Per-tile "
+        "groups → the registered AlphaShape worker (numpy Bowyer-Watson "
+        "kernel, spatial/tin.py). Per-tile "
         "parallelism is the scale model, exactly like the reference's "
         "per-tile worker fan-out."
     ),
     tags=("spatial", "tin", "worker"),
 )
 def spatial_alpha_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tile_processor_spark.spatial import tin
-
     # synthetic_points puts every point on ONE modular line
     # (y ≡ α·x mod 1000) — fine for bbox/containment queries, but all
     # Delaunay triangles over it are collinear slivers (r² = inf), which
@@ -906,15 +881,10 @@ def spatial_alpha_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-    def _alpha(pdf: pd.DataFrame) -> pd.DataFrame:
-        stats = tin.alpha_shape(pdf[["x", "y"]].to_numpy(), r_max=25.0)
-        return pd.DataFrame(
-            {"tile_id": [str(pdf["tile_id"].iloc[0])], **{k: [v] for k, v in stats.items()}}
-        )
-
-    return pts.groupBy("tile_id").applyInPandas(
-        _alpha,
+    return _per_tile_worker(
+        pts,
+        "AlphaShape",
+        {"r_max": 25.0},
         "tile_id string, n_triangles long, area double, n_boundary_edges long, perimeter double",
     )
 
@@ -931,14 +901,13 @@ def spatial_alpha_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         "simplification_tinsimp, reference worker.py:288-293): per tile, "
         "greedy-insertion TIN over (x, y, z=acctbal) until max vertical "
         "error ≤ 5.0; reports selected-vertex count, achieved error, "
-        "triangle count. Engine: same per-tile applyInPandas fan-out as "
-        "every worker (spatial/tin.py kernel, pinned by tests/test_tin.py)."
+        "triangle count. Engine: the registered TIN worker in the same "
+        "per-tile applyInPandas fan-out as every worker (spatial/tin.py "
+        "kernel, pinned by tests/test_tin.py)."
     ),
     tags=("spatial", "tin", "worker"),
 )
 def spatial_tin_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tile_processor_spark.spatial import tin
-
     # z is custkey-derived (not acctbal): the literal-VALUES oracle is then
     # a pure function of the custkey set, immune to value-column refreshes
     # of the testdata (the driver regenerated events in round 3; this keeps
@@ -954,18 +923,11 @@ def spatial_tin_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-    def _simp(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = pdf.sort_values(["x", "y"], kind="mergesort")[["x", "y", "z"]].to_numpy(
-            dtype=float
-        )
-        res = tin.tin_simplify(p, max_error=5.0, max_points=60)
-        return pd.DataFrame(
-            {"tile_id": [str(pdf["tile_id"].iloc[0])], **{k: [v] for k, v in res.items()}}
-        )
-
-    return pts.groupBy("tile_id").applyInPandas(
-        _simp, "tile_id string, n_selected long, max_error double, n_triangles long"
+    return _per_tile_worker(
+        pts,
+        "TIN",
+        {"max_error": 5.0, "max_points": 60},
+        "tile_id string, n_selected long, max_error double, n_triangles long",
     )
 
 

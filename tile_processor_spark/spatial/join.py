@@ -41,7 +41,6 @@ def points_in_polygons(
     x: str = "x",
     y: str = "y",
     geom: str = "geom",
-    exact: bool = True,
     rects: bool = False,
 ) -> DataFrame:
     """Inner-join points to the polygons containing them.
@@ -68,7 +67,7 @@ def points_in_polygons(
         polys.withColumn("_cx", F.explode(_cells_seq(F.col("xmin"), F.col("xmax"), cell_size)))
         .withColumn("_cy", F.explode(_cells_seq(F.col("ymin"), F.col("ymax"), cell_size)))
     )
-    if rects and exact:
+    if rects:
         joined = p.join(g, ["_cx", "_cy"]).filter(
             (F.col(x) >= F.col("xmin"))
             & (F.col(x) < F.col("xmax"))
@@ -81,9 +80,7 @@ def points_in_polygons(
         & (F.col(x) <= F.col("xmax"))
         & (F.col(y) >= F.col("ymin"))
         & (F.col(y) <= F.col("ymax"))
-    )
-    if exact:
-        joined = joined.filter(st_contains_point(F.col(geom), F.col(x), F.col(y)))
+    ).filter(st_contains_point(F.col(geom), F.col(x), F.col(y)))
     return joined.drop("_cx", "_cy", "xmin", "ymin", "xmax", "ymax")
 
 
