@@ -3,9 +3,11 @@
 Local-mode defaults follow the test/bench environment (single JVM,
 ``local[$SPARK_GRAFT_CPUS]``); on a real cluster every setting here is
 still sane — AQE on, Arrow on, shuffle partitions sized explicitly.
-``session_cached`` holds state built for one SparkContext (plans,
-checkpoints, UDFs) until that context's application is gone, and
-``local_frame`` is the one way to build a small frame from Python rows.
+A local driver JVM gets a host-sized heap and a JIT policy that leaves
+C2 to code that stays hot (``LOCAL_JIT_OPTIONS``). ``session_cached``
+holds state built for one SparkContext (plans, checkpoints, UDFs) until
+that context's application is gone, and ``local_frame`` is the one way
+to build a small frame from Python rows.
 """
 
 from __future__ import annotations
@@ -55,6 +57,22 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+#: HotSpot tier-4 thresholds at three times JDK 17's 5000 / 600 / 15000 /
+#: 40000; see ``get_spark``.
+LOCAL_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
+)
+
+
+def host_driver_memory() -> str:
+    """Local-mode driver memory: a quarter of this host's RAM in whole
+    GiB, at least 2g and at most 48g."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{max(2, min(48, kb // (4 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "tile_processor_spark",
     master: str | None = None,
@@ -66,6 +84,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     when no cluster master is configured. ``shuffle_partitions`` defaults
     to the local core count — on a real cluster pass ~2-3x total cores.
+    A local master also gets driver memory (``$SPARK_GRAFT_DRIVER_MEM``,
+    else ``host_driver_memory()``), the JIT policy and RAM-backed scratch;
+    ``extra_conf`` overrides any of them.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -77,7 +98,25 @@ def get_spark(
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
-        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        conf.setdefault(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory()
+        )
+        # JIT policy: HotSpot's tier-4 (C2) thresholds x3, tier 3 (C1) as
+        # is. Many small many-stage plans keep generated and planner code
+        # hot only briefly; with JDK 17's defaults C2 compiled it anyway,
+        # and its compiler threads held 14.3 of the 23.6 CPU-s of the first
+        # warm headline pass (executor task threads 2.0). With x3
+        # (tools/ab.py, 10 pairs, 4 cores) headline pass_cpu_s fell from
+        # 18.6 to 13.0 CPU-s (10/10) and cold_cpu_s from 48.7 to 43.7;
+        # tile_batch cold_cpu_s from 44.4 to 38.4; wall times stayed inside
+        # the parent's quartiles. x5 made cold passes 9% slower in wall
+        # time, and C1 only (-XX:TieredStopAtLevel=1) steady-state passes
+        # ~40% slower.
+        # Default (not extra) Java options: the launcher puts them in
+        # front of spark.driver.extraJavaOptions, so a caller's own JVM
+        # options add to the policy instead of replacing it. They hold
+        # only when this call launches the JVM.
+        conf.setdefault("spark.driver.defaultJavaOptions", LOCAL_JIT_OPTIONS)
         # Shuffle/broadcast scratch on RAM-backed tmpfs: local-mode data
         # volumes are far below RAM, and the shared-host disk has shown
         # intermittent multi-second I/O stalls that surface as low-CPU
