@@ -1,10 +1,10 @@
 """Unit parity for the dedup-bloom kernels: the JVM-side probe
-positions, the distributed bitmap build, and the membership UDF must
+positions, the executor-side shard writer, and the membership UDF must
 all agree with an independent numpy/pure-Python recomputation — the
 superset invariant the dedup loop's correctness argument leans on.
 
-The probe scheme is seeded 64-bit ``xxhash64`` (ADVICE r12: the md5
-32-bit words capped addressable bits at 2^32). The reference here is a
+The probe scheme is seeded 64-bit ``xxhash64`` (md5's 32-bit words
+would cap addressable bits at 2^32). The reference here is a
 from-the-spec XXH64 implementation: Spark's ``xxhash64(col, lit(w))``
 is standard XXH64 over the column's UTF-8 bytes with seed 42, chained
 as the seed of XXH64 over the 8-byte little-endian literal; ``pmod``
@@ -13,6 +13,9 @@ by a power-of-two ``m`` equals the unsigned value's low bits.
 
 from __future__ import annotations
 
+import inspect
+import json
+import os
 import struct
 
 import numpy as np
@@ -23,7 +26,6 @@ from tile_processor_spark.sources.dedup_bloom import (
     _K,
     _SHARD_SEED,
     _capacity_for,
-    _collect_bits,
     _m_for,
     _position_cols,
     _shards_for,
@@ -138,17 +140,43 @@ def test_jvm_shard_selector_matches_reference(spark):
         assert got[f] == ref_shard(f, 8), f
 
 
-def test_collect_bits_sets_exactly_the_reference_bits(spark):
+def test_default_cap_sidecar_is_meta_plus_one_reference_shard(spark, tmp_path):
+    """Below the shard cap the sidecar is the meta-only state plus
+    exactly one shard file, and that shard holds exactly the bits a
+    single m-bit filter over the kept set would (the reference
+    positions at m_shard = m)."""
+    import tile_processor_spark.sources.dedup_bloom as mod
+
     fps = [f"doc:{i}" for i in range(300)]
-    m = 1 << 16
-    bits = _collect_bits(
-        spark.createDataFrame([(f,) for f in fps], "fp string"), m
+    root = str(tmp_path)
+    b = build_bloom(
+        root, 4, spark.createDataFrame([(f,) for f in fps], "fp string"), 300
     )
-    expect = np.zeros(m // 8, dtype=np.uint8)
+    save_bloom(b)
+    assert b.shards == 1 and b.m_shard == b.m
+    assert sorted(os.listdir(os.path.join(root, mod._BLOOM_DIR))) == [
+        "state-v4-s0.npy", "state-v4.npz",
+    ]
+    with np.load(mod._state_path(root, 4)) as z:
+        assert list(z.keys()) == ["meta"]
+    expect = np.zeros(b.m // 8, dtype=np.uint8)
     for f in fps:
-        for p in ref_positions(f, m):
+        for p in ref_positions(f, b.m):
             expect[p >> 3] |= 1 << (p & 7)
-    assert np.array_equal(bits, expect)
+    assert np.array_equal(np.load(mod._shard_path(root, 4, 0)), expect)
+
+
+def test_prescreen_plan_and_module_have_no_broadcast(spark, tmp_path):
+    """The prescreen reads shard files executor-side: neither its plan
+    nor the module ships a bitmap to executors."""
+    import tile_processor_spark.sources.dedup_bloom as mod
+
+    df = spark.createDataFrame([("a",), ("b",)], "fp string")
+    b = build_bloom(str(tmp_path), 1, df, 2)
+    save_bloom(b)
+    plan = with_maybe_kept(df, b)._jdf.queryExecution().executedPlan()
+    assert "broadcast" not in plan.toString().lower()
+    assert "broadcast" not in inspect.getsource(mod).lower()
 
 
 def test_capacity_and_m_sizing():
@@ -181,41 +209,55 @@ def test_large_m_addresses_beyond_32_bits(spark):
 
 
 def test_sidecar_roundtrip_and_fold(spark, tmp_path):
+    import tile_processor_spark.sources.dedup_bloom as mod
+
+    root = str(tmp_path)
     df = spark.createDataFrame([(f"x{i}",) for i in range(50)], "fp string")
-    b = build_bloom(spark, str(tmp_path), 3, df, 50)
-    save_bloom(str(tmp_path), b)
-    r = load_bloom(str(tmp_path), 3)
+    b = build_bloom(root, 3, df, 50)
+    save_bloom(b)
+    r = load_bloom(root, 3)
     assert r is not None and r.n == 50 and r.clustered_n == 50
-    assert np.array_equal(r.bits, b.bits)
-    assert load_bloom(str(tmp_path), 4) is None  # stale stamp
+    assert (r.m, r.shards) == (b.m, 1)
+    assert load_bloom(root, 4) is None  # stale stamp
     more = spark.createDataFrame([(f"y{i}",) for i in range(10)], "fp string")
     b2 = fold_in(r, more, 10, 4)
     assert b2.n == 60 and b2.fp_version == 4 and b2.clustered_n == 50
+    save_bloom(b2)
     # folding only ADDS bits (superset preserved)
-    assert np.array_equal(b2.bits & b.bits, b.bits)
-    flagged = with_maybe_kept(df.union(more), b2)
+    before = np.load(mod._shard_path(root, 3, 0))
+    after = np.load(mod._shard_path(root, 4, 0))
+    assert not np.array_equal(after, before)
+    assert np.array_equal(after & before, before)
+    flagged = with_maybe_kept(df.union(more), load_bloom(root, 4))
     assert flagged.filter("NOT _maybe_kept").count() == 0
+
+
+def _rewrite_meta(path: str, **changes) -> None:
+    """Rewrite the meta-only state in place, setting (or, for None,
+    dropping) the given meta keys."""
+    with np.load(path) as z:
+        meta = json.loads(str(z["meta"]))
+    for k, v in changes.items():
+        if v is None:
+            meta.pop(k, None)
+        else:
+            meta[k] = v
+    with open(path, "wb") as f:
+        np.savez(f, meta=np.array(json.dumps(meta)))
 
 
 def test_sidecar_with_different_probe_count_is_rejected(spark, tmp_path):
     """Review r12: a sidecar built with different probe parameters
     would yield Bloom FALSE NEGATIVES — it must fail the stamp check
     and trigger a rebuild, never load."""
-    import json
-
     import tile_processor_spark.sources.dedup_bloom as mod
 
     df = spark.createDataFrame([("a",), ("b",)], "fp string")
-    b = build_bloom(spark, str(tmp_path), 1, df, 2)
-    save_bloom(str(tmp_path), b)
+    b = build_bloom(str(tmp_path), 1, df, 2)
+    save_bloom(b)
+    assert load_bloom(str(tmp_path), 1) is not None
     # rewrite the state file claiming k=2
-    path = mod._state_path(str(tmp_path), 1)
-    with np.load(path) as z:
-        meta = json.loads(str(z["meta"]))
-        bits = z["bits"]
-    meta["k"] = 2
-    with open(path, "wb") as f:
-        np.savez(f, bits=bits, meta=np.array(json.dumps(meta)))
+    _rewrite_meta(mod._state_path(str(tmp_path), 1), k=2)
     assert load_bloom(str(tmp_path), 1) is None
 
 
@@ -223,26 +265,16 @@ def test_sidecar_with_foreign_hash_scheme_is_rejected(spark, tmp_path):
     """A state written under the old md5 scheme (no/different 'h' tag)
     must rebuild — its bitmap read under xxh64 positions would miss
     duplicates, the one forbidden failure mode."""
-    import json
-
     import tile_processor_spark.sources.dedup_bloom as mod
 
     df = spark.createDataFrame([("a",), ("b",)], "fp string")
-    b = build_bloom(spark, str(tmp_path), 1, df, 2)
-    save_bloom(str(tmp_path), b)
+    b = build_bloom(str(tmp_path), 1, df, 2)
+    save_bloom(b)
     path = mod._state_path(str(tmp_path), 1)
-    with np.load(path) as z:
-        meta = json.loads(str(z["meta"]))
-        bits = z["bits"]
-    for claimed in ("md5x32", None):
-        meta2 = dict(meta)
-        if claimed is None:
-            meta2.pop("h", None)  # pre-r13 files have no tag at all
-        else:
-            meta2["h"] = claimed
-        with open(path, "wb") as f:
-            np.savez(f, bits=bits, meta=np.array(json.dumps(meta2)))
-        assert load_bloom(str(tmp_path), 1) is None
+    _rewrite_meta(path, h="md5x32")
+    assert load_bloom(str(tmp_path), 1) is None
+    _rewrite_meta(path, h=None)  # files older than the tag have none
+    assert load_bloom(str(tmp_path), 1) is None
 
 
 # ---------------------------------------------------------------- sharded
@@ -255,16 +287,16 @@ def sharded(spark, tmp_path):
     fps = [f"s{i}" for i in range(600)]
     df = spark.createDataFrame([(f,) for f in fps], "fp string")
     b = build_bloom(
-        spark, str(tmp_path), 5, df, 600,
+        str(tmp_path), 5, df, 600,
         shard_max_bits=(1 << 21) // 4,  # m for 600 rows is 2^21 -> 4 shards
     )
-    save_bloom(str(tmp_path), b)
+    save_bloom(b)
     return fps, df, b, str(tmp_path)
 
 
 def test_sharded_build_roundtrip_no_false_negatives(sharded, spark):
     fps, df, b, root = sharded
-    assert b.shards == 4 and b.bits is None
+    assert b.shards == 4
     r = load_bloom(root, 5)
     assert r is not None and r.shards == 4 and r.n == 600
     # every inserted fp tests maybe-present (superset, no false negs)
@@ -318,7 +350,7 @@ def test_sharded_fold_in_touches_only_hit_shards(sharded, spark, tmp_path):
     new = spark.createDataFrame([("brand-new-fp",)], "fp string")
     target = ref_shard("brand-new-fp", 4)
     b2 = fold_in(r, new, 1, 6)
-    save_bloom(root, b2)
+    save_bloom(b2)
     r2 = load_bloom(root, 6)
     assert r2 is not None and r2.n == 601 and r2.shards == 4
     for s in range(4):
@@ -339,7 +371,7 @@ def test_sharded_fold_in_touches_only_hit_shards(sharded, spark, tmp_path):
     assert __import__("os").path.exists(st_old)
     assert load_bloom(root, 5) is not None
     b3 = fold_in(r2, spark.createDataFrame([("newer-fp",)], "fp string"), 1, 7)
-    save_bloom(root, b3)
+    save_bloom(b3)
     assert not __import__("os").path.exists(st_old)  # two behind: pruned
     assert __import__("os").path.exists(mod._shard_path(root, 6, 0))
 
@@ -382,7 +414,7 @@ def test_sharded_crossdevice_copy_fallback_streams(sharded, spark, monkeypatch):
     before = {s: real_load(mod._shard_path(root, 5, s)).copy() for s in range(4)}
     new = spark.createDataFrame([("xdev-new-fp",)], "fp string")
     b2 = fold_in(r, new, 1, 7)
-    save_bloom(root, b2)
+    save_bloom(b2)
     r2 = load_bloom(root, 7)
     assert r2 is not None and r2.shards == 4
     target = ref_shard("xdev-new-fp", 4)

@@ -63,10 +63,6 @@ def test_engine_connected_components_and_zorder(spark, tmp_path):
     edges = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], "a long, b long")
     comp = {r["node"]: r["component"] for r in eng.connected_components(edges).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        eng.connected_components(edges, algorithm="bogus")
 
     df = spark.range(256).selectExpr("id", "id % 16 as xi", "id % 13 as yi")
     eng.write_zordered(df, str(tmp_path / "z"), "xi", "yi", num_files=4)

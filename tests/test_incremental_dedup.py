@@ -195,14 +195,12 @@ def test_null_fingerprints_are_outside_the_dedup_domain(spark, tmp_path):
 
 
 def test_sharded_sidecar_end_to_end_parity(spark, tmp_path):
-    """The full dedup loop with the sidecar forced into SHARDED mode
-    (tiny per-shard cap): identical stats and kept-set to the
-    single-bitmap run — sharding is a memory-layout decision, never a
-    semantic one. Exercises executor-side shard build, one-shard
-    fold_in updates, hardlinked untouched shards, and the
-    zero-broadcast mmap prescreen inside the real loop."""
-    import numpy as np
-
+    """The full dedup loop with the sidecar split into several shards
+    (tiny per-shard cap): identical stats and kept-set to the one-shard
+    run — the shard count is a memory-layout decision, never a
+    semantic one. Exercises the executor-side shard build and fold,
+    hardlinked untouched shards, and the mmap prescreen inside the
+    real loop."""
     from tile_processor_spark.sources.dedup_bloom import load_bloom
 
     def _build(corpus):
@@ -222,8 +220,9 @@ def test_sharded_sidecar_end_to_end_parity(spark, tmp_path):
     c2, f2 = str(tmp_path / "c2"), str(tmp_path / "f2")
     _build(c1)
     _build(c2)
-    # single-bitmap reference
+    # one-shard reference (the default cap)
     ref = dedup_new_versions(spark, c1, f1)
+    assert load_bloom(f1, list_versions(f1)[-1]).shards == 1
     # sharded: the minimum m is 2^21 bits; an 2^19 cap -> 4 shards
     got = dedup_new_versions(
         spark, c2, f2, bloom_shard_max_bits=1 << 19
@@ -235,4 +234,58 @@ def test_sharded_sidecar_end_to_end_parity(spark, tmp_path):
                .select("doc_key", "src_version").collect())
     assert a == b
     bloom = load_bloom(f2, list_versions(f2)[-1])
-    assert bloom is not None and bloom.shards >= 4 and bloom.bits is None
+    assert bloom is not None and bloom.shards >= 4
+
+
+def test_parent_format_sidecar_state_rebuilds(spark, tmp_path):
+    """A state in the earlier layout (the bitmap inside the npz, meta
+    ``shards: 1``, no shard file) never loads: the loop rebuilds and
+    gives the same stats and kept set as a run that never had it."""
+    import json
+    import os
+    import shutil
+
+    import numpy as np
+
+    from tile_processor_spark.sources.dedup_bloom import (
+        _BLOOM_DIR,
+        _HASH_SCHEME,
+        _K,
+        _state_path,
+        load_bloom,
+    )
+
+    def _build(corpus):
+        append_snapshot(_docs(spark, [(i, f"p{i}") for i in range(30)]), corpus)
+        append_snapshot(
+            _docs(spark, [(100 + i, f"p{i}") for i in range(5)]
+                  + [(200, "q0"), (201, "q1")]),
+            corpus,
+        )  # v2: 5 dups
+
+    c1, f1 = str(tmp_path / "c1"), str(tmp_path / "f1")
+    c2, f2 = str(tmp_path / "c2"), str(tmp_path / "f2")
+    _build(c1)
+    _build(c2)
+    ref = dedup_new_versions(spark, c1, f1)
+    got = dedup_new_versions(spark, c2, f2, max_versions=1)
+    head = list_versions(f2)[-1]
+    m = load_bloom(f2, head).m
+    # hand-written earlier-layout state: an ALL-ZERO bitmap, which
+    # would miss every duplicate if it were trusted
+    shutil.rmtree(os.path.join(f2, _BLOOM_DIR))
+    os.makedirs(os.path.join(f2, _BLOOM_DIR))
+    meta = {"m": m, "n": 30, "capacity": 1 << 17, "fp_version": head,
+            "k": _K, "h": _HASH_SCHEME, "shards": 1, "clustered_n": 30}
+    with open(_state_path(f2, head), "wb") as f:
+        np.savez(f, bits=np.zeros(m // 8, dtype=np.uint8),
+                 meta=np.array(json.dumps(meta)))
+    assert load_bloom(f2, head) is None
+    got += dedup_new_versions(spark, c2, f2)
+    assert got == ref
+    assert ref[1] == {"version": 2, "new_rows": 7, "kept": 2, "dropped": 5}
+    a = sorted(tuple(r) for r in read_snapshot(spark, f1)
+               .select("doc_key", "src_version").collect())
+    b = sorted(tuple(r) for r in read_snapshot(spark, f2)
+               .select("doc_key", "src_version").collect())
+    assert a == b

@@ -189,10 +189,9 @@ def test_stale_sidecar_is_rebuilt_not_trusted(spark, tmp_path):
     assert good is not None
     # sabotage: save an EMPTY bloom stamped for a WRONG (old) version
     empty = build_bloom(
-        spark, fps, head - 1,
-        spark.createDataFrame([], "fp string"), 0,
+        fps, head - 1, spark.createDataFrame([], "fp string"), 0
     )
-    save_bloom(fps, empty)
+    save_bloom(empty)
     # the head state SURVIVES the wrong-version save (retention)
     assert load_bloom(fps, head) is not None
     # now only the stale (head-1) state remains on disk
@@ -225,7 +224,7 @@ def test_bloom_membership_has_no_false_negatives(spark, tmp_path):
     fps_df = spark.createDataFrame(
         [(f"{i:032x}",) for i in range(500)], "fp string"
     )
-    bloom = build_bloom(spark, str(tmp_path), 1, fps_df, 500)
+    bloom = build_bloom(str(tmp_path), 1, fps_df, 500)
     flagged = with_maybe_kept(fps_df, bloom)
     assert flagged.filter(~F.col("_maybe_kept")).count() == 0
     # and unrelated fingerprints are mostly rejected (fpp ~ 0.24%)

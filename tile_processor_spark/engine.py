@@ -168,15 +168,11 @@ class Engine:
 
     # --- library operators -------------------------------------------------
 
-    def connected_components(
-        self, edges: DataFrame, algorithm: str = "star"
-    ) -> DataFrame:
-        """(node, component) over an edge frame with long columns (a, b).
-        ``star`` = large-star/small-star (O(log² n) rounds, any graph
-        shape — plans/cc_star.py); near-dup clustering over the corpus
-        tables is the registered ``dedup_connected_components`` query."""
-        if algorithm != "star":
-            raise ValueError(f"unknown CC algorithm {algorithm!r}")
+    def connected_components(self, edges: DataFrame) -> DataFrame:
+        """(node, component) over an edge frame with long columns (a, b):
+        large-star/small-star, O(log² n) rounds for any graph shape
+        (plans/cc_star.py); near-dup clustering over the corpus tables
+        is the registered ``dedup_connected_components`` query."""
         from tile_processor_spark.plans.cc_star import connected_components_star
 
         return connected_components_star(edges)

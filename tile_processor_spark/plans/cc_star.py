@@ -1,6 +1,7 @@
-"""Alternating large-star / small-star connected components — the
-round-bounded variant of ``pipeline_ops.dedup_connected_components``'s
-min-label loop.
+"""Alternating large-star / small-star connected components — the one
+CC algorithm (``pipeline_ops.dedup_connected_components``,
+``Engine.connected_components``, the semantic and spatial clustering
+rows).
 
 Simple min-label propagation needs O(diameter) rounds: fine for
 near-dup clusters (near-cliques, 2-3 rounds) but pathological for
@@ -13,8 +14,8 @@ O(log² n) rounds regardless of shape:
 - small-star(E): emit (v, m) for every v ∈ Γ(u) with v ≤ u, plus
   (u, m).
 
-Each phase is one symmetrize + groupBy(min) + join — the same shuffle
-shape per round as the simple loop — and the fixpoint is a star forest:
+Each phase is one symmetrize + groupBy(min) + join, and the fixpoint
+is a star forest:
 every node points at its component's minimum. ``localCheckpoint`` per
 round bounds lineage; convergence is detected by the edge multiset
 stabilizing (checksum + count, two scalar aggregates).

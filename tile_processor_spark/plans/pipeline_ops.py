@@ -11,16 +11,13 @@ oracle-checkable bit-for-bit.
 
 Scale notes (100 TB):
 
-- ``dedup_connected_components`` runs min-label propagation over the
-  near-dup edge set. The edge frame holds only LSH-verified pairs —
-  O(duplicates), tiny relative to the corpus — so each iteration is one
-  equi-join + one partial-aggregated min; iterations are bounded by the
-  cluster diameter (near-dup clusters are near-cliques, so 2–3 in
-  practice; the loop detects the fixpoint and stops). Lineage is cut per
-  iteration with ``localCheckpoint``. For adversarial long-chain graphs
-  the alternating large-star/small-star variant (Kiveris et al., "CC in
-  MapReduce and Beyond") bounds rounds by O(log² n); the loop below is
-  the simple fixpoint form with an iteration guard.
+- ``dedup_connected_components`` runs the alternating
+  large-star/small-star algorithm (Kiveris et al., "CC in MapReduce and
+  Beyond"; ``plans/cc_star.py``) over the near-dup edge set: O(log² n)
+  rounds whatever the graph's shape. The edge frame holds only
+  LSH-verified pairs — O(duplicates), tiny relative to the corpus — so
+  each round is one symmetrize + partial-aggregated min + join, with
+  lineage cut per round by ``localCheckpoint``.
 - The sampling operators are pure maps (hash, compare, filter): no
   shuffle at any scale, and the sample is reproducible row-by-row no
   matter how the corpus is partitioned — exactly what a training-data
@@ -36,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from tile_processor_spark.plans.cc_star import connected_components_star
 from tile_processor_spark.plans.llm_ops import (
     _MINHASH_ORACLE,
     SQL_TOKENS,
@@ -46,11 +44,6 @@ from tile_processor_spark.plans.llm_ops import (
 )
 from tile_processor_spark.plans.registry import register
 from tile_processor_spark.sources.tables import load_table
-
-# Bounded fixpoint guard. Near-dup clusters are near-cliques (every copy
-# collides with every other in some LSH band), so propagation converges in
-# 2-3 rounds; 20 covers any realistic chain before we fail loudly.
-CC_MAX_ITERS = 20
 
 # Deterministic sampling rates (percent kept per language stratum) and
 # split fractions. Literal constants shared verbatim by both engines.
@@ -100,8 +93,8 @@ _CC_ORACLE_CTES = f"""
     """,
     doc=(
         "Fuzzy-dedup clustering: MinHash-LSH near-dup pairs → connected "
-        "components (iterative min-label propagation to fixpoint) → one "
-        "canonical doc per cluster (min doc_id). The full pipeline a "
+        "components (alternating large-star/small-star, plans/cc_star.py) "
+        "→ one canonical doc per cluster (min doc_id). The full pipeline a "
         "training corpus dedup actually ships: pairs alone don't dedup — "
         "the keep/drop decision needs the transitive closure. Oracle: "
         "recursive-CTE transitive closure over the exact-Jaccard pairs."
@@ -114,42 +107,24 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select("doc_id")
-    pairs = dedup_minhash_pairs(spark, sf_dir).select("d1", "d2")
-    # Symmetrize once; the edge frame is O(near-dups), not O(corpus).
-    edges = pairs.unionByName(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    ).localCheckpoint()
-    labels = docs.select("doc_id", F.col("doc_id").alias("label")).localCheckpoint()
-    for _ in range(CC_MAX_ITERS):
-        # Each neighbor offers its current label to the other endpoint;
-        # keeping the node's own label in the union makes min() monotone.
-        offered = edges.join(labels, edges["d2"] == labels["doc_id"]).select(
-            edges["d1"].alias("doc_id"), "label"
+    pairs = dedup_minhash_pairs(spark, sf_dir).select(
+        F.col("d1").alias("a"), F.col("d2").alias("b")
+    )
+    comp = connected_components_star(pairs)
+    # Singletons (docs with no near-dup edge) are their own component.
+    labels = (
+        docs.join(comp, docs.doc_id == comp.node, "left")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
         )
-        new_labels = (
-            labels.unionByName(offered)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.withColumnRenamed("label", "old"), "doc_id")
-            .filter(F.col("label") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:  # pragma: no cover - deterministic fixtures converge in 2-3
-        raise RuntimeError(f"label propagation did not converge in {CC_MAX_ITERS} iters")
-    sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "label").select(
-        F.col("doc_id"),
-        F.col("label").alias("cluster_id"),
-        F.col("cluster_size"),
-        (F.col("doc_id") == F.col("label")).cast("int").alias("is_canonical"),
+    )
+    sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return labels.join(sizes, "cluster_id").select(
+        "doc_id",
+        "cluster_id",
+        "cluster_size",
+        (F.col("doc_id") == F.col("cluster_id")).cast("int").alias("is_canonical"),
     )
 
 
@@ -858,41 +833,16 @@ def text_doc_frequency_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM comp c JOIN sizes s USING (cluster_id)
     """,
     doc=(
-        "The same fuzzy-dedup clustering as dedup_connected_components "
-        "computed by the alternating large-star/small-star algorithm "
+        "The fuzzy-dedup clustering of dedup_connected_components under "
+        "the name of its algorithm, alternating large-star/small-star "
         "(Kiveris et al., SoCC'14 — plans/cc_star.py): O(log² n) rounds "
-        "regardless of graph shape, vs O(diameter) for min-label "
-        "propagation. Same oracle (components are unique), so the gate "
-        "pins that both distributed algorithms agree with the recursive-"
-        "CTE transitive closure. This is the variant to use when cluster "
-        "shape is unknown (adversarial chains); the Engine facade "
-        "defaults to it."
+        "regardless of graph shape. Same plan and same oracle "
+        "(components are unique): the recursive-CTE transitive closure."
     ),
     tags=("llm", "dedup", "graph"),
 )
 def dedup_connected_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tile_processor_spark.plans.cc_star import connected_components_star
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-    pairs = dedup_minhash_pairs(spark, sf_dir).select(
-        F.col("d1").alias("a"), F.col("d2").alias("b")
-    )
-    comp = connected_components_star(pairs)
-    # Singletons (docs with no near-dup edge) are their own component.
-    labels = (
-        docs.join(comp, docs.doc_id == comp.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
-        )
-    )
-    sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return labels.join(sizes, "cluster_id").select(
-        "doc_id",
-        "cluster_id",
-        "cluster_size",
-        (F.col("doc_id") == F.col("cluster_id")).cast("int").alias("is_canonical"),
-    )
+    return _cc_frame(spark, sf_dir)
 
 
 @register(

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from tile_processor_spark.session import local_frame
 from tile_processor_spark.sources.dedup_bloom import (
+    _DEFAULT_SHARD_MAX_BITS,
     build_bloom,
     fold_in,
     load_bloom,
@@ -81,7 +82,7 @@ _CANDIDATE_CAP = 65_536
 #: pushdown benefit
 _ISIN_CAP = 1_024
 
-#: auto_cluster never rewrites tables smaller than this (the full
+#: the re-cluster schedule never rewrites tables smaller than this (the full
 #: anti-join is trivially cheap there), and cluster_fingerprints sizes
 #: output files to roughly this many rows each
 _MIN_CLUSTER_ROWS = 100_000
@@ -138,12 +139,6 @@ def _prune_fp_files(fp_man: dict, candidates: list[str]) -> tuple[list[str], int
     return keep, len(all_files)
 
 
-def _shard_kw(shard_max_bits: int | None) -> dict:
-    return (
-        {} if shard_max_bits is None else {"shard_max_bits": shard_max_bits}
-    )
-
-
 def dedup_new_versions(
     spark: SparkSession,
     corpus_path: str,
@@ -155,8 +150,7 @@ def dedup_new_versions(
     candidate_cap: int = _CANDIDATE_CAP,
     telemetry: list | None = None,
     max_versions: int | None = None,
-    auto_cluster: bool = True,
-    bloom_shard_max_bits: int | None = None,
+    bloom_shard_max_bits: int = _DEFAULT_SHARD_MAX_BITS,
     bloom_sidecar: str | None = None,
 ) -> list[dict]:
     """Process every corpus append version newer than the fingerprint
@@ -174,9 +168,9 @@ def dedup_new_versions(
     whose min/max fp stats can contain them. Candidate sets above
     ``candidate_cap`` fall back to the full distributed anti-join, so
     the driver never holds an unbounded list. ``bloom_shard_max_bits``
-    caps the per-shard bitmap (default 1 GiB of bits): past it the
-    sidecar shards by fingerprint hash — executor-side build, one-shard
-    driver updates, zero-broadcast mmap prescreen (dedup_bloom module
+    caps the per-shard bitmap (default 1 GiB of bits); the sidecar is
+    S = m / cap shard files by fingerprint hash, built and folded by
+    executors and memory-mapped by the prescreen (dedup_bloom module
     doc). ``bloom_sidecar`` relocates the sidecar store: None keeps it
     next to the fingerprint table (shared-FS deployments);
     ``"s3://bucket/prefix"`` puts state and shards on the object store
@@ -203,12 +197,11 @@ def dedup_new_versions(
     that). ``max_versions`` bounds how many pending versions one call
     processes (a driver's own checkpoint cadence); default is all.
 
-    ``auto_cluster`` (default on) runs :func:`cluster_fingerprints`
-    on a GEOMETRIC schedule — whenever the append files accumulated
-    since the last rewrite outnumber the files that rewrite produced —
-    so each kept row is rewritten O(log versions) times total and the
-    candidate verify's file pruning stays sharp without any manual
-    maintenance call."""
+    With the sidecar on, :func:`cluster_fingerprints` runs on a
+    GEOMETRIC schedule — whenever the kept rows have doubled since the
+    last rewrite — so each kept row is rewritten O(log versions) times
+    total and the candidate verify's file pruning stays sharp without
+    any manual maintenance call."""
     corpus_versions = list_versions(corpus_path)
     if not corpus_versions:
         raise FileNotFoundError(f"no committed snapshot at {corpus_path}")
@@ -242,11 +235,10 @@ def dedup_new_versions(
         if bloom is None:
             kept = read_snapshot(spark, fp_path).select("fp")
             bloom = build_bloom(
-                spark, fp_path, fp_head, kept, kept.count(),
-                sidecar=bloom_sidecar,
-                **_shard_kw(bloom_shard_max_bits),
+                fp_path, fp_head, kept, kept.count(),
+                shard_max_bits=bloom_shard_max_bits, sidecar=bloom_sidecar,
             )
-            save_bloom(fp_path, bloom)
+            save_bloom(bloom)
     stats: list[dict] = []
     for v in pending:
         man = _read_manifest(corpus_path, v)
@@ -265,129 +257,117 @@ def dedup_new_versions(
                 )
         tele = {"version": v, "mode": "empty-delta", "candidates": 0,
                 "fp_files_total": 0, "fp_files_opened": 0}
-        bcs: list = []  # this version's bitmap broadcast, destroyed below
-        try:
-            if delta_files:
-                delta = _read_delta(spark, man, delta_files).select(
-                    F.col(key_col).cast("long").alias("doc_key"),
-                    fp_expr.alias("fp"),
-                )
-                # NULL fingerprints are outside the dedup domain (an anti-
-                # join could never match them anyway — SQL NULL inequality —
-                # so recording them would only accumulate dead rows)
-                delta = delta.filter(F.col("fp").isNotNull())
-                # within-delta dedup first (min key wins), then against
-                # every fingerprint ever kept. The grouped delta feeds up
-                # to three actions (candidate collect, survivors write,
-                # the semi-join fallback) — checkpoint it once instead of
-                # re-reading and re-shuffling per action (the cache policy
-                # docs/SCALE.md prescribes for multi-consumer frames)
-                delta = (
-                    delta.groupBy("fp")
-                    .agg(F.min("doc_key").alias("doc_key"))
-                    .localCheckpoint()
-                )
-                dup_fps = None
-                if bloom is not None:
-                    flagged = with_maybe_kept(delta, bloom, _bc_out=bcs)
-                    candidates = flagged.filter(F.col("_maybe_kept")).select("fp")
-                    # ONE action: collect up to cap+1 — the driver never
-                    # holds more than the cap, and the +1 row is the
-                    # overflow signal that triggers the distributed path
-                    cand_rows = candidates.limit(candidate_cap + 1).collect()
-                    n_cand = len(cand_rows)
-                    tele["candidates"] = n_cand
-                    if n_cand == 0:
-                        # every delta fp PROVABLY new: no history read
-                        tele["mode"] = "bloom-all-new"
-                    elif n_cand <= candidate_cap:
-                        cand = sorted(r.fp for r in cand_rows)
-                        fp_man = _read_manifest(
-                            fp_path, list_versions(fp_path)[-1]
-                        )
-                        files, total = _prune_fp_files(fp_man, cand)
-                        tele.update(
-                            mode="bloom-pruned",
-                            fp_files_total=total,
-                            fp_files_opened=len(files),
-                        )
-                        if files:
-                            pruned = spark.read.parquet(*files).select("fp")
-                            if n_cand <= _ISIN_CAP:
-                                # small candidate sets push an IN filter to
-                                # the parquet readers: row-group min/max
-                                # stats skip WITHIN the opened files too
-                                # (fingerprint files are written fp-sorted,
-                                # so row groups carry tight ranges) — rows
-                                # decoded ∝ candidates, not file sizes
-                                dup_fps = pruned.filter(F.col("fp").isin(cand))
-                            else:
-                                dup_fps = pruned.join(
-                                    F.broadcast(candidates), "fp", "left_semi"
-                                )
-                    else:
-                        tele["mode"] = "full-anti-join"
-                        dup_fps = read_snapshot(spark, fp_path).select("fp")
+        if delta_files:
+            delta = _read_delta(spark, man, delta_files).select(
+                F.col(key_col).cast("long").alias("doc_key"),
+                fp_expr.alias("fp"),
+            )
+            # NULL fingerprints are outside the dedup domain (an anti-
+            # join could never match them anyway — SQL NULL inequality —
+            # so recording them would only accumulate dead rows)
+            delta = delta.filter(F.col("fp").isNotNull())
+            # within-delta dedup first (min key wins), then against
+            # every fingerprint ever kept. The grouped delta feeds up
+            # to three actions (candidate collect, survivors write,
+            # the semi-join fallback) — checkpoint it once instead of
+            # re-reading and re-shuffling per action (the cache policy
+            # docs/SCALE.md prescribes for multi-consumer frames)
+            delta = (
+                delta.groupBy("fp")
+                .agg(F.min("doc_key").alias("doc_key"))
+                .localCheckpoint()
+            )
+            dup_fps = None
+            if bloom is not None:
+                flagged = with_maybe_kept(delta, bloom)
+                candidates = flagged.filter(F.col("_maybe_kept")).select("fp")
+                # ONE action: collect up to cap+1 — the driver never
+                # holds more than the cap, and the +1 row is the
+                # overflow signal that triggers the distributed path
+                cand_rows = candidates.limit(candidate_cap + 1).collect()
+                n_cand = len(cand_rows)
+                tele["candidates"] = n_cand
+                if n_cand == 0:
+                    # every delta fp PROVABLY new: no history read
+                    tele["mode"] = "bloom-all-new"
+                elif n_cand <= candidate_cap:
+                    cand = sorted(r.fp for r in cand_rows)
+                    fp_man = _read_manifest(
+                        fp_path, list_versions(fp_path)[-1]
+                    )
+                    files, total = _prune_fp_files(fp_man, cand)
+                    tele.update(
+                        mode="bloom-pruned",
+                        fp_files_total=total,
+                        fp_files_opened=len(files),
+                    )
+                    if files:
+                        pruned = spark.read.parquet(*files).select("fp")
+                        if n_cand <= _ISIN_CAP:
+                            # small candidate sets push an IN filter to
+                            # the parquet readers: row-group min/max
+                            # stats skip WITHIN the opened files too
+                            # (fingerprint files are written fp-sorted,
+                            # so row groups carry tight ranges) — rows
+                            # decoded ∝ candidates, not file sizes
+                            dup_fps = pruned.filter(F.col("fp").isin(cand))
+                        else:
+                            dup_fps = pruned.join(
+                                F.broadcast(candidates), "fp", "left_semi"
+                            )
                 else:
                     tele["mode"] = "full-anti-join"
                     dup_fps = read_snapshot(spark, fp_path).select("fp")
-                survivors = (
-                    delta
-                    if dup_fps is None
-                    else delta.join(dup_fps, "fp", "left_anti")
-                ).select(
-                    "fp", "doc_key", F.lit(v).cast("int").alias("src_version")
-                )
-                new_files, n_kept = _stage_parquet(survivors, fp_path)
-                n_new = sum(_parquet_rows(f) for f in delta_files)
             else:
-                new_files, n_new, n_kept = [], 0, 0
-            # the mark advances even for empty/no-survivor versions —
-            # replay protection is per corpus version, not per row
-            committed_v = commit_append(
-                fp_path,
-                new_files,
-                stream_mark=(_APP_ID, v),
-                extra={"src_corpus_version": v},
+                tele["mode"] = "full-anti-join"
+                dup_fps = read_snapshot(spark, fp_path).select("fp")
+            survivors = (
+                delta
+                if dup_fps is None
+                else delta.join(dup_fps, "fp", "left_anti")
+            ).select(
+                "fp", "doc_key", F.lit(v).cast("int").alias("src_version")
             )
-            if bloom is not None and committed_v != bloom.fp_version:
-                # a replay-dropped commit returns the unchanged head, so
-                # the sidecar stamp still matches and nothing updates
-                if bloom.n + n_kept > bloom.capacity:
-                    kept = read_snapshot(spark, fp_path).select("fp")
-                    bloom = build_bloom(
-                        spark, fp_path, committed_v, kept, kept.count(),
-                        sidecar=bloom_sidecar,
-                        **_shard_kw(bloom_shard_max_bits),
-                    )
-                else:
-                    staged = (
-                        spark.read.parquet(*new_files).select("fp")
-                        if new_files
-                        else None
-                    )
-                    bloom = fold_in(bloom, staged, n_kept, committed_v)
-                save_bloom(fp_path, bloom)
-                if auto_cluster and bloom.n >= 2 * max(
-                    bloom.clustered_n, _MIN_CLUSTER_ROWS
-                ):
-                    # geometric schedule: the table doubled since its last
-                    # global sort — re-cluster so the candidate verify's
-                    # file pruning stays sharp; each kept row is rewritten
-                    # O(log versions) times total
-                    cluster_fingerprints(
-                        spark, fp_path, sidecar=bloom_sidecar
-                    )
-                    bloom = load_bloom(
-                        fp_path, list_versions(fp_path)[-1],
-                        sidecar=bloom_sidecar,
-                    )
-        finally:
-            for bc in bcs:
-                # released even when the version fails mid-way
-                # (commit conflict, gap ValueError, job error) —
-                # a retry loop must not accrete executor bitmaps
-                bc.destroy()
+            new_files, n_kept = _stage_parquet(survivors, fp_path)
+            n_new = sum(_parquet_rows(f) for f in delta_files)
+        else:
+            new_files, n_new, n_kept = [], 0, 0
+        # the mark advances even for empty/no-survivor versions —
+        # replay protection is per corpus version, not per row
+        committed_v = commit_append(
+            fp_path,
+            new_files,
+            stream_mark=(_APP_ID, v),
+            extra={"src_corpus_version": v},
+        )
+        if bloom is not None and committed_v != bloom.fp_version:
+            # a replay-dropped commit returns the unchanged head, so
+            # the sidecar stamp still matches and nothing updates
+            if bloom.n + n_kept > bloom.capacity:
+                kept = read_snapshot(spark, fp_path).select("fp")
+                bloom = build_bloom(
+                    fp_path, committed_v, kept, kept.count(),
+                    shard_max_bits=bloom_shard_max_bits,
+                    sidecar=bloom_sidecar,
+                )
+            else:
+                staged = (
+                    spark.read.parquet(*new_files).select("fp")
+                    if new_files
+                    else None
+                )
+                bloom = fold_in(bloom, staged, n_kept, committed_v)
+            save_bloom(bloom)
+            if bloom.n >= 2 * max(bloom.clustered_n, _MIN_CLUSTER_ROWS):
+                # geometric schedule: the table doubled since its last
+                # global sort — re-cluster so the candidate verify's
+                # file pruning stays sharp; each kept row is rewritten
+                # O(log versions) times total
+                cluster_fingerprints(spark, fp_path, sidecar=bloom_sidecar)
+                bloom = load_bloom(
+                    fp_path, list_versions(fp_path)[-1],
+                    sidecar=bloom_sidecar,
+                )
         if telemetry is not None:
             telemetry.append(tele)
         stats.append(
@@ -426,7 +406,7 @@ def cluster_fingerprints(
     if bloom is not None:
         bloom.fp_version = v
         bloom.clustered_n = n
-        save_bloom(fp_path, bloom)
+        save_bloom(bloom)
     return v
 
 

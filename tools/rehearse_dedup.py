@@ -38,6 +38,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tile_processor_spark.sources.dedup_bloom import (  # noqa: E402
+    _DEFAULT_SHARD_MAX_BITS,
+)
+
 
 def _mk_version_df(spark, v, rows, dup_rate):
     """Version v's delta: mostly fresh texts, ``dup_rate`` of rows
@@ -79,7 +83,8 @@ def _maybe_start_fake_endpoint(sidecar: str | None):
 
 
 def run(versions, rows, dup_rate, baseline_versions, cluster_every,
-        cluster_files=None, shard_max_bits=None, sidecar=None):
+        cluster_files=None, shard_max_bits=_DEFAULT_SHARD_MAX_BITS,
+        sidecar=None):
     from tile_processor_spark.session import get_spark
     from tile_processor_spark.sources.incremental_dedup import (
         cluster_fingerprints,
@@ -229,11 +234,10 @@ if __name__ == "__main__":
         "configured); default keeps the sidecar next to the table",
     )
     ap.add_argument(
-        "--shard-max-bits", type=int, default=None,
-        help="per-shard bitmap cap in BITS (forces the sharded sidecar "
-        "below its 1 GiB production default — e.g. 2**22 shards a 1M-row "
-        "table into ~8 shards, rehearsing executor-side build, one-shard "
-        "fold_in, and the zero-broadcast mmap prescreen at test scale)",
+        "--shard-max-bits", type=int, default=_DEFAULT_SHARD_MAX_BITS,
+        help="per-shard bitmap cap in BITS (default 2**33, 1 GiB); a "
+        "smaller cap only sets the shard size: e.g. 2**22 splits a "
+        "1M-row table's sidecar into ~8 shard files",
     )
     a = ap.parse_args()
     run(a.versions, a.rows_per_version, a.dup_rate,
