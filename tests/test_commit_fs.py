@@ -22,7 +22,6 @@ from tile_processor_spark.sources.commit_fs import (
 from tile_processor_spark.sources.snapshots import (
     append_snapshot,
     compact_manifest,
-    convert_to_shared_layout,
     list_versions,
     read_snapshot,
     vacuum,
@@ -42,29 +41,27 @@ def _rows(df):
 
 
 def test_full_lifecycle_without_hardlinks_or_rename(spark, tmp_path, object_store_fs):
-    """write → append → convert to shared layout → partitioned append →
-    compact → time travel → vacuum, all on copy+conditional-create
-    primitives only."""
+    """partitioned write → partitioned append → compact → time travel →
+    vacuum, all on copy+conditional-create primitives only."""
     tbl = str(tmp_path / "tbl")
     df = spark.createDataFrame(
         [(1, "a"), (2, "b")], "k int, grp string"
     )
     write_snapshot(df, tbl, partition_by=["grp"])                     # v1
-    convert_to_shared_layout(tbl)                                     # v2
     append_snapshot(
         spark.createDataFrame([(3, "a")], "k int, grp string"), tbl
-    )                                                                  # v3
-    compact_manifest(tbl)                                              # v4
-    assert list_versions(tbl) == [1, 2, 3, 4]
+    )                                                                  # v2
+    compact_manifest(tbl)                                              # v3
+    assert list_versions(tbl) == [1, 2, 3]
     assert _rows(read_snapshot(spark, tbl).select("k")) == [(1,), (2,), (3,)]
-    # time travel intact through conversion + append + compaction
+    # time travel intact through append + compaction
     assert _rows(read_snapshot(spark, tbl, version=1).select("k")) == [(1,), (2,)]
     # manifest-level pruning still works on the compacted head
     assert _rows(
         read_snapshot(spark, tbl, partition_filter={"grp": "a"}).select("k")
     ) == [(1,), (3,)]
     got = vacuum(tbl, keep_last=2, claim_ttl_s=0)
-    assert got["retired_versions"] == [1, 2]
+    assert got["retired_versions"] == [1]
     assert _rows(read_snapshot(spark, tbl).select("k")) == [(1,), (2,), (3,)]
 
 
@@ -122,8 +119,7 @@ def test_crash_mid_rehome_is_recoverable(spark, tmp_path):
     appends cleanly."""
     tbl = str(tmp_path / "tbl")
     df = spark.createDataFrame([(1, "a")], "k int, grp string")
-    write_snapshot(df, tbl, partition_by=["grp"])
-    convert_to_shared_layout(tbl)  # v2, shared tree
+    write_snapshot(df, tbl, partition_by=["grp"])  # v1, in the tree
     delta = spark.createDataFrame([(2, "a")], "k int, grp string")
     fs = FaultInjectingCopyFS(crash_at="mid_rehome")
     prev = set_commit_fs(fs)
@@ -132,7 +128,7 @@ def test_crash_mid_rehome_is_recoverable(spark, tmp_path):
             append_snapshot(delta, tbl)
     finally:
         set_commit_fs(prev)
-    assert list_versions(tbl) == [1, 2]
+    assert list_versions(tbl) == [1]
     assert _rows(read_snapshot(spark, tbl).select("k")) == [(1,)]
     # retry on the healthy FS: the orphan copy does not block anything
     append_snapshot(delta, tbl)
@@ -142,37 +138,19 @@ def test_crash_mid_rehome_is_recoverable(spark, tmp_path):
     assert _rows(read_snapshot(spark, tbl).select("k")) == [(1,), (2,)]
 
 
-def test_crash_during_share_conversion_is_safe(spark, tmp_path):
-    """convert_to_shared_layout dying mid-share publishes nothing: the
-    original version stays the head and stays readable; a retry
-    converts cleanly."""
-    tbl = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, grp string")
-    write_snapshot(df, tbl, partition_by=["grp"])
-    fs = FaultInjectingCopyFS(crash_at="before_share")
-    prev = set_commit_fs(fs)
-    try:
-        with pytest.raises(FaultInjectingCopyFS.Crash):
-            convert_to_shared_layout(tbl)
-    finally:
-        set_commit_fs(prev)
-    assert list_versions(tbl) == [1]
-    assert _rows(read_snapshot(spark, tbl).select("k")) == [(1,), (2,)]
-    convert_to_shared_layout(tbl)
-    assert _rows(read_snapshot(spark, tbl).select("k")) == [(1,), (2,)]
-
-
 def test_local_fs_is_default_and_link_based(tmp_path):
-    """The default commit FS hard-links (zero-copy share) — pin that
-    the local fast path didn't silently become a copy."""
+    """The default commit FS publishes by hard link — pin that the
+    local fast path didn't silently become a copy."""
     from tile_processor_spark.sources.commit_fs import get_commit_fs
 
     assert isinstance(get_commit_fs(), LocalCommitFS)
     src = tmp_path / "src.txt"
     src.write_text("x")
     dst = tmp_path / "dst.txt"
-    get_commit_fs().share(str(src), str(dst))
+    get_commit_fs().publish_exclusive(str(src), str(dst))
     assert os.stat(src).st_ino == os.stat(dst).st_ino  # same inode
+    with pytest.raises(FileExistsError):
+        get_commit_fs().publish_exclusive(str(src), str(dst))
 
 
 def test_publish_is_all_or_nothing(spark, tmp_path):
@@ -228,6 +206,24 @@ def test_vacuum_reclaims_stale_commit_tmps(spark, tmp_path):
     got = vacuum(tbl, keep_last=1, claim_ttl_s=3600)
     assert not os.path.exists(stale)
     assert got["files_removed"] >= 1
+
+
+def test_vacuum_keeps_fresh_empty_tree_dirs(tmp_path):
+    """A tree writer makes its ``col=val`` directory and then writes
+    its file into it; vacuum must not remove that directory in between.
+    An empty directory is reclaimed only once it is older than the
+    retention window."""
+    import time
+
+    tbl = tmp_path / "tbl"
+    d = tbl / "data" / "tree" / "g=1"
+    d.mkdir(parents=True)
+    vacuum(str(tbl), claim_ttl_s=3600)
+    assert d.is_dir()  # fresh: a writer may be about to fill it
+    old = time.time() - 7200
+    os.utime(d, (old, old))
+    vacuum(str(tbl), claim_ttl_s=3600)
+    assert not d.exists()
 
 
 def test_copyfs_publish_never_partial_content(tmp_path, object_store_fs):

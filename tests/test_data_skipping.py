@@ -158,8 +158,6 @@ def test_where_with_nulls_is_sound(spark, tmp_path):
 
 
 def test_where_on_partitioned_table_composes(spark, tmp_path):
-    from tile_processor_spark.sources.snapshots import convert_to_shared_layout
-
     tbl = str(tmp_path / "tbl")
     write_snapshot(
         spark.createDataFrame(
@@ -168,8 +166,7 @@ def test_where_on_partitioned_table_composes(spark, tmp_path):
         tbl,
         partition_by=["grp"],
     )
-    convert_to_shared_layout(tbl)  # stats re-keyed, not re-read
-    man = _read_manifest(tbl, 2)
+    man = _read_manifest(tbl, 1)
     assert man.get("file_stats")
     got = read_snapshot(
         spark, tbl, partition_filter={"grp": "g1"}, where=[("k", ">=", 15)]

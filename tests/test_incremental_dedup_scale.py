@@ -29,7 +29,6 @@ from tile_processor_spark.sources.incremental_dedup import (
 )
 from tile_processor_spark.sources.snapshots import (
     append_snapshot,
-    convert_to_shared_layout,
     list_versions,
     read_snapshot,
     write_snapshot,
@@ -45,7 +44,7 @@ def _docs(spark, rows, schema="doc_id long, text string"):
 
 def test_partitioned_corpus_dedup_across_versions(spark, tmp_path):
     """A corpus partitioned by language dedupes incrementally: delta
-    files live in the shared Hive tree without partition columns, and
+    files live in the table's Hive tree without partition columns, and
     the basePath read re-derives them."""
     corpus = str(tmp_path / "corpus")
     fps = str(tmp_path / "fps")
@@ -55,26 +54,24 @@ def test_partitioned_corpus_dedup_across_versions(spark, tmp_path):
         corpus,
         partition_by=["lang"],
     )
-    convert_to_shared_layout(corpus)  # v2 metadata-only
     append_snapshot(
         _docs(spark, [(3, "en", "beta"), (4, "fr", "gamma")], schema), corpus
-    )  # v3: beta dup (cross-partition!)
+    )  # v2: beta dup (cross-partition!)
     append_snapshot(
         _docs(spark, [(5, "de", "alpha"), (6, "en", "delta")], schema), corpus
-    )  # v4: alpha dup
+    )  # v3: alpha dup
 
     stats = dedup_new_versions(spark, corpus, fps)
     assert stats == [
         {"version": 1, "new_rows": 2, "kept": 2, "dropped": 0},
-        {"version": 2, "new_rows": 0, "kept": 0, "dropped": 0},
+        {"version": 2, "new_rows": 2, "kept": 1, "dropped": 1},
         {"version": 3, "new_rows": 2, "kept": 1, "dropped": 1},
-        {"version": 4, "new_rows": 2, "kept": 1, "dropped": 1},
     ]
     kept = read_snapshot(spark, fps)
     assert sorted(
         tuple(r) for r in kept.select("doc_key", "src_version").collect()
-    ) == [(1, 1), (2, 1), (4, 3), (6, 4)]
-    assert processed_through(fps) == 4
+    ) == [(1, 1), (2, 1), (4, 2), (6, 3)]
+    assert processed_through(fps) == 3
     # replay: exactly-once
     assert dedup_new_versions(spark, corpus, fps) == []
     assert read_snapshot(spark, fps).count() == 4
@@ -93,7 +90,6 @@ def test_partitioned_corpus_can_fingerprint_on_partition_column(
         corpus,
         partition_by=["lang"],
     )
-    convert_to_shared_layout(corpus)
     stats = dedup_new_versions(
         spark,
         corpus,
@@ -103,10 +99,8 @@ def test_partitioned_corpus_can_fingerprint_on_partition_column(
         ),
     )
     # same text, different lang → BOTH kept (the partition column
-    # participated in the fingerprint); stats[-1] is the metadata-only
-    # convert_to_shared_layout version
-    assert stats[0]["kept"] == 2
-    assert stats[-1] == {"version": 2, "new_rows": 0, "kept": 0, "dropped": 0}
+    # participated in the fingerprint)
+    assert stats == [{"version": 1, "new_rows": 2, "kept": 2, "dropped": 0}]
 
 
 # --------------------------------------------------------------------- bloom

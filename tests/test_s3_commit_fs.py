@@ -201,19 +201,12 @@ def test_rehome_and_share_semantics(fake_s3, tmp_path):
     fs.rehome(str(staged), str(tmp_path / "data/tree/lang=en/p0.parquet"))
     assert not staged.exists()
     assert c.get_object("t/data/tree/lang=en/p0.parquet") == b"PARQ"
-    # share of an already-resident object: server-side copy, src intact
-    fs.share(
-        str(tmp_path / "data/tree/lang=en/p0.parquet"),
-        str(tmp_path / "data/tree2/p0.parquet"),
-    )
-    assert c.get_object("t/data/tree/lang=en/p0.parquet") == b"PARQ"
-    assert c.get_object("t/data/tree2/p0.parquet") == b"PARQ"
     # rehome of a resident object: copy + delete
     fs.rehome(
-        str(tmp_path / "data/tree2/p0.parquet"),
+        str(tmp_path / "data/tree/lang=en/p0.parquet"),
         str(tmp_path / "data/tree3/p0.parquet"),
     )
-    assert not c.head_object("t/data/tree2/p0.parquet")
+    assert not c.head_object("t/data/tree/lang=en/p0.parquet")
     assert c.get_object("t/data/tree3/p0.parquet") == b"PARQ"
 
 

@@ -498,12 +498,10 @@ def test_s3_partitioned_overwrite_write_and_pruned_read(spark, fake_s3):
 
 def test_s3_partitioned_append_roundtrip_and_pruning(spark, fake_s3):
     """Round 15: APPEND onto a partitioned native table — the delta's
-    objects carry Hive key chains under their own ``data/<uuid>/``
-    prefix (no shared-tree re-home); the append manifest carries the
-    committed ``partition_by`` forward; pruned reads resolve partition
-    values for v1 files (relative to the manifest base) and delta
-    files (through ``..`` segments) alike; time travel sees v1
-    unchanged."""
+    objects carry Hive key chains in the table's one tree, beside v1's;
+    the append manifest carries the committed ``partition_by``
+    forward; pruned reads resolve partition values for v1 and delta
+    files alike; time travel sees v1 unchanged."""
     from tile_processor_spark.sources.snapshot_datasource import (
         SnapshotReader,
     )
@@ -539,9 +537,9 @@ def test_s3_partitioned_append_roundtrip_and_pruning(spark, fake_s3):
     assert _rows(_read(spark, fake_s3, prefix, version="1")) == [
         ("F", 1, 10.0), ("O", 2, 20.0),
     ]
-    # pruning spans both the v1 base and the delta prefix: the F filter
-    # must keep exactly the two F files (one per snap prefix) and the
-    # P filter exactly the delta's P file
+    # pruning spans both commits: the F filter must keep exactly the
+    # two F files (one per commit) and the P filter exactly the
+    # delta's P file
     opts = _s3_opts(fake_s3, prefix)
     schema = got.schema
     all_parts = SnapshotReader(schema, dict(opts)).partitions()

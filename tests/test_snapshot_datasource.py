@@ -119,10 +119,13 @@ def test_append_snapshot_is_o_new_data(spark, tmp_path):
         spark.createDataFrame([("x", 1)], "p string, k long"), part,
         partition_by=["p"],
     )
-    with pytest.raises(NotImplementedError, match="partitioned"):
-        append_snapshot(
-            spark.createDataFrame([("y", 2)], "p string, k long"), part
-        )
+    # a partitioned table appends O(new data) too, from its first version
+    v2p = append_snapshot(
+        spark.createDataFrame([("y", 2)], "p string, k long"), part
+    )
+    m1p, m2p = _read_manifest(part, 1), _read_manifest(part, v2p)
+    assert set(m2p["appended_files"]) == set(m2p["files"]) - set(m1p["files"])
+    assert _rows(read_snapshot(spark, part).select("p", "k")) == [("x", 1), ("y", 2)]
 
 
 def test_version_stream_emits_appended_batches(spark, tmp_path):
@@ -387,8 +390,12 @@ def test_binpacked_partitions_scale_with_bytes(spark, tmp_path):
         [("a", i) for i in range(20)] + [("b", i) for i in range(20)],
         "grp string, k long",
     ).repartition(10)
-    write_snapshot(df, path, partition_by=["grp"])
+    # the connector's tasks each write one small file per partition
+    # value they hold (write_snapshot clusters by value first)
     register(spark)
+    df.write.format("tps_snapshot").option("path", path).option(
+        "partition_by", "grp"
+    ).mode("overwrite").save()
     schema = _read(spark, path).schema
     default_parts = SnapshotReader(schema, {"path": path}).partitions()
     n_files = sum(len(p.files) for p in default_parts)
@@ -412,25 +419,21 @@ def test_binpacked_partitions_scale_with_bytes(spark, tmp_path):
 
 def test_version_stream_over_partitioned_appends(spark, tmp_path):
     """The version stream must carry Hive partition values for
-    shared-tree partitioned appends (the data files themselves don't
-    store the partition column)."""
-    from tile_processor_spark.sources.snapshots import (
-        append_snapshot,
-        convert_to_shared_layout,
-    )
+    partitioned appends (the data files themselves don't store the
+    partition column)."""
+    from tile_processor_spark.sources.snapshots import append_snapshot
 
     path = str(tmp_path / "pstream_tbl")
-    write_snapshot(
+    v1 = write_snapshot(
         spark.createDataFrame([("a", 1)], "grp string, k long"),
         path,
         partition_by=["grp"],
     )
-    v2 = convert_to_shared_layout(path)
     register(spark)
     q = (
         spark.readStream.format("tps_snapshot")
         .option("path", path)
-        .option("starting_version", str(v2))
+        .option("starting_version", str(v1))
         .load()
         .writeStream.format("memory")
         .queryName("pstream")
@@ -490,14 +493,11 @@ def test_stream_replay_dropped_after_interleaved_append(spark, tmp_path):
 
 
 def test_partitioned_batch_append_via_connector(spark, tmp_path):
-    """VERDICT r10 worklist #3: mode('append') on a PARTITIONED
-    shared-tree table — tasks stage per-partition-value files, the
-    driver re-homes them into the tree, and pruned reads + time travel
-    keep working across appends."""
-    from tile_processor_spark.sources.snapshots import (
-        convert_to_shared_layout,
-        write_snapshot,
-    )
+    """VERDICT r10 worklist #3: mode('append') on a PARTITIONED table —
+    tasks write per-partition-value files straight into the table's
+    Hive tree, and pruned reads + time travel keep working across
+    appends."""
+    from tile_processor_spark.sources.snapshots import write_snapshot
 
     register(spark)
     tbl = str(tmp_path / "ptbl")
@@ -506,15 +506,9 @@ def test_partitioned_batch_append_via_connector(spark, tmp_path):
         tbl,
         partition_by=["grp"],
     )
-    # unconverted partitioned table still refuses, with guidance
-    with pytest.raises(Exception, match="shared Hive tree"):
-        spark.createDataFrame([(3, "a")], "k int, grp string").write.format(
-            "tps_snapshot"
-        ).option("path", tbl).mode("append").save()
-    convert_to_shared_layout(tbl)  # v2
     spark.createDataFrame(
         [(3, "a"), (4, "c")], "k int, grp string"
-    ).write.format("tps_snapshot").option("path", tbl).mode("append").save()  # v3
+    ).write.format("tps_snapshot").option("path", tbl).mode("append").save()  # v2
     got = read_snapshot(spark, tbl)
     assert _rows(got.select("k", "grp")) == [
         (1, "a"), (2, "b"), (3, "a"), (4, "c")
@@ -527,7 +521,7 @@ def test_partitioned_batch_append_via_connector(spark, tmp_path):
         read_snapshot(spark, tbl, partition_filter={"grp": "c"}).select("k")
     ) == [(4,)]
     # time travel: pre-append state intact
-    assert read_snapshot(spark, tbl, version=2).count() == 2
+    assert read_snapshot(spark, tbl, version=1).count() == 2
     # the connector READ path agrees (partition values from dir names)
     via_connector = (
         spark.read.format("tps_snapshot").option("path", tbl).load()
@@ -539,14 +533,13 @@ def test_partitioned_batch_append_via_connector(spark, tmp_path):
 
 def test_partitioned_table_to_table_stream(spark, tmp_path):
     """Table-to-table streaming pipeline with a PARTITIONED sink: the
-    stream writer routes every micro-batch through the shared tree,
+    stream writer routes every micro-batch into the table's tree,
     the appended version carries Hive partition values, and a pruned
     read of the sink works."""
     import time as _t
 
     from tile_processor_spark.sources.snapshots import (
         append_snapshot,
-        convert_to_shared_layout,
         list_versions,
         write_snapshot,
     )
@@ -557,13 +550,12 @@ def test_partitioned_table_to_table_stream(spark, tmp_path):
     append_snapshot(
         spark.createDataFrame([(1, "a")], "k long, grp string"), src
     )
-    # sink: partitioned, converted, starts with one row
+    # sink: partitioned, starts with one row
     write_snapshot(
         spark.createDataFrame([(0, "a")], "k long, grp string"),
         dst,
         partition_by=["grp"],
     )
-    convert_to_shared_layout(dst)
     q = (
         spark.readStream.format("tps_snapshot")
         .option("path", src)
@@ -597,7 +589,8 @@ def test_partitioned_table_to_table_stream(spark, tmp_path):
     from tile_processor_spark.sources.snapshots import _read_manifest
 
     last = _read_manifest(dst, list_versions(dst)[-1])
-    assert last.get("appended_files") and last.get("layout") == "shared-tree"
+    assert last.get("appended_files")
+    assert all(f.startswith(last["base"] + "/grp=") for f in last["appended_files"])
 
 
 def test_partitioned_stream_replay_dropped(spark, tmp_path):
@@ -607,7 +600,6 @@ def test_partitioned_stream_replay_dropped(spark, tmp_path):
         SnapshotStreamWriter,
     )
     from tile_processor_spark.sources.snapshots import (
-        convert_to_shared_layout,
         list_versions,
         write_snapshot,
     )
@@ -615,7 +607,6 @@ def test_partitioned_stream_replay_dropped(spark, tmp_path):
     tbl = str(tmp_path / "tbl")
     df = spark.createDataFrame([(1, "a")], "k long, grp string")
     write_snapshot(df, tbl, partition_by=["grp"])
-    convert_to_shared_layout(tbl)
     w = SnapshotStreamWriter(df.schema, {"path": tbl}, overwrite=False)
 
     def staged_msgs(tag):
@@ -641,10 +632,7 @@ def test_partitioned_stream_replay_dropped(spark, tmp_path):
 def test_hive_chain_escaping_roundtrip(spark, tmp_path):
     """Partition values with Hive-special characters ('=', '/', '%')
     survive the connector append → dir chain → read round trip."""
-    from tile_processor_spark.sources.snapshots import (
-        convert_to_shared_layout,
-        write_snapshot,
-    )
+    from tile_processor_spark.sources.snapshots import write_snapshot
 
     register(spark)
     tbl = str(tmp_path / "tbl")
@@ -653,7 +641,6 @@ def test_hive_chain_escaping_roundtrip(spark, tmp_path):
         tbl,
         partition_by=["grp"],
     )
-    convert_to_shared_layout(tbl)
     spark.createDataFrame(
         [(2, "a=b/c%d")], "k int, grp string"
     ).write.format("tps_snapshot").option("path", tbl).mode("append").save()
@@ -668,10 +655,7 @@ def test_hive_chain_escaping_roundtrip(spark, tmp_path):
 
 
 def test_connector_append_null_partition_value_raises(spark, tmp_path):
-    from tile_processor_spark.sources.snapshots import (
-        convert_to_shared_layout,
-        write_snapshot,
-    )
+    from tile_processor_spark.sources.snapshots import write_snapshot
 
     register(spark)
     tbl = str(tmp_path / "tbl")
@@ -680,7 +664,6 @@ def test_connector_append_null_partition_value_raises(spark, tmp_path):
         tbl,
         partition_by=["grp"],
     )
-    convert_to_shared_layout(tbl)
     with pytest.raises(Exception, match="NULL value for partition column"):
         spark.createDataFrame(
             [(2, None)], "k int, grp string"

@@ -29,7 +29,6 @@ from tile_processor_spark.sources import snapshots as S
 from tile_processor_spark.sources.snapshots import (
     ConcurrentCommitError,
     append_snapshot,
-    convert_to_shared_layout,
     delete_snapshot,
     list_versions,
     read_snapshot,
@@ -243,16 +242,16 @@ def test_delete_partitioned_shared_tree_prunes_by_partition(spark, tmp_path):
         [("a", 1, 10), ("a", 2, 20), ("b", 3, 30), ("b", 4, 40)],
         "grp string, k int, v int",
     )
-    write_snapshot(df, tbl, partition_by=["grp"])
-    convert_to_shared_layout(tbl)  # v2
-    m2 = _read_manifest(tbl, 2)
+    write_snapshot(df, tbl, partition_by=["grp"])  # v1, in the tree
+    m1 = _read_manifest(tbl, 1)
     v = delete_snapshot(spark, tbl, [("grp", "=", "b"), ("v", ">", 30)])
-    assert v == 3
-    m3 = _read_manifest(tbl, 3)
+    assert v == 2
+    m2 = _read_manifest(tbl, 2)
     # the grp=a files never matched the partition predicate: carried
-    a_files = [f for f in m2["files"] if "grp=a" in f]
-    assert a_files and all(f in m3["files"] for f in a_files)
-    assert m3["layout"] == "shared-tree"
+    a_files = [f for f in m1["files"] if "grp=a" in f]
+    assert a_files and all(f in m2["files"] for f in a_files)
+    assert m2["base"] == m1["base"] == f"{tbl}/data/tree"
+    assert all(f.startswith(m2["base"] + "/") for f in m2["files"])
     got = sorted((r.grp, r.k) for r in read_snapshot(spark, tbl).collect())
     assert got == [("a", 1), ("a", 2), ("b", 3)]
     # partition-pruned reads still work on the post-delete head

@@ -401,15 +401,13 @@ def test_vacuum_respects_grouped_manifests(spark, tmp_path):
 
 
 def test_partitioned_append_via_shared_tree(spark, tmp_path):
-    """Partitioned appends: convert once to the shared Hive tree
-    (hard links — earlier versions keep their original paths), then
-    append O(new-data) with partition pruning, committed dtypes, and
-    time travel all intact. Vacuuming the pre-conversion version must
-    not break the converted one (links, not moves)."""
+    """Partitioned appends: the first partitioned write already lives
+    in the table's one Hive tree, so v1 takes appends O(new-data) with
+    partition pruning, committed dtypes, and time travel all intact.
+    Vacuuming the first version keeps the files later versions carry."""
     from tile_processor_spark.sources.snapshots import (
         _read_manifest,
         append_snapshot,
-        convert_to_shared_layout,
         vacuum,
     )
 
@@ -418,21 +416,12 @@ def test_partitioned_append_via_shared_tree(spark, tmp_path):
         [("2024", 1, 10.0), ("2025", 2, 20.0)], "yr string, k long, v double"
     )
     v1 = write_snapshot(df, tbl, partition_by=["yr"])
-    # appends refuse until converted
+    assert _read_manifest(tbl, v1)["base"] == os.path.join(tbl, "data", "tree")
     delta = spark.createDataFrame([("2025", 3, 30.0)], "yr string, k long, v double")
-    with pytest.raises(NotImplementedError, match="convert_to_shared_layout"):
-        append_snapshot(delta, tbl)
 
-    v2 = convert_to_shared_layout(tbl)
+    v2 = append_snapshot(delta, tbl)
     m2 = _read_manifest(tbl, v2)
-    assert m2["layout"] == "shared-tree" and m2["base"].endswith("tree")
-    assert _rows(read_snapshot(spark, tbl, version=v2)) == _rows(
-        read_snapshot(spark, tbl, version=v1)
-    )
-
-    v3 = append_snapshot(delta, tbl)
-    m3 = _read_manifest(tbl, v3)
-    assert m3["appended_to"] == v2 and m3["layout"] == "shared-tree"
+    assert m2["appended_to"] == v1 and m2["base"].endswith("tree")
     got = read_snapshot(spark, tbl)
     assert [(f.name, f.dataType.simpleString()) for f in got.schema.fields] == [
         ("yr", "string"), ("k", "bigint"), ("v", "double"),
@@ -452,23 +441,22 @@ def test_partitioned_append_via_shared_tree(spark, tmp_path):
     )
     assert read_snapshot(spark, tbl).count() == 4
 
-    # retire v1 (pre-conversion paths): hard links keep v2+ intact
-    res = vacuum(tbl, keep_last=3, claim_ttl_s=0)
-    assert 1 in res["retired_versions"]
+    # retire v1: its files stay, carried by v2 and v3
+    res = vacuum(tbl, keep_last=2, claim_ttl_s=0)
+    assert res["retired_versions"] == [1]
     assert _rows(read_snapshot(spark, tbl).select("k")) == [(1,), (2,), (3,), (4,)]
-    assert _rows(read_snapshot(spark, tbl, version=v3).select("k")) == [
+    assert _rows(read_snapshot(spark, tbl, version=v2).select("k")) == [
         (1,), (2,), (3,),
     ]
 
 
 def test_shared_tree_survives_compaction(spark, tmp_path):
-    """Compacting a shared-tree table's manifest must keep it
+    """Compacting a partitioned table's manifest must keep it
     appendable: the files are still in the tree, only the manifest
     shape changed."""
     from tile_processor_spark.sources.snapshots import (
         append_snapshot,
         compact_manifest,
-        convert_to_shared_layout,
     )
 
     tbl = str(tmp_path / "treecomp_tbl")
@@ -477,7 +465,6 @@ def test_shared_tree_survives_compaction(spark, tmp_path):
         tbl,
         partition_by=["grp"],
     )
-    convert_to_shared_layout(tbl)
     compact_manifest(tbl)
     append_snapshot(
         spark.createDataFrame([("b", 3)], "grp string, k long"), tbl
@@ -650,7 +637,6 @@ def test_append_preserves_grouped_manifest(spark, tmp_path):
         _read_manifest,
         append_snapshot,
         compact_manifest,
-        convert_to_shared_layout,
     )
 
     tbl = str(tmp_path / "tbl")
@@ -658,17 +644,16 @@ def test_append_preserves_grouped_manifest(spark, tmp_path):
         [(1, "a"), (2, "b")], "k int, grp string"
     )
     write_snapshot(df, tbl, partition_by=["grp"])   # v1
-    convert_to_shared_layout(tbl)                    # v2
-    compact_manifest(tbl)                            # v3 grouped
+    compact_manifest(tbl)                            # v2 grouped
     append_snapshot(
         spark.createDataFrame([(3, "a"), (4, "c")], "k int, grp string"), tbl
-    )                                                # v4 must stay grouped
-    man = _read_manifest(tbl, 4)
+    )                                                # v3 must stay grouped
+    man = _read_manifest(tbl, 3)
     assert "groups" in man and "files" not in man
     assert man["appended_files"] and len(man["appended_files"]) == 2
     # top-level manifest stays O(groups): raw JSON names no parquet file
     # except through side files
-    raw = open(_manifest_path(tbl, 4)).read()
+    raw = open(_manifest_path(tbl, 3)).read()
     assert raw.count(".parquet") == len(man["appended_files"])  # only appended_files
     # delta groups carry partition values -> pruning skips others
     got = read_snapshot(spark, tbl, partition_filter={"grp": "c"})
@@ -679,13 +664,13 @@ def test_append_preserves_grouped_manifest(spark, tmp_path):
     # a second append accumulates one more group per touched value
     append_snapshot(
         spark.createDataFrame([(5, "a")], "k int, grp string"), tbl
-    )                                                # v5
-    man5 = _read_manifest(tbl, 5)
-    assert len(man5["groups"]) == len(man["groups"]) + 1
+    )                                                # v4
+    man4 = _read_manifest(tbl, 4)
+    assert len(man4["groups"]) == len(man["groups"]) + 1
     # re-compaction merges the append groups back to one per value
-    compact_manifest(tbl)                            # v6
-    man6 = _read_manifest(tbl, 6)
-    assert len(man6["groups"]) == 3  # a, b, c
+    compact_manifest(tbl)                            # v5
+    man5 = _read_manifest(tbl, 5)
+    assert len(man5["groups"]) == 3  # a, b, c
     assert sorted(
         tuple(r) for r in read_snapshot(spark, tbl).select("k").collect()
     ) == [(1,), (2,), (3,), (4,), (5,)]
@@ -703,13 +688,14 @@ def test_append_preserves_grouped_manifest(spark, tmp_path):
 
 def test_watermark_survives_connector_overwrite_and_conversion(spark, tmp_path):
     """Review r11: the replay watermark must survive the connector's
-    overwrite path and convert_to_shared_layout — every commit path
-    carries it, so a replay after ANY intervening commit is dropped."""
+    overwrite path and a partitioned copy-on-write delete — every
+    commit path carries it, so a replay after ANY intervening commit
+    is dropped."""
     from tile_processor_spark.sources.snapshot_datasource import register
     from tile_processor_spark.sources.snapshots import (
         _read_manifest,
         commit_append,
-        convert_to_shared_layout,
+        delete_snapshot,
     )
 
     register(spark)
@@ -731,10 +717,10 @@ def test_watermark_survives_connector_overwrite_and_conversion(spark, tmp_path):
     files2 = sorted(str(p) for p in d2.glob("*.parquet"))
     assert commit_append(tbl, files2, stream_mark=("app", 3)) == 3
     assert list_versions(tbl) == [1, 2, 3]
-    # conversion carries it too
+    # a partitioned delete carries it too
     tbl2 = str(tmp_path / "tbl2")
     write_snapshot(
-        spark.createDataFrame([(1, "a")], "k int, grp string"),
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, grp string"),
         tbl2,
         partition_by=["grp"],
     )
@@ -745,7 +731,7 @@ def test_watermark_survives_connector_overwrite_and_conversion(spark, tmp_path):
     man = _read_manifest(tbl2, 1)
     man2 = dict(man, version=2, stream_high_water={"s": 5})
     _commit_manifest(tbl2, man2, 2)
-    convert_to_shared_layout(tbl2)  # v3
+    assert delete_snapshot(spark, tbl2, [("k", "=", 1)]) == 3
     assert _read_manifest(tbl2, 3)["stream_high_water"] == {"s": 5}
 
 
@@ -861,7 +847,9 @@ def test_snapshot_commit_shapes_are_written_once():
     ``snapshot_store.py`` and no backend test in any connector class.
     Vacuum is one function over the store, and neither it nor the
     history tests the backend; the s3 object and upload listings are
-    reached only through the store."""
+    reached only through the store. Partitioned tables have one layout:
+    no layout conversion, no ``share`` primitive, no ``layout`` manifest
+    marker, and one old-layout refusal."""
     import ast
     import pathlib
 
@@ -996,3 +984,43 @@ def test_snapshot_commit_shapes_are_written_once():
         )
     )
     assert listers == ["sources/snapshot_store.py"], listers
+    # one partitioned layout: every partitioned commit writes into the
+    # table's one Hive tree, so nothing converts, shares or marks it
+    gone = {"convert_to_shared_layout", "share", "shared_tree_appends"}
+    assert not [f"{f}:{n}" for f, names in defined.items() for n in names & gone]
+    layout_keys = sorted(
+        f
+        for f, tree in trees.items()
+        for n in ast.walk(tree)
+        if (
+            isinstance(n, ast.Dict)
+            and any(isinstance(k, ast.Constant) and k.value == "layout" for k in n.keys)
+        )
+        or (
+            isinstance(n, ast.Subscript)
+            and isinstance(n.slice, ast.Constant)
+            and n.slice.value == "layout"
+        )
+        or (
+            isinstance(n, ast.Call)
+            and ast.unparse(n.func).endswith(".get")
+            and n.args
+            and isinstance(n.args[0], ast.Constant)
+            and n.args[0].value == "layout"
+        )
+        or (isinstance(n, ast.Attribute) and n.attr in gone)
+    )
+    assert layout_keys == [], layout_keys
+    refusals = sorted(
+        f"{f}:{fn.name}"
+        for f, tree in trees.items()
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        and any(
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and "recommit it once" in n.value
+            for n in ast.walk(fn)
+        )
+    )
+    assert refusals == ["sources/snapshots.py:_check_append_target"], refusals

@@ -655,13 +655,12 @@ def _s3_orders_by_status_table(spark: SparkSession, sf_dir: str) -> dict:
         "Hive-partitioned by o_orderstatus (executors PUT one object "
         "per occupied partition value under a col=val key chain), the "
         "odd half lands as an optimistic-concurrency APPEND whose "
-        "delta objects carry their own chains under a NEW snap prefix "
-        "— no shared-tree re-home; the reader prunes driver-side from "
-        "the manifest, resolving partition values for v1 files "
-        "(relative to the base) and delta files (through '..' "
-        "segments) alike. The result is the latest version read with "
-        "partition_filter status='F' — files of the other statuses "
-        "from BOTH snap prefixes are never planned — aggregated per "
+        "delta objects go under their col=val chains in the table's "
+        "one Hive tree (data/tree, the base of both versions), beside "
+        "v1's; the reader prunes driver-side from the manifest. The "
+        "result is the latest version read with partition_filter "
+        "status='F' — files of the other statuses from BOTH commits "
+        "are never planned — aggregated per "
         "customer. The oracle recomputes the F-state from raw orders; "
         "a committer that dropped the scheme from the append manifest, "
         "a pruner that missed delta files, or a lost partition column "

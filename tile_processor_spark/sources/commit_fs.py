@@ -3,7 +3,7 @@ made explicit, because at 100 TB these tables live on object stores
 where the POSIX idioms the local implementation uses (hard links,
 atomic rename) do not exist.
 
-The protocol (``sources/snapshots.py``) needs exactly three
+The protocol (``sources/snapshots.py``) needs exactly two
 primitives, each with a precise, small contract:
 
 - ``publish_exclusive(tmp, final)`` — make the fully-written ``tmp``
@@ -16,11 +16,6 @@ primitives, each with a precise, small contract:
   ``src`` is referenced by NO manifest yet (staging dirs are private),
   so this needs no atomicity at all: a crash mid-rehome leaves an
   orphan either side, invisible to every reader, reclaimed by vacuum.
-- ``share(src, dst)`` — make ``src``'s content also readable at
-  ``dst`` while ``src`` stays valid (layout conversion: old manifests
-  keep reading their original paths). Only requires that ``dst`` is
-  complete when ``share`` returns; ``dst`` is uuid-named and
-  unreferenced until the next manifest commit publishes it.
 
 Object-store mapping — SHIPPED as of round 12 (``S3CommitFS`` below,
 over the dependency-free SigV4 REST client in ``s3_client.py``; no
@@ -28,10 +23,10 @@ cloud SDK): ``publish_exclusive`` is S3 ``PutObject`` with
 ``If-None-Match: *`` (supported since 2024; GCS's equivalent is
 ``ifGenerationMatch=0``) — a server-side conditional create, the same
 primitive Delta Lake's S3 commit coordinator and Iceberg's swap rely
-on; ``share`` and ``rehome`` are server-side ``CopyObject`` (plus a
-delete for ``rehome`` — safe, the source is unreferenced). No rename
-and no hard link is required anywhere, which is the entire point of
-routing every commit through this interface.
+on; ``rehome`` is a server-side ``CopyObject`` plus a delete (safe,
+the source is unreferenced). No rename and no hard link is required
+anywhere, which is the entire point of routing every commit through
+this interface.
 
 ``FaultInjectingCopyFS`` (tests) implements the contract WITHOUT hard
 links or rename — copy + exclusive-create only, i.e. the object-store
@@ -48,9 +43,7 @@ import shutil
 class LocalCommitFS:
     """POSIX implementation: hard link for exclusive publish (atomic,
     create-if-absent, works across every local/NFS filesystem Spark's
-    local mode touches), rename for rehome, hard link for share (zero
-    copy: the bytes exist once, both paths stay valid, the inode is
-    freed when the last manifest referencing it retires)."""
+    local mode touches), rename for rehome."""
 
     def publish_exclusive(self, tmp_path: str, final_path: str) -> None:
         # os.link is atomic-exclusive: of two racing committers of the
@@ -60,9 +53,6 @@ class LocalCommitFS:
 
     def rehome(self, src: str, dst: str) -> None:
         os.replace(src, dst)
-
-    def share(self, src: str, dst: str) -> None:
-        os.link(src, dst)
 
 
 class CopyCommitFS:
@@ -96,15 +86,12 @@ class CopyCommitFS:
         os.unlink(src)  # ... + DeleteObject; src is unreferenced, so
         # a crash between the two leaves only an invisible orphan
 
-    def share(self, src: str, dst: str) -> None:
-        shutil.copyfile(src, dst)
-
 
 class FaultInjectingCopyFS(CopyCommitFS):
     """CopyCommitFS that 'crashes' (raises) at declared points, for
     proving the protocol's crash-safety claims hold on an object-store
-    FS: set ``crash_at`` to one of 'before_publish', 'mid_rehome'
-    (after copy, before delete), 'before_share'."""
+    FS: set ``crash_at`` to one of 'before_publish', 'mid_publish',
+    'mid_rehome' (after copy, before delete)."""
 
     class Crash(RuntimeError):
         pass
@@ -133,16 +120,10 @@ class FaultInjectingCopyFS(CopyCommitFS):
             raise self.Crash("crash mid-rehome")
         super().rehome(src, dst)
 
-    def share(self, src: str, dst: str) -> None:
-        self.calls.append(("share", src, dst))
-        if self.crash_at == "before_share":
-            raise self.Crash("crash before share")
-        super().share(src, dst)
-
 
 class S3CommitFS:
     """The REAL object-store implementation (round 12 — previously
-    documented only): the three primitives over the S3 REST API via
+    documented only): the two primitives over the S3 REST API via
     the dependency-free SigV4 client (``sources/s3_client.py``).
 
     A local MOUNT directory maps to a key prefix: every path the
@@ -154,10 +135,10 @@ class S3CommitFS:
     where body and precondition commit together, so the losing
     committer of a version race gets ``FileExistsError`` exactly like
     the local hard-link contract and no reader can observe a partial
-    manifest. ``share`` is a server-side CopyObject; ``rehome`` is
-    upload-from-local (staged → final home) or CopyObject+Delete when
-    the source already lives in the bucket — the source is referenced
-    by no manifest either way, so no atomicity is needed.
+    manifest. ``rehome`` is upload-from-local (staged → final home) or
+    CopyObject+Delete when the source already lives in the bucket — the
+    source is referenced by no manifest either way, so no atomicity is
+    needed.
 
     Scope note: this makes the COMMIT primitives real against the wire
     protocol (proven in tests/test_s3_commit_fs.py against a
@@ -194,12 +175,6 @@ class S3CommitFS:
         else:  # already an object → server-side copy + delete
             self.client.copy_object(self._key(src), self._key(dst))
             self.client.delete_object(self._key(src))
-
-    def share(self, src: str, dst: str) -> None:
-        if os.path.exists(src):
-            self.client.put_object(self._key(dst), src)
-        else:
-            self.client.copy_object(self._key(src), self._key(dst))
 
 
 _COMMIT_FS = LocalCommitFS()

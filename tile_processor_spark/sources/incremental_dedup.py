@@ -111,9 +111,9 @@ def _read_delta(
     spark: SparkSession, man: dict, delta_files: list[str]
 ) -> DataFrame:
     """Read one version's delta files. For a partitioned corpus the
-    partition columns live in the shared-tree directory names — the
-    SAME basePath/cast re-derivation as ``read_snapshot`` (one shared
-    helper, so the two read paths cannot diverge)."""
+    partition columns live in the directory names of the table's Hive
+    tree — the SAME basePath/cast re-derivation as ``read_snapshot``
+    (one shared helper, so the two read paths cannot diverge)."""
     if not (man.get("partition_by") or []):
         return spark.read.parquet(*delta_files)
     return read_partitioned_files(spark, man, delta_files)
@@ -183,10 +183,9 @@ def dedup_new_versions(
     Returns per-version stats ``{"version", "new_rows", "kept",
     "dropped"}``. REWRITE versions raise like the version stream does
     — an incremental consumer cannot interpret a rewrite without
-    re-emitting history — while metadata-only versions
-    (``compact_manifest`` / ``convert_to_shared_layout``, whose deltas
-    are provably empty) advance the mark with zero rows. A GAP between
-    the processed-through mark and the oldest surviving corpus
+    re-emitting history — while ``compact_manifest`` versions (same
+    file set, an empty delta) advance the mark with zero rows. A GAP
+    between the processed-through mark and the oldest surviving corpus
     manifest (a too-aggressive ``vacuum``) raises rather than silently
     under-deduplicating: rows in the vacuumed versions were never
     fingerprinted.
@@ -246,9 +245,9 @@ def dedup_new_versions(
         if delta_files is None:
             if man.get("version") == 1 and "files" in man:
                 delta_files = _manifest_files(man)
-            elif "compacted_from" in man or "converted_from" in man:
-                # metadata-only commit: the file SET is unchanged, the
-                # delta is provably empty — advance the mark, keep zero
+            elif "compacted_from" in man:
+                # compaction: the file SET is unchanged, the delta is
+                # provably empty — advance the mark, keep zero
                 delta_files = []
             else:
                 raise ValueError(

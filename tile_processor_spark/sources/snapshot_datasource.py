@@ -35,16 +35,16 @@ column values re-attached as constant Arrow columns cast to the
 COMMITTED dtype (no path-inference drift by construction).
 
 Writes are a two-phase commit. EXECUTORS each write their Arrow batches
-as one parquet file under a writer-private ``data/<uuid>/`` snap prefix
-(one file per occupied partition-value combination, under its Hive
-``col=val`` chain, for a partitioned table) and return the written
-paths with per-file column min/max stats taken from the in-memory Arrow
-table. The DRIVER then publishes a manifest referencing exactly the
-acknowledged files through the one commit shape per kind in
-``sources/snapshots.py`` (``_commit_overwrite``, ``commit_append``,
-``_commit_replace``). A failed or speculated task leaves unreferenced
-files, invisible to readers, which vacuum reclaims after its retention
-window.
+as one parquet file under a writer-private ``data/<uuid>/`` snap prefix,
+or, for a partitioned table, as one uuid-named file per occupied
+partition-value combination under the table's one Hive tree
+``data/tree/<col=val…>/``, and return the written paths with per-file
+column min/max stats taken from the in-memory Arrow table. The DRIVER
+then publishes a manifest referencing exactly the acknowledged files
+through the one commit shape per kind in ``sources/snapshots.py``
+(``_commit_overwrite``, ``commit_append``, ``_commit_replace``). A
+failed or speculated task leaves unreferenced files, invisible to
+readers, which vacuum reclaims after its retention window.
 
 Reference parity: the reference overwrites output directories in place
 (tile_processor/output.py DirOutput ~L40); this is the versioned
@@ -54,6 +54,7 @@ replacement.
 from __future__ import annotations
 
 import json
+import uuid
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -67,10 +68,12 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from tile_processor_spark.sources.snapshot_store import (  # noqa: F401 — S3SnapshotStore re-exported
+    _TREE_DIR,
     S3SnapshotStore,
     open_store,
 )
 from tile_processor_spark.sources.snapshots import (
+    _check_append_target,
     _commit_overwrite,
     _commit_replace,
     _manifest_files,
@@ -493,8 +496,7 @@ def _check_writer_schema(schema: StructType, committed_json: str, what: str) -> 
 def _delta_scheme(store, head: dict, asked: list[str], what: str) -> list[str]:
     """The partition scheme a delta onto the committed ``head`` is
     written under: the table's own (an explicit ``partition_by`` must
-    equal it). A store whose partitioned appends live in a shared Hive
-    tree refuses a table not yet converted to it."""
+    equal it), on a head that takes new files (``_check_append_target``)."""
     committed = list(head.get("partition_by") or [])
     if asked and asked != committed:
         raise ValueError(
@@ -502,13 +504,7 @@ def _delta_scheme(store, head: dict, asked: list[str], what: str) -> list[str]:
             f"table's scheme {committed} — a {what} inherits the table's "
             "partitioning (omit the option)"
         )
-    if committed and store.shared_tree_appends and head.get("layout") != "shared-tree":
-        raise NotImplementedError(
-            f"{what} on a partitioned snapshot table needs the shared Hive "
-            "tree layout (appended files under a second snap dir would "
-            "break basePath partition discovery) — run "
-            "convert_to_shared_layout(table_path) once"
-        )
+    _check_append_target(store, head, None, committed)
     return committed
 
 
@@ -526,10 +522,9 @@ class _WriteMessage(WriterCommitMessage):
 def _write_task(store, schema: StructType, snap: str, part_cols: list[str], iterator):
     """Executor body of both writers: Arrow batches → one parquet file
     under the writer's ``snap`` prefix (one PER occupied
-    partition-value combination when ``part_cols`` is set — partition
-    columns live in the Hive path chain, not in the data files)."""
-    import uuid
-
+    partition-value combination when ``part_cols`` is set, under its
+    Hive chain in the tree — partition columns live in the path, not
+    in the data files)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -546,20 +541,19 @@ def _write_task(store, schema: StructType, snap: str, part_cols: list[str], iter
     return _WriteMessage(files, snap)
 
 
-def _committed(store, tree: str | None, snap: str, messages):
-    """The acknowledged files as the manifest records them (placed by
-    the store when a partitioned delta lands on the committed ``tree``):
-    sorted paths, their per-file stats, and the ``base`` a table born by
-    this commit records — the writing instance's snap prefix. Spark
-    commits a stream micro-batch on a FRESH writer instance, so the
-    prefix travels in the messages; ``snap`` is the committing
-    instance's own, for messages that carry none."""
+def _committed(store, snap: str, messages):
+    """The acknowledged files as the manifest records them: sorted
+    paths, their per-file stats, and the ``base`` a table born by this
+    commit records — the prefix the tasks wrote under. Spark commits a
+    stream micro-batch on a FRESH writer instance, so the prefix
+    travels in the messages; ``snap`` is the committing instance's own,
+    for messages that carry none."""
     files = []
     for m in messages:
         if m is None:
             continue
         snap = m.snap or snap
-        files += m.files if tree is None else store.place_delta(tree, store.path(snap), m.files)
+        files += m.files
     files.sort(key=lambda f: f[0])
     return [p for p, _st in files], {p: st for p, st in files if st}, store.path(snap)
 
@@ -579,10 +573,10 @@ class SnapshotWriter(DataSourceArrowWriter):
     one on top of it); ``mode('overwrite')`` replaces the table state
     through the same commit as ``write_snapshot``, Hive-partitioned by
     ``.option("partition_by", "col1,col2")`` when given. Appends inherit
-    the committed table's scheme; locally a partitioned table must be
-    in the shared Hive tree (run ``convert_to_shared_layout`` once,
-    same contract as ``append_snapshot``), and the driver re-homes the
-    staged files into the tree before the manifest commit.
+    the committed table's scheme; a partitioned write's tasks put their
+    files straight into the table's Hive tree, same contract as
+    ``append_snapshot``; an unpartitioned write's go under a fresh
+    ``data/<uuid>`` snap prefix.
 
     Options used by the function API (``snapshots._write_snapshot_s3``):
     ``expected_version`` (read-version conflict detection),
@@ -591,12 +585,9 @@ class SnapshotWriter(DataSourceArrowWriter):
     of the named files, ``delete_snapshot``)."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        import uuid
-
         self._schema = schema
         self._store = _table_store(options, "write")
         self._overwrite = overwrite
-        self._snap = f"data/{uuid.uuid4().hex}"
         ev = options.get("expected_version")
         self._expected_version = int(ev) if ev is not None else None
         self._extra = json.loads(options.get("commit_extra", "{}")) or None
@@ -630,7 +621,6 @@ class SnapshotWriter(DataSourceArrowWriter):
         # a replace or an append lands files on the committed head: it
         # carries the COMMITTED schema and scheme forward, so data
         # written against a drifted one would contradict them
-        self._tree = None
         if self._replace is not None or not overwrite:
             versions = self._store.versions()
             if versions:
@@ -640,13 +630,13 @@ class SnapshotWriter(DataSourceArrowWriter):
                 self._part_cols = _delta_scheme(
                     self._store, head, self._part_cols, what
                 )
-                self._tree = head["base"] if self._part_cols else None
+        self._snap = _TREE_DIR if self._part_cols else f"data/{uuid.uuid4().hex}"
 
     def write(self, iterator):
         return _write_task(self._store, self._schema, self._snap, self._part_cols, iterator)
 
     def commit(self, messages) -> None:
-        files, stats, base = _committed(self._store, self._tree, self._snap, messages)
+        files, stats, base = _committed(self._store, self._snap, messages)
         if self._replace is not None:
             _commit_replace(
                 self._store, self._expected_version, self._replace,
@@ -700,24 +690,21 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
     snap prefix, which is also the ``base`` a table born by the stream
     records. A PARTITIONED sink table inherits the committed scheme,
     exactly like the batch appender (a stream cannot bootstrap
-    partition metadata out of nothing); a stream whose query schema
-    drifted from the table refuses at construction."""
+    partition metadata out of nothing), and its tasks write into the
+    table's tree; a stream whose query schema drifted from the table
+    refuses at construction."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        import uuid
-
         self._schema = schema
         self._store = _table_store(options, "stream write")
         self._app_id = options.get("stream_app_id", "default")
-        self._snap = f"data/stream-{uuid.uuid4().hex}"
         self._part_cols: list[str] = []
-        self._tree = None
         versions = self._store.versions()
         if versions:
             head = self._store.manifest(versions[-1])
             _check_writer_schema(schema, head["schema"], "stream write")
             self._part_cols = _delta_scheme(self._store, head, [], "stream write")
-            self._tree = head["base"] if self._part_cols else None
+        self._snap = _TREE_DIR if self._part_cols else f"data/stream-{uuid.uuid4().hex}"
 
     def write(self, iterator):
         return _write_task(self._store, self._schema, self._snap, self._part_cols, iterator)
@@ -727,7 +714,7 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
         # fresh latest manifest inside every retry, and the mark is
         # carried forward by every other commit path, so intervening
         # appends cannot turn a replay into a duplicate
-        files, stats, base = _committed(self._store, self._tree, self._snap, messages)
+        files, stats, base = _committed(self._store, self._snap, messages)
         commit_append(
             self._store,
             files,

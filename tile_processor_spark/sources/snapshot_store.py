@@ -25,9 +25,6 @@ writers and readers are written once over either backend:
   s3) at a path relative to the table and returns the path the
   manifest records (``path`` maps a relative path the same way);
 - ``drop`` deletes a staged file of an aborted write (best effort);
-- ``place_delta`` is where a partitioned delta's files live once
-  committed onto the table's tree (locally they are re-homed into the
-  shared Hive tree; on s3 they stay where they were written);
 - ``locate`` maps a manifest path to what ``read_table`` reads, and
   ``sizes`` gives those files' byte sizes (bin-packing, history bytes).
 
@@ -35,8 +32,14 @@ Vacuum's retention policy is written once (``snapshots.vacuum``); a
 store holds only what differs by backend: listing the ``data/`` and
 ``groups/`` files with their mtimes (``sweep_candidates``), deleting a
 manifest (``retire``) or a file (``delete``), and its own staging
-leftovers (``reclaim_staging``). ``convert_to_shared_layout`` stays
-local.
+leftovers (``reclaim_staging``).
+
+Every partitioned commit, on either backend, puts its files under the
+table's one Hive tree ``data/tree/<col=val…>/`` (``_TREE_DIR``) and
+records that tree as the manifest's ``base``; unpartitioned commits
+write under a fresh ``data/<uuid>/`` snap dir. Spark's own local
+``partitionBy`` output is staged in a snap dir and moved into the tree
+by ``LocalSnapshotStore.place_delta``.
 """
 
 from __future__ import annotations
@@ -52,6 +55,7 @@ from tile_processor_spark.sources.s3_client import S3Handle, put_if_absent
 _MANIFEST_PREFIX = "manifest-v"
 _DATA_DIR = "data"
 _GROUPS_DIR = "groups"
+_TREE_DIR = f"{_DATA_DIR}/tree"
 
 
 def _manifest_name(version: int) -> str:
@@ -103,11 +107,8 @@ def _require_root(manifest: dict, where: str) -> str:
 
 class LocalSnapshotStore:
     """A snapshot table in a local directory. Manifests record absolute
-    paths, so carried paths need no re-rooting. Partitioned appends
-    must land in the shared Hive tree: local reads discover partition
-    columns from ONE ``basePath``."""
-
-    shared_tree_appends = True
+    paths, so carried paths need no re-rooting. Local reads discover
+    partition columns from ONE ``basePath``, the table's tree."""
 
     def __init__(self, table_path: str):
         self.root = os.path.abspath(table_path)
@@ -166,22 +167,22 @@ class LocalSnapshotStore:
         with contextlib.suppress(FileNotFoundError):
             os.unlink(path)
 
-    def place_delta(self, tree: str, snap: str, files: list) -> list:
-        """``(path, stats)`` pairs staged under the ``snap`` dir, moved
-        into a partitioned table's shared Hive ``tree`` under their
-        ``col=val`` chains, because local reads discover partition
-        columns from ONE basePath. The staged files are referenced by
-        nothing yet, so no atomicity is needed (``commit_fs.rehome``)."""
+    def place_delta(self, snap: str, files: list[str]) -> list[str]:
+        """Files Spark staged under the ``snap`` dir, moved into the
+        table's tree under their ``col=val`` chains (kept verbatim) with
+        uuid-prefixed names. The staged files are referenced by nothing
+        yet, so no atomicity is needed (``commit_fs.rehome``)."""
         from tile_processor_spark.sources.commit_fs import get_commit_fs
 
         fs = get_commit_fs()
+        tree = self.path(_TREE_DIR)
         out = []
-        for f, stats in files:
+        for f in files:
             subdir = os.path.join(tree, os.path.relpath(os.path.dirname(f), snap))
             os.makedirs(subdir, exist_ok=True)
             dst = os.path.join(subdir, f"{uuid.uuid4().hex}-{os.path.basename(f)}")
             fs.rehome(f, dst)
-            out.append((dst, stats))
+            out.append(dst)
         return out
 
     def locate(self, path: str, manifest: dict) -> str:
@@ -226,8 +227,10 @@ class LocalSnapshotStore:
     def reclaim_staging(self, cutoff: float) -> tuple[int, int]:
         """Stale ``.manifest.tmp.*`` files (a committer killed before its
         publish; uuid-named, so never a live publish's) last modified at
-        or before ``cutoff``, and the directories under ``data/`` the
-        sweep left empty. Returns ``(files removed, uploads aborted)``."""
+        or before ``cutoff``, and the empty directories under ``data/``
+        last modified at or before it: a writer makes a tree directory
+        and then writes its file into it, so a fresh empty one may be
+        in use. Returns ``(files removed, uploads aborted)``."""
         removed = 0
         for n in os.listdir(self.root):
             p = os.path.join(self.root, n)
@@ -238,8 +241,9 @@ class LocalSnapshotStore:
         data = os.path.join(self.root, _DATA_DIR)
         for d, _dirs, _names in os.walk(data, topdown=False):
             if d != data:
-                with contextlib.suppress(OSError):  # not empty
-                    os.rmdir(d)
+                with contextlib.suppress(OSError):  # not empty, or gone
+                    if os.path.getmtime(d) <= cutoff:
+                        os.rmdir(d)
         return removed, 0
 
 
@@ -262,8 +266,6 @@ class S3SnapshotStore(S3Handle):
     ``s3_access_key``, ``s3_secret_key``, ``s3_region`` (or env
     ``SPARK_GRAFT_S3_ENDPOINT`` / ``_ACCESS_KEY`` / ``_SECRET_KEY`` /
     ``_REGION``)."""
-
-    shared_tree_appends = False
 
     def __init__(self, path: str, options: dict):
         super().__init__(path, options, "snapshot table")
@@ -368,14 +370,6 @@ class S3SnapshotStore(S3Handle):
         # anything missed stays invisible and ages into vacuum's sweep
         with contextlib.suppress(Exception):
             self.client().delete_object(self.key_for(path, self.root))
-
-    def place_delta(self, tree: str, snap: str, files: list) -> list:
-        """Partitioned deltas stay where they were written: the reader
-        prunes from the manifest's file list, and ``_partition_values``
-        parses a delta under another snap prefix through ``..``
-        segments, which carry no ``=`` and so cannot alias a partition
-        pair."""
-        return files
 
     def locate(self, path: str, manifest: dict) -> str:
         return self.key_for(path, _require_root(manifest, str(self)))

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -49,6 +50,8 @@ from tile_processor_spark.session import local_frame
 from tile_processor_spark.sources.snapshot_store import (
     _DATA_DIR,
     _GROUPS_DIR,
+    _TREE_DIR,
+    LocalSnapshotStore,
     _load_json,
     _manifest_path,
     _read_manifest,
@@ -346,10 +349,9 @@ def write_snapshot(
 ) -> int:
     """Commit ``df`` as the next table version; returns the version.
 
-    The data lands in a fresh uuid-named subdirectory of ``data/``
-    (immutable once written), then ONE exclusive-create of the
-    manifest publishes the commit. A crash before the publish leaves
-    an orphan data dir no reader can see. Two committers racing on the
+    The data lands as fresh immutable files (``_stage_files``), then ONE
+    exclusive-create of the manifest publishes the commit. A crash
+    before the publish leaves orphan files no reader can see. Two committers racing on the
     SAME version number are arbitrated by the exclusive create: the
     loser raises (``ConcurrentCommitError``), never clobbers. What the
     bare rewrite does NOT detect is a commit landing between a
@@ -366,8 +368,10 @@ def write_snapshot(
     detection); appends need none of it because they commute
     (``commit_append`` retries on top of the fresh manifest).
 
-    With ``partition_by``, data files land in Hive-style ``col=value``
-    subdirectories and the manifest records the partition scheme —
+    With ``partition_by``, the rows are clustered by partition value
+    (one file per value), the files land in the
+    table's one Hive tree ``data/tree/col=value/…``, and the manifest
+    records the partition scheme with the tree as its ``base`` —
     ``read_snapshot(partition_filter=...)`` then prunes whole files
     from the MANIFEST (driver-side, before any Spark scan is planned):
     the Iceberg-style partition skip, the difference between reading
@@ -383,22 +387,9 @@ def write_snapshot(
             expected_version=expected_version,
         )
     table_path = os.path.abspath(table_path)
-    os.makedirs(os.path.join(table_path, _DATA_DIR), exist_ok=True)
-    snap_dir = os.path.join(table_path, _DATA_DIR, uuid.uuid4().hex)
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(snap_dir)
-    # Manifest paths are absolute so later vacuum/read calls resolve the
-    # same strings regardless of the caller's cwd or path spelling.
-    files = sorted(
-        os.path.join(root, n)
-        for root, _dirs, names in os.walk(snap_dir)
-        for n in names
-        if n.endswith(".parquet")
-    )
+    files, base = _stage_files(df, table_path, partition_by)
     return _commit_overwrite(
-        table_path, files, df.schema.json(), snap_dir, partition_by,
+        table_path, files, df.schema.json(), base, partition_by,
         _collect_stats(files), expected_version,
     )
 
@@ -494,11 +485,10 @@ def append_snapshot(
     table takes a million appends without ever re-writing a byte of
     history, and every intermediate version stays time-travelable.
     Schema must match the committed one exactly — an append is not the
-    place for silent evolution. Partitioned tables append through the
-    shared Hive tree (run :func:`convert_to_shared_layout` once; an
-    unconverted partitioned table refuses with guidance, because an
-    appended manifest spanning snap dirs would break single-basePath
-    partition discovery). Also the commit shape the version-stream
+    place for silent evolution. A partitioned table's delta lands in
+    its one Hive tree, like every partitioned commit
+    (``_check_append_target`` refuses a local table committed in the
+    older per-commit layout). Also the commit shape the version-stream
     reader consumes: each append version's NEW files hold exactly that
     batch's rows.
 
@@ -510,32 +500,24 @@ def append_snapshot(
     or partition change landing mid-retry) still raise.
 
     ``table_path`` may be an ``s3://`` table (round 15): the append
-    routes through the connector's native writer — partitioned tables
-    append WITHOUT any shared-tree conversion there (delta key chains
-    under task-private snap prefixes)."""
+    routes through the connector's native writer."""
     if table_path.startswith("s3://"):
         return _write_snapshot_s3(df, table_path, None, s3_options, "append")
-    table_path = os.path.abspath(table_path)
-    versions = list_versions(table_path)
+    store = open_store(os.path.abspath(table_path))
+    versions = store.versions()
     if not versions:
         return write_snapshot(df, table_path)
-    manifest = _read_manifest(table_path, versions[-1])
+    manifest = store.manifest(versions[-1])
     part_cols = manifest.get("partition_by") or []
-    if part_cols and manifest.get("layout") != "shared-tree":
-        raise NotImplementedError(
-            "append_snapshot on a partitioned table needs the shared "
-            "Hive tree layout (appended files under a second snap dir "
-            "would break basePath partition discovery) — run "
-            "convert_to_shared_layout(table_path) once, then append"
-        )
+    _check_append_target(store, manifest, None, part_cols)
     names = [n for n, _t in _schema_fields(manifest["schema"])]
     if list(df.columns) != names and sorted(df.columns) != sorted(names):
         raise ValueError(
             f"append schema {df.columns} does not match committed {names}"
         )
-    new_files = _stage_files(df.select(*names), table_path, manifest)
+    new_files, _base = _stage_files(df.select(*names), store.root, part_cols)
     return commit_append(
-        table_path,
+        store,
         new_files,
         partition_by=part_cols,
         expected_schema=manifest["schema"],
@@ -544,32 +526,33 @@ def append_snapshot(
 
 _APPEND_RETRIES = 5
 
-_TREE_SUBDIR = "tree"
 
-
-def _stage_files(df: DataFrame, table_path: str, manifest: dict) -> list[str]:
-    """Write ``df``'s rows as new immutable data files for a pending
-    commit onto ``manifest``'s table state; returns the staged absolute
-    paths. Unpartitioned tables get a fresh snap dir; partitioned
-    SHARED-TREE tables re-home the staged files into the tree under
-    their Hive ``col=val`` chains (the staged files are referenced by
-    nothing yet, so no atomicity is needed: rename locally, copy+delete
-    on an object store). Shared by ``append_snapshot`` and
-    ``delete_snapshot`` — the two commit shapes that add files onto an
-    EXISTING layout rather than replacing it."""
-    part_cols = manifest.get("partition_by") or []
-    snap_dir = os.path.join(table_path, _DATA_DIR, uuid.uuid4().hex)
-    out = df
+def _stage_files(
+    df: DataFrame, table_path: str, part_cols: list[str] | None
+) -> tuple[list[str], str]:
+    """Write ``df``'s rows as new immutable data files of a pending
+    commit; returns their sorted absolute paths and the ``base`` they
+    live under. Unpartitioned files stay in a fresh snap dir (the base
+    of a table they start). Partitioned rows are clustered by partition
+    value first, written by Spark under a fresh snap dir, and re-homed
+    into the table's one Hive tree under their ``col=val`` chains
+    (``place_delta``): local reads discover partition columns from ONE
+    basePath, so every partitioned version's files share the tree. The
+    staging, used by ``write_snapshot``, ``append_snapshot`` and
+    ``delete_snapshot``, is written once here."""
+    store = open_store(table_path)
+    os.makedirs(store.path(_DATA_DIR), exist_ok=True)
+    snap_dir = store.path(f"{_DATA_DIR}/{uuid.uuid4().hex}")
+    writer = df.write
     if part_cols:
-        # cluster by partition value first: an unclustered partitionBy
-        # write emits (input partitions × values) files — measured
-        # 1,600 files for a 10k-row delta — the small-files problem
-        # that would swamp the manifest after a million commits
-        out = out.repartition(*[F.col(c) for c in part_cols])
-    writer = out.write.mode("error")
-    if part_cols:
+        # an unclustered partitionBy write emits (input partitions ×
+        # values) files — measured 1,600 files for a 10k-row delta —
+        # the small-files problem that would swamp the manifest
+        writer = df.repartition(*[F.col(c) for c in part_cols]).write
         writer = writer.partitionBy(*part_cols)
-    writer.parquet(snap_dir)
+    writer.mode("error").parquet(snap_dir)
+    # absolute paths, so later vacuum/read calls resolve the same
+    # strings regardless of the caller's cwd or path spelling
     staged = sorted(
         os.path.join(root, n)
         for root, _dirs, fnames in os.walk(snap_dir)
@@ -577,79 +560,12 @@ def _stage_files(df: DataFrame, table_path: str, manifest: dict) -> list[str]:
         if n.endswith(".parquet")
     )
     if not part_cols:
-        return staged
-    # re-home into the shared tree, preserving the col=val chain
-    # verbatim; then clean the now-empty staging dirs
-    placed = open_store(table_path).place_delta(
-        manifest["base"], snap_dir, [(f, None) for f in staged]
-    )
-    for root, _dirs, _fnames in os.walk(snap_dir, topdown=False):
-        if not any(os.scandir(root)):
-            os.rmdir(root)
-    return sorted(f for f, _stats in placed)
-
-
-def convert_to_shared_layout(table_path: str) -> int:
-    """Re-home a partitioned table's CURRENT files into the stable
-    shared Hive tree ``data/tree/<col=val>/…`` and commit that as the
-    next version — the layout partitioned APPENDS require (every
-    version's files then live under ONE basePath, so Spark's partition
-    discovery stays consistent as appends accumulate).
-
-    Files are SHARED, not moved: the old paths stay valid, so every
-    earlier version keeps reading its original manifest unchanged
-    (time travel survives conversion), and vacuum reclaims each path
-    independently. Locally ``share`` is a hard link (bytes exist once,
-    inode freed when the last referencing manifest retires); on an
-    object store it is a server-side copy — same contract, paid in
-    storage instead of inodes (see ``sources/commit_fs.py``)."""
-    from tile_processor_spark.sources.commit_fs import get_commit_fs
-
-    table_path = os.path.abspath(table_path)
-    versions = list_versions(table_path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    manifest = _read_manifest(table_path, versions[-1])
-    part_cols = manifest.get("partition_by") or []
-    if not part_cols:
-        raise ValueError(
-            "convert_to_shared_layout is for partitioned tables; "
-            "unpartitioned tables append without any conversion"
-        )
-    base = manifest["base"]
-    tree = os.path.join(table_path, _DATA_DIR, _TREE_SUBDIR)
-    old_stats = _gather_file_stats(manifest)
-    new_stats: dict[str, dict[str, list]] = {}
-    new_files = []
-    for f in _manifest_files(manifest):
-        # keep the col=val chain VERBATIM (no unquote/requote round
-        # trip — Hive escaping is preserved exactly as written)
-        segs = os.path.relpath(f, base).split(os.sep)[:-1]
-        subdir = os.path.join(tree, *segs)
-        os.makedirs(subdir, exist_ok=True)
-        dst = os.path.join(subdir, f"{uuid.uuid4().hex}-{os.path.basename(f)}")
-        get_commit_fs().share(f, dst)
-        new_files.append(dst)
-        if f in old_stats:  # same bytes, same stats — re-key, no re-read
-            new_stats[dst] = old_stats[f]
-    new_manifest = {
-        "version": versions[-1] + 1,
-        "committed_at": time.time(),
-        "files": sorted(new_files),
-        "schema": manifest["schema"],
-        "base": tree,
-        "partition_by": list(part_cols),
-        "layout": "shared-tree",
-        "converted_from": versions[-1],
-    }
-    if new_stats:
-        new_manifest["file_stats"] = new_stats
-    hw = manifest.get("stream_high_water")
-    if hw:
-        # the streaming replay watermark lives in EVERY manifest —
-        # a layout conversion must not create a mark-free head
-        new_manifest["stream_high_water"] = hw
-    return _commit_manifest(table_path, new_manifest, versions[-1] + 1)
+        return staged, snap_dir
+    placed = store.place_delta(snap_dir, staged)
+    # what Spark left behind (_SUCCESS, .crc checksums) is referenced
+    # by nothing; the staging dir is private to this call
+    shutil.rmtree(snap_dir, ignore_errors=True)
+    return sorted(placed), store.path(_TREE_DIR)
 
 
 def commit_append(
@@ -675,9 +591,9 @@ def commit_append(
     under (empty for flat files); it must equal the committed table's,
     re-checked on every retry, so a rewrite or raced creation that
     changed the layout mid-append raises instead of publishing files
-    whose key chains contradict the manifest. A local partitioned table
-    must also be in the shared Hive tree (``convert_to_shared_layout``):
-    the caller places the files there.
+    whose key chains contradict the manifest. A partitioned delta's
+    files must already sit in the table's Hive tree (their writer put
+    them there).
 
     ``expected_schema`` is the schema (JSON string) the delta files
     were WRITTEN against; every retry re-validates the FRESH latest
@@ -770,8 +686,12 @@ def _check_append_target(
     store, manifest: dict, expected_schema: str | None, delta_parts: list[str]
 ) -> None:
     """Refuse an append whose delta files contradict the latest
-    manifest: a schema or partition scheme that changed under it, or a
-    local partitioned table outside the shared Hive tree."""
+    manifest (a schema or partition scheme that changed under it), and
+    any delta onto a local partitioned head whose ``base`` is not the
+    table's tree. Such a head was committed before every partitioned
+    commit shared one tree; local reads need all of a version's files
+    under one basePath, so it takes no more files until recommitted.
+    The one old-layout rule for appends, stream writes and deletes."""
     if expected_schema is not None and _schema_fields(
         manifest["schema"]
     ) != _schema_fields(expected_schema):
@@ -791,13 +711,14 @@ def _check_append_target(
         )
     if (
         committed_parts
-        and store.shared_tree_appends
-        and manifest.get("layout") != "shared-tree"
+        and isinstance(store, LocalSnapshotStore)
+        and manifest["base"] != store.path(_TREE_DIR)
     ):
         raise NotImplementedError(
-            "append onto a partitioned snapshot table (files must be "
-            "placed in the shared Hive tree first — use append_snapshot "
-            "after convert_to_shared_layout)"
+            f"{store} is a partitioned table in the per-commit layout of "
+            f"an older release (base {manifest['base']}); recommit it once "
+            f"with write_snapshot(read_snapshot(spark, p), p, "
+            f"partition_by={committed_parts}), then append, stream or delete"
         )
 
 
@@ -819,9 +740,6 @@ def _appended_state(
         "schema": manifest["schema"],
         "base": carry(manifest["base"]),
     }
-    if manifest.get("layout"):
-        # a shared-tree table stays appendable: only the file set grew
-        out["layout"] = manifest["layout"]
     if "groups" in manifest:
         out["groups"] = [
             store.carry_group(g, manifest) for g in manifest["groups"]
@@ -1111,10 +1029,6 @@ def compact_manifest(
         "partition_by": list(part_cols),
         "compacted_from": v,
     }
-    if manifest.get("layout"):
-        # a compacted shared-tree table must stay appendable: the
-        # files are still in the tree, only the manifest shape changed
-        new_manifest["layout"] = manifest["layout"]
     # carry the streaming-sink replay watermark from the CURRENT head
     # (not the compacted source — under allow_rollback they differ and
     # the watermark must never move backwards)
@@ -1709,11 +1623,9 @@ def delete_snapshot(
     manifest BY REFERENCE — at 100 TB a key-targeted delete rewrites a
     handful of files, never the table. When the pruning proves NO file
     can match, no new version is committed at all (the current version
-    is returned unchanged). Partitioned tables delete through the
-    shared Hive tree when converted (``convert_to_shared_layout``);
-    an unconverted local partitioned table falls back to a full-state
-    rewrite (correct, just not copy-on-write — new files under a
-    second snap dir would break basePath partition discovery).
+    is returned unchanged). A partitioned table's rewritten files land
+    in its Hive tree (``_check_append_target`` refuses a local table
+    committed in the older per-commit layout).
     A grouped (compacted) manifest commits the post-delete state flat;
     re-run ``compact_manifest`` to restore the manifest-list layout.
 
@@ -1759,6 +1671,7 @@ def delete_snapshot(
         ]
         if not touched:
             return read_version  # proven no-op: no file admits a match
+        _check_append_target(store, manifest, None, part_cols)
         extra = {"deleted_where": _where_json(where), "rewrote_files": len(touched)}
         try:
             if is_s3:
@@ -1772,22 +1685,13 @@ def delete_snapshot(
                     expected_version=read_version, replace_files=touched,
                     extra=extra,
                 )
-            if part_cols and manifest.get("layout") != "shared-tree":
-                # unconverted partitioned layout: full-state rewrite
-                keep = _keep_filter(
-                    read_snapshot(spark, table_path, version=read_version), where
-                )
-                return write_snapshot(
-                    keep, table_path, partition_by=part_cols,
-                    expected_version=read_version,
-                )
             if part_cols:
                 df = read_partitioned_files(spark, manifest, touched)
             else:
                 df = spark.read.parquet(*touched).select(
                     *[n for n, _t in _schema_fields(manifest["schema"])]
                 )
-            new_files = _stage_files(_keep_filter(df, where), store.root, manifest)
+            new_files, _base = _stage_files(_keep_filter(df, where), store.root, part_cols)
             return _commit_replace(
                 store, read_version, touched, new_files,
                 _collect_stats(new_files), extra,
@@ -1814,8 +1718,8 @@ def _commit_replace(
     the files named in ``replaced`` (paths in the READ manifest's own
     namespace) drop out of ``read_version``'s state and the already-
     written ``new_files`` stand in for them; every other file carries
-    by reference. Schema, base, partition scheme, layout and the
-    streaming watermark carry unchanged. Publishes at exactly
+    by reference. Schema, base, partition scheme and the streaming
+    watermark carry unchanged. Publishes at exactly
     ``read_version + 1`` — any concurrent commit makes this raise
     ``ConcurrentCommitError`` rather than lose rows. The result is a
     flat manifest even when the read version was grouped."""
@@ -1842,8 +1746,6 @@ def _commit_replace(
     }
     if file_stats:
         new_manifest["file_stats"] = file_stats
-    if manifest.get("layout"):
-        new_manifest["layout"] = manifest["layout"]
     _carried_high_water(store, version, new_manifest)
     new_manifest.update(extra or {})
     return _commit_manifest(store, new_manifest, version)

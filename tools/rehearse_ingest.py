@@ -64,7 +64,6 @@ def _fab_table(root: str, n_files: int, n_parts: int) -> str:
             "schema": schema,
             "base": base,
             "partition_by": ["grp"],
-            "layout": "shared-tree",
         },
         1,
     )
