@@ -107,6 +107,7 @@ def test_current_gate_priority_matches_derived_window():
 # ---- mechanical changed-row derivation (VERDICT r10 item 1) ----
 
 from gate_rotation import (  # noqa: E402
+    NoWorkTree,
     derive_changed,
     package_import_graph,
     reverse_closure,
@@ -289,8 +290,16 @@ def test_derive_changed_real_repo_smoke():
     from tile_processor_spark.plans.registry import all_specs
 
     names = set(all_specs())
-    got = derive_changed(REPO, "HEAD")
+    try:
+        got = derive_changed(REPO, "HEAD")
+    except NoWorkTree as exc:  # an exported copy of the tree has no history
+        pytest.skip(str(exc))
     assert set(got) <= names
+
+
+def test_derive_changed_outside_a_work_tree_names_it(tmp_path):
+    with pytest.raises(NoWorkTree, match=str(tmp_path)):
+        derive_changed(str(tmp_path), "HEAD", {})
 
 
 def test_changed_tier_orders_stalest_first():

@@ -3,8 +3,11 @@
 Local-mode defaults follow the test/bench environment (single JVM,
 ``local[$SPARK_GRAFT_CPUS]``); on a real cluster every setting here is
 still sane — AQE on, Arrow on, shuffle partitions sized explicitly.
-A local driver JVM gets a host-sized heap and a JIT policy that leaves
-C2 to code that stays hot (``LOCAL_JIT_OPTIONS``). ``session_cached``
+A local driver JVM gets a host-sized heap, a JIT policy that leaves
+C2 to code that stays hot (``LOCAL_JIT_OPTIONS``) and G1 regions large
+enough for Spark's buffers (``LOCAL_GC_OPTIONS``), and starts from a
+class-data archive that the engine trains after the first session that
+finds none (``jvm_archive``). ``session_cached``
 holds state built for one SparkContext (plans, checkpoints, UDFs) until
 that context's application is gone, and ``local_frame`` is the one way
 to build a small frame from Python rows.
@@ -20,6 +23,8 @@ from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
+
+from tile_processor_spark import jvm_archive
 
 #: Defaults applied to every session the engine creates. At cluster scale
 #: the same knobs hold: AQE re-plans shuffles at runtime (skew-join
@@ -65,6 +70,10 @@ LOCAL_JIT_OPTIONS = (
 )
 
 
+#: G1 region size for a local driver; see ``get_spark``.
+LOCAL_GC_OPTIONS = "-XX:G1HeapRegionSize=16m"
+
+
 def host_driver_memory() -> str:
     """Local-mode driver memory: a quarter of this host's RAM in whole
     GiB, at least 2g and at most 48g."""
@@ -85,8 +94,10 @@ def get_spark(
     when no cluster master is configured. ``shuffle_partitions`` defaults
     to the local core count — on a real cluster pass ~2-3x total cores.
     A local master also gets driver memory (``$SPARK_GRAFT_DRIVER_MEM``,
-    else ``host_driver_memory()``), the JIT policy and RAM-backed scratch;
-    ``extra_conf`` overrides any of them.
+    else ``host_driver_memory()``), the JIT policy, the G1 region size and
+    RAM-backed scratch; ``extra_conf`` overrides any of them. The call
+    that launches a local driver JVM starts it from the class-data
+    archive when one is ready (see ``jvm_archive``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -94,7 +105,6 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
-    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
@@ -112,11 +122,21 @@ def get_spark(
         # the parent's quartiles. x5 made cold passes 9% slower in wall
         # time, and C1 only (-XX:TieredStopAtLevel=1) steady-state passes
         # ~40% slower.
+        # G1 regions of 16 MB instead of the 2 MB G1 picks for a 2-8 GB
+        # heap. Spark's on-heap buffers (1 MB block chunks, 4 MB broadcast
+        # blocks, 16 MB Tungsten pages for a 3g driver on 4 cores) are
+        # humongous at 2 MB: each is allocated outside eden, freed only by
+        # a GC, and starts a concurrent cycle, and G1 then grew the heap in
+        # steps whose size and timing varied from run to run (headline,
+        # 6 runs: committed heap 618-1234 MB, peak_rss_mb 1613-2215). With
+        # 16 MB regions only the pages are humongous, each one region:
+        # committed 432-672 MB, peak_rss_mb 1372-1646, CPU unchanged.
         # Default (not extra) Java options: the launcher puts them in
         # front of spark.driver.extraJavaOptions, so a caller's own JVM
         # options add to the policy instead of replacing it. They hold
         # only when this call launches the JVM.
-        conf.setdefault("spark.driver.defaultJavaOptions", LOCAL_JIT_OPTIONS)
+        conf.setdefault("spark.driver.defaultJavaOptions",
+                        f"{LOCAL_JIT_OPTIONS} {LOCAL_GC_OPTIONS}")
         # Shuffle/broadcast scratch on RAM-backed tmpfs: local-mode data
         # volumes are far below RAM, and the shared-host disk has shown
         # intermittent multi-second I/O stalls that surface as low-CPU
@@ -127,9 +147,14 @@ def get_spark(
             conf.setdefault("spark.local.dir", scratch)
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+
+    def start(conf: dict[str, str]) -> SparkSession:
+        builder = SparkSession.builder.appName(app_name).master(master)
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        return builder.getOrCreate()
+
+    spark = jvm_archive.launch(conf, start) if master.startswith("local") else start(conf)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -37,15 +37,6 @@ def points_in_polygon(rings: list[np.ndarray], xs: np.ndarray, ys: np.ndarray) -
     return inside
 
 
-def bbox_intersects(
-    a: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray],
-    b: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray],
-) -> np.ndarray:
-    ax0, ay0, ax1, ay1 = a
-    bx0, by0, bx1, by1 = b
-    return (ax0 <= bx1) & (bx0 <= ax1) & (ay0 <= by1) & (by0 <= ay1)
-
-
 def _segments_intersect(p1, p2, q1, q2) -> bool:
     def orient(a, b, c):
         return (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -20,25 +19,10 @@ from tile_processor_spark.spatial import kernel, wkb
 
 
 @pandas_udf(T.BinaryType())
-def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
-    return pd.Series([wkb.point_wkb(px, py) for px, py in zip(x, y)])
-
-
-@pandas_udf(T.BinaryType())
 def st_rect(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
     return pd.Series(
         [wkb.rect_wkb(a, b, c, d) for a, b, c, d in zip(xmin, ymin, xmax, ymax)]
     )
-
-
-@pandas_udf(T.BinaryType())
-def st_polygon(xs: pd.Series, ys: pd.Series) -> pd.Series:
-    """Build a polygon from parallel coordinate arrays (one ring)."""
-    out = []
-    for px, py in zip(xs, ys):
-        ring = np.column_stack([np.asarray(px, dtype=np.float64), np.asarray(py, dtype=np.float64)])
-        out.append(wkb.polygon_wkb([ring]))
-    return pd.Series(out)
 
 
 @pandas_udf(T.ArrayType(T.DoubleType()))
@@ -88,13 +72,3 @@ def st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
     ]
     return pd.Series(out)
 
-
-def with_bbox_cols(df, geom_col: str = "geom", prefix: str = ""):
-    """Attach float64 bbox columns for Catalyst-prunable pre-filtering."""
-    bb = st_bbox(F.col(geom_col))
-    return (
-        df.withColumn(f"{prefix}xmin", bb[0])
-        .withColumn(f"{prefix}ymin", bb[1])
-        .withColumn(f"{prefix}xmax", bb[2])
-        .withColumn(f"{prefix}ymax", bb[3])
-    )

@@ -14,6 +14,12 @@ each run one fresh-process pair of ``perfbench/run.py --workload W
 the change first for even ones; ``S`` is BENCHMARK.json's
 ``run_seconds``.
 
+Before the first pair and after the last it prints the driver JVM's
+class-data archive (``tile_processor_spark.jvm_archive``): its path,
+whether it exists and its size. A change run that misses the archive
+trains it at exit, so only the first line tells whether the timed runs
+started from it.
+
 Every pair prints its ``cold_s`` and ``pass_s`` (wall time, which
 BENCHMARK.json does not gate) beside the gated metrics as it finishes.
 Then, for every end-to-end metric of BENCHMARK.json, it prints each
@@ -73,6 +79,18 @@ def verdict(parent: list[float], change: list[float], better: str = "lower",
     }
 
 
+def archive_state() -> str:
+    """The class-data archive's path, whether it exists and its size."""
+    if ROOT not in sys.path:
+        sys.path.insert(0, ROOT)
+    from tile_processor_spark import jvm_archive
+
+    path = jvm_archive.archive_path()
+    size = os.path.getsize(path) if os.path.isfile(path) else None
+    return f"[archive] {path} exists {size is not None}" + (
+        f" size {size} B" if size is not None else "")
+
+
 def _export_parent(rev: str, dest: str) -> None:
     os.makedirs(dest)
     archive = subprocess.run(["git", "-C", ROOT, "archive", rev],
@@ -125,6 +143,7 @@ def main() -> int:
         _export_parent(args.parent, trees["parent"])
         _export_working_tree(trees["change"])
         all_ok = True
+        print(archive_state(), flush=True)
         for workload in args.workload:
             runs: dict[str, list[dict]] = {"parent": [], "change": []}
             for seed in range(args.seed, args.seed + args.pairs):
@@ -152,6 +171,7 @@ def main() -> int:
                       f"{cm:10.2f} [{c1:7.2f}, {c3:7.2f}] {100 * v['rel']:+6.1f}% "
                       f"{v['wins']:>2d}/{v['pairs']:<2d}  {'-' if bound is None else v['bound']!s:5s} "
                       f"{v['claim']}", flush=True)
+        print(archive_state(), flush=True)
         return 0 if all_ok else 1
     finally:
         shutil.rmtree(work, ignore_errors=True)

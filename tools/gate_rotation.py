@@ -337,6 +337,10 @@ def _rows_for_direct_change(
     return hit_rows, affected
 
 
+class NoWorkTree(RuntimeError):
+    """``derive_changed`` was pointed at a directory without git history."""
+
+
 def derive_changed(
     repo_dir: str, since_ref: str, specs: dict | None = None
 ) -> list[str]:
@@ -359,7 +363,20 @@ def derive_changed(
     - rows of transitively-affected modules are all marked.
 
     Output is in registry order. ``specs`` defaults to the live
-    registry (injectable for tests)."""
+    registry (injectable for tests). Raises ``NoWorkTree`` when
+    ``repo_dir`` is not the root of a git work tree (say, a ``git
+    archive`` export): there is no history to diff."""
+    top = subprocess.run(
+        ["git", "rev-parse", "--show-toplevel"],
+        cwd=repo_dir,
+        capture_output=True,
+        text=True,
+    ).stdout.strip()
+    if not top or os.path.realpath(top) != os.path.realpath(repo_dir):
+        raise NoWorkTree(
+            f"{repo_dir} is not the root of a git work tree; derive_changed "
+            f"diffs it against {since_ref} and needs its history"
+        )
     if specs is None:
         import sys
 
